@@ -4075,9 +4075,7 @@ FROM k
 # =====================================================================
 # Round-8 batch 2: list-pairwise sum/diff, multi-node grouping, the
 # TakeOrdered highestMax selector, the deterministic sine generator,
-# counter-wrap derivative, and two-argument asPercent.  Registered in
-# __spark_entry__._R08_DEFERRED (locally gated; they front the round-9
-# driver window so round 8's window keeps the round-4 cohort).
+# counter-wrap derivative, and two-argument asPercent.
 
 
 # ---------------------------------------------- g_aggregate_series_lists

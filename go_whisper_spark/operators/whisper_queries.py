@@ -1467,7 +1467,7 @@ _TRI_SUBSTRATE_CACHE: dict = {}
 
 def tri_substrate_cached(spark: SparkSession, sf_dir: str):
     """``_tri_oriented`` built at most once per (session, corpus),
-    returned as ``(edges, deg, oriented, n_edges, packed_bc)``.
+    returned as ``(edges, deg, oriented, n_edges)``.
     Keyed by applicationId, not id(spark) — CPython reuses id() after
     GC, so a fresh session could hit a stale entry holding frames
     bound to a STOPPED SparkContext (the pq_ivf_index_cached
@@ -1487,28 +1487,7 @@ def tri_substrate_cached(spark: SparkSession, sf_dir: str):
     src; the localCheckpointed form (UnknownPartitioning) forced a
     re-shuffle every query.  ``n_edges`` rides the cache so the
     broadcast-probe size gate (``_TRI_BCAST_MAX_EDGES``) costs no
-    per-query count job.
-
-    ``packed_bc`` (r19 optimization, second pass; r20 re-adjudicated):
-    the oriented edge list can additionally persist as a SORTED
-    packed-int64 numpy array ((src << 32) | dst) in a Python
-    broadcast — the probe-side index the serve path's Arrow wedge
-    kernel binary-searches (see ``_tri_part_counts_kernel``).  r20:
-    built only when the kernel is OPTED IN via
-    ``SPARK_GRAFT_TRI_KERNEL=1`` — the r19 driver record showed the
-    kernel REGRESSING under the driver host's conditions
-    (PERF_r19: 5.39 → 6.77 s, Python-worker/JVM oversubscription)
-    while the same-host isolated A/B showed it 2.2× ahead, so the
-    default serve plan is the Exchange-free JOIN over this substrate
-    and the kernel is a measured, per-deployment choice (VERDICT r19
-    item 1: evidence-driven, not assumed).  Gates when opted in:
-    edge count ≤ ``_TRI_KERNEL_MAX_EDGES`` AND node ids fit 31 bits
-    (the packing precondition); past either bound it is None and the
-    serve path falls back to the identical-results join plan.  The
-    driver-side transient is byte-bounded (VERDICT r19 item 7): the
-    packing + sort happen JVM-side and ONE long column crosses via
-    Arrow — n_edges × 8 B ≤ 128 MB at the gate — instead of the old
-    2-column pandas frame + driver-side sort (~3× that)."""
+    per-query count job."""
     app_id = spark.sparkContext.applicationId
     for k in [k for k in _TRI_SUBSTRATE_CACHE if k[0] != app_id]:
         del _TRI_SUBSTRATE_CACHE[k]
@@ -1525,152 +1504,9 @@ def tri_substrate_cached(spark: SparkSession, sf_dir: str):
         n_edges = oriented.count()
         deg = deg.persist()
         deg.count()
-        packed_bc = None
-        if (
-            os.environ.get("SPARK_GRAFT_TRI_KERNEL", "0") == "1"
-            and 0 < n_edges <= _TRI_KERNEL_MAX_EDGES
-        ):
-            import numpy as np
-
-            # the 31-bit packing precondition, checked with one tiny
-            # aggregate before any bulk transfer
-            hi = oriented.agg(
-                F.greatest(F.max("src"), F.max("dst")).alias("hi")
-            ).collect()[0]["hi"]
-            if hi < (1 << 31):
-                packed = (
-                    oriented.select(
-                        (F.shiftleft(F.col("src"), 32)
-                         .bitwiseOR(F.col("dst"))).alias("p")
-                    )
-                    .orderBy("p")
-                    .toPandas()["p"]
-                    .to_numpy(dtype="int64")
-                )
-                packed_bc = spark.sparkContext.broadcast(packed)
-        hit = (edges, deg, oriented, n_edges, packed_bc)
+        hit = (edges, deg, oriented, n_edges)
         _TRI_SUBSTRATE_CACHE[key] = hit
     return hit
-
-
-_TRI_KERNEL_MAX_EDGES = 16_000_000  # packed-array ceiling, 8 B/edge
-# per-chunk wedge budget inside the kernel: 4M wedges x 3 int64
-# arrays ~ 96 MB transient per task, independent of the graph's
-# degree distribution (the probe reduces each chunk to per-node
-# counts before the next chunk is generated)
-_TRI_KERNEL_WEDGE_CHUNK = 4_000_000
-
-
-def _tri_part_counts_kernel(oriented: DataFrame, packed_bc) -> DataFrame:
-    """Per-partition triangle PARTICIPATION partials (node, tri_n)
-    from the src-partitioned, src-sorted serve substrate — the wedge
-    generation + closing probe as ONE Arrow kernel (guide §4.2).
-
-    Why: the SMJ wedge pipeline is correct and codegen'd but pays
-    per-ROW costs on ~2× the wedge count (the src self-join emits d²
-    pairs per group, the order filter then halves them) — measured
-    142 s of CPU across the stage at sf0.1.  The kernel generates
-    only the C(d, 2) ORDERED pairs per src (adjacency sorted by
-    (dd, dst) — the same (degree, id) total order, so the pair set is
-    identical), probes the closing edge by binary search in the
-    packed sorted edge array, and pre-aggregates participation counts
-    per task.  Same asymptotics, vectorized constant: work is still
-    Σ C(outdeg, 2) with the √m orientation bound, the probe index is
-    still O(edges) per executor — the JVM broadcast hash relation
-    traded for a numpy array at 8 B/edge.
-
-    Exactness: integer set membership and integer counts — no FP
-    anywhere; the emitted partials sum to exactly the join plan's
-    per-node counts (pytest-pinned serve == build equality).
-
-    Memory bound (ADVICE r19, medium): the wedge fan-out is
-    Σ C(outdeg, 2) — up to ~m·√m/2 under the orientation bound, so a
-    dense graph well under the EDGE gate could still blow up a
-    worker if the whole partition's wedges materialized at once.
-    The probe therefore runs in CHUNKS of src groups whose wedge
-    count stays ≤ ``_TRI_KERNEL_WEDGE_CHUNK``; each chunk probes and
-    reduces to per-node counts before the next is generated, so peak
-    transient memory is O(chunk + adjacency), never O(Σ C(d, 2))."""
-    # captured by VALUE at construction so the closure ships the
-    # driver's setting (workers re-import the module and would read
-    # the default otherwise — matters for the chunk-flush pytest)
-    wedge_chunk = _TRI_KERNEL_WEDGE_CHUNK
-
-    def count_parts(batches):
-        import numpy as np
-        import pandas as pd
-
-        ew = packed_bc.value
-        # a src group can straddle Arrow batch boundaries — buffer the
-        # whole partition (the substrate partitions are ~|E|/cores
-        # rows of 3 longs; buffering is MBs, not the wedge fan-out)
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        src = pdf["src"].to_numpy(dtype="int64")
-        dd = pdf["dd"].to_numpy(dtype="int64")
-        dst = pdf["dst"].to_numpy(dtype="int64")
-        # adjacency in (src, (dd, dst)) order == the (degree, id)
-        # total order the wedge filter applies
-        order = np.lexsort((dst, dd, src))
-        src, dst = src[order], dst[order]
-        starts = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
-        ends = np.r_[starts[1:], len(src)]
-        iu_cache: dict = {}
-        u_l, c_l = [], []
-
-        def probe(a_l, v_l, w_l):
-            a = np.concatenate(a_l)
-            v = np.concatenate(v_l)
-            w = np.concatenate(w_l)
-            keys = (v << 32) | w
-            pos = np.searchsorted(ew, keys)
-            pos[pos == len(ew)] = 0  # clamp; mismatch check below
-            hit = ew[pos] == keys
-            if not hit.any():
-                return
-            nodes = np.concatenate([a[hit], v[hit], w[hit]])
-            u, c = np.unique(nodes, return_counts=True)
-            u_l.append(u)
-            c_l.append(c)
-
-        a_l, v_l, w_l, pending = [], [], [], 0
-        for s, e in zip(starts, ends):
-            d = e - s
-            if d < 2:
-                continue
-            pair = iu_cache.get(d)
-            if pair is None:
-                pair = np.triu_indices(d, 1)
-                iu_cache[d] = pair
-            iu, ju = pair
-            a_l.append(np.full(len(iu), src[s]))
-            v_l.append(dst[s + iu])
-            w_l.append(dst[s + ju])
-            pending += len(iu)
-            if pending >= wedge_chunk:
-                probe(a_l, v_l, w_l)
-                a_l, v_l, w_l, pending = [], [], [], 0
-        if a_l:
-            probe(a_l, v_l, w_l)
-        if not u_l:
-            return
-        # fold the per-chunk partials (each is node-unique; across
-        # chunks a node repeats at most once per chunk)
-        out = (
-            pd.Series(np.concatenate(c_l), index=np.concatenate(u_l))
-            .groupby(level=0)
-            .sum()
-        )
-        yield pd.DataFrame(
-            {"node": out.index.to_numpy(dtype="int64"),
-             "tri_n": out.to_numpy(dtype="int64")}
-        )
-
-    return oriented.select("src", "dst", "dd").mapInPandas(
-        count_parts, "node long, tri_n long"
-    )
 
 
 def w_triangles_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1683,31 +1519,12 @@ def w_triangles_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a one-time cost).  First call per (session, corpus) builds and
     persists the substrate partitioned by ``src`` (see
     ``tri_substrate_cached``); every subsequent call — and every
-    bench rep after the warm-up — reuses it.
-
-    r20 (VERDICT r19 item 1): the DEFAULT wedge stage is the join
-    plan over the src-partitioned substrate — zero Exchange, zero
-    Sort under the join (the r19 take-1 layout win, kept).  The
-    Arrow wedge kernel (r19 take 2) is OPT-IN via
-    ``SPARK_GRAFT_TRI_KERNEL=1``: the r19 driver record measured it
-    0.80× on the driver host (5.39 → 6.77 s — 32 Python workers +
-    32 JVM task threads oversubscribing) while this host's isolated
-    A/B had it 2.2× ahead, so the kernel-vs-join choice is a
-    per-deployment measurement, not an assumption.  When opted in
-    and the packed probe index fits (see the substrate cache), the
-    wedge stage runs as ``_tri_part_counts_kernel``; past the gate
-    the identical-results join plan serves.  Results are identical
-    to ``w_triangles`` (same frames) on every path, so it shares the
-    oracle (pytest pins kernel == join ledger)."""
-    _, deg, oriented, n_edges, packed_bc = tri_substrate_cached(spark, sf_dir)
-    if packed_bc is None:
-        return _tri_node_ledger(deg, oriented, n_edges=n_edges)
-    part = (
-        _tri_part_counts_kernel(oriented, packed_bc)
-        .groupBy("node")
-        .agg(F.sum("tri_n").alias("tri_n"))
-    )
-    return _tri_part_ledger(deg, part)
+    bench rep after the warm-up — reuses it.  The wedge stage is the
+    join plan over the src-partitioned substrate, with zero Exchange
+    and zero Sort under the join.  Results are identical to
+    ``w_triangles`` (same frames), so it shares the oracle."""
+    _, deg, oriented, n_edges = tri_substrate_cached(spark, sf_dir)
+    return _tri_node_ledger(deg, oriented, n_edges=n_edges)
 
 
 def _tri_node_ledger(deg: DataFrame, oriented: DataFrame,
@@ -1723,13 +1540,6 @@ def _tri_node_ledger(deg: DataFrame, oriented: DataFrame,
         .groupBy("node")
         .agg(F.count("*").alias("tri_n"))
     )
-    return _tri_part_ledger(deg, part)
-
-
-def _tri_part_ledger(deg: DataFrame, part: DataFrame) -> DataFrame:
-    """(deg, per-node participation counts) → the final (node, deg,
-    tri_n, cc_ppm) ledger — the assembly shared by the join plan and
-    the serve path's Arrow kernel."""
     return (
         deg.join(part, "node", "left")
         .select(

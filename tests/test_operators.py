@@ -531,67 +531,15 @@ def test_triangles_orientation_and_laws(spark, sf_dir):
             f"node {r.node}: more triangles than wedge pairs")
 
 
-def test_triangles_serve_kernel_matches_join_plan(spark, sf_dir):
-    """The serve path's Arrow wedge kernel (r19 optimization, r20:
-    OPT-IN via SPARK_GRAFT_TRI_KERNEL=1 — the driver host measured
-    the join plan ahead, so the kernel is a per-deployment choice)
-    must emit the EXACT ledger the join plan computes, including
-    with Arrow batches far smaller than a src group (the kernel
-    buffers its whole partition, so a group straddling batch
-    boundaries must not split) and with the chunked probe forced to
-    flush many times (the r20 wedge-memory bound: per-chunk probe +
-    per-node reduction must fold to the same counts)."""
-    import os
-
+def test_triangles_serve_matches_batch_ledger(spark, sf_dir):
+    """The serve path over the cached, src-partitioned substrate must
+    emit the exact ledger the batch form computes from scratch."""
     import go_whisper_spark.operators.whisper_queries as wq
-    from go_whisper_spark.operators.whisper_queries import (
-        tri_substrate_cached,
-        w_triangles,
-        w_triangles_serve,
-    )
 
-    # default (knob off): the serve path is the join plan — no packed
-    # index is built, no driver-side edge transfer happens
     wq._TRI_SUBSTRATE_CACHE.clear()
-    os.environ.pop("SPARK_GRAFT_TRI_KERNEL", None)
-    _, _, _, _, packed_off = tri_substrate_cached(spark, sf_dir)
-    assert packed_off is None, (
-        "kernel index must not build without the opt-in knob")
-    want = sorted(map(tuple, w_triangles(spark, sf_dir).collect()))
-    join_serve = sorted(
-        map(tuple, w_triangles_serve(spark, sf_dir).collect()))
-    assert join_serve == want
-
-    os.environ["SPARK_GRAFT_TRI_KERNEL"] = "1"
-    wq._TRI_SUBSTRATE_CACHE.clear()
-    try:
-        _, _, _, _, packed_bc = tri_substrate_cached(spark, sf_dir)
-        assert packed_bc is not None, (
-            "test corpus under the kernel gate should build the packed index")
-        got = sorted(map(tuple, w_triangles_serve(spark, sf_dir).collect()))
-        assert got == want
-
-        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        try:
-            tiny = sorted(
-                map(tuple, w_triangles_serve(spark, sf_dir).collect()))
-        finally:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-        assert tiny == want, "kernel output changed under tiny Arrow batches"
-
-        # force the chunked probe to flush on (nearly) every group
-        old_chunk = wq._TRI_KERNEL_WEDGE_CHUNK
-        wq._TRI_KERNEL_WEDGE_CHUNK = 1
-        try:
-            chunked = sorted(
-                map(tuple, w_triangles_serve(spark, sf_dir).collect()))
-        finally:
-            wq._TRI_KERNEL_WEDGE_CHUNK = old_chunk
-        assert chunked == want, "chunked probe changed the ledger"
-    finally:
-        os.environ.pop("SPARK_GRAFT_TRI_KERNEL", None)
-        wq._TRI_SUBSTRATE_CACHE.clear()
+    want = sorted(map(tuple, wq.w_triangles(spark, sf_dir).collect()))
+    got = sorted(map(tuple, wq.w_triangles_serve(spark, sf_dir).collect()))
+    assert got == want
 
 
 def test_truss_support_charge_law(spark, sf_dir):

@@ -1,389 +1,141 @@
-"""Registry-rotation invariants for the driver contract.
+"""Registry-rotation rule for ``__spark_entry__``.
 
-The driver verifies only the FIRST 50 entries of ``queries()`` each
-round, so ``__spark_entry__._registry()`` orders queries by
-driver-verification recency (never-checked first, then oldest cohort).
-These tests pin the load-bearing claims that previously lived only in
-comments (ADVICE round 7, item 3):
-
-- the pre-materialized round-N window lists exactly match the
-  CORRECTNESS_r{N}.json the driver actually wrote;
-- the registry order has no duplicates and covers every query;
-- round 8's effective window (first 50) has ZERO overlap with round
-  7's — the rotation footgun that burned rounds 6 and 7 cannot recur
-  silently.
+Each verification round checks only the first 50 entries of
+``queries()``, so ``__spark_entry__`` orders the registry from the committed
+``CORRECTNESS_r<N>.json`` records: never checked first, then a red
+most-recent check, then the oldest most-recent check, with module
+registration order breaking ties.  The rule is pinned on fake records
+first, then on the committed ones: oldest evidence first, nothing
+re-checked early.
 """
 
 import json
-import os
 
 import pytest
 
 import __spark_entry__ as entry
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WINDOW = 50
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
+         "err": None}
 
 
-def _correctness(round_no: int) -> dict:
-    path = os.path.join(REPO, f"CORRECTNESS_r{round_no:02d}.json")
-    if not os.path.exists(path):
-        pytest.skip(f"CORRECTNESS_r{round_no:02d}.json not present")
-    with open(path) as fh:
-        return json.load(fh)
+def _red(**bad) -> dict:
+    return {**GREEN, **bad}
 
 
-def test_r07_window_matches_driver_record():
-    rec = _correctness(7)
-    assert len(entry._R07_WINDOW) == 50
-    assert len(set(entry._R07_WINDOW)) == 50
-    assert set(entry._R07_WINDOW) == set(rec.keys())
+def test_rule_never_checked_then_red_then_oldest():
+    names = ["old", "new", "red_old", "recent", "red_recent", "older"]
+    records = {
+        3: {"older": GREEN, "red_recent": GREEN},
+        5: {"old": GREEN, "red_old": _red(hash_match=False)},
+        7: {"recent": GREEN, "red_recent": _red(err="boom")},
+    }
+    assert entry.rotation_order(names, records) == [
+        "new", "red_old", "red_recent", "older", "old", "recent"]
 
 
-def test_r07_window_disjoint_from_r06():
-    rec6 = _correctness(6)
-    assert not set(entry._R07_WINDOW) & set(rec6.keys())
+def test_rule_ties_keep_registration_order():
+    names = ["c", "a", "d", "b"]
+    records = {1: {"b": GREEN, "a": GREEN}, 2: {"d": GREEN}}
+    assert entry.rotation_order(names, records) == ["c", "a", "b", "d"]
 
 
-def test_registry_order_no_duplicates_and_total():
-    queries, oracles = entry._registry()
+@pytest.mark.parametrize("bad", [
+    {"rows_match": False}, {"schema_match": False},
+    {"hash_match": False}, {"err": "Py4JJavaError"},
+])
+def test_rule_any_failed_field_counts_red(bad):
+    records = {1: {"a": GREEN}, 2: {"b": _red(**bad)}}
+    assert entry.rotation_order(["a", "b"], records) == ["b", "a"]
+
+
+def test_rule_later_green_clears_red():
+    # keys out of order: the rule must replay rounds by number
+    records = {2: {"a": GREEN}, 1: {"a": _red(hash_match=False), "b": GREEN}}
+    assert entry.rotation_order(["a", "b"], records) == ["b", "a"]
+
+
+def test_records_sort_rounds_numerically(tmp_path):
+    # r9 red then r10 green: a lexical sort would replay r9 last
+    (tmp_path / "CORRECTNESS_r9.json").write_text(
+        json.dumps({"a": _red(rows_match=False)}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"a": GREEN}))
+    (tmp_path / "CORRECTNESS_r10_c8.json").write_text(json.dumps({"x": GREEN}))
+    records = entry.load_records(str(tmp_path))
+    assert sorted(records) == [9, 10]
+    assert entry.rotation_order(["a", "b"], records) == ["b", "a"]
+
+
+def test_no_records_gives_module_order(tmp_path):
+    names = ["z", "y", "x"]
+    assert entry.load_records(str(tmp_path)) == {}
+    assert entry.rotation_order(names, {}) == names
+
+
+# --- the committed records
+
+
+@pytest.fixture(scope="module")
+def registry():
+    return entry._registry()
+
+
+@pytest.fixture(scope="module")
+def records():
+    recs = entry.load_records()
+    if not recs:
+        pytest.skip("no CORRECTNESS records committed")
+    return recs
+
+
+def _last_checks(records) -> dict:
+    last = {}
+    for rnd in sorted(records):
+        for name, check in records[rnd].items():
+            last[name] = (rnd, entry._green(check))
+    return last
+
+
+def test_registry_order_no_duplicates_and_total(registry):
+    from go_whisper_spark.operators import (
+        graphite_funcs, llm_ops, multimodal, relational, streaming_queries,
+        whisper_queries)
+
+    registered = set()
+    for mod in (whisper_queries, relational, llm_ops, multimodal,
+                graphite_funcs, streaming_queries):
+        registered |= set(mod.QUERIES)
+    queries, oracles = registry
     names = list(queries)
     assert len(names) == len(set(names))
-    # Every oracle key must be a registered query.
+    assert set(names) == registered
     assert set(oracles) <= set(queries)
 
 
-def test_r08_window_matches_driver_record():
-    """_R08_WINDOW (the round-9 rotation seed) must equal the window
-    the driver actually hashed in round 8 (50/50 green)."""
-    rec = _correctness(8)
-    assert len(entry._R08_WINDOW) == 50
-    assert len(set(entry._R08_WINDOW)) == 50
-    assert set(entry._R08_WINDOW) == set(rec.keys())
+def test_checked_cohorts_are_registered(registry, records):
+    """Every recorded name still resolves to a query (catches renames:
+    a renamed query would lose its evidence and jump the queue)."""
+    queries, _ = registry
+    for rnd, rec in records.items():
+        missing = sorted(set(rec) - set(queries))
+        assert not missing, f"round {rnd} names not in registry: {missing}"
 
 
-def test_round9_window_disjoint_from_r08():
-    """The round-9 window (now the historical _R09_WINDOW list) did
-    not re-check round 8 (nor round 7), and included every
-    never-driver-checked round-8 deferral plus the two round-4
-    stragglers."""
-    window = entry._R09_WINDOW
-    rec8 = _correctness(8)
-    overlap = set(window) & set(rec8.keys())
-    assert not overlap, f"round-9 window re-checks round-8 greens: {sorted(overlap)}"
-    rec7 = _correctness(7)
-    assert not set(window) & set(rec7.keys())
-    missing = [n for n in entry._R08_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-    for name in ("w_asof_join", "w_session_window_native"):
-        assert name in window, f"{name} (driver evidence stale since r4) missed the window"
+def test_window_skips_latest_greens(registry, records):
+    latest = records[max(records)]
+    greens = {n for n, c in latest.items() if entry._green(c)}
+    window = list(registry[0])[:WINDOW]
+    assert not set(window) & greens
 
 
-def test_r09_window_matches_driver_record():
-    """_R09_WINDOW (the round-10 rotation seed) must equal the window
-    the driver actually hashed in round 9 (50/50 green)."""
-    rec = _correctness(9)
-    assert len(entry._R09_WINDOW) == 50
-    assert len(set(entry._R09_WINDOW)) == 50
-    assert set(entry._R09_WINDOW) == set(rec.keys())
+def test_window_holds_oldest_evidence(registry, records):
+    last = _last_checks(records)
+    names = list(registry[0])
 
+    def age(name):  # never checked counts as oldest
+        return last.get(name, (0, True))[0]
 
-def test_round10_window_disjoint_from_r09():
-    """The round-10 window (now the historical _R10_WINDOW list) did
-    not re-check round 9 (nor round 8) and fronted every
-    never-driver-checked round-9 deferral — the corrected rotation
-    from VERDICT r9 item 1."""
-    window = entry._R10_WINDOW
-    assert not set(window) & set(entry._R09_WINDOW), (
-        "round-10 window re-checks round-9 greens")
-    rec8 = _correctness(8)
-    assert not set(window) & set(rec8.keys())
-    missing = [n for n in entry._R09_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r10_window_matches_driver_record():
-    """_R10_WINDOW (the round-11 rotation seed) must equal the window
-    the driver actually hashed in round 10 (50/50 green)."""
-    rec = _correctness(10)
-    assert len(entry._R10_WINDOW) == 50
-    assert len(set(entry._R10_WINDOW)) == 50
-    assert set(entry._R10_WINDOW) == set(rec.keys())
-
-
-def test_round11_window_disjoint_from_r10():
-    """The round-11 window (now the historical _R11_WINDOW list) did
-    not re-check rounds 8-10 and fronted every never-driver-checked
-    round-10 deferral (the render-layer compositions + bronze
-    compaction) — VERDICT r10 item 1."""
-    window = entry._R11_WINDOW
-    assert not set(window) & set(entry._R10_WINDOW), (
-        "round-11 window re-checks round-10 greens")
-    assert not set(window) & set(entry._R09_WINDOW)
-    assert not set(window) & set(entry._R08_WINDOW)
-    missing = [n for n in entry._R10_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r11_window_matches_driver_record():
-    """_R11_WINDOW (the round-12 rotation seed) must equal the window
-    the driver actually hashed in round 11 (50/50 green)."""
-    rec = _correctness(11)
-    assert len(entry._R11_WINDOW) == 50
-    assert len(set(entry._R11_WINDOW)) == 50
-    assert set(entry._R11_WINDOW) == set(rec.keys())
-
-
-def test_round12_window_disjoint_from_r11():
-    """The round-12 window (now the historical _R12_WINDOW list) did
-    not re-check rounds 9-11 and fronted every never-driver-checked
-    round-11 deferral — VERDICT r11 item 1."""
-    window = entry._R12_WINDOW
-    assert not set(window) & set(entry._R11_WINDOW), (
-        "round-12 window re-checks round-11 greens")
-    assert not set(window) & set(entry._R10_WINDOW)
-    assert not set(window) & set(entry._R09_WINDOW)
-    missing = [n for n in entry._R11_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r12_window_matches_driver_record():
-    """_R12_WINDOW (the round-13 rotation seed) must equal the window
-    the driver actually hashed in round 12 (49/50 green; the one red,
-    s_kmeans_step, is _R12_RED and re-fronts the round-13 window)."""
-    rec = _correctness(12)
-    assert len(entry._R12_WINDOW) == 50
-    assert len(set(entry._R12_WINDOW)) == 50
-    assert set(entry._R12_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert red == set(entry._R12_RED), (
-        "red rows in the driver record must all re-front via _R12_RED")
-
-
-def test_round13_window_disjoint_from_r12():
-    """The round-13 window (now the historical _R13_WINDOW list) did
-    not re-check the rounds 10-12 GREENS (the one r12 red,
-    s_kmeans_step, re-checked by design and rode at the front), and
-    fronted every never-driver-checked round-12 deferral."""
-    window = entry._R13_WINDOW
-    greens12 = set(entry._R12_WINDOW) - set(entry._R12_RED)
-    assert not set(window) & greens12, (
-        "round-13 window re-checks round-12 greens")
-    assert not set(window) & set(entry._R11_WINDOW)
-    assert not set(window) & set(entry._R10_WINDOW)
-    missing = [n for n in entry._R12_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-    assert window[0] == "s_kmeans_step", (
-        "the r12 red row must ride at the very front of the window")
-
-
-def test_r13_window_matches_driver_record():
-    """_R13_WINDOW (the round-14 rotation seed) must equal the window
-    the driver actually hashed in round 13 (50/50 green — zero red
-    rows, so no _R13_RED block exists)."""
-    rec = _correctness(13)
-    assert len(entry._R13_WINDOW) == 50
-    assert len(set(entry._R13_WINDOW)) == 50
-    assert set(entry._R13_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-13 record has red rows with no _R13_RED block: {red}"
-
-
-def test_round14_window_disjoint_from_r13():
-    """The round-14 window (now the historical _R14_WINDOW list) did
-    not re-check the rounds 11-13 greens (round 13 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-13 deferral."""
-    window = entry._R14_WINDOW
-    assert not set(window) & set(entry._R13_WINDOW), (
-        "round-14 window re-checks round-13 greens")
-    assert not set(window) & set(entry._R12_WINDOW)
-    assert not set(window) & set(entry._R11_WINDOW)
-    missing = [n for n in entry._R13_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r14_window_matches_driver_record():
-    """_R14_WINDOW (the round-15 rotation seed) must equal the window
-    the driver actually hashed in round 14 (50/50 green — zero red
-    rows, so no _R14_RED block exists)."""
-    rec = _correctness(14)
-    assert len(entry._R14_WINDOW) == 50
-    assert len(set(entry._R14_WINDOW)) == 50
-    assert set(entry._R14_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-14 record has red rows with no _R14_RED block: {red}"
-
-
-def test_round15_window_disjoint_from_r14():
-    """The round-15 window (now the historical _R15_WINDOW list) did
-    not re-check the rounds 12-14 greens (round 14 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-14 deferral.  The r08 cohort WAS expected in the window —
-    it was the oldest driver evidence at the time."""
-    window = entry._R15_WINDOW
-    assert not set(window) & set(entry._R14_WINDOW), (
-        "round-15 window re-checks round-14 greens")
-    assert not set(window) & set(entry._R13_WINDOW)
-    assert not set(window) & set(entry._R12_WINDOW)
-    missing = [n for n in entry._R14_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r15_window_matches_driver_record():
-    """_R15_WINDOW (the round-16 rotation seed) must equal the window
-    the driver actually hashed in round 15 (50/50 green — zero red
-    rows, so no _R15_RED block exists)."""
-    rec = _correctness(15)
-    assert len(entry._R15_WINDOW) == 50
-    assert len(set(entry._R15_WINDOW)) == 50
-    assert set(entry._R15_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-15 record has red rows with no _R15_RED block: {red}"
-
-
-def test_round16_window_disjoint_from_r15():
-    """The round-16 window (now the historical _R16_WINDOW list) did
-    not re-check the rounds 13-15 greens (round 15 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-15 deferral.  The r08-window tail and the r09-cohort front
-    WERE expected in the window — they were the oldest driver
-    evidence at the time."""
-    window = entry._R16_WINDOW
-    assert not set(window) & set(entry._R15_WINDOW), (
-        "round-16 window re-checks round-15 greens")
-    assert not set(window) & set(entry._R14_WINDOW)
-    assert not set(window) & set(entry._R13_WINDOW)
-    missing = [n for n in entry._R15_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r16_window_matches_driver_record():
-    """_R16_WINDOW (the round-17 rotation seed) must equal the window
-    the driver actually hashed in round 16 (50/50 green — zero red
-    rows, so no _R16_RED block exists)."""
-    rec = _correctness(16)
-    assert len(entry._R16_WINDOW) == 50
-    assert len(set(entry._R16_WINDOW)) == 50
-    assert set(entry._R16_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-16 record has red rows with no _R16_RED block: {red}"
-
-
-def test_r17_window_matches_driver_record():
-    """_R17_WINDOW (the round-18 rotation seed) must equal the window
-    the driver actually hashed in round 17 (50/50 green — zero red
-    rows, so no _R17_RED block exists)."""
-    rec = _correctness(17)
-    assert len(entry._R17_WINDOW) == 50
-    assert len(set(entry._R17_WINDOW)) == 50
-    assert set(entry._R17_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-17 record has red rows with no _R17_RED block: {red}"
-
-
-def test_round18_window_disjoint_from_r17():
-    """The round-18 window (now the historical _R18_WINDOW list) did
-    not re-check the rounds 15-17 greens (round 17 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-17 deferral.  The r10-window remainder WAS expected in the
-    window — it was the oldest driver evidence at the time."""
-    window = entry._R18_WINDOW
-    assert not set(window) & set(entry._R17_WINDOW), (
-        "round-18 window re-checks round-17 greens")
-    assert not set(window) & set(entry._R16_WINDOW)
-    assert not set(window) & set(entry._R15_WINDOW)
-    missing = [n for n in entry._R17_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r18_window_matches_driver_record():
-    """_R18_WINDOW (the round-19 rotation seed) must equal the window
-    the driver actually hashed in round 18 (50/50 green — zero red
-    rows, so no _R18_RED block exists)."""
-    rec = _correctness(18)
-    assert len(entry._R18_WINDOW) == 50
-    assert len(set(entry._R18_WINDOW)) == 50
-    assert set(entry._R18_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-18 record has red rows with no _R18_RED block: {red}"
-
-
-def test_round19_window_disjoint_from_r18():
-    """The round-19 window (now the historical _R19_WINDOW list) did
-    not re-check the rounds 16-18 greens (round 18 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-18 deferral.  The r11-cohort-era remainder WAS expected in
-    the window — it was the oldest driver evidence at the time."""
-    window = entry._R19_WINDOW
-    assert not set(window) & set(entry._R18_WINDOW), (
-        "round-19 window re-checks round-18 greens")
-    assert not set(window) & set(entry._R17_WINDOW)
-    assert not set(window) & set(entry._R16_WINDOW)
-    missing = [n for n in entry._R18_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r19_window_matches_driver_record():
-    """_R19_WINDOW (the round-20 rotation seed) must equal the window
-    the driver actually hashed in round 19 (50/50 green — zero red
-    rows, so no _R19_RED block exists)."""
-    rec = _correctness(19)
-    assert len(entry._R19_WINDOW) == 50
-    assert len(set(entry._R19_WINDOW)) == 50
-    assert set(entry._R19_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-19 record has red rows with no _R19_RED block: {red}"
-
-
-def test_round20_window_disjoint_from_r19():
-    """First 50 of the rotated registry must not re-check the rounds
-    17-19 greens EXCEPT the _R20_PRIORITY block — VERDICT r19 item 6
-    explicitly fronts the r19-optimized query paths (their driver
-    evidence predates the optimization), overriding the
-    oldest-evidence rule for exactly those ten — and must front every
-    never-driver-checked round-19 deferral."""
-    queries, _ = entry._registry()
-    window = list(queries)[:50]
-    prio = set(entry._R20_PRIORITY)
-    assert not (set(window) - prio) & set(entry._R19_WINDOW), (
-        "round-20 window re-checks round-19 greens outside the priority block")
-    assert not (set(window) - prio) & set(entry._R18_WINDOW)
-    assert not (set(window) - prio) & set(entry._R17_WINDOW)
-    missing = [n for n in entry._R19_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-    missing_prio = [n for n in entry._R20_PRIORITY if n not in window]
-    assert not missing_prio, (
-        f"priority re-checks missed the window: {missing_prio}")
-
-
-def test_r20_window_matches_first_fifty():
-    """Once frozen mid-round, the pre-materialized round-20 window
-    list (the round-21 rotation seed) must stay equal to the
-    registry's actual first 50 — the drift failure mode enforced
-    every round since round 8.  Late round-20 additions belong in
-    _R20_DEFERRED, which this equality keeps OUT of the window."""
-    if not getattr(entry, "_R20_WINDOW", None):
-        pytest.skip("_R20_WINDOW not yet frozen this round")
-    queries, _ = entry._registry()
-    assert entry._R20_WINDOW == list(queries)[:50]
-    assert len(set(entry._R20_WINDOW)) == 50
-
-
-def test_checked_cohorts_are_registered():
-    """Every cohort name still resolves to a real query (catches renames)."""
-    queries, _ = entry._registry()
-    for lst in (entry._R04_CHECKED, entry._R05_CHECKED,
-                entry._R6_DEFERRED, entry._R06_CHECKED, entry._R07_WINDOW,
-                entry._R08_WINDOW, entry._R08_DEFERRED,
-                entry._R09_WINDOW, entry._R09_DEFERRED,
-                entry._R10_WINDOW, entry._R10_DEFERRED,
-                entry._R11_WINDOW, entry._R11_DEFERRED,
-                entry._R12_WINDOW, entry._R12_DEFERRED, entry._R12_RED,
-                entry._R13_WINDOW, entry._R13_DEFERRED,
-                entry._R14_WINDOW, entry._R14_DEFERRED,
-                entry._R15_WINDOW, entry._R15_DEFERRED,
-                entry._R16_WINDOW, entry._R16_DEFERRED,
-                entry._R17_WINDOW, entry._R17_DEFERRED,
-                entry._R18_WINDOW, entry._R18_DEFERRED):
-        missing = [n for n in lst if n not in queries]
-        assert not missing, f"cohort names not in registry: {missing}"
+    inside = [n for n in names[:WINDOW] if last.get(n, (0, True))[1]]
+    outside = names[WINDOW:]
+    assert max(map(age, inside)) <= min(map(age, outside))

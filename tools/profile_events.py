@@ -30,7 +30,6 @@ def main() -> int:
     args = ap.parse_args()
 
     evdir = tempfile.mkdtemp(prefix="gws_evlog_")
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = evdir
 
     from pyspark.sql import SparkSession
 
