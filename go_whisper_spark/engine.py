@@ -140,48 +140,62 @@ class WhisperEngine:
     def archive_frame(self, archive_index: int, now: int) -> DataFrame:
         """Materialize archive ``archive_index`` as (metric, interval, value).
 
-        Archive 0: LWW of raw points at the finest step, windowed to its
-        retention.  Archive i>0: xff-gated consolidation of archive i-1
-        [ref: whisper.go (func (*Whisper) propagate — cascade)], with the
-        bucket count denominator = spp_i / spp_{i-1} ring slots.
+        Archive 0: LWW of raw points at the finest step (:meth:`level0`).
+        Archive i>0: :meth:`consolidate` of the uncut archive i-1
+        [ref: whisper.go (func (*Whisper) propagate — cascade)].  Only
+        the returned level is cut to its retention (:meth:`retained`).
         """
+        level = self.level0(now)
+        for i in range(1, archive_index + 1):
+            level = self.consolidate(level, i)
+        return self.retained(level, archive_index, now)
+
+    def level0(self, now: int) -> DataFrame:
+        """Archive 0 before its retention cut: LWW of the in-bounds raw
+        points at the finest step, as (metric, interval, value)."""
         if self._points is None:
             raise ValueError("no points ingested")
         cfg = self.config
-        r0 = cfg.retentions[0]
         base = self._points.where(
             (F.col("ts") <= F.lit(now))
             & (F.col("ts") > F.lit(now - cfg.max_retention))
         )
-        level = (
-            base.withColumn("interval", align_interval("ts", r0.seconds_per_point))
+        return (
+            base.withColumn(
+                "interval", align_interval("ts", cfg.retentions[0].seconds_per_point)
+            )
             .transform(lambda d: lww_latest(d, ["metric", "interval"]))
             .select("metric", "interval", "value")
         )
-        if archive_index == 0:
-            return level.where(F.col("interval") > F.lit(now - r0.retention))
 
-        for i in range(1, archive_index + 1):
-            fine, coarse = cfg.retentions[i - 1], cfg.retentions[i]
-            per_bucket = coarse.seconds_per_point // fine.seconds_per_point
-            # Keep the fine interval alive through the agg: LAST needs it
-            # as its max_by ordering key.
-            level = (
-                level.withColumn(
-                    "coarse_interval",
-                    align_interval("interval", coarse.seconds_per_point),
-                )
-                .groupBy("metric", "coarse_interval")
-                .agg(
-                    xff_gated_agg(
-                        cfg.aggregation_method, cfg.x_files_factor, per_bucket
-                    ).alias("value")
-                )
-                .withColumnRenamed("coarse_interval", "interval")
-                .where(F.col("value").isNotNull())
+    def consolidate(self, level: DataFrame, i: int) -> DataFrame:
+        """One propagate step: archive ``i`` from the uncut archive ``i-1``
+        frame ``level``, xff-gated over spp_i / spp_{i-1} ring slots
+        [ref: whisper.go (func (*Whisper) propagate)]."""
+        cfg = self.config
+        fine, coarse = cfg.retentions[i - 1], cfg.retentions[i]
+        per_bucket = coarse.seconds_per_point // fine.seconds_per_point
+        # Keep the fine interval alive through the agg: LAST needs it
+        # as its max_by ordering key.
+        return (
+            level.withColumn(
+                "coarse_interval",
+                align_interval("interval", coarse.seconds_per_point),
             )
+            .groupBy("metric", "coarse_interval")
+            .agg(
+                xff_gated_agg(
+                    cfg.aggregation_method, cfg.x_files_factor, per_bucket
+                ).alias("value")
+            )
+            .withColumnRenamed("coarse_interval", "interval")
+            .where(F.col("value").isNotNull())
+        )
+
+    def retained(self, level: DataFrame, i: int, now: int) -> DataFrame:
+        """Archive ``i``'s retention cut of its uncut frame ``level``."""
         return level.where(
-            F.col("interval") > F.lit(now - cfg.retentions[archive_index].retention)
+            F.col("interval") > F.lit(now - self.config.retentions[i].retention)
         )
 
     # -- schema evolution ------------------------------------------------

@@ -38,19 +38,51 @@ def archive_path(base: str, archive_index: int) -> str:
 
 def write_archives(engine: WhisperEngine, base: str, now: int) -> List[str]:
     """Materialize every archive level as a day-partitioned parquet table."""
-    paths = []
-    for i in range(len(engine.config.retentions)):
-        frame = engine.archive_frame(i, now).withColumn(
-            "day", F.to_date(F.timestamp_seconds(F.col("interval")))
-        )
-        path = archive_path(base, i)
-        (
-            frame.repartition("day")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(path)
-        )
-        paths.append(path)
+    return write_levels(engine, engine.level0(now), base, now=now)
+
+
+def write_levels(
+    engine: WhisperEngine,
+    level: DataFrame,
+    base: str,
+    first: int = 0,
+    now: Optional[int] = None,
+    days: Optional[list] = None,
+) -> List[str]:
+    """Write archives ``first``.. in one pass down the cascade.
+
+    ``level`` is archive ``first``'s frame before its retention cut.
+    Each later level is :meth:`WhisperEngine.consolidate`-d from the
+    level above it, so every level but the last has two consumers (its
+    own write and the next consolidation) and is persisted for them;
+    all persisted frames are released before returning.  ``now`` cuts
+    each written level to its archive's retention (None: no cut).
+    ``days`` restricts every write to those day partitions and
+    overwrites only them (per-write dynamic partition overwrite, so
+    the session conf is untouched); None overwrites whole tables.
+    """
+    n = len(engine.config.retentions)
+    held, paths = [], []
+    try:
+        for i in range(first, n):
+            if i > first:
+                level = engine.consolidate(level, i)
+            if i < n - 1:
+                level = level.cache()
+                held.append(level)
+            out = level if now is None else engine.retained(level, i, now)
+            out = out.withColumn("day", F.to_date(F.timestamp_seconds(F.col("interval"))))
+            if days is not None:
+                out = out.where(F.col("day").isin(days))
+            writer = out.repartition("day").write.mode("overwrite").partitionBy("day")
+            if days is not None:
+                writer = writer.option("partitionOverwriteMode", "dynamic")
+            path = archive_path(base, i)
+            writer.parquet(path)
+            paths.append(path)
+    finally:
+        for frame in held:
+            frame.unpersist()
     return paths
 
 
@@ -101,34 +133,40 @@ def incremental_rollup(
 ) -> dict:
     """Incremental archive maintenance — the batch form of whisper's
     per-write propagate cascade [ref: whisper.go (func (*Whisper)
-    Update — cascade loop)]:
+    Update — cascade loop)], in one pass:
 
-    1. append the new batch to the bronze points table;
-    2. per archive level, find the day partitions its touched intervals
-       fall in (a batch usually touches the current day, not history);
-    3. recompute ONLY those days from the points table (partition
-       pruning makes the read proportional to touched days) and
-       dynamic-partition-overwrite them in the archive table.
+    1. check that every archive's step divides a day (true for all
+       practical Graphite retentions up to "1d:..."); otherwise raise
+       ``ValueError`` before anything is written — use full
+       :func:`write_archives` for such a config;
+    2. bounds-check the batch and persist it for its two consumers: the
+       touched-days collect (the day partitions of its timestamps; a
+       batch usually touches the current day, not history) and the
+       append to the bronze points table.  A batch with no accepted
+       point returns ``{}`` and writes nothing;
+    3. read the touched days of the points table once (partition
+       pruning makes the read proportional to touched days), build
+       archive 0 (LWW) from them, and consolidate each archive from the
+       persisted archive above it (:func:`write_levels`), overwriting
+       only the touched day partitions of every archive table.
 
     At 100 TB the work per batch is O(batch ∪ touched-days), never
-    O(history).  Requires every archive's step to divide a day (true
-    for all practical Graphite retentions up to "1d:..."); coarser
-    steps fall back to full recompute of that level.
+    O(history).  Single-writer: concurrent writers on one base use
+    ``lakehouse.incremental_rollup_tx``.
 
     Returns {archive_index: [touched day strings]}.
     """
+    for i, r in enumerate(config.retentions):
+        if 86400 % r.seconds_per_point != 0:
+            raise ValueError(
+                f"archive {i} step {r.seconds_per_point}s does not divide a "
+                "day; use full write_archives for this config"
+            )
     accepted = new_points.where(
         (F.col("ts") <= F.lit(now))
         & (F.lit(now) - F.col("ts") < F.lit(config.max_retention))
-    )
-    write_points(accepted, base, mode="append")
-    points_path = os.path.join(base, "points")
-
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    touched_by_level = {}
+    ).cache()
     try:
-        # Touched days per level, from the batch alone (tiny aggregate).
         batch_days = [
             r["day"]
             for r in accepted.select(
@@ -137,33 +175,18 @@ def incremental_rollup(
             .distinct()
             .collect()
         ]
-        for i, r in enumerate(config.retentions):
-            if 86400 % r.seconds_per_point != 0:
-                raise ValueError(
-                    f"archive {i} step {r.seconds_per_point}s does not divide a "
-                    "day; use full write_archives for this config"
-                )
-            day_strs = sorted(str(d) for d in batch_days)
-            touched_by_level[i] = day_strs
-            all_points = spark.read.parquet(points_path).where(
-                F.col("day").isin(batch_days)
-            )
-            eng = WhisperEngine(spark, config)
-            eng.set_points(all_points.select("metric", "ts", "value", "write_seq"))
-            frame = (
-                eng.archive_frame(i, now)
-                .withColumn("day", F.to_date(F.timestamp_seconds(F.col("interval"))))
-                .where(F.col("day").isin(batch_days))
-            )
-            (
-                frame.repartition("day")
-                .write.mode("overwrite")
-                .partitionBy("day")
-                .parquet(archive_path(base, i))
-            )
+        if not batch_days:
+            return {}
+        points_path = write_points(accepted, base, mode="append")
+        eng = WhisperEngine(spark, config)
+        eng.set_points(
+            spark.read.parquet(points_path).where(F.col("day").isin(batch_days))
+        )
+        write_levels(eng, eng.level0(now), base, now=now, days=batch_days)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-    return touched_by_level
+        accepted.unpersist()
+    day_strs = sorted(str(d) for d in batch_days)
+    return {i: list(day_strs) for i in range(len(config.retentions))}
 
 
 def write_archives_bucketed(

@@ -7,8 +7,14 @@ propagate loop)].  The production pattern is ``foreachBatch``: the
 streaming query maintains archive 0 (LWW tumbling windows + watermark,
 ``streaming_rollup``), and each emitted micro-batch triggers a *batch*
 consolidation of only the touched day partitions in every lower
-archive — identical math to ``retention.incremental_rollup``, driven by
-the stream.
+archive.  The micro-batch is persisted for its three reads (the
+emptiness check, the archive-0 append and the touched-days collect).
+The consolidation is ``retention.write_levels``, the batch path's
+one-pass level writer: archive 1 is consolidated from the touched days
+of the level-0 store, each further archive from the persisted archive
+above it.  Writes use per-write dynamic partition overwrite, so the
+session conf never changes.  Unlike ``retention.incremental_rollup``,
+no retention cut is applied: a stream has no ``now``.
 
 Scale: per micro-batch work is O(batch ∪ touched days) per level; the
 archive tables are the same day-partitioned parquet layout the batch
@@ -17,15 +23,14 @@ engine writes, so readers can't tell which path produced a row.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from go_whisper_spark.functions.bucketing import align_interval, xff_gated_agg
+from go_whisper_spark.engine import WhisperEngine
 from go_whisper_spark.model import SeriesConfig
-from go_whisper_spark.retention import archive_path
+from go_whisper_spark.retention import archive_path, write_levels
 from go_whisper_spark.streaming.rollup import streaming_rollup
 
 
@@ -34,42 +39,15 @@ def _consolidate_touched(
 ) -> None:
     """Recompute archives 1..N for the given day partitions from the
     level-0 store (dynamic partition overwrite)."""
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        level = (
-            spark.read.parquet(archive_path(base, 0))
-            .where(F.col("day").isin(touched_days))
-            .select("metric", "interval", "value")
-        )
-        for i in range(1, len(cfg.retentions)):
-            fine, coarse = cfg.retentions[i - 1], cfg.retentions[i]
-            per_bucket = coarse.seconds_per_point // fine.seconds_per_point
-            level = (
-                level.withColumn(
-                    "coarse_interval",
-                    align_interval("interval", coarse.seconds_per_point),
-                )
-                .groupBy("metric", "coarse_interval")
-                .agg(
-                    xff_gated_agg(
-                        cfg.aggregation_method, cfg.x_files_factor, per_bucket
-                    ).alias("value")
-                )
-                .withColumnRenamed("coarse_interval", "interval")
-                .where(F.col("value").isNotNull())
-            )
-            out = level.withColumn(
-                "day", F.to_date(F.timestamp_seconds(F.col("interval")))
-            ).where(F.col("day").isin(touched_days))
-            (
-                out.repartition("day")
-                .write.mode("overwrite")
-                .partitionBy("day")
-                .parquet(archive_path(base, i))
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+    if len(cfg.retentions) < 2:
+        return
+    level0 = (
+        spark.read.parquet(archive_path(base, 0))
+        .where(F.col("day").isin(touched_days))
+        .select("metric", "interval", "value")
+    )
+    eng = WhisperEngine(spark, cfg)
+    write_levels(eng, eng.consolidate(level0, 1), base, first=1, days=touched_days)
 
 
 def streaming_cascade(
@@ -93,17 +71,20 @@ def streaming_cascade(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.withColumn(
             "day", F.to_date(F.timestamp_seconds(F.col("interval")))
-        )
-        if batch.isEmpty():
-            return
-        (
-            batch.select("metric", "interval", "value", "day")
-            .repartition("day")
-            .write.mode("append")
-            .partitionBy("day")
-            .parquet(archive_path(base, 0))
-        )
-        touched = [r["day"] for r in batch.select("day").distinct().collect()]
+        ).cache()
+        try:
+            if batch.isEmpty():
+                return
+            (
+                batch.select("metric", "interval", "value", "day")
+                .repartition("day")
+                .write.mode("append")
+                .partitionBy("day")
+                .parquet(archive_path(base, 0))
+            )
+            touched = [r["day"] for r in batch.select("day").distinct().collect()]
+        finally:
+            batch.unpersist()
         _consolidate_touched(spark, base, cfg, touched)
 
     writer = rolled.writeStream.foreachBatch(process).option(

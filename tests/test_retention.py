@@ -111,29 +111,59 @@ def test_bucketed_archives_join_without_exchange(spark, store, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
+def _cached(spark):
+    """(cached-plan entries, persistent RDDs) held by the session."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _tree(base):
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), base), os.path.getmtime(os.path.join(d, f)))
+        for d, _, files in os.walk(base)
+        for f in files
+    )
+
+
 def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     """Incremental propagate (dynamic partition overwrite of touched
-    days) must equal a full recompute over all points."""
-    from pyspark.sql import functions as F
+    days) must equal a full recompute over all points, at every level
+    of a 3-level xff-gated cascade — where archive 1 is built from the
+    persisted archive 0 and archive 2 from the persisted archive 1 —
+    and must release everything it persisted."""
+    from go_whisper_spark.retention import incremental_rollup
 
-    from go_whisper_spark.engine import WhisperEngine
-    from go_whisper_spark.model import SeriesConfig
-    from go_whisper_spark.retention import incremental_rollup, write_archives
-
-    cfg = SeriesConfig.from_defs("1h:3d,6h:10d", "average", 0.0)
+    cfg = SeriesConfig.from_defs("1h:3d,6h:10d,1d:30d", "average", 0.5)
     base = str(tmp_path / "inc")
-    batch1 = [("m", NOW - 2 * DAY + h * 3600, float(h), h) for h in range(0, 24, 3)]
+    d2, d5 = NOW - 2 * DAY, NOW - 5 * DAY
+    # Values keep every average exact, so levels compare with ==.
+    # m: every 2h → 3 of 6 slots per 6h bucket (exactly at the xff gate);
+    # n: every 3h → 2 of 6, gated out until batch2 adds a third slot;
+    # d5: older than archive 0's 3d retention, inside archives 1 and 2.
+    batch1 = (
+        [("m", d2 + h * 3600, float(h), h) for h in range(0, 24, 2)]
+        + [("n", d2 + h * 3600, float(h), 50 + h) for h in range(0, 24, 3)]
+        + [("m", d5 + h * 3600, 1.0, 80 + h) for h in range(0, 24, 2)]
+    )
     batch2 = [
-        ("m", NOW - 3600, 42.0, 100),            # current day
-        ("m", NOW - 2 * DAY + 3600, 99.0, 101),  # late point, old day, same slot as h=1? (h=1 not in batch1 since step 3)
+        ("m", d2 + 2 * 3600, 5.0, 100),   # rewrites batch1's h=2 slot (LWW)
+        ("n", d2 + 3600, 7.0, 101),       # n's first 6h bucket passes xff now
+        ("m", NOW - 3600, 42.0, 102),     # current day
     ]
     df1 = spark.createDataFrame(batch1, PTS_SCHEMA)
     df2 = spark.createDataFrame(batch2, PTS_SCHEMA)
 
+    # Static session mode: only the per-write option keeps batch2's
+    # overwrite off the days it did not touch (the d5 asserts below).
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    assert spark.conf.get(mode).upper() == "STATIC"
+    held = _cached(spark)
     t1 = incremental_rollup(spark, base, cfg, df1, NOW)
     t2 = incremental_rollup(spark, base, cfg, df2, NOW)
-    assert t1 and t2
-    # batch2 touched exactly two days
+    assert _cached(spark) == held
+    assert spark.conf.get(mode).upper() == "STATIC"
+    assert sorted(t1) == sorted(t2) == [0, 1, 2]
+    # batch2 touched exactly two days, at every level
     assert all(len(days) == 2 for days in t2.values())
 
     # full recompute reference
@@ -141,18 +171,58 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     eng.update_many(df1.unionByName(df2), NOW)
     ref_base = str(tmp_path / "ref")
     write_archives(eng, ref_base, NOW)
+    assert _cached(spark) == held
 
-    for i in range(2):
-        got = {
-            (r["metric"], r["interval"]): r["value"]
-            for r in spark.read.parquet(f"{base}/archive={i}").collect()
-        }
-        want = {
-            (r["metric"], r["interval"]): r["value"]
-            for r in spark.read.parquet(f"{ref_base}/archive={i}").collect()
-        }
-        assert got == want, f"archive {i} mismatch"
-    # the late point landed (LWW by write_seq in its slot)
-    a0 = spark.read.parquet(f"{base}/archive=0")
-    v = a0.where(F.col("interval") == NOW - 2 * DAY + 3600).collect()
-    assert v and v[0]["value"] == 99.0
+    def levels(b):
+        return [
+            {
+                (r["metric"], r["interval"]): r["value"]
+                for r in spark.read.parquet(archive_path(b, i)).collect()
+            }
+            for i in range(3)
+        ]
+
+    a0, a1, a2 = levels(base)
+    assert [a0, a1, a2] == levels(ref_base)
+    # the rewritten slot took the later write; archive 0 kept only 3d
+    assert a0[("m", d2 + 2 * 3600)] == 5.0
+    assert not any(iv <= NOW - 3 * DAY for _, iv in a0)
+    assert a1[("m", d2)] == (0.0 + 5.0 + 4.0) / 3
+    assert a1[("n", d2)] == (0.0 + 7.0 + 3.0) / 3
+    assert ("n", d2 + 6 * 3600) not in a1  # still 2 of 6 slots
+    assert ("m", d5) in a1 and ("m", d5) in a2
+    assert a2[("m", d2)] == (3.0 + 8.0 + 14.0 + 20.0) / 4
+    assert ("n", d2) not in a2  # n: 1 of 4 6h buckets
+
+
+def test_incremental_rollup_rejects_bad_step_before_writing(spark, tmp_path):
+    """A step that does not divide a day raises before bronze or any
+    archive is written, so a retry cannot append the batch twice."""
+    from go_whisper_spark.retention import incremental_rollup
+
+    cfg = SeriesConfig.from_defs("7s:1d", "average", 0.0)
+    base = str(tmp_path / "bad")
+    pts = spark.createDataFrame([("m", NOW - 70, 1.0, 1)], PTS_SCHEMA)
+    with pytest.raises(ValueError, match="does not divide a day"):
+        incremental_rollup(spark, base, cfg, pts, NOW)
+    assert not os.path.exists(os.path.join(base, "points"))
+    assert not os.path.exists(archive_path(base, 0))
+
+
+def test_incremental_rollup_empty_batch_writes_nothing(spark, tmp_path):
+    """A batch whose every point is bounds-rejected returns {} and
+    neither appends to bronze nor overwrites any archive day."""
+    from go_whisper_spark.retention import incremental_rollup
+
+    cfg = SeriesConfig.from_defs("1h:3d,6h:10d", "average", 0.0)
+    base = str(tmp_path / "empty")
+    first = [("m", NOW - h * 3600, 1.0, h) for h in range(1, 30)]
+    incremental_rollup(spark, base, cfg, spark.createDataFrame(first, PTS_SCHEMA), NOW)
+    before = _tree(base)
+    rejected = spark.createDataFrame(
+        [("m", NOW + 3600, 5.0, 100), ("m", NOW - 11 * DAY, 5.0, 101)], PTS_SCHEMA
+    )
+    held = _cached(spark)
+    assert incremental_rollup(spark, base, cfg, rejected, NOW) == {}
+    assert _tree(base) == before
+    assert _cached(spark) == held

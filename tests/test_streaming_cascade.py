@@ -71,3 +71,38 @@ def test_streaming_cascade_two_levels(spark, tmp_path):
     }
     assert a1[BASE] == 6.0               # 1+2+3 consolidated into the 300s bucket
     assert a1[BASE + 7200] == 9.0
+
+
+def test_streaming_cascade_three_levels(spark, tmp_path):
+    """Archive 2 is consolidated from the persisted archive 1 of the same
+    micro-batch, and every persisted frame is released afterwards."""
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    os.makedirs(src, exist_ok=True)
+    cfg = SeriesConfig.from_defs("60s:1d,300s:10d,900s:30d", "sum", 0.0)
+    _write(
+        spark,
+        src,
+        [
+            ("m", BASE + 0, 1.0, 1),
+            ("m", BASE + 60, 2.0, 2),
+            ("m", BASE + 300, 4.0, 3),
+            ("m", BASE + 7200, 9.0, 4),
+        ],
+    )
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    held = cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
+    _run(spark, src, cfg, store, ckpt)
+    assert (
+        cm.numCachedEntries(),
+        spark.sparkContext._jsc.getPersistentRDDs().size(),
+    ) == held
+
+    a1, a2 = (
+        {
+            r["interval"]: r["value"]
+            for r in spark.read.parquet(archive_path(store, i)).collect()
+        }
+        for i in (1, 2)
+    )
+    assert a1[BASE] == 3.0 and a1[BASE + 300] == 4.0
+    assert a2 == {BASE: 7.0}  # BASE+7200 is past the watermark: not emitted
