@@ -23,21 +23,29 @@ generated side.  No ``collect()`` anywhere in the data path.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Dict, List, Optional
+from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_whisper_spark.functions.bucketing import (
-    agg_expr,
     align_interval,
     fetch_bounds,
     lww_latest,
     xff_gated_agg,
 )
-from go_whisper_spark.model import AggregationMethod, SeriesConfig
+from go_whisper_spark.model import SeriesConfig
 
 POINTS_COLUMNS = ("metric", "ts", "value", "write_seq")
+
+
+def in_bounds(config: SeriesConfig, now: int) -> Column:
+    """Whisper's Update bounds check as a row predicate on ``ts``: no
+    future point, none older than maxRetention
+    [ref: whisper.go (func (*Whisper) Update — bounds)]."""
+    return (F.col("ts") <= F.lit(now)) & (
+        F.lit(now) - F.col("ts") < F.lit(config.max_retention)
+    )
 
 
 @dataclass
@@ -65,6 +73,57 @@ class FetchResult:
             df = df.where(F.col("metric") == metric)
         rows = df.orderBy("metric", "interval").collect()
         return [(r["interval"], r["value"]) for r in rows]
+
+
+def routed_fetch(
+    spark: SparkSession,
+    config: SeriesConfig,
+    from_time: int,
+    until_time: int,
+    now: int,
+    dense: Callable[[int, int, int, int], DataFrame],
+) -> FetchResult:
+    """Whisper's Fetch range plan, shared by :meth:`WhisperEngine.fetch`
+    and ``retention.MaterializedRollups.fetch``
+    [ref: whisper.go (func (*Whisper) Fetch)]:
+
+    - reject ``from >= until`` up front;
+    - clamp ``from`` to ``now - maxRetention``, and ``until`` to ``now``
+      when it lies in the future or before that horizon;
+    - pick the archive by the **from** age only;
+    - align both bounds to ``t - t%spp + spp`` (start-exclusive).
+
+    A range that holds no whole slot (inside one step, or wholly in the
+    future) has zero slots: an empty frame with those bounds, built
+    without ``F.sequence`` (which rejects a descending range).
+    Otherwise ``dense(archive_idx, step, from_iv, until_iv)`` builds
+    the dense (metric, interval, value) frame.
+    """
+    if from_time >= until_time:
+        raise ValueError("from_time must be < until_time")
+    oldest = now - config.max_retention
+    from_time = max(from_time, oldest)
+    if until_time > now or until_time < oldest:
+        until_time = now
+    archive_idx = config.archive_for_fetch(now - from_time)
+    step = config.retentions[archive_idx].seconds_per_point
+    from_iv, until_iv = fetch_bounds(from_time, until_time, step)
+    if until_iv <= from_iv:
+        frame = spark.createDataFrame([], "metric string, interval long, value double")
+    else:
+        frame = dense(archive_idx, step, from_iv, until_iv)
+    return FetchResult(from_iv, until_iv, step, frame)
+
+
+def slot_spine(metric_dim: DataFrame, from_iv: int, until_iv: int, step: int) -> DataFrame:
+    """Every (metric, slot) pair of ``[from_iv, until_iv)``: the dense
+    fetch's left side."""
+    return metric_dim.select(
+        "metric",
+        F.explode(
+            F.sequence(F.lit(from_iv), F.lit(until_iv - step), F.lit(step))
+        ).alias("interval"),
+    )
 
 
 class WhisperEngine:
@@ -101,10 +160,7 @@ class WhisperEngine:
         Returns the accepted (appended) rows; invalid rows are dropped
         (whisper errors per point; a 100 TB batch pipeline filters).
         """
-        accepted = points.where(
-            (F.col("ts") <= F.lit(now))
-            & (F.lit(now) - F.col("ts") < F.lit(self.config.max_retention))
-        )
+        accepted = points.where(in_bounds(self.config, now))
         self._points = (
             accepted
             if self._points is None
@@ -222,56 +278,37 @@ class WhisperEngine:
     ) -> FetchResult:
         """Range scan + dense gap-fill [ref: whisper.go (func (*Whisper) Fetch)].
 
-        Semantics pinned to the reference:
-        - clamp ``from`` to ``now - maxRetention``; error if from >= until;
-        - archive selection by the **from** age only;
-        - bound alignment ``t - t%spp + spp`` (start-exclusive);
-        - dense output: one row per (metric, slot), missing → NULL
-          (whisper's NaN; NULL chosen so Spark aggregates stay sane).
+        The range is planned by :func:`routed_fetch` (clamp, from-age
+        routing, ``t - t%spp + spp`` bounds, zero slots for a range
+        with no whole slot).  Dense output: one row per (metric, slot),
+        missing → NULL (whisper's NaN; NULL chosen so Spark aggregates
+        stay sane).
         """
-        cfg = self.config
-        if from_time >= until_time:
-            # whisper.go rejects from >= until up front; equality would
-            # otherwise reach F.sequence(from_iv, from_iv - step) and
-            # throw an opaque runtime error.
-            raise ValueError("from_time must be < until_time")
-        oldest = now - cfg.max_retention
-        if from_time < oldest:
-            from_time = oldest
-        if until_time > now or until_time < oldest:
-            until_time = now
 
-        archive_idx = cfg.archive_for_fetch(now - from_time)
-        step = cfg.retentions[archive_idx].seconds_per_point
-        from_iv, until_iv = fetch_bounds(from_time, until_time, step)
-
-        archive = self.archive_frame(archive_idx, now).where(
-            (F.col("interval") >= F.lit(from_iv)) & (F.col("interval") < F.lit(until_iv))
-        )
-        if metrics is not None:
-            archive = archive.where(F.col("metric").isin(metrics))
-            metric_dim = self.spark.createDataFrame(
-                [(m,) for m in metrics], "metric string"
+        def dense(archive_idx: int, step: int, from_iv: int, until_iv: int):
+            archive = self.archive_frame(archive_idx, now).where(
+                (F.col("interval") >= F.lit(from_iv))
+                & (F.col("interval") < F.lit(until_iv))
             )
-        else:
-            # All known metrics, NOT just those in the fetched range: a
-            # whisper file with no data in range still yields a dense
-            # all-NaN series [ref: whisper.go (Fetch — baseInterval==0
-            # early return)], so the spine must cover every series.
-            metric_dim = self._points.select("metric").distinct()
+            if metrics is not None:
+                archive = archive.where(F.col("metric").isin(metrics))
+                metric_dim = self.spark.createDataFrame(
+                    [(m,) for m in metrics], "metric string"
+                )
+            else:
+                # All known metrics, NOT just those in the fetched range: a
+                # whisper file with no data in range still yields a dense
+                # all-NaN series [ref: whisper.go (Fetch — baseInterval==0
+                # early return)], so the spine must cover every series.
+                metric_dim = self._points.select("metric").distinct()
 
-        # Dense spine: every (metric, slot) pair.  A LEFT join preserves the
-        # spine; Spark can only broadcast the build (right) side of a left
-        # outer join, and the archive side may be large, so the join keys
-        # (metric, interval) shuffle — the same partitioning the rollup
-        # cascade already produced, which AQE reuses.
-        spine = metric_dim.select(
-            "metric",
-            F.explode(
-                F.sequence(F.lit(from_iv), F.lit(until_iv - step), F.lit(step))
-            ).alias("interval"),
-        )
-        dense = spine.join(archive, ["metric", "interval"], "left").select(
-            "metric", "interval", "value"
-        )
-        return FetchResult(from_iv, until_iv, step, dense)
+            # A LEFT join preserves the spine; Spark can only broadcast the
+            # build (right) side of a left outer join, and the archive side
+            # may be large, so the join keys (metric, interval) shuffle —
+            # the same partitioning the rollup cascade already produced,
+            # which AQE reuses.
+            return slot_spine(metric_dim, from_iv, until_iv, step).join(
+                archive, ["metric", "interval"], "left"
+            ).select("metric", "interval", "value")
+
+        return routed_fetch(self.spark, self.config, from_time, until_time, now, dense)

@@ -1866,104 +1866,90 @@ def compact_bronze(spark: SparkSession, base: str) -> Optional[int]:
     )
 
 
+_MAX_RECOMPUTES = 5  # conflicted attempts per level before giving up
+
+
 def incremental_rollup_tx(
     spark: SparkSession,
     base: str,
     config,
     new_points: DataFrame,
     now: int,
-    max_recomputes: int = 5,
 ) -> dict:
     """Concurrent-writer-safe variant of ``retention.incremental_rollup``.
 
-    Same data flow — append accepted points to bronze, recompute only
-    the touched day partitions per archive level — but each level's
-    day swap publishes through its table's commit log, so two rollup
-    jobs racing on DISJOINT days both land, and a same-day race makes
-    exactly one writer recompute on top of the other (never a silent
-    lost update).  The commit also advances a per-level watermark
-    (max accepted ts) for restartability.
+    Same pipeline — the ``retention.accepted_batch`` checks (a bad
+    config raises before bronze is touched; a batch with no accepted
+    point returns ``{}`` and commits nothing), the bronze append, then
+    one ``retention.walk_levels`` pass over the touched days of bronze
+    — but each level publishes its day swap through its table's commit
+    log, so two rollup jobs racing on DISJOINT days both land, and a
+    same-day race makes exactly one writer recompute on top of the
+    other (never a silent lost update).  The commit also advances a
+    per-level watermark (max accepted ts) for restartability.
+
+    Each attempt snapshots the version of every uncommitted level,
+    THEN reads bronze once.  Order matters: a racer that appends
+    bronze and commits a shared day between our bronze read and a
+    later snapshot would land at a version <= our base, the overlap
+    check would never see it, and our commit would publish a day
+    frame silently missing the racer's points.  With the snapshot
+    first, any same-day commit after it raises ConflictError; the
+    next attempt re-snapshots, re-reads the bronze that now holds the
+    racer's points and resumes at the first uncommitted level — a
+    committed level is never published again.  A level that conflicts
+    ``_MAX_RECOMPUTES`` times raises RuntimeError.
 
     Returns {archive_index: committed version}.
     """
     from pyspark.sql import functions as F
 
     from go_whisper_spark.engine import WhisperEngine
+    from go_whisper_spark.retention import accepted_batch, walk_levels, with_day
 
-    accepted = new_points.where(
-        (F.col("ts") <= F.lit(now))
-        & (F.lit(now) - F.col("ts") < F.lit(config.max_retention))
-    )
-    batch_days = [
-        str(r["day"])
-        for r in accepted.select(
-            F.to_date(F.timestamp_seconds(F.col("ts"))).alias("day")
-        )
-        .distinct()
-        .collect()
-    ]
-    max_ts = accepted.agg(F.max("ts")).first()[0]
-    if max_ts is None:
-        # Every point was bounds-rejected (future ts / beyond
-        # maxRetention): nothing to recompute, nothing to commit, no
-        # empty bronze commit — NOT an error, the same no-op contract
-        # as whisper dropping an out-of-window Update.
-        return {}
-    _append_bronze(accepted, base)
-
-    committed = {}
-    for i, r in enumerate(config.retentions):
-        if 86400 % r.seconds_per_point != 0:
-            raise ValueError(
-                f"archive {i} step {r.seconds_per_point}s does not divide a day"
-            )
-        table = table_path(base, i)
-        for _ in range(max_recomputes):
-            # Snapshot the ARCHIVE table's version FIRST, then read
-            # bronze.  Order matters: a racer that appends bronze and
-            # commits a shared day between our bronze read and a
-            # later version snapshot would land at a version <= our
-            # base, the overlap check would never see it, and our
-            # commit would publish a day frame silently missing the
-            # racer's points.  Snapshotting before the bronze read
-            # closes the window: any same-day commit after this line
-            # raises ConflictError below and we recompute from the
-            # bronze that now includes the racer's points.
-            base_version = CommitLog(table).state()["version"]
-            all_points = read_bronze(spark, base).where(
-                F.col("day").isin(batch_days)
-            )
-            eng = WhisperEngine(spark, config)
-            eng.set_points(all_points.select("metric", "ts", "value", "write_seq"))
-            # localCheckpoint BEFORE the per-day split: each day frame
-            # below is consumed by its own write, and without the
-            # materialization every write re-runs the full rollup
-            # lineage — O(days) recomputes per level (measured ~30× at
-            # a month of data).  One materialized pass, then the day
-            # writes are cheap slices of it.
-            frame = (
-                eng.archive_frame(i, now)
-                .withColumn("day", F.to_date(F.timestamp_seconds(F.col("interval"))))
-                .where(F.col("day").isin(batch_days))
-                .localCheckpoint()
-            )
-            day_frames = {
-                d: frame.where(F.col("day") == F.lit(d)).drop("day")
-                for d in batch_days
+    tables = [table_path(base, i) for i in range(len(config.retentions))]
+    committed: Dict[int, int] = {}
+    conflicts = [0] * len(tables)
+    with accepted_batch(config, new_points, now) as batch:
+        if batch is None:
+            return {}
+        _append_bronze(batch.points, base)
+        days = [str(d) for d in batch.days]
+        while len(committed) < len(tables):
+            snapshot = {
+                i: CommitLog(tables[i]).state()["version"]
+                for i in range(len(committed), len(tables))
             }
+            eng = WhisperEngine(spark, config)
+            eng.set_points(read_bronze(spark, base).where(F.col("day").isin(days)))
+
+            def publish(i: int, frame: DataFrame) -> None:
+                if i in committed:
+                    return
+                # Persist BEFORE the per-day split: each day frame below
+                # is consumed by its own write, and without it every
+                # write re-runs the level's lineage — O(days) recomputes
+                # (measured ~30× at a month of data).
+                frame = with_day(frame, days).cache()
+                try:
+                    committed[i] = commit_rollup_days(
+                        spark,
+                        tables[i],
+                        {d: frame.where(F.col("day") == F.lit(d)).drop("day") for d in days},
+                        watermark={f"level_{i}_max_ts": int(batch.max_ts)},
+                        base_version=snapshot[i],
+                    )
+                finally:
+                    frame.unpersist()
+
             try:
-                committed[i] = commit_rollup_days(
-                    spark,
-                    table,
-                    day_frames,
-                    watermark={f"level_{i}_max_ts": int(max_ts)},
-                    base_version=base_version,
-                )
-                break
+                walk_levels(eng, eng.level0(now), publish, now=now)
             except ConflictError:
-                # Someone replaced one of our days after our snapshot:
-                # bronze now includes their points; recompute and retry.
-                continue
-        else:
-            raise RuntimeError(f"level {i}: exceeded {max_recomputes} recomputes")
+                # Someone replaced one of our days after our snapshot.
+                i = len(committed)
+                conflicts[i] += 1
+                if conflicts[i] == _MAX_RECOMPUTES:
+                    raise RuntimeError(
+                        f"level {i}: exceeded {_MAX_RECOMPUTES} recomputes"
+                    )
     return committed

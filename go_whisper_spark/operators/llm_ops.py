@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from go_whisper_spark.session import session_memo
 from go_whisper_spark.sources.tables import load_table, spread_scan
 
 # ---------------------------------------------------------------- hashing
@@ -1026,14 +1027,13 @@ _EMPTY_PAIRS = pd.DataFrame(
 # (s_cosine_topk 10, s_mrl_eval 10, s_hybrid_rrf 20, s_ann_recall 50).
 _QVEC_MAX = 50
 
-# Per-process memo of the collected query-vector matrix, keyed by
-# (applicationId, corpus) — the tri-substrate / pq-index discipline
-# (VERDICT r19 item 2: the per-invocation control-plane collect job +
-# its planning gap cost s_cosine_topk 0.31 s on a 0.84 s query; the
-# matrix is <= 50 x 64 doubles and every timed rep still streams the
-# FULL corpus through the sims kernel).  Keyed by applicationId so a
-# fresh session never reads a stale entry; never persisted across
-# processes/runs.
+# Per-process memo (session_memo) of the collected query-vector
+# matrix, keyed by (session, corpus) — the tri-substrate / pq-index
+# discipline (VERDICT r19 item 2: the per-invocation control-plane
+# collect job + its planning gap cost s_cosine_topk 0.31 s on a
+# 0.84 s query; the matrix is <= 50 x 64 doubles and every timed rep
+# still streams the FULL corpus through the sims kernel); never
+# persisted across processes/runs.
 _QVEC_CACHE: dict = {}
 
 
@@ -1042,12 +1042,8 @@ def _query_vectors(spark: SparkSession, sf_dir: str):
     collected at most once per (session, corpus) and sliced by each
     family member's own qmax.  Values are the same
     ``cast("double")`` vectors the JVM frame carries."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _QVEC_CACHE if k[0] != app_id]:
-        del _QVEC_CACHE[k]
-    key = (app_id, sf_dir)
-    hit = _QVEC_CACHE.get(key)
-    if hit is None:
+
+    def build():
         rows = sorted(
             _emb(spark, sf_dir)
             .where(F.col("vec_id") < _QVEC_MAX)
@@ -1064,9 +1060,9 @@ def _query_vectors(spark: SparkSession, sf_dir: str):
             if rows
             else np.zeros((0, DIM), dtype=np.float64)
         )
-        hit = (qids, Q)
-        _QVEC_CACHE[key] = hit
-    return hit
+        return (qids, Q)
+
+    return session_memo(_QVEC_CACHE, spark, sf_dir, build)
 
 
 def _brute_topk(spark: SparkSession, sf_dir: str, qmax: int, k: int) -> DataFrame:
@@ -6380,7 +6376,7 @@ def _pq_read_path(
 # route→ADC→rerank serving path alone (VERDICT r9 item 3: the 7.2 s
 # bench number for s_pq_search was dominated by rebuilding the index
 # every rep).  localCheckpoint pins the materialized frame to the
-# session, so the cache key includes the session identity.
+# session, so the memo is a session_memo.
 _PQ_INDEX_CACHE: dict = {}
 
 
@@ -6391,21 +6387,12 @@ def pq_ivf_index_cached(spark: SparkSession, sf_dir: str):
     scan of (vec_id, cell, rv, rnorm), never the build DAG) and the
     8-row centroid table collected to driver rows for closure-shipping
     into the routing kernel."""
-    # applicationId, not id(spark): CPython reuses id() after GC, so a
-    # fresh session could hit a stale entry holding a checkpointed
-    # frame bound to a STOPPED SparkContext (ADVICE r10).  The app id
-    # is unique per context; entries for dead contexts are dropped
-    # here (bounded: at most one live app's entries survive).
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PQ_INDEX_CACHE if k[0] != app_id]:
-        del _PQ_INDEX_CACHE[k]
-    key = (app_id, sf_dir)
-    hit = _PQ_INDEX_CACHE.get(key)
-    if hit is None:
+
+    def build():
         index, cents = pq_ivf_index(spark, sf_dir)
-        hit = (index.localCheckpoint(), cents.collect())
-        _PQ_INDEX_CACHE[key] = hit
-    return hit
+        return (index.localCheckpoint(), cents.collect())
+
+    return session_memo(_PQ_INDEX_CACHE, spark, sf_dir, build)
 
 
 def s_pq_search_serve(spark: SparkSession, sf_dir: str) -> DataFrame:

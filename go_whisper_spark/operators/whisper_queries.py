@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from go_whisper_spark.session import session_memo
 from go_whisper_spark.sources.tables import events_points, spread_scan
 
 HOUR, DAY = 3600, 86400
@@ -1467,11 +1468,8 @@ _TRI_SUBSTRATE_CACHE: dict = {}
 
 def tri_substrate_cached(spark: SparkSession, sf_dir: str):
     """``_tri_oriented`` built at most once per (session, corpus),
-    returned as ``(edges, deg, oriented, n_edges)``.
-    Keyed by applicationId, not id(spark) — CPython reuses id() after
-    GC, so a fresh session could hit a stale entry holding frames
-    bound to a STOPPED SparkContext (the pq_ivf_index_cached
-    lesson); entries for dead contexts are dropped here.
+    returned as ``(edges, deg, oriented, n_edges)`` (a
+    :func:`~go_whisper_spark.session.session_memo`).
 
     r19 optimization (guide §2.4 "remove shuffles outright" /
     bucketed-layout analogue): the served ``oriented`` relation is
@@ -1488,12 +1486,8 @@ def tri_substrate_cached(spark: SparkSession, sf_dir: str):
     re-shuffle every query.  ``n_edges`` rides the cache so the
     broadcast-probe size gate (``_TRI_BCAST_MAX_EDGES``) costs no
     per-query count job."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _TRI_SUBSTRATE_CACHE if k[0] != app_id]:
-        del _TRI_SUBSTRATE_CACHE[k]
-    key = (app_id, sf_dir)
-    hit = _TRI_SUBSTRATE_CACHE.get(key)
-    if hit is None:
+
+    def build():
         edges, deg, oriented = _tri_oriented(spark, sf_dir)
         oriented = (
             oriented.repartition(
@@ -1504,9 +1498,9 @@ def tri_substrate_cached(spark: SparkSession, sf_dir: str):
         n_edges = oriented.count()
         deg = deg.persist()
         deg.count()
-        hit = (edges, deg, oriented, n_edges)
-        _TRI_SUBSTRATE_CACHE[key] = hit
-    return hit
+        return (edges, deg, oriented, n_edges)
+
+    return session_memo(_TRI_SUBSTRATE_CACHE, spark, sf_dir, build)
 
 
 def w_triangles_serve(spark: SparkSession, sf_dir: str) -> DataFrame:

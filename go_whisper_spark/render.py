@@ -239,6 +239,8 @@ from typing import List, Union
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from go_whisper_spark.session import session_memo
+
 
 # ------------------------------------------------------------------ AST
 @dataclass
@@ -3092,19 +3094,18 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
     return ev(node)
 
 
-# Per-process memo of BUILT render DataFrames, keyed by
-# (applicationId, corpus, target) — r20 optimization (VERDICT r19
-# item 4, guide §3.3 "planning time itself can become the
-# bottleneck"): a composed render target's DataFrame construction —
-# parse + a few hundred py4j column/window calls + Catalyst's eager
-# ANALYSIS of the depth-6 chains — measured 0.6-3.5 s PER
-# INVOCATION on the deep targets (g_render_hw build 3.5 s vs 3.2 s
-# execution), and the built plan is a pure function of (session,
-# corpus, target).  DataFrames are immutable plans, NOT results:
-# every action on the memoized frame still scans the parquet inputs
-# and computes from scratch (nothing here is persisted/cached data —
-# the _DOT_CACHE precedent one level up).  Keyed by applicationId so
-# a fresh session never reuses a plan bound to a stopped context.
+# Per-process memo of BUILT render DataFrames, keyed by (session,
+# corpus, target) — r20 optimization (VERDICT r19 item 4, guide §3.3
+# "planning time itself can become the bottleneck"): a composed render
+# target's DataFrame construction — parse + a few hundred py4j
+# column/window calls + Catalyst's eager ANALYSIS of the depth-6
+# chains — measured 0.6-3.5 s PER INVOCATION on the deep targets
+# (g_render_hw build 3.5 s vs 3.2 s execution), and the built plan is
+# a pure function of (session, corpus, target).  DataFrames are
+# immutable plans, NOT results: every action on the memoized frame
+# still scans the parquet inputs and computes from scratch (nothing
+# here is persisted/cached data — the _DOT_CACHE precedent one level
+# up).
 _RENDER_FRAME_CACHE: dict = {}
 
 
@@ -3114,27 +3115,20 @@ def render(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:
     cents→value projection — plus series_rank when the root is an
     ordering-only op (sortByTotal/sortByMaxima/sortByName).  The
     built plan is memoized per (session, corpus, target) — see
-    ``_RENDER_FRAME_CACHE``."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _RENDER_FRAME_CACHE if k[0] != app_id]:
-        del _RENDER_FRAME_CACHE[k]
-    key = (app_id, sf_dir, target)
-    hit = _RENDER_FRAME_CACHE.get(key)
-    if hit is not None:
-        return hit
-    frame = build_frame(spark, sf_dir, validate_target(parse_target(target)))
-    cols = [
-        F.col("metric"),
-        F.col("interval"),
-        (F.col("cents").cast("double") / F.lit(100.0)).alias("value"),
-    ]
-    if "series_rank" in frame.columns:
-        cols.append(F.col("series_rank"))
-    out = frame.select(*cols)
-    if len(_RENDER_FRAME_CACHE) >= 256:  # fuzz-test/bulk-caller bound
-        _RENDER_FRAME_CACHE.clear()
-    _RENDER_FRAME_CACHE[key] = out
-    return out
+    ``_RENDER_FRAME_CACHE``; a hit returns the same object."""
+
+    def build() -> DataFrame:
+        frame = build_frame(spark, sf_dir, validate_target(parse_target(target)))
+        cols = [
+            F.col("metric"),
+            F.col("interval"),
+            (F.col("cents").cast("double") / F.lit(100.0)).alias("value"),
+        ]
+        if "series_rank" in frame.columns:
+            cols.append(F.col("series_rank"))
+        return frame.select(*cols)
+
+    return session_memo(_RENDER_FRAME_CACHE, spark, (sf_dir, target), build)
 
 
 # ------------------------------------------------------- oracle visitor

@@ -21,14 +21,20 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 from datetime import datetime, timezone
-from typing import List, Optional
+from typing import Callable, Iterator, List, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from go_whisper_spark.engine import WhisperEngine, FetchResult
-from go_whisper_spark.functions.bucketing import fetch_bounds
+from go_whisper_spark.engine import (
+    FetchResult,
+    WhisperEngine,
+    in_bounds,
+    routed_fetch,
+    slot_spine,
+)
 from go_whisper_spark.model import SeriesConfig
 
 
@@ -41,6 +47,49 @@ def write_archives(engine: WhisperEngine, base: str, now: int) -> List[str]:
     return write_levels(engine, engine.level0(now), base, now=now)
 
 
+def walk_levels(
+    engine: WhisperEngine,
+    level: DataFrame,
+    publish: Callable[[int, DataFrame], None],
+    first: int = 0,
+    now: Optional[int] = None,
+) -> None:
+    """Walk whisper's propagate cascade down archives ``first``..,
+    handing each level to ``publish(i, frame)``.
+
+    ``level`` is archive ``first``'s frame before its retention cut.
+    Each later level is :meth:`WhisperEngine.consolidate`-d from the
+    level above it, so every level but the last has two consumers (its
+    publish and the next consolidation) and is persisted for them; all
+    persisted frames are released when the walk ends, also when a
+    publish raises.  ``now`` cuts each published frame to its archive's
+    retention (None: no cut).  The publish step is the only thing the
+    rollups differ in: :func:`write_levels` overwrites parquet day
+    partitions, :func:`write_archives_bucketed` saves bucketed tables,
+    ``lakehouse.incremental_rollup_tx`` commits day swaps.
+    """
+    n = len(engine.config.retentions)
+    held = []
+    try:
+        for i in range(first, n):
+            if i > first:
+                level = engine.consolidate(level, i)
+            if i < n - 1:
+                level = level.cache()
+                held.append(level)
+            publish(i, level if now is None else engine.retained(level, i, now))
+    finally:
+        for frame in held:
+            frame.unpersist()
+
+
+def with_day(level: DataFrame, days: Optional[list] = None) -> DataFrame:
+    """``level`` plus its ``day`` partition column, kept to ``days``
+    (None: every day)."""
+    out = level.withColumn("day", F.to_date(F.timestamp_seconds(F.col("interval"))))
+    return out if days is None else out.where(F.col("day").isin(days))
+
+
 def write_levels(
     engine: WhisperEngine,
     level: DataFrame,
@@ -49,40 +98,28 @@ def write_levels(
     now: Optional[int] = None,
     days: Optional[list] = None,
 ) -> List[str]:
-    """Write archives ``first``.. in one pass down the cascade.
-
-    ``level`` is archive ``first``'s frame before its retention cut.
-    Each later level is :meth:`WhisperEngine.consolidate`-d from the
-    level above it, so every level but the last has two consumers (its
-    own write and the next consolidation) and is persisted for them;
-    all persisted frames are released before returning.  ``now`` cuts
-    each written level to its archive's retention (None: no cut).
-    ``days`` restricts every write to those day partitions and
-    overwrites only them (per-write dynamic partition overwrite, so
-    the session conf is untouched); None overwrites whole tables.
+    """Write archives ``first``.. as day-partitioned parquet tables in
+    one :func:`walk_levels` pass (``level``, ``first`` and ``now`` as
+    there).  ``days`` restricts every write to those day partitions and
+    overwrites only them (per-write dynamic partition overwrite, so the
+    session conf is untouched); None overwrites whole tables.
     """
-    n = len(engine.config.retentions)
-    held, paths = [], []
-    try:
-        for i in range(first, n):
-            if i > first:
-                level = engine.consolidate(level, i)
-            if i < n - 1:
-                level = level.cache()
-                held.append(level)
-            out = level if now is None else engine.retained(level, i, now)
-            out = out.withColumn("day", F.to_date(F.timestamp_seconds(F.col("interval"))))
-            if days is not None:
-                out = out.where(F.col("day").isin(days))
-            writer = out.repartition("day").write.mode("overwrite").partitionBy("day")
-            if days is not None:
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-            path = archive_path(base, i)
-            writer.parquet(path)
-            paths.append(path)
-    finally:
-        for frame in held:
-            frame.unpersist()
+    paths = []
+
+    def publish(i: int, frame: DataFrame) -> None:
+        writer = (
+            with_day(frame, days)
+            .repartition("day")
+            .write.mode("overwrite")
+            .partitionBy("day")
+        )
+        if days is not None:
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+        path = archive_path(base, i)
+        writer.parquet(path)
+        paths.append(path)
+
+    walk_levels(engine, level, publish, first, now)
     return paths
 
 
@@ -111,17 +148,70 @@ def reap(base: str, config: SeriesConfig, now: int) -> List[str]:
     return removed
 
 
-def write_points(points: DataFrame, base: str, mode: str = "append") -> str:
-    """Bronze points table, day-partitioned on the raw timestamp."""
+def write_points(points: DataFrame, base: str) -> str:
+    """Append to the bronze points table, day-partitioned on the raw
+    timestamp."""
     path = os.path.join(base, "points")
     (
         points.withColumn("day", F.to_date(F.timestamp_seconds(F.col("ts"))))
         .repartition("day")
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("day")
         .parquet(path)
     )
     return path
+
+
+class Batch(NamedTuple):
+    """An accepted ingest batch: its in-bounds points (persisted), the
+    days they touch, and their max ts."""
+
+    points: DataFrame
+    days: list
+    max_ts: int
+
+
+@contextmanager
+def accepted_batch(
+    config: SeriesConfig, points: DataFrame, now: int
+) -> Iterator[Optional[Batch]]:
+    """The checks every incremental rollup runs before its first write.
+
+    1. Every archive's step must divide a day (true for all practical
+       Graphite retentions up to "1d:..."), since the rollups recompute
+       whole day partitions; otherwise raise ``ValueError`` before
+       anything is written — use full :func:`write_archives` for such a
+       config.
+    2. Keep the points that pass whisper's Update bounds check
+       (:func:`~go_whisper_spark.engine.in_bounds`, as
+       ``WhisperEngine.update_many``) and persist them for their
+       consumers: one collect of the touched days (a batch usually
+       touches the current day, not history) and the caller's bronze
+       append.  They are released when the block exits.
+
+    Yields the :class:`Batch`, or None when no point was accepted: the
+    caller then returns ``{}`` and writes nothing.
+    """
+    for i, r in enumerate(config.retentions):
+        if 86400 % r.seconds_per_point != 0:
+            raise ValueError(
+                f"archive {i} step {r.seconds_per_point}s does not divide a "
+                "day; use full write_archives for this config"
+            )
+    accepted = points.where(in_bounds(config, now)).cache()
+    try:
+        touched = (
+            accepted.groupBy(F.to_date(F.timestamp_seconds(F.col("ts"))).alias("day"))
+            .agg(F.max("ts").alias("max_ts"))
+            .collect()
+        )
+        if not touched:
+            yield None
+        else:
+            days = sorted(r["day"] for r in touched)
+            yield Batch(accepted, days, max(r["max_ts"] for r in touched))
+    finally:
+        accepted.unpersist()
 
 
 def incremental_rollup(
@@ -135,57 +225,34 @@ def incremental_rollup(
     per-write propagate cascade [ref: whisper.go (func (*Whisper)
     Update — cascade loop)], in one pass:
 
-    1. check that every archive's step divides a day (true for all
-       practical Graphite retentions up to "1d:..."); otherwise raise
-       ``ValueError`` before anything is written — use full
-       :func:`write_archives` for such a config;
-    2. bounds-check the batch and persist it for its two consumers: the
-       touched-days collect (the day partitions of its timestamps; a
-       batch usually touches the current day, not history) and the
-       append to the bronze points table.  A batch with no accepted
-       point returns ``{}`` and writes nothing;
-    3. read the touched days of the points table once (partition
-       pruning makes the read proportional to touched days), build
-       archive 0 (LWW) from them, and consolidate each archive from the
-       persisted archive above it (:func:`write_levels`), overwriting
-       only the touched day partitions of every archive table.
+    1. :func:`accepted_batch` checks the config and the batch before
+       any write (``ValueError`` for a step that does not divide a day;
+       ``{}`` and no write for a batch with no accepted point);
+    2. the accepted points are appended to the bronze points table;
+    3. the touched days of the points table are read once (partition
+       pruning makes the read proportional to touched days), archive 0
+       (LWW) is built from them, and each archive is consolidated from
+       the persisted archive above it (:func:`write_levels`),
+       overwriting only the touched day partitions of every archive
+       table.
 
     At 100 TB the work per batch is O(batch ∪ touched-days), never
     O(history).  Single-writer: concurrent writers on one base use
-    ``lakehouse.incremental_rollup_tx``.
+    ``lakehouse.incremental_rollup_tx``, which differs only in how it
+    publishes a level.
 
     Returns {archive_index: [touched day strings]}.
     """
-    for i, r in enumerate(config.retentions):
-        if 86400 % r.seconds_per_point != 0:
-            raise ValueError(
-                f"archive {i} step {r.seconds_per_point}s does not divide a "
-                "day; use full write_archives for this config"
-            )
-    accepted = new_points.where(
-        (F.col("ts") <= F.lit(now))
-        & (F.lit(now) - F.col("ts") < F.lit(config.max_retention))
-    ).cache()
-    try:
-        batch_days = [
-            r["day"]
-            for r in accepted.select(
-                F.to_date(F.timestamp_seconds(F.col("ts"))).alias("day")
-            )
-            .distinct()
-            .collect()
-        ]
-        if not batch_days:
+    with accepted_batch(config, new_points, now) as batch:
+        if batch is None:
             return {}
-        points_path = write_points(accepted, base, mode="append")
+        points_path = write_points(batch.points, base)
         eng = WhisperEngine(spark, config)
         eng.set_points(
-            spark.read.parquet(points_path).where(F.col("day").isin(batch_days))
+            spark.read.parquet(points_path).where(F.col("day").isin(batch.days))
         )
-        write_levels(eng, eng.level0(now), base, now=now, days=batch_days)
-    finally:
-        accepted.unpersist()
-    day_strs = sorted(str(d) for d in batch_days)
+        write_levels(eng, eng.level0(now), base, now=now, days=batch.days)
+    day_strs = [str(d) for d in batch.days]
     return {i: list(day_strs) for i in range(len(config.retentions))}
 
 
@@ -206,19 +273,19 @@ def write_archives_bucketed(
     (bucket metadata lives in the catalog).
     """
     names = []
-    spark = engine.spark
-    for i in range(len(engine.config.retentions)):
-        name = f"{table_prefix}_archive_{i}"
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    def publish(i: int, frame: DataFrame) -> None:
+        names.append(f"{table_prefix}_archive_{i}")
+        engine.spark.sql(f"DROP TABLE IF EXISTS {names[-1]}")
         (
-            engine.archive_frame(i, now)
-            .write.mode("overwrite")
+            frame.write.mode("overwrite")
             .bucketBy(n_buckets, "metric")
             .sortBy("interval")
             .option("path", archive_path(base, i))
-            .saveAsTable(name)
+            .saveAsTable(names[-1])
         )
-        names.append(name)
+
+    walk_levels(engine, engine.level0(now), publish, now=now)
     return names
 
 
@@ -245,40 +312,31 @@ class MaterializedRollups:
         now: int,
         metrics: Optional[List[str]] = None,
     ) -> FetchResult:
-        cfg = self.config
-        if from_time >= until_time:
-            # same up-front rejection as WhisperEngine.fetch / whisper.go
-            raise ValueError("from_time must be < until_time")
-        oldest = now - cfg.max_retention
-        from_time = max(from_time, oldest)
-        until_time = min(until_time, now)
-        idx = cfg.archive_for_fetch(now - from_time)
-        step = cfg.retentions[idx].seconds_per_point
-        from_iv, until_iv = fetch_bounds(from_time, until_time, step)
+        """Routed, dense fetch from the written store: the range is
+        planned by :func:`~go_whisper_spark.engine.routed_fetch`, as in
+        ``WhisperEngine.fetch``.  With ``metrics=None`` the spine covers
+        the metrics that have a point in the fetched range (the store
+        keeps no metric catalog), not every metric ever written."""
 
-        # day predicate → partition pruning on the scan
-        day_lo = F.to_date(F.timestamp_seconds(F.lit(from_iv)))
-        day_hi = F.to_date(F.timestamp_seconds(F.lit(until_iv)))
-        arch = self.archive(idx).where(
-            (F.col("day") >= day_lo)
-            & (F.col("day") <= day_hi)
-            & (F.col("interval") >= F.lit(from_iv))
-            & (F.col("interval") < F.lit(until_iv))
-        )
-        if metrics is not None:
-            arch = arch.where(F.col("metric").isin(metrics))
-            metric_dim = self.spark.createDataFrame(
-                [(m,) for m in metrics], "metric string"
+        def dense(idx: int, step: int, from_iv: int, until_iv: int):
+            # day predicate → partition pruning on the scan
+            day_lo = F.to_date(F.timestamp_seconds(F.lit(from_iv)))
+            day_hi = F.to_date(F.timestamp_seconds(F.lit(until_iv)))
+            arch = self.archive(idx).where(
+                (F.col("day") >= day_lo)
+                & (F.col("day") <= day_hi)
+                & (F.col("interval") >= F.lit(from_iv))
+                & (F.col("interval") < F.lit(until_iv))
             )
-        else:
-            metric_dim = arch.select("metric").distinct()
-        spine = metric_dim.select(
-            "metric",
-            F.explode(
-                F.sequence(F.lit(from_iv), F.lit(until_iv - step), F.lit(step))
-            ).alias("interval"),
-        )
-        dense = spine.join(
-            arch.select("metric", "interval", "value"), ["metric", "interval"], "left"
-        )
-        return FetchResult(from_iv, until_iv, step, dense)
+            if metrics is not None:
+                arch = arch.where(F.col("metric").isin(metrics))
+                metric_dim = self.spark.createDataFrame(
+                    [(m,) for m in metrics], "metric string"
+                )
+            else:
+                metric_dim = arch.select("metric").distinct()
+            return slot_spine(metric_dim, from_iv, until_iv, step).join(
+                arch.select("metric", "interval", "value"), ["metric", "interval"], "left"
+            )
+
+        return routed_fetch(self.spark, self.config, from_time, until_time, now, dense)

@@ -4,14 +4,18 @@ Local testing runs ``local[N]``; the configs below are the ones that
 matter identically on a 1000-executor cluster: AQE on (skew joins,
 runtime coalescing), shuffle partitions sized to cores, UTC session
 timezone (whisper is calendar-free integer-seconds math), Arrow enabled
-for the Pandas-UDF slow path.
+for the Pandas-UDF slow path.  ``session_memo`` is the one per-session
+memo of built plans and collected artifacts.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import SparkSession
+
+MEMO_MAX_ENTRIES = 256  # per memo; a bulk caller (the render fuzz test) hits it
 
 
 def get_spark(app_name: str = "go_whisper_spark", cpus: "int | None" = None) -> SparkSession:
@@ -46,3 +50,27 @@ def get_spark(app_name: str = "go_whisper_spark", cpus: "int | None" = None) -> 
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()
+
+
+def session_memo(memo: dict, spark: SparkSession, key, build: Callable[[], object]):
+    """``build()``'s result, built at most once per (session, ``key``)
+    and kept in the module-level dict ``memo``.
+
+    Entries are keyed by the session's ``applicationId``, not
+    ``id(spark)``: CPython reuses an id after GC, so a fresh session
+    could hit a stale entry holding frames bound to a STOPPED
+    SparkContext.  Every call drops the entries of other applications,
+    so at most one live application's entries survive; a memo that
+    reaches ``MEMO_MAX_ENTRIES`` is cleared before the next insert.
+    A hit returns the stored object itself.
+    """
+    app_id = spark.sparkContext.applicationId
+    for k in [k for k in memo if k[0] != app_id]:
+        del memo[k]
+    hit = memo.get((app_id, key))
+    if hit is None:
+        hit = build()
+        if len(memo) >= MEMO_MAX_ENTRIES:
+            memo.clear()
+        memo[(app_id, key)] = hit
+    return hit

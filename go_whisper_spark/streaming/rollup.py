@@ -31,22 +31,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from go_whisper_spark.model import AggregationMethod, SeriesConfig
-
-
-def _window_agg(method: AggregationMethod):
-    v = F.col("value")
-    if method is AggregationMethod.AVERAGE:
-        return F.avg(v)
-    if method is AggregationMethod.SUM:
-        return F.sum(v)
-    if method is AggregationMethod.LAST:
-        return F.max_by(v, F.col("ts"))
-    if method is AggregationMethod.MAX:
-        return F.max(v)
-    if method is AggregationMethod.MIN:
-        return F.min(v)
-    raise ValueError(method)
+from go_whisper_spark.functions.bucketing import agg_expr
+from go_whisper_spark.model import SeriesConfig
 
 
 def streaming_rollup(
@@ -79,7 +65,7 @@ def streaming_rollup(
     if archive_index == 0:
         agg = F.max_by("value", "write_seq").alias("value")
     else:
-        agg = _window_agg(config.aggregation_method).alias("value")
+        agg = agg_expr(config.aggregation_method, order_col="ts").alias("value")
 
     out = (
         base.groupBy("metric", win.alias("w"))

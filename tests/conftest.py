@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -20,3 +21,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def released(spark):
+    """``with released(): ...`` asserts that the block leaves nothing
+    persisted in the session: no new cached plan and no new persistent
+    RDD.  RDDs are compared by id, never by count: ids are not reused,
+    and the ContextCleaner may release other tests' RDDs at any time."""
+
+    def held():
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+        return cm.numCachedEntries(), {int(k) for k in rdds}
+
+    @contextmanager
+    def check():
+        entries, rdds = held()
+        yield
+        now_entries, now_rdds = held()
+        assert now_entries == entries
+        assert now_rdds <= rdds, f"left persisted: {sorted(now_rdds - rdds)}"
+
+    return check

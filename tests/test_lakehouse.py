@@ -391,6 +391,132 @@ def test_rollup_tx_lost_update_window_closed(spark, tmp_path):
     assert CommitLog(table_path(base, 0)).versions() == [0, 1]
 
 
+# 3-level xff-gated ladder for the one-pass tx tests; values keep every
+# average exact, so levels compare with ==.  m fills 3 of 6 hourly slots
+# per 6h bucket (exactly at the gate); n fills 2 of 6 until TX_B2 adds
+# a third; TX_B2 also rewrites one of m's slots (LWW).
+TX_CFG = ("1h:3d,6h:10d,1d:30d", "average", 0.5)
+TX_B1 = (
+    [("m", NOW - 2 * DAY + h * 3600, float(h), h) for h in range(0, 24, 2)]
+    + [("n", NOW - 2 * DAY + h * 3600, float(h), 50 + h) for h in range(0, 24, 3)]
+)
+TX_B2 = [
+    ("m", NOW - 2 * DAY + 2 * 3600, 5.0, 100),
+    ("n", NOW - 2 * DAY + 3600, 7.0, 101),
+    ("m", NOW - 3600, 42.0, 102),
+]
+
+
+def _tx_levels(spark, base):
+    return [
+        {(r["metric"], r["interval"]): r["value"]
+         for r in read_table(spark, table_path(base, i)).collect()}
+        for i in range(3)
+    ]
+
+
+def _recompute_levels(spark, tmp_path, cfg, rows):
+    """Every level of a full ``write_archives`` recompute over ``rows``."""
+    from go_whisper_spark.retention import archive_path, write_archives
+
+    eng = WhisperEngine(spark, cfg)
+    eng.update_many(spark.createDataFrame(rows, PTS_SCHEMA), NOW)
+    ref = str(tmp_path / "ref")
+    write_archives(eng, ref, NOW)
+    return [
+        {(r["metric"], r["interval"]): r["value"]
+         for r in spark.read.parquet(archive_path(ref, i)).collect()}
+        for i in range(3)
+    ]
+
+
+def test_rollup_tx_rejects_bad_step_before_bronze(spark, tmp_path):
+    """A step that does not divide a day raises before the bronze
+    append, so a retry of the batch cannot append it twice."""
+    from go_whisper_spark.lakehouse import bronze_table
+
+    cfg = SeriesConfig.from_defs("7s:1d", "average", 0.0)
+    base = str(tmp_path / "store")
+    pts = spark.createDataFrame([("m", NOW - 70, 1.0, 1)], PTS_SCHEMA)
+    with pytest.raises(ValueError, match="does not divide a day"):
+        incremental_rollup_tx(spark, base, cfg, pts, NOW)
+    assert CommitLog(bronze_table(base)).versions() == []
+    assert CommitLog(table_path(base, 0)).versions() == []
+
+
+def test_rollup_tx_three_levels_match_full_recompute(
+    spark, tmp_path, monkeypatch, released
+):
+    """Every level of a 3-level xff-gated tx equals a full recompute;
+    each tx reads bronze once (one cascade walk, not a re-read per
+    level) and leaves nothing persisted in the session."""
+    import go_whisper_spark.lakehouse as lh
+
+    cfg = SeriesConfig.from_defs(*TX_CFG)
+    base = str(tmp_path / "store")
+    reads = []
+    real_read = lh.read_bronze
+    monkeypatch.setattr(
+        lh, "read_bronze", lambda *a: reads.append(1) or real_read(*a)
+    )
+    for batch in (TX_B1, TX_B2):
+        with released():
+            committed = incremental_rollup_tx(
+                spark, base, cfg, spark.createDataFrame(batch, PTS_SCHEMA), NOW
+            )
+        assert sorted(committed) == [0, 1, 2]
+    assert len(reads) == 2
+
+    got = _tx_levels(spark, base)
+    assert got == _recompute_levels(spark, tmp_path, cfg, TX_B1 + TX_B2)
+    assert got[1][("m", NOW - 2 * DAY)] == (0.0 + 5.0 + 4.0) / 3
+    assert got[1][("n", NOW - 2 * DAY)] == (0.0 + 7.0 + 3.0) / 3
+    assert ("n", NOW - 2 * DAY + 6 * 3600) not in got[1]  # 2 of 6 slots
+
+
+def test_rollup_tx_conflict_resumes_at_conflicted_level(
+    spark, tmp_path, monkeypatch, released
+):
+    """A same-day racer that lands while writer A publishes level 1:
+    A's level-1 commit conflicts, A re-snapshots, re-reads bronze and
+    resumes at level 1 — its level 0 is committed exactly once — and
+    every level ends equal to a full recompute over both batches."""
+    import go_whisper_spark.lakehouse as lh
+
+    cfg = SeriesConfig.from_defs(*TX_CFG)
+    base = str(tmp_path / "store")
+    b1 = spark.createDataFrame(TX_B1, PTS_SCHEMA)
+    b2 = spark.createDataFrame(TX_B2, PTS_SCHEMA)
+    lv0, lv1, lv2 = (table_path(base, i) for i in range(3))
+    real_commit = lh.commit_rollup_days
+    calls, racing = [], []  # A's publishes; set while racer B runs
+
+    def racing_commit(spark_, table, day_frames, watermark=None, base_version=None):
+        if not racing:
+            calls.append(table)
+            if calls == [lv0, lv1]:
+                # Racer B appends bronze and commits every level, level
+                # 1's shared day included, before A's level-1 publish.
+                racing.append(True)
+                incremental_rollup_tx(spark_, base, cfg, b2, NOW)
+                racing.clear()
+        return real_commit(spark_, table, day_frames,
+                           watermark=watermark, base_version=base_version)
+
+    monkeypatch.setattr(lh, "commit_rollup_days", racing_commit)
+    with released():
+        committed = incremental_rollup_tx(spark, base, cfg, b1, NOW)
+
+    # A: level 0 once, level 1 twice (conflict, then the resumed
+    # publish), level 2 once.
+    assert calls == [lv0, lv1, lv1, lv2]
+    assert CommitLog(lv0).versions() == [0, 1]  # A's, then B's
+    assert committed == {0: 0, 1: 1, 2: 1}
+    assert _tx_levels(spark, base) == _recompute_levels(
+        spark, tmp_path, cfg, TX_B1 + TX_B2
+    )
+
+
 def test_coordination_claim_released_on_write_failure(tmp_path):
     """A failure between the in-memory claim and the object publish
     must RELEASE the claim — otherwise the slot is claimed-but-

@@ -111,12 +111,6 @@ def test_bucketed_archives_join_without_exchange(spark, store, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
-def _cached(spark):
-    """(cached-plan entries, persistent RDDs) held by the session."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    return cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 def _tree(base):
     return sorted(
         (os.path.relpath(os.path.join(d, f), base), os.path.getmtime(os.path.join(d, f)))
@@ -125,7 +119,7 @@ def _tree(base):
     )
 
 
-def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
+def test_incremental_rollup_matches_full_recompute(spark, tmp_path, released):
     """Incremental propagate (dynamic partition overwrite of touched
     days) must equal a full recompute over all points, at every level
     of a 3-level xff-gated cascade — where archive 1 is built from the
@@ -157,10 +151,9 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     # overwrite off the days it did not touch (the d5 asserts below).
     mode = "spark.sql.sources.partitionOverwriteMode"
     assert spark.conf.get(mode).upper() == "STATIC"
-    held = _cached(spark)
-    t1 = incremental_rollup(spark, base, cfg, df1, NOW)
-    t2 = incremental_rollup(spark, base, cfg, df2, NOW)
-    assert _cached(spark) == held
+    with released():
+        t1 = incremental_rollup(spark, base, cfg, df1, NOW)
+        t2 = incremental_rollup(spark, base, cfg, df2, NOW)
     assert spark.conf.get(mode).upper() == "STATIC"
     assert sorted(t1) == sorted(t2) == [0, 1, 2]
     # batch2 touched exactly two days, at every level
@@ -170,8 +163,8 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     eng = WhisperEngine(spark, cfg)
     eng.update_many(df1.unionByName(df2), NOW)
     ref_base = str(tmp_path / "ref")
-    write_archives(eng, ref_base, NOW)
-    assert _cached(spark) == held
+    with released():
+        write_archives(eng, ref_base, NOW)
 
     def levels(b):
         return [
@@ -209,7 +202,7 @@ def test_incremental_rollup_rejects_bad_step_before_writing(spark, tmp_path):
     assert not os.path.exists(archive_path(base, 0))
 
 
-def test_incremental_rollup_empty_batch_writes_nothing(spark, tmp_path):
+def test_incremental_rollup_empty_batch_writes_nothing(spark, tmp_path, released):
     """A batch whose every point is bounds-rejected returns {} and
     neither appends to bronze nor overwrites any archive day."""
     from go_whisper_spark.retention import incremental_rollup
@@ -222,7 +215,45 @@ def test_incremental_rollup_empty_batch_writes_nothing(spark, tmp_path):
     rejected = spark.createDataFrame(
         [("m", NOW + 3600, 5.0, 100), ("m", NOW - 11 * DAY, 5.0, 101)], PTS_SCHEMA
     )
-    held = _cached(spark)
-    assert incremental_rollup(spark, base, cfg, rejected, NOW) == {}
+    with released():
+        assert incremental_rollup(spark, base, cfg, rejected, NOW) == {}
     assert _tree(base) == before
-    assert _cached(spark) == held
+
+
+@pytest.fixture(scope="module")
+def fetch_pair(spark, tmp_path_factory):
+    """The same points behind the batch engine and a written store,
+    plus the Python reference model."""
+    from tests.whisper_model import PyWhisper
+
+    cfg = SeriesConfig.from_defs("60s:1h,600s:1d", "average", 0.0)
+    rows = [("m", NOW - 97 * k, float(k % 5), k) for k in range(1, 800)]
+    eng = WhisperEngine(spark, cfg)
+    eng.update_many(spark.createDataFrame(rows, PTS_SCHEMA), NOW)
+    base = str(tmp_path_factory.mktemp("fetch_pair"))
+    write_archives(eng, base, NOW)
+    model = PyWhisper(cfg)
+    model.update_many(rows, NOW)
+    return {"engine": eng, "store": MaterializedRollups(spark, base, cfg)}, model
+
+
+@pytest.mark.parametrize("path", ["engine", "store"])
+@pytest.mark.parametrize(
+    "from_age,until_age",
+    [
+        (50, 45),                  # inside one step: zero slots
+        (-100, -200),              # wholly in the future: zero slots
+        (2 * DAY, 2 * DAY - 3600),  # until past maxRetention: until → now
+    ],
+    ids=["inside_one_step", "future", "until_past_retention"],
+)
+def test_fetch_degenerate_ranges_match_model(fetch_pair, path, from_age, until_age):
+    """Both fetch paths share one range plan: degenerate ranges give the
+    model's bounds and slots instead of a Spark sequence error."""
+    fetchers, model = fetch_pair
+    res = fetchers[path].fetch(NOW - from_age, NOW - until_age, NOW, ["m"])
+    from_iv, until_iv, step, values = model.fetch("m", NOW - from_age, NOW - until_age, NOW)
+    assert (res.from_interval, res.until_interval, res.step) == (from_iv, until_iv, step)
+    got = res.points("m")
+    assert [iv for iv, _ in got] == list(range(from_iv, until_iv, step))
+    assert [v for _, v in got] == values

@@ -83,33 +83,31 @@ def test_streaming_lww_and_late_drop(spark, srcdir, tmp_path):
     assert got[("m", BASE + 7200)] == (9.0, 1)
 
 
-def test_streaming_xff_gate(spark, srcdir, tmp_path):
-    cfg = SeriesConfig.from_defs("60s:1h,300s:6h", "sum", 0.5)
-    ckpt = str(tmp_path / "ckpt")
+def test_streaming_xff_gate(spark, tmp_path):
     # 5 fine slots per 300s window; xff 0.5 → need known/5 >= 0.5.
-    _write_batch(
-        spark,
-        srcdir,
-        [
-            ("a", BASE + 0, 1.0, 1),
-            ("a", BASE + 60, 2.0, 2),
-            ("a", BASE + 120, 3.0, 3),   # 3/5 → passes
-            ("b", BASE + 0, 5.0, 4),     # 1/5 → gated out
-            ("a", BASE + 7200, 1.0, 5),  # watermark pusher
-        ],
-    )
-    got1 = _run(
-        spark, srcdir, cfg, str(tmp_path / "out"), ckpt,
-        archive_index=1, lateness_seconds=600, expected_points_per_window=5,
-    )
-    _write_batch(spark, srcdir, [("a", BASE + 9000, 1.0, 6)])  # flush pusher
-    got2 = _run(
-        spark, srcdir, cfg, str(tmp_path / "out"), ckpt,
-        archive_index=1, lateness_seconds=600, expected_points_per_window=5,
-    )
-    got = {**got1, **got2}
-    assert got[("a", BASE)] == (6.0, 3)
-    assert ("b", BASE) not in got
+    # The window value is the shared agg_expr: sum, and last (the
+    # latest ts in the window, not the latest write).
+    for agg, want in (("sum", 6.0), ("last", 3.0)):
+        cfg = SeriesConfig.from_defs("60s:1h,300s:6h", agg, 0.5)
+        src, ckpt, out = (str(tmp_path / f"{d}_{agg}") for d in ("src", "ckpt", "out"))
+        _write_batch(
+            spark,
+            src,
+            [
+                ("a", BASE + 120, 3.0, 1),
+                ("a", BASE + 0, 1.0, 2),
+                ("a", BASE + 60, 2.0, 3),    # 3/5 → passes
+                ("b", BASE + 0, 5.0, 4),     # 1/5 → gated out
+                ("a", BASE + 7200, 1.0, 5),  # watermark pusher
+            ],
+        )
+        kwargs = dict(archive_index=1, lateness_seconds=600, expected_points_per_window=5)
+        got1 = _run(spark, src, cfg, out, ckpt, **kwargs)
+        _write_batch(spark, src, [("a", BASE + 9000, 1.0, 6)])  # flush pusher
+        got2 = _run(spark, src, cfg, out, ckpt, **kwargs)
+        got = {**got1, **got2}
+        assert got[("a", BASE)] == (want, 3), agg
+        assert ("b", BASE) not in got
 
 
 def test_kmv_bottomk_merge_law(spark):

@@ -73,7 +73,7 @@ def test_streaming_cascade_two_levels(spark, tmp_path):
     assert a1[BASE + 7200] == 9.0
 
 
-def test_streaming_cascade_three_levels(spark, tmp_path):
+def test_streaming_cascade_three_levels(spark, tmp_path, released):
     """Archive 2 is consolidated from the persisted archive 1 of the same
     micro-batch, and every persisted frame is released afterwards."""
     src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
@@ -89,13 +89,8 @@ def test_streaming_cascade_three_levels(spark, tmp_path):
             ("m", BASE + 7200, 9.0, 4),
         ],
     )
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    held = cm.numCachedEntries(), spark.sparkContext._jsc.getPersistentRDDs().size()
-    _run(spark, src, cfg, store, ckpt)
-    assert (
-        cm.numCachedEntries(),
-        spark.sparkContext._jsc.getPersistentRDDs().size(),
-    ) == held
+    with released():
+        _run(spark, src, cfg, store, ckpt)
 
     a1, a2 = (
         {
