@@ -1807,11 +1807,13 @@ def _append_bronze(points: DataFrame, base: str) -> int:
     single atomic remove+add commit."""
     from pyspark.sql import functions as F
 
+    from go_whisper_spark.retention import day_of
+
     table = bronze_table(base)
     log = CommitLog(table)
     d = stage_dir(table)
     (
-        points.withColumn("day", F.to_date(F.timestamp_seconds(F.col("ts"))))
+        points.withColumn("day", day_of(F.col("ts")))
         .repartition("day")
         .write.mode("errorifexists")
         .partitionBy("day")

@@ -34,6 +34,7 @@ Exactness invariants for oracle parity are pinned at each kernel
 
 from __future__ import annotations
 
+import operator
 import random
 
 import numpy as np
@@ -928,31 +929,33 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 8
 DIM = 64
 
 
-_DOT_CACHE: dict = {}
+_UNROLLED_CACHE: dict = {}
+
+
+def _unrolled_sum(term, n: int, a: str, b: str):
+    """``term(a[1], b[1]) + … + term(a[n], b[n])`` over two array
+    columns as ONE flat Add chain: it stays inside whole-stage codegen
+    (higher-order folds are interpreted and were the bottleneck on the
+    all-pairs join), and it adds in the fold's order (``0.0 + x`` is
+    exact), so it is FP-identical to the fold.
+
+    Memoized per (term, n, a, b): Column objects are immutable
+    unresolved expressions, so the hundreds of py4j round-trips an
+    unrolled chain costs are paid once per process, not once per plan
+    build (measured: the composed PQ-IVF query spent seconds
+    re-building these trees on every invocation)."""
+    key = (term, n, a, b)
+    if key not in _UNROLLED_CACHE:
+        out = term(F.element_at(a, 1), F.element_at(b, 1))
+        for i in range(2, n + 1):
+            out = out + term(F.element_at(a, i), F.element_at(b, i))
+        _UNROLLED_CACHE[key] = out
+    return _UNROLLED_CACHE[key]
 
 
 def _dot_expr(a: str, b: str):
-    """Unrolled 64-term dot product: flat Add chain stays inside
-    whole-stage codegen (higher-order folds are interpreted and were
-    the bottleneck on the all-pairs join).  FP-identical to the fold:
-    ``0.0 + x`` is exact, so both shapes add in the same order.
-
-    Memoized per (a, b) name pair: Column objects are immutable
-    unresolved expressions, so the ~250 py4j round-trips the unrolled
-    chain costs are paid once per process, not once per plan build
-    (measured: the composed PQ-IVF query spent seconds re-building
-    these trees on every invocation).
-    """
-    key = (a, b)
-    if key not in _DOT_CACHE:
-        terms = [
-            F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(DIM)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        _DOT_CACHE[key] = out
-    return _DOT_CACHE[key]
+    """Unrolled 64-term dot product (``_unrolled_sum``)."""
+    return _unrolled_sum(operator.mul, DIM, a, b)
 
 
 def _cos_frames(spark, sf_dir):
@@ -5667,25 +5670,15 @@ GROUP BY 1
 PQ_M, PQ_D, PQ_K = 4, 16, 8  # sub-blocks × dims/block × codes/block
 
 
-_L2_CACHE: dict = {}
+def _squared_diff(x, y):
+    return (x - y) * (x - y)
 
 
 def _l2_16(a: str, b: str):
-    """Unrolled 16-term squared-L2 — pure +,-,× on doubles (NO libm),
-    so the value is bit-identical across engines; no rounding needed
-    anywhere in the PQ pipeline.  Memoized like ``_dot_expr``."""
-    key = (a, b)
-    if key not in _L2_CACHE:
-        terms = [
-            (F.element_at(a, i + 1) - F.element_at(b, i + 1))
-            * (F.element_at(a, i + 1) - F.element_at(b, i + 1))
-            for i in range(PQ_D)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        _L2_CACHE[key] = out
-    return _L2_CACHE[key]
+    """Unrolled 16-term squared-L2 (``_unrolled_sum``) — pure +,-,× on
+    doubles (NO libm), so the value is bit-identical across engines; no
+    rounding needed anywhere in the PQ pipeline."""
+    return _unrolled_sum(_squared_diff, PQ_D, a, b)
 
 
 def _pq_frames(spark: SparkSession, sf_dir: str, train_where=None):

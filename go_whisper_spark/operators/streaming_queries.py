@@ -1311,9 +1311,8 @@ def st_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stateless sink: no watermark, no state store."""
     from go_whisper_spark.operators.whisper_queries import (
         W_DISTINCT_HLL_SQL,  # noqa: F401 — the oracle, reused verbatim
-        _HLL_M,
-        _HLL_NUM,
-        _HLL_P53,
+        _hll_ledger,
+        _hll_registers,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1327,28 +1326,10 @@ def st_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = ev.withColumn("arrive", chunk).drop("ts")
     store = os.path.join(_tmpdir(), "sketch")
 
-    hexc = F.md5(F.col("user_id").cast("string"))
-    j = F.conv(F.substring(hexc, 1, 2), 16, 10).cast("long") % _HLL_M
-    sub = F.substring(hexc, 3, 13)
-    lz = F.length(F.regexp_extract(sub, "^(0*)", 1))
-    first = F.substring(F.regexp_replace(sub, "^0*", ""), 1, 1)
-    extra = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
-    rho = F.when(lz == 13, F.lit(53)).otherwise(lz * 4 + extra + 1)
-
     def sink(batch: DataFrame, _bid: int) -> None:
         if batch.isEmpty():
             return
-        partial = (
-            batch.select("metric", j.alias("j"), rho.alias("rho"))
-            .groupBy("metric", "j")
-            .agg(F.max("rho").alias("mj"))
-        )
-        partial.write.mode("append").parquet(store)
+        _hll_registers(batch).write.mode("append").parquet(store)
 
     _replay(spark, marked, lambda stream: stream, sink=sink)
 
@@ -1357,27 +1338,7 @@ def st_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("metric", "j")
         .agg(F.max("mj").alias("mj"))
     )
-    per = regs.groupBy("metric").agg(
-        F.sum(F.expr("shiftleft(1L, CAST(53 - mj AS INT))")).alias("s_present"),
-        F.count("*").alias("n_regs"),
-    )
-    stot = F.col("s_present") + (_HLL_M - F.col("n_regs")) * F.lit(_HLL_P53)
-    est = F.floor(F.lit(_HLL_NUM) / stot.cast("double")).cast("long")
-    exact = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.col("event_type").alias("metric"))
-        .agg(F.count_distinct("user_id").alias("exact"))
-    )
-    e = est
-    return per.join(exact, "metric").select(
-        "metric",
-        "exact",
-        e.alias("hll_est"),
-        (_HLL_M - F.col("n_regs")).alias("n_empty"),
-        F.floor(
-            ((e - F.col("exact")) * 1000).cast("double") / F.col("exact")
-        ).cast("long").alias("err_permille"),
-    )
+    return _hll_ledger(spark, sf_dir, regs)
 
 
 # --------------------------------------------------- st_lakehouse_mv
@@ -2011,12 +1972,9 @@ def st_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed batch dedups to Δ = ∅ → zero increments).
     [pins whisper_queries.py: w_truss_decomp / _tri_triangles]"""
     from go_whisper_spark.operators.whisper_queries import (
-        _TRUSS_MAX_ROUNDS,
         _TRUSS_MOD,
-        _TRUSS_ORACLE_R,
-        _flat_localCheckpoint,
         _tri_orient,
-        _tri_triangles,
+        _truss_peel,
     )
 
     li = (
@@ -2063,79 +2021,9 @@ def st_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cu", "cv").agg(F.sum("d_sup").alias("s"))
     ) if os.path.isdir(supdir) else None
     _, oriented = _tri_orient(edges)
-    cnt = oriented.count()
-    surv = oriented
-    k = 2
-    iters = 0
-    dropped = []
-    ann = None
-    recount = True
-    seeded = False
-    while cnt > 0:
-        iters += 1
-        if iters > _TRUSS_MAX_ROUNDS:
-            raise RuntimeError("truss peeling did not reach a fixpoint")
-        if recount:
-            if not seeded and sup0 is not None:
-                # round 1: the maintained ledger replaces the
-                # full-graph triangle join the cold peel pays here
-                sup = sup0
-                seeded = True
-            else:
-                tri = _tri_triangles(surv, n_edges=cnt)
-                sup = (
-                    tri.select(
-                        F.explode(F.array(
-                            F.struct(F.least("a", "v").alias("cu"),
-                                     F.greatest("a", "v").alias("cv")),
-                            F.struct(F.least("a", "w").alias("cu"),
-                                     F.greatest("a", "w").alias("cv")),
-                            F.struct(F.least("v", "w").alias("cu"),
-                                     F.greatest("v", "w").alias("cv")),
-                        )).alias("e")
-                    ).select("e.cu", "e.cv")
-                    .groupBy("cu", "cv").agg(F.count("*").alias("s"))
-                )
-            ann = _flat_localCheckpoint(
-                surv.withColumn("cu", F.least("src", "dst"))
-                .withColumn("cv", F.greatest("src", "dst"))
-                .join(sup, ["cu", "cv"], "left")
-                .select(
-                    "src", "dst", "dd",
-                    F.coalesce("s", F.lit(0).cast("long")).alias("sup"),
-                )
-            )
-        # ONE control-plane scalar per round — the peel/stop test
-        n_bad = ann.where(F.col("sup") < k - 2).count()
-        if n_bad == 0:
-            k += 1
-            recount = False
-            continue
-        dropped.append(
-            ann.where(F.col("sup") < k - 2)
-            .select(F.lit(k - 1).cast("long").alias("trussness"))
-        )
-        surv = ann.where(F.col("sup") >= k - 2).select("src", "dst", "dd")
-        cnt -= n_bad
-        recount = True
-    if iters > _TRUSS_ORACLE_R:
-        raise RuntimeError(
-            f"truss fixpoint at round {iters} > the oracle unroll "
-            f"depth _TRUSS_ORACLE_R={_TRUSS_ORACLE_R}; raise the "
-            "unroll depth so rounds past the fixpoint stay no-ops"
-        )
-    if not dropped:
-        return spark.createDataFrame(
-            [], "trussness long, n_edges long, iters long")
-    hist = dropped[0]
-    for d in dropped[1:]:
-        hist = hist.unionByName(d)
-    return (
-        hist.groupBy("trussness")
-        .agg(F.count("*").alias("n_edges"))
-        .select("trussness", "n_edges",
-                F.lit(iters).cast("long").alias("iters"))
-    )
+    # round 1 reads the maintained ledger instead of the full-graph
+    # triangle join the cold peel pays there
+    return _truss_peel(spark, oriented, sup0)
 
 
 # ---------------------------------------------------- st_kmv_jaccard
@@ -2255,8 +2143,8 @@ def st_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     topology every streaming frequency pipeline runs."""
     from go_whisper_spark.operators.whisper_queries import (
         W_HEAVY_HITTERS_CMS_SQL,  # noqa: F401 — the oracle, verbatim
-        _CMS_D,
-        _CMS_W,
+        _cms_ledger,
+        _cms_sketch,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2270,42 +2158,10 @@ def st_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = ev.withColumn("arrive", chunk).drop("ts")
     store = os.path.join(_tmpdir(), "sketch")
 
-    def bucket_col():
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("r"),
-                            F.col("r").cast("string"),
-                            F.lit(":"),
-                            F.col("user_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _CMS_W
-        )
-
     def sink(batch: DataFrame, _bid: int) -> None:
         if batch.isEmpty():
             return
-        partial = (
-            batch.select(
-                "user_id",
-                F.explode(
-                    F.array(*[F.lit(r) for r in range(_CMS_D)])
-                ).alias("r"),
-            )
-            .withColumn("b", bucket_col())
-            .groupBy("r", "b")
-            .agg(F.count("*").alias("cnt"))
-        )
-        partial.write.mode("append").parquet(store)
+        _cms_sketch(batch).write.mode("append").parquet(store)
 
     _replay(spark, marked, lambda stream: stream, sink=sink)
 
@@ -2314,30 +2170,8 @@ def st_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r", "b")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    exact = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("exact"))
-    )
-    cand = exact.select(
-        "user_id", "exact",
-        F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r"),
-    ).withColumn("b", bucket_col())
-    est = (
-        cand.join(F.broadcast(sketch), ["r", "b"])
-        .groupBy("user_id", "exact")
-        .agg(F.min("cnt").alias("cm_est"))
-    )
-    return (
-        est.orderBy(F.desc("exact"), F.asc("user_id"))
-        .limit(20)
-        .select(
-            "user_id",
-            "exact",
-            "cm_est",
-            (F.col("cm_est") - F.col("exact")).alias("overestimate"),
-        )
-    )
+    return _cms_ledger(
+        load_table(spark, sf_dir, "events").select("user_id"), sketch)
 
 
 # ------------------------------------------------------ st_cascade_chained

@@ -651,9 +651,12 @@ def w_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_whisper_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    rows = ev.select(
-        "user_id", F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r")
-    )
+    return _cms_ledger(ev, _cms_sketch(ev))
+
+
+def _cms_cells(df: DataFrame, *cols: str) -> DataFrame:
+    """One row per (row of ``df``, hash row r) carrying its bucket b =
+    md5('r<r>:' || user_id) first-8-hex as an integer mod w."""
     bucket = (
         F.conv(
             F.substring(
@@ -673,15 +676,25 @@ def w_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % _CMS_W
     )
-    keyed = rows.withColumn("b", bucket)
-    sketch = keyed.groupBy("r", "b").agg(F.count("*").alias("cnt"))
-    exact = ev.groupBy("user_id").agg(F.count("*").alias("exact"))
-    cand = exact.select(
-        "user_id", "exact",
-        F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r"),
+    return df.select(
+        *cols, F.explode(F.array(*[F.lit(r) for r in range(_CMS_D)])).alias("r")
     ).withColumn("b", bucket)
+
+
+def _cms_sketch(ev: DataFrame) -> DataFrame:
+    """user_id rows → the d×w (r, b, cnt) counter matrix; partial
+    matrices merge by cell-wise sum."""
+    return _cms_cells(ev, "user_id").groupBy("r", "b").agg(
+        F.count("*").alias("cnt"))
+
+
+def _cms_ledger(ev: DataFrame, sketch: DataFrame) -> DataFrame:
+    """The top-20 users of ``ev`` by exact count with their CM estimate
+    (min over the d counters of ``sketch``) and the overestimate."""
+    exact = ev.groupBy("user_id").agg(F.count("*").alias("exact"))
     est = (
-        cand.join(F.broadcast(sketch), ["r", "b"])
+        _cms_cells(exact, "user_id", "exact")
+        .join(F.broadcast(sketch), ["r", "b"])
         .groupBy("user_id", "exact")
         .agg(F.min("cnt").alias("cm_est"))
     )
@@ -2112,6 +2125,16 @@ def w_truss_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge data anywhere."""
     edges = _tri_edges(spark, sf_dir, order_mod=_TRUSS_MOD)
     _, oriented = _tri_orient(edges)
+    return _truss_peel(spark, oriented)
+
+
+def _truss_peel(spark: SparkSession, oriented: DataFrame,
+                first_sup: DataFrame = None) -> DataFrame:
+    """The flattened peel loop over the oriented edge set → the
+    (trussness, n_edges, iters) histogram.  ``first_sup`` — a
+    maintained (cu, cv, s) support relation of the whole edge set —
+    replaces the round-1 triangle count when given; every later
+    recount runs on the survivors."""
     cnt = oriented.count()
     surv = oriented
     k = 2
@@ -2119,23 +2142,25 @@ def w_truss_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = []          # per-round lazy slices over checkpointed anns
     ann = None
     recount = True
+    sup = first_sup
     while cnt > 0:
         iters += 1
         if iters > _TRUSS_MAX_ROUNDS:
             raise RuntimeError("truss peeling did not reach a fixpoint")
         if recount:
-            tri = _tri_triangles(surv, n_edges=cnt)
-            pairs = tri.select(
-                F.explode(F.array(
-                    F.struct(F.least("a", "v").alias("cu"),
-                             F.greatest("a", "v").alias("cv")),
-                    F.struct(F.least("a", "w").alias("cu"),
-                             F.greatest("a", "w").alias("cv")),
-                    F.struct(F.least("v", "w").alias("cu"),
-                             F.greatest("v", "w").alias("cv")),
-                )).alias("e")
-            ).select("e.cu", "e.cv")
-            sup = pairs.groupBy("cu", "cv").agg(F.count("*").alias("s"))
+            if sup is None:
+                tri = _tri_triangles(surv, n_edges=cnt)
+                pairs = tri.select(
+                    F.explode(F.array(
+                        F.struct(F.least("a", "v").alias("cu"),
+                                 F.greatest("a", "v").alias("cv")),
+                        F.struct(F.least("a", "w").alias("cu"),
+                                 F.greatest("a", "w").alias("cv")),
+                        F.struct(F.least("v", "w").alias("cu"),
+                                 F.greatest("v", "w").alias("cv")),
+                    )).alias("e")
+                ).select("e.cu", "e.cv")
+                sup = pairs.groupBy("cu", "cv").agg(F.count("*").alias("s"))
             ann = _flat_localCheckpoint(
                 surv.withColumn("cu", F.least("src", "dst"))
                 .withColumn("cv", F.greatest("src", "dst"))
@@ -2145,6 +2170,7 @@ def w_truss_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("s", F.lit(0).cast("long")).alias("sup"),
                 )
             )
+            sup = None
         # ONE control-plane scalar per round — the peel/stop test
         n_bad = ann.where(F.col("sup") < k - 2).count()
         if n_bad == 0:
@@ -3292,6 +3318,14 @@ def w_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_type").alias("metric"), "user_id")
         .distinct()
     )
+    return _hll_ledger(spark, sf_dir, _hll_registers(ev))
+
+
+def _hll_registers(ev: DataFrame) -> DataFrame:
+    """(metric, user_id) rows → the (metric, j, mj) register table:
+    register j = md5 first byte mod 64, mj = max rho per register.
+    Register max is associative, commutative and idempotent, so
+    partial tables merge by the same max."""
     hexc = F.md5(F.col("user_id").cast("string"))
     j = F.conv(F.substring(hexc, 1, 2), 16, 10).cast("long") % _HLL_M
     sub = F.substring(hexc, 3, 13)
@@ -3304,25 +3338,30 @@ def w_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
     )
     rho = F.when(lz == 13, F.lit(53)).otherwise(lz * 4 + extra + 1)
-    regs = (
+    return (
         ev.select("metric", j.alias("j"), rho.alias("rho"))
         .groupBy("metric", "j")
         .agg(F.max("rho").alias("mj"))
     )
+
+
+def _hll_ledger(spark: SparkSession, sf_dir: str, regs: DataFrame) -> DataFrame:
+    """Register table → the (metric, exact, hll_est, n_empty,
+    err_permille) ledger against the exact distinct count."""
+    from go_whisper_spark.sources.tables import load_table
+
     per = regs.groupBy("metric").agg(
         F.sum(F.expr("shiftleft(1L, CAST(53 - mj AS INT))")).alias("s_present"),
         F.count("*").alias("n_regs"),
     )
     stot = F.col("s_present") + (_HLL_M - F.col("n_regs")) * F.lit(_HLL_P53)
-    est = F.floor(F.lit(_HLL_NUM) / stot.cast("double")).cast("long")
+    e = F.floor(F.lit(_HLL_NUM) / stot.cast("double")).cast("long")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("event_type").alias("metric"))
         .agg(F.count_distinct("user_id").alias("exact"))
     )
-    out = per.join(exact, "metric")
-    e = est
-    return out.select(
+    return per.join(exact, "metric").select(
         "metric",
         "exact",
         e.alias("hll_est"),

@@ -226,8 +226,10 @@ one produces a silent cross-engine or coverage gap):
      output label is static, or a bespoke branch if keys change;
   4. a generator arm in tests/test_render_fuzz.py (validity-aware);
   5. a row in docs/RENDER.md and this docstring's registry.
-If the op is stateless per-row, also consider
-``streaming/render.py``'s ``_STATELESS`` set.
+A stateless per-row op is written once, as a ``@_stateless`` function
+(``_STATELESS_OPS``), instead of a case in ``ev`` for step 1: the
+batch visitor and the streaming render (``streaming/render.py``) both
+dispatch to it, so the op streams with no further edit.
 """
 
 from __future__ import annotations
@@ -965,6 +967,351 @@ def _need(node: Call, n: int, kinds) -> None:
             )
 
 
+def _tag_col(key: str):
+    # 'name' is the pseudo-tag (the path before the first ';'); real
+    # tags parse from the encoded path — the g_tag_select /
+    # g_tag_group primitives, so any parse drift diverges there first.
+    if key == "name":
+        return F.substring_index("metric", ";", 1)
+    return F.regexp_extract("metric", f";{key}=([^;]+)", 1)
+
+
+def _series_by_tag(n: Call, universe) -> DataFrame:
+    """seriesByTag: the tagged universe ``universe()`` filtered by 1+
+    tag predicates, each evaluated on the PARSED path (predicates
+    compose as AND — Graphite's seriesByTag contract)."""
+    if not n.args or not all(isinstance(a, Str) for a in n.args):
+        raise RenderParseError("seriesByTag takes 1+ quoted tag filters")
+    out = universe()
+    for a in n.args:
+        key, op, val = _parse_tag_filter(a.value)
+        c = _tag_col(key)
+        if op == "=":
+            out = out.where(c == val)
+        elif op == "!=":
+            out = out.where(c != val)
+        elif op == "=~":
+            out = out.where(c.rlike(val))
+        else:  # '!=~'
+            out = out.where(~c.rlike(val))
+    return out
+
+
+def _node_col(i: int):
+    # the i-th dot node of the label; F.get (not getItem): out-of-range
+    # → NULL under ANSI mode, coalesced to '' to match DuckDB's
+    # split_part('').
+    return F.coalesce(F.get(F.split("metric", "[.]"), i), F.lit(""))
+
+
+def _cents_agg(how: str, op: str, w=None):
+    """The cents aggregate of method ``how`` (over window ``w`` when
+    given): sum / max / min, 'last' = the value at the max interval
+    (max_by, unique per (metric, interval)), 'avg' floored to exact
+    cents.  Callers whose groups have no row order reject 'last'
+    before calling."""
+
+    def over(c):
+        return c if w is None else c.over(w)
+
+    if how == "sum":
+        return over(F.sum("cents"))
+    if how == "max":
+        return over(F.max("cents"))
+    if how == "min":
+        return over(F.min("cents"))
+    if how == "last":
+        return over(F.max_by("cents", "interval"))
+    if how == "avg":
+        return F.floor(
+            over(F.sum("cents")).cast("double") / over(F.count("cents"))
+        ).cast("long")
+    raise RenderParseError(f"{op}: unknown method {how!r}")
+
+
+def _one_level(n: Call):
+    """(relabel, cents aggregate, bucket hours) of the one-level
+    reducers: summarize / hitcount aggregate each series into h-hour
+    epoch buckets (relabel None); groupByNode / groupByTags aggregate
+    the series sharing a relabel per interval (hours None).  The batch
+    visitor groups by (metric, bucket | interval); the streaming
+    render runs the same level as a watermarked tumbling window."""
+    name = n.name
+    if name in ("summarize", "hitcount"):
+        if name == "summarize":
+            _need(n, 3, (object, Num, Str))
+        else:
+            _need(n, 2, (object, Num))
+        h = n.args[1].value
+        if h < 1:
+            raise RenderParseError(f"{name} bucket must be >= 1 hour")
+        if name == "hitcount":
+            # per-rate × slot-width summed over the bucket —
+            # Σ(cents·3600), exact integers end to end; an all-NULL
+            # bucket stays NULL (empty sum is NULL in both engines).
+            return None, F.sum("cents") * 3600, h
+        return None, _cents_agg(n.args[2].value, name), h
+    if name == "groupByNode":
+        # series sharing the i-th dot-node of their label — the
+        # wildcard-reducer family as one op.
+        _need(n, 3, (object, Num, Str))
+        i = n.args[1].value
+        if i < 0:
+            raise RenderParseError("groupByNode index must be >= 0")
+        how, lab = n.args[2].value, _node_col(i)
+    else:
+        # groupByTags: series sharing a tag value, labeled
+        # name;tag=value (the g_tag_group shape as a composable op).
+        _need(n, 3, (object, Str, Str))
+        how, key = n.args[1].value, n.args[2].value
+        if key == "name":
+            raise RenderParseError(
+                "groupByTags: group by a real tag, not 'name'"
+            )
+        lab = F.concat(
+            F.substring_index("metric", ";", 1),
+            F.lit(";" + key + "="),
+            _tag_col(key),
+        )
+    if how == "last":
+        raise RenderParseError(f"{name}: unknown method {how!r}")
+    return lab, _cents_agg(how, name), None
+
+
+# Stateless per-row operators: one definition each, shared by the
+# batch visitor and the streaming render (streaming/render.py).
+# ``op(n, ev)`` checks the node's arguments, then maps ``ev(n.args[0])``
+# — ``ev`` is the calling visitor.
+_STATELESS_OPS: dict = {}
+
+
+def _stateless(*names):
+    def register(fn):
+        for nm in names:
+            _STATELESS_OPS[nm] = fn
+        return fn
+
+    return register
+
+
+@_stateless("scale")
+def _scale(n: Call, ev) -> DataFrame:
+    _need(n, 2, (object, Num))
+    return ev(n.args[0]).withColumn("cents", F.col("cents") * n.args[1].value)
+
+
+@_stateless("offset")
+def _offset(n: Call, ev) -> DataFrame:
+    _need(n, 2, (object, Num))
+    return ev(n.args[0]).withColumn(
+        "cents", F.col("cents") + 100 * n.args[1].value
+    )
+
+
+@_stateless("absolute")
+def _absolute(n: Call, ev) -> DataFrame:
+    _need(n, 1, (object,))
+    return ev(n.args[0]).withColumn("cents", F.abs("cents"))
+
+
+@_stateless("transformNull")
+def _transform_null(n: Call, ev) -> DataFrame:
+    _need(n, 2, (object, Num))
+    return ev(n.args[0]).withColumn(
+        "cents",
+        F.coalesce(F.col("cents"), F.lit(100 * n.args[1].value)),
+    )
+
+
+@_stateless("invert")
+def _invert(n: Call, ev) -> DataFrame:
+    # cent-exact 1/x: floor(10000/cents), NULL at zero.
+    _need(n, 1, (object,))
+    return ev(n.args[0]).withColumn(
+        "cents",
+        F.when(
+            F.col("cents") != 0,
+            F.floor(F.lit(10000) / F.col("cents")),
+        ).cast("long"),
+    )
+
+
+@_stateless("pow")
+def _pow(n: Call, ev) -> DataFrame:
+    # value^n cent-exact: floor(cents^n / 100^(n-1)); n bounded so the
+    # integer power stays inside double's exact range (|cents| <= ~5e4
+    # → cents^3 <= 1.25e14).
+    _need(n, 2, (object, Num))
+    p = n.args[1].value
+    if not 1 <= p <= 3:
+        raise RenderParseError("pow exponent must be in 1..3")
+    num = F.col("cents")
+    for _ in range(p - 1):
+        num = num * F.col("cents")
+    return ev(n.args[0]).withColumn(
+        "cents",
+        F.floor(num / F.lit(100 ** (p - 1))).cast("long"),
+    )
+
+
+@_stateless("squareRoot")
+def _square_root(n: Call, ev) -> DataFrame:
+    # floor(10·sqrt(cents)) — sqrt is IEEE correctly rounded (identical
+    # doubles in both engines, unlike exp/log); negative slots go NULL.
+    _need(n, 1, (object,))
+    return ev(n.args[0]).withColumn(
+        "cents",
+        F.when(
+            F.col("cents") >= 0,
+            F.floor(F.lit(10.0) * F.sqrt(F.col("cents"))),
+        ).cast("long"),
+    )
+
+
+@_stateless("removeAboveValue", "removeBelowValue")
+def _remove_value(n: Call, ev) -> DataFrame:
+    # Graphite semantics: offending slots go None (keys — and the
+    # `unique` property — are preserved).
+    _need(n, 2, (object, Num))
+    t = 100 * n.args[1].value
+    keep = (F.col("cents") <= t) if n.name == "removeAboveValue" else (
+        F.col("cents") >= t)
+    return ev(n.args[0]).withColumn("cents", F.when(keep, F.col("cents")))
+
+
+@_stateless("grep", "exclude")
+def _grep(n: Call, ev) -> DataFrame:
+    _need(n, 2, (object, Str))
+    hit = F.col("metric").rlike(n.args[1].value)
+    return ev(n.args[0]).where(hit if n.name == "grep" else ~hit)
+
+
+@_stateless("alias")
+def _alias(n: Call, ev) -> DataFrame:
+    _need(n, 2, (object, Str))
+    return ev(n.args[0]).withColumn("metric", F.lit(n.args[1].value))
+
+
+@_stateless("aliasSub")
+def _alias_sub(n: Call, ev) -> DataFrame:
+    _need(n, 3, (object, Str, Str))
+    return ev(n.args[0]).withColumn(
+        "metric",
+        F.regexp_replace("metric", n.args[1].value, n.args[2].value),
+    )
+
+
+@_stateless("aliasByNode")
+def _alias_by_node(n: Call, ev) -> DataFrame:
+    # rename each series to the named dot-nodes of its label joined by
+    # '.' (missing node → '', both engines) — the hierarchy-flatten
+    # rename, multi-index like public Graphite's aliasByNode(s, 1, 3);
+    # collapsing labels is tracked by analyze().
+    if len(n.args) < 2 or not all(isinstance(a, Num) for a in n.args[1:]):
+        raise RenderParseError("aliasByNode takes (series, i[, j, ...])")
+    idxs = [a.value for a in n.args[1:]]
+    if any(i < 0 for i in idxs):
+        raise RenderParseError("aliasByNode index must be >= 0")
+    parts = [_node_col(i) for i in idxs]
+    return ev(n.args[0]).withColumn(
+        "metric",
+        parts[0] if len(parts) == 1 else F.concat_ws(".", *parts),
+    )
+
+
+@_stateless("isNonNull")
+def _is_non_null(n: Call, ev) -> DataFrame:
+    # 1 where the slot is known, 0 where it is None — in cents: 100 / 0.
+    _need(n, 1, (object,))
+    return ev(n.args[0]).withColumn(
+        "cents",
+        F.when(F.col("cents").isNotNull(), F.lit(100))
+        .otherwise(F.lit(0)).cast("long"),
+    )
+
+
+@_stateless("scaleToSeconds")
+def _scale_to_seconds(n: Call, ev) -> DataFrame:
+    # value · k / step at the 1h archive (step = 3600s): floored cents,
+    # NULL propagates.  Both engines floor the same correctly-rounded
+    # double quotient.
+    _need(n, 2, (object, Num))
+    return ev(n.args[0]).withColumn(
+        "cents",
+        F.floor(
+            (F.col("cents") * n.args[1].value).cast("double") / 3600
+        ).cast("long"),
+    )
+
+
+@_stateless("substr")
+def _substr(n: Call, ev) -> DataFrame:
+    # keep dot nodes [i, j) of the label — narrow relabel (distinct
+    # labels can collapse; tracked by analyze()).
+    _need(n, 3, (object, Num, Num))
+    i, j2 = n.args[1].value, n.args[2].value
+    if not 0 <= i < j2:
+        raise RenderParseError("substr needs 0 <= start < stop")
+    parts = F.split("metric", "[.]")
+    return ev(n.args[0]).withColumn(
+        "metric",
+        F.concat_ws(".", F.slice(parts, i + 1, j2 - i)),
+    )
+
+
+@_stateless("roundTo")
+def _round_to(n: Call, ev) -> DataFrame:
+    # round to k decimals ON THE TRUE DECIMAL VALUE: integer half-UP at
+    # the 10^(2-k)-cent grid (float round() is a cross-engine trap —
+    # the g_round_to discipline; floor division is toward -inf in both
+    # engines, so half-up is identical for negatives too).  k=2 is the
+    # identity.
+    _need(n, 2, (object, Num))
+    kd = n.args[1].value
+    if not 0 <= kd <= 2:
+        raise RenderParseError("roundTo decimals must be in 0..2")
+    d = 10 ** (2 - kd)
+    h = d // 2
+    return ev(n.args[0]).withColumn(
+        "cents",
+        (F.floor((F.col("cents") + h).cast("double") / d) * d).cast("long"),
+    )
+
+
+def _pair_lists(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Pair two series lists by SORTED label rank — the deterministic
+    analog of Graphite's positional pairing, ranks computed on the
+    O(n_metrics) distinct-labels relation — and slot: (metric, rnk,
+    interval, a_c) left-joined to b's (b_rnk, b_iv, b_c), so an
+    unmatched rank or slot keeps a's row with NULL b_c."""
+
+    def ranked(df):
+        rnk = df.select("metric").distinct().select(
+            "metric",
+            F.row_number().over(Window.orderBy("metric")).alias("rnk"),
+        )
+        return df.join(rnk, "metric")
+
+    ra = ranked(a).select(
+        "metric", "rnk", "interval", F.col("cents").alias("a_c")
+    )
+    rb = ranked(b).select(
+        F.col("rnk").alias("b_rnk"),
+        F.col("interval").alias("b_iv"),
+        F.col("cents").alias("b_c"),
+    )
+    return ra.join(
+        rb,
+        (F.col("rnk") == F.col("b_rnk")) & (F.col("interval") == F.col("b_iv")),
+        "left",
+    )
+
+
+def _value_col():
+    # the single final cents → value projection
+    return (F.col("cents").cast("double") / F.lit(100.0)).alias("value")
+
+
 def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
     """AST → composed DataFrame of (metric, interval, cents)."""
     from go_whisper_spark.operators.graphite_funcs import _cents, _lww1h
@@ -975,15 +1322,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             .where(F.col("metric").rlike(glob_to_regex(pattern)))
             .select("metric", "interval", _cents().alias("cents"))
         )
-
-    def tag_col(key: str):
-        # 'name' is the pseudo-tag (the path before the first ';');
-        # real tags parse from the encoded path — the g_tag_select /
-        # g_tag_group primitives, so any parse drift diverges there
-        # first.
-        if key == "name":
-            return F.substring_index("metric", ";", 1)
-        return F.regexp_extract("metric", f";{key}=([^;]+)", 1)
 
     def tagged_seed() -> DataFrame:
         from go_whisper_spark.operators.graphite_funcs import (
@@ -1010,54 +1348,14 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             _need(n, 1, (Str,))
             return seed(n.args[0].value)
         if name == "seriesByTag":
-            # seed the tagged universe filtered by 1+ tag predicates,
-            # each evaluated on the PARSED path (predicates compose
-            # as AND — Graphite's seriesByTag contract).
-            if not n.args or not all(isinstance(a, Str) for a in n.args):
-                raise RenderParseError(
-                    "seriesByTag takes 1+ quoted tag filters"
-                )
-            out = tagged_seed()
-            for a in n.args:
-                key, op, val = _parse_tag_filter(a.value)
-                c = tag_col(key)
-                if op == "=":
-                    out = out.where(c == val)
-                elif op == "!=":
-                    out = out.where(c != val)
-                elif op == "=~":
-                    out = out.where(c.rlike(val))
-                else:  # '!=~'
-                    out = out.where(~c.rlike(val))
-            return out
-        if name == "groupByTags":
-            # aggregate series sharing a tag value; output label =
-            # name;tag=value (the g_tag_group shape as a composable
-            # op).
-            _need(n, 3, (object, Str, Str))
-            how = n.args[1].value
-            key = n.args[2].value
-            if key == "name":
-                raise RenderParseError(
-                    "groupByTags: group by a real tag, not 'name'"
-                )
-            if how == "sum":
-                agg = F.sum("cents")
-            elif how == "max":
-                agg = F.max("cents")
-            elif how == "min":
-                agg = F.min("cents")
-            elif how == "avg":
-                agg = F.floor(
-                    F.sum("cents").cast("double") / F.count("cents")
-                ).cast("long")
-            else:
-                raise RenderParseError(f"groupByTags: unknown method {how!r}")
-            lab = F.concat(
-                F.substring_index("metric", ";", 1),
-                F.lit(";" + key + "="),
-                tag_col(key),
-            )
+            return _series_by_tag(n, tagged_seed)
+        op = _STATELESS_OPS.get(name)
+        if op is not None:
+            return op(n, ev)
+        if name in ("groupByNode", "groupByTags"):
+            # aggregate the series sharing a relabel per interval —
+            # see _one_level.
+            lab, agg, _ = _one_level(n)
             return (
                 ev(n.args[0])
                 .withColumn("metric", lab)
@@ -1074,21 +1372,10 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 raise RenderParseError(
                     "aliasByTags takes a series + 1+ quoted tag keys"
                 )
-            cols = [tag_col(a.value) for a in n.args[1:]]
+            cols = [_tag_col(a.value) for a in n.args[1:]]
             return ev(n.args[0]).withColumn(
                 "metric", F.concat_ws(".", *cols)
             )
-        if name == "scale":
-            _need(n, 2, (object, Num))
-            s = ev(n.args[0])
-            return s.withColumn("cents", F.col("cents") * n.args[1].value)
-        if name == "offset":
-            _need(n, 2, (object, Num))
-            s = ev(n.args[0])
-            return s.withColumn("cents", F.col("cents") + 100 * n.args[1].value)
-        if name == "absolute":
-            _need(n, 1, (object,))
-            return ev(n.args[0]).withColumn("cents", F.abs("cents"))
         if name == "derivative":
             _need(n, 1, (object,))
             return ev(n.args[0]).withColumn(
@@ -1123,12 +1410,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             d = F.col("cents") - F.lag("cents").over(w)
             return ev(n.args[0]).withColumn(
                 "cents", F.when(d >= 0, d)
-            )
-        if name == "transformNull":
-            _need(n, 2, (object, Num))
-            return ev(n.args[0]).withColumn(
-                "cents",
-                F.coalesce(F.col("cents"), F.lit(100 * n.args[1].value)),
             )
         if name == "keepLastValue":
             # last-ignorenulls over the running frame INCLUDES the
@@ -1188,36 +1469,17 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                     / F.count("cents").over(fr)
                 ).cast("long"),
             )
-        if name == "summarize":
-            # summarize(s, hours, 'sum'|'max'|'min'|'last'|'avg'):
-            # epoch-aligned coarse buckets per metric — whisper's
-            # consolidation as a render op.  'avg' floors to exact
-            # cents; 'last' = value at the max interval in the bucket
-            # (max_by, unique per (metric, interval)).
-            _need(n, 3, (object, Num, Str))
-            h = n.args[1].value
-            if h < 1:
-                raise RenderParseError("summarize bucket must be >= 1 hour")
-            how = n.args[2].value
+        if name in ("summarize", "hitcount"):
+            # summarize(s, hours, 'sum'|'max'|'min'|'last'|'avg') /
+            # hitcount(s, hours): epoch-aligned coarse buckets per
+            # metric — whisper's consolidation as a render op (the
+            # fine interval stays addressable for 'last''s max_by, so
+            # the bucket gets its own column pre-grouping).
+            _, agg, h = _one_level(n)
             b = 3600 * h
-            if how == "sum":
-                agg = F.sum("cents")
-            elif how == "max":
-                agg = F.max("cents")
-            elif how == "min":
-                agg = F.min("cents")
-            elif how == "last":
-                # the fine interval must stay addressable for max_by,
-                # so the bucket gets its own column pre-grouping
-                agg = F.max_by("cents", "interval")
-            elif how == "avg":
-                agg = F.floor(
-                    F.sum("cents").cast("double") / F.count("cents")
-                ).cast("long")
-            else:
-                raise RenderParseError(f"summarize: unknown method {how!r}")
             src, xff = n.args[0], None
-            if isinstance(src, Call) and src.name == "setXFilesFactor":
+            if (name == "summarize" and isinstance(src, Call)
+                    and src.name == "setXFilesFactor"):
                 # whisper's xFilesFactor gate as a render annotation
                 # (validated to sit exactly here): a bucket survives
                 # only when known-slot coverage reaches the factor —
@@ -1242,21 +1504,12 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             return g.select(
                 "metric", F.col("bucket").alias("interval"), "cents"
             )
-        if name == "sumSeries":
+        if name in _APPLY_AGG or name == "rangeOfSeries":
+            # across-series per-slot reducers: sumSeries averageSeries
+            # maxSeries minSeries rangeOfSeries
             _need(n, 1, (object,))
-            return (
-                ev(n.args[0])
-                .groupBy("interval")
-                .agg(F.sum("cents").alias("cents"))
-                .select(F.lit("sumSeries").alias("metric"), "interval", "cents")
-            )
-        if name in ("minSeries", "maxSeries", "rangeOfSeries"):
-            _need(n, 1, (object,))
-            agg = {
-                "minSeries": F.min("cents"),
-                "maxSeries": F.max("cents"),
-                "rangeOfSeries": F.max("cents") - F.min("cents"),
-            }[name]
+            agg = (F.max("cents") - F.min("cents") if name == "rangeOfSeries"
+                   else _cents_agg(_APPLY_AGG[name], name))
             return (
                 ev(n.args[0])
                 .groupBy("interval")
@@ -1343,20 +1596,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                     F.lit(100 * n.args[0].value).cast("long").alias("cents"),
                 )
             )
-        if name == "averageSeries":
-            _need(n, 1, (object,))
-            return (
-                ev(n.args[0])
-                .groupBy("interval")
-                .agg(
-                    F.floor(
-                        F.sum("cents").cast("double") / F.count("cents")
-                    ).cast("long").alias("cents")
-                )
-                .select(
-                    F.lit("averageSeries").alias("metric"), "interval", "cents"
-                )
-            )
         if name == "maximumAbove":
             _need(n, 2, (object, Num))
             s = ev(n.args[0])
@@ -1369,12 +1608,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             # un-hinted O(n_metrics) join-back — AQE sizes it (the
             # selector-family policy, docs/SCALE.md).
             return s.join(winners, "metric")
-        if name == "grep":
-            _need(n, 2, (object, Str))
-            return ev(n.args[0]).where(F.col("metric").rlike(n.args[1].value))
-        if name == "exclude":
-            _need(n, 2, (object, Str))
-            return ev(n.args[0]).where(~F.col("metric").rlike(n.args[1].value))
         if name in ("currentAbove", "currentBelow"):
             # most-recent slot (max_by on interval — keys unique by
             # the analyze() gate) vs the threshold; un-hinted
@@ -1445,16 +1678,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 .select("metric")
             )
             return s.join(F.broadcast(top), "metric")
-        if name in ("removeAboveValue", "removeBelowValue"):
-            # Graphite semantics: offending slots go None (keys — and
-            # the `unique` property — are preserved).
-            _need(n, 2, (object, Num))
-            t = 100 * n.args[1].value
-            keep = (F.col("cents") <= t) if name == "removeAboveValue" else (
-                F.col("cents") >= t)
-            return ev(n.args[0]).withColumn(
-                "cents", F.when(keep, F.col("cents"))
-            )
         if name in ("removeAbovePercentile", "removeBelowPercentile"):
             # Rank-based per-metric threshold (value at sorted
             # position ceil(p/100·n) over NON-NULL slots — same
@@ -1645,43 +1868,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                     F.when(keep, F.col("cents")).alias("cents"),
                 )
             )
-        if name == "groupByNode":
-            # groupByNode(s, i, 'sum'|'avg'|'max'|'min'): aggregate
-            # series sharing the i-th dot-node of their label — the
-            # wildcard-reducer family as one op.  Missing node → ''
-            # in BOTH engines (Spark NULL coalesced; DuckDB
-            # split_part's '').
-            _need(n, 3, (object, Num, Str))
-            i = n.args[1].value
-            if i < 0:
-                raise RenderParseError("groupByNode index must be >= 0")
-            how = n.args[2].value
-            if how == "sum":
-                agg = F.sum("cents")
-            elif how == "max":
-                agg = F.max("cents")
-            elif how == "min":
-                agg = F.min("cents")
-            elif how == "avg":
-                agg = F.floor(
-                    F.sum("cents").cast("double") / F.count("cents")
-                ).cast("long")
-            else:
-                raise RenderParseError(f"groupByNode: unknown method {how!r}")
-            return (
-                ev(n.args[0])
-                .withColumn(
-                    "metric",
-                    # F.get (not getItem): out-of-range → NULL under
-                    # ANSI mode, coalesced to '' to match DuckDB's
-                    # split_part('').
-                    F.coalesce(
-                        F.get(F.split("metric", "[.]"), i), F.lit("")
-                    ),
-                )
-                .groupBy("metric", "interval")
-                .agg(agg.alias("cents"))
-            )
         if name == "perSecond":
             # non-negative slot delta per second of step (1h slots):
             # floor(d/3600) cents — exact, negatives/resets go NULL.
@@ -1778,16 +1964,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                     F.lit(0),
                 ).otherwise(F.lit(100)).cast("long"),
             )
-        if name == "invert":
-            # cent-exact 1/x: floor(10000/cents), NULL at zero.
-            _need(n, 1, (object,))
-            return ev(n.args[0]).withColumn(
-                "cents",
-                F.when(
-                    F.col("cents") != 0,
-                    F.floor(F.lit(10000) / F.col("cents")),
-                ).cast("long"),
-            )
         if name == "limit":
             # first k series in metric order — Graphite's limit() with
             # a deterministic (alphabetical) series order; fixed-k
@@ -1801,33 +1977,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 s.select("metric").distinct().orderBy(F.asc("metric")).limit(k)
             )
             return s.join(F.broadcast(top), "metric")
-        if name == "pow":
-            # value^n cent-exact: floor(cents^n / 100^(n-1)); n
-            # bounded so the integer power stays inside double's
-            # exact range (|cents| <= ~5e4 → cents^3 <= 1.25e14).
-            _need(n, 2, (object, Num))
-            p = n.args[1].value
-            if not 1 <= p <= 3:
-                raise RenderParseError("pow exponent must be in 1..3")
-            num = F.col("cents")
-            for _ in range(p - 1):
-                num = num * F.col("cents")
-            return ev(n.args[0]).withColumn(
-                "cents",
-                F.floor(num / F.lit(100 ** (p - 1))).cast("long"),
-            )
-        if name == "squareRoot":
-            # floor(10·sqrt(cents)) — sqrt is IEEE correctly rounded
-            # (identical doubles in both engines, unlike exp/log);
-            # negative slots go NULL.
-            _need(n, 1, (object,))
-            return ev(n.args[0]).withColumn(
-                "cents",
-                F.when(
-                    F.col("cents") >= 0,
-                    F.floor(F.lit(10.0) * F.sqrt(F.col("cents"))),
-                ).cast("long"),
-            )
         if name == "integralByInterval":
             # running sum resetting at every h-hour epoch bucket: the
             # same window chain keyed (metric, bucket) — keys and
@@ -1841,9 +1990,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 "metric", F.col("interval") - F.col("interval") % b
             ).orderBy("interval").rowsBetween(Window.unboundedPreceding, 0)
             return ev(n.args[0]).withColumn("cents", F.sum("cents").over(wb))
-        if name == "alias":
-            _need(n, 2, (object, Str))
-            return ev(n.args[0]).withColumn("metric", F.lit(n.args[1].value))
         if name == "timeShift":
             _need(n, 2, (object, Num))
             # timeShift(s, h): plot the series h hours EARLIER — add
@@ -1869,34 +2015,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                     "interval",
                     (F.col("cnt") * 100).alias("cents"),
                 )
-            )
-        if name == "aliasSub":
-            _need(n, 3, (object, Str, Str))
-            return ev(n.args[0]).withColumn(
-                "metric",
-                F.regexp_replace("metric", n.args[1].value, n.args[2].value),
-            )
-        if name == "aliasByNode":
-            # rename each series to the named dot-nodes of its label
-            # joined by '.' (missing node → '', both engines) — the
-            # hierarchy-flatten rename, multi-index like public
-            # Graphite's aliasByNode(s, 1, 3); collapsing labels is
-            # tracked by analyze().
-            if len(n.args) < 2 or not all(
-                isinstance(a, Num) for a in n.args[1:]
-            ):
-                raise RenderParseError(
-                    "aliasByNode takes (series, i[, j, ...])")
-            idxs = [a.value for a in n.args[1:]]
-            if any(i < 0 for i in idxs):
-                raise RenderParseError("aliasByNode index must be >= 0")
-            parts = [
-                F.coalesce(F.get(F.split("metric", "[.]"), i), F.lit(""))
-                for i in idxs
-            ]
-            return ev(n.args[0]).withColumn(
-                "metric",
-                parts[0] if len(parts) == 1 else F.concat_ws(".", *parts),
             )
         if name == "averageOutsidePercentile":
             # keep series whose mean falls OUTSIDE the [p, 100-p]
@@ -2030,24 +2148,11 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             if any(i < 0 for i in idxs):
                 raise RenderParseError("groupByNodes indexes must be >= 0")
             how = n.args[1].value
-            if how == "sum":
-                agg = F.sum("cents")
-            elif how == "max":
-                agg = F.max("cents")
-            elif how == "min":
-                agg = F.min("cents")
-            elif how == "avg":
-                agg = F.floor(
-                    F.sum("cents").cast("double") / F.count("cents")
-                ).cast("long")
-            else:
+            if how == "last":
                 raise RenderParseError(
                     f"groupByNodes: unknown method {how!r}")
-            parts = F.split("metric", "[.]")
-            lab = F.concat_ws(
-                ".",
-                *[F.coalesce(F.get(parts, i), F.lit("")) for i in idxs],
-            )
+            agg = _cents_agg(how, name)
+            lab = F.concat_ws(".", *[_node_col(i) for i in idxs])
             return (
                 ev(n.args[0])
                 .withColumn("metric", lab)
@@ -2130,45 +2235,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 .otherwise(F.lit(0))
                 .cast("long"),
             )
-        if name == "isNonNull":
-            # 1 where the slot is known, 0 where it is None — in
-            # cents: 100 / 0 (stateless value map).
-            _need(n, 1, (object,))
-            return ev(n.args[0]).withColumn(
-                "cents",
-                F.when(F.col("cents").isNotNull(), F.lit(100))
-                .otherwise(F.lit(0)).cast("long"),
-            )
-        if name == "scaleToSeconds":
-            # value · k / step at the 1h archive (step = 3600s):
-            # floored cents, NULL propagates.  Both engines floor the
-            # same correctly-rounded double quotient.
-            _need(n, 2, (object, Num))
-            return ev(n.args[0]).withColumn(
-                "cents",
-                F.floor(
-                    (F.col("cents") * n.args[1].value).cast("double") / 3600
-                ).cast("long"),
-            )
-        if name == "hitcount":
-            # hitcount(s, h): per-rate × slot-width summed over
-            # h-hour epoch buckets — Σ(cents·3600) per bucket, exact
-            # integers end to end; an all-NULL bucket stays NULL
-            # (sum skips NULLs, empty sum is NULL both engines).
-            _need(n, 2, (object, Num))
-            h = n.args[1].value
-            if h < 1:
-                raise RenderParseError("hitcount bucket must be >= 1 hour")
-            b2 = 3600 * h
-            return (
-                ev(n.args[0])
-                .withColumn(
-                    "bucket", F.col("interval") - F.col("interval") % b2
-                )
-                .groupBy("metric", "bucket")
-                .agg((F.sum("cents") * 3600).alias("cents"))
-                .select("metric", F.col("bucket").alias("interval"), "cents")
-            )
         if name in ("highestCurrent", "lowestCurrent"):
             # fixed-k winner set by the most-recent slot (max_by on
             # interval — NULL latest stays NULL and ranks last both
@@ -2229,18 +2295,9 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             # dependence), floored-cent mean.
             _need(n, 2, (object, Str))
             how = n.args[1].value
-            wm = Window.partitionBy("metric")
-            if how == "avg":
-                val = F.floor(
-                    F.sum("cents").over(wm).cast("double")
-                    / F.count("cents").over(wm)
-                ).cast("long")
-            elif how == "max":
-                val = F.max("cents").over(wm)
-            elif how == "min":
-                val = F.min("cents").over(wm)
-            else:
+            if how not in ("avg", "max", "min"):
                 raise RenderParseError(f"aggregateLine: unknown method {how!r}")
+            val = _cents_agg(how, name, Window.partitionBy("metric"))
             return ev(n.args[0]).select(
                 "metric", "interval", val.alias("cents")
             )
@@ -2363,50 +2420,14 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                     .select(F.col("lab").alias("metric"), "interval",
                             "cents")
                 )
-            else:
-                agg = {
-                    "sumSeriesWithWildcards": F.sum("cents"),
-                    "maxSeriesWithWildcards": F.max("cents"),
-                    "minSeriesWithWildcards": F.min("cents"),
-                    "averageSeriesWithWildcards": F.floor(
-                        F.sum("cents").cast("double") / F.count("cents")
-                    ).cast("long"),
-                }[name]
+            # sumSeriesWithWildcards → _APPLY_AGG["sumSeries"] = "sum"
+            how = _APPLY_AGG[name.replace("WithWildcards", "")]
+            agg = _cents_agg(how, name)
             return (
                 ev(n.args[0])
                 .withColumn("metric", relabel)
                 .groupBy("metric", "interval")
                 .agg(agg.alias("cents"))
-            )
-        if name == "substr":
-            # keep dot nodes [i, j) of the label — narrow relabel
-            # (distinct labels can collapse; tracked by analyze()).
-            _need(n, 3, (object, Num, Num))
-            i, j2 = n.args[1].value, n.args[2].value
-            if not 0 <= i < j2:
-                raise RenderParseError("substr needs 0 <= start < stop")
-            parts = F.split("metric", "[.]")
-            return ev(n.args[0]).withColumn(
-                "metric",
-                F.concat_ws(".", F.slice(parts, i + 1, j2 - i)),
-            )
-        if name == "roundTo":
-            # round to k decimals ON THE TRUE DECIMAL VALUE: integer
-            # half-UP at the 10^(2-k)-cent grid (float round() is a
-            # cross-engine trap — the g_round_to discipline; floor
-            # division is toward -inf in both engines, so half-up is
-            # identical for negatives too).  k=2 is the identity.
-            _need(n, 2, (object, Num))
-            kd = n.args[1].value
-            if not 0 <= kd <= 2:
-                raise RenderParseError("roundTo decimals must be in 0..2")
-            d = 10 ** (2 - kd)
-            h = d // 2
-            return ev(n.args[0]).withColumn(
-                "cents",
-                (
-                    F.floor((F.col("cents") + h).cast("double") / d) * d
-                ).cast("long"),
             )
         if name == "movingMedian":
             # lower median (sorted element at ceil(m/2)) of the
@@ -2550,9 +2571,7 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             i = n.args[2].value
             if i < 0:
                 raise RenderParseError("weightedAverage node must be >= 0")
-            node_of = F.coalesce(
-                F.get(F.split("metric", "[.]"), i), F.lit("")
-            )
+            node_of = _node_col(i)
             a = (
                 ev(n.args[0])
                 .select(
@@ -2745,24 +2764,8 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             h = n.args[1].value
             if h < 1:
                 raise RenderParseError("smartSummarize bucket must be >= 1 hour")
-            how = n.args[2].value
             b = 3600 * h
-            if how == "sum":
-                agg = F.sum("cents")
-            elif how == "max":
-                agg = F.max("cents")
-            elif how == "min":
-                agg = F.min("cents")
-            elif how == "last":
-                agg = F.max_by("cents", "interval")
-            elif how == "avg":
-                agg = F.floor(
-                    F.sum("cents").cast("double") / F.count("cents")
-                ).cast("long")
-            else:
-                raise RenderParseError(
-                    f"smartSummarize: unknown method {how!r}"
-                )
+            agg = _cents_agg(n.args[2].value, name)
             s = ev(n.args[0])
             t0 = s.agg(F.min("interval").alias("t0"))
             off = F.col("interval") - F.col("t0")
@@ -2799,29 +2802,7 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             # a's row with NULL cents (divideSeries' left-join
             # None-propagation).
             _need(n, 2, (object, object))
-            a, b2 = ev(n.args[0]), ev(n.args[1])
-
-            def _ranked(df):
-                rnk = df.select("metric").distinct().select(
-                    "metric",
-                    F.row_number().over(Window.orderBy("metric")).alias("rnk"),
-                )
-                return df.join(rnk, "metric")
-
-            ra = _ranked(a).select(
-                "metric", "rnk", "interval", F.col("cents").alias("a_c")
-            )
-            rb = _ranked(b2).select(
-                F.col("rnk").alias("b_rnk"),
-                F.col("interval").alias("b_iv"),
-                F.col("cents").alias("b_c"),
-            )
-            j = ra.join(
-                rb,
-                (F.col("rnk") == F.col("b_rnk"))
-                & (F.col("interval") == F.col("b_iv")),
-                "left",
-            )
+            j = _pair_lists(ev(n.args[0]), ev(n.args[1]))
             out = F.when(
                 F.col("b_c") != 0,
                 F.floor((F.col("a_c") * 100).cast("double") / F.col("b_c")),
@@ -2877,29 +2858,7 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 raise RenderParseError(
                     "aggregateSeriesLists: method must be "
                     "'sum'|'diff'|'multiply'")
-            a, b2 = ev(n.args[0]), ev(n.args[1])
-
-            def _ranked(df):
-                rnk = df.select("metric").distinct().select(
-                    "metric",
-                    F.row_number().over(Window.orderBy("metric")).alias("rnk"),
-                )
-                return df.join(rnk, "metric")
-
-            ra = _ranked(a).select(
-                "metric", "rnk", "interval", F.col("cents").alias("a_c")
-            )
-            rb = _ranked(b2).select(
-                F.col("rnk").alias("b_rnk"),
-                F.col("interval").alias("b_iv"),
-                F.col("cents").alias("b_c"),
-            )
-            j = ra.join(
-                rb,
-                (F.col("rnk") == F.col("b_rnk"))
-                & (F.col("interval") == F.col("b_iv")),
-                "left",
-            )
+            j = _pair_lists(ev(n.args[0]), ev(n.args[1]))
             if how == "sum":
                 comb = F.col("a_c") + F.col("b_c")
             elif how == "diff":
@@ -2949,10 +2908,7 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 raise RenderParseError("applyByNode index must be >= 0")
             kind = _parse_apply_template(n.args[2].value)
             s = ev(n.args[0])
-            s2 = s.withColumn(
-                "node",
-                F.coalesce(F.get(F.split("metric", "[.]"), i), F.lit("")),
-            )
+            s2 = s.withColumn("node", _node_col(i))
             wg = Window.partitionBy("node", "interval")
             if kind[0] == "percent":
                 tot = F.sum("cents").over(wg)
@@ -2963,18 +2919,8 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 lbl = F.concat(
                     F.lit("asPercent("), F.col("metric"), F.lit(")"))
             else:
-                how = kind[1]
-                if how == "sum":
-                    div = F.sum("cents").over(wg)
-                elif how == "max":
-                    div = F.max("cents").over(wg)
-                elif how == "min":
-                    div = F.min("cents").over(wg)
-                else:  # avg — floored cents, the averageSeries contract
-                    div = F.floor(
-                        F.sum("cents").over(wg).cast("double")
-                        / F.count("cents").over(wg)
-                    ).cast("long")
+                # avg floors to cents — the averageSeries contract
+                div = _cents_agg(kind[1], name, wg)
                 out = F.when(
                     div != 0,
                     F.floor((F.col("cents") * 100).cast("double") / div),
@@ -3056,23 +3002,15 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             from go_whisper_spark.operators.graphite_funcs import _cents_str
 
             keys = [a.value for a in n.args[1:]]
-            stat = {
-                "avg": F.floor(
-                    F.sum("cents").cast("double") / F.count("cents")
-                ).cast("long"),
-                "total": F.sum("cents"),
-                "min": F.min("cents"),
-                "max": F.max("cents"),
-                "last": F.max_by("cents", "interval"),
-            }
             for k in keys:
-                if k not in stat:
+                if k not in ("avg", "total", "min", "max", "last"):
                     raise RenderParseError(
                         f"legendValue: unknown key {k!r}")
             s = ev(n.args[0])
-            per = s.groupBy("metric").agg(
-                *[stat[k].alias(f"v{i}") for i, k in enumerate(keys)]
-            )
+            per = s.groupBy("metric").agg(*[
+                _cents_agg("sum" if k == "total" else k, name).alias(f"v{i}")
+                for i, k in enumerate(keys)
+            ])
             lab = F.col("metric")
             for i, k in enumerate(keys):
                 lab = F.concat(
@@ -3104,8 +3042,8 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
 # a pure function of (session, corpus, target).  DataFrames are
 # immutable plans, NOT results: every action on the memoized frame
 # still scans the parquet inputs and computes from scratch (nothing
-# here is persisted/cached data — the _DOT_CACHE precedent one level
-# up).
+# here is persisted/cached data — the llm_ops._UNROLLED_CACHE
+# precedent one level up).
 _RENDER_FRAME_CACHE: dict = {}
 
 
@@ -3119,14 +3057,8 @@ def render(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:
 
     def build() -> DataFrame:
         frame = build_frame(spark, sf_dir, validate_target(parse_target(target)))
-        cols = [
-            F.col("metric"),
-            F.col("interval"),
-            (F.col("cents").cast("double") / F.lit(100.0)).alias("value"),
-        ]
-        if "series_rank" in frame.columns:
-            cols.append(F.col("series_rank"))
-        return frame.select(*cols)
+        rank = ["series_rank"] if "series_rank" in frame.columns else []
+        return frame.select("metric", "interval", _value_col(), *rank)
 
     return session_memo(_RENDER_FRAME_CACHE, spark, (sf_dir, target), build)
 

@@ -25,7 +25,7 @@ from contextlib import contextmanager
 from datetime import datetime, timezone
 from typing import Callable, Iterator, List, NamedTuple, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_whisper_spark.engine import (
@@ -83,10 +83,16 @@ def walk_levels(
             frame.unpersist()
 
 
+def day_of(seconds: Column) -> Column:
+    """The ``day`` partition key of an epoch-seconds column: its UTC
+    date."""
+    return F.to_date(F.timestamp_seconds(seconds))
+
+
 def with_day(level: DataFrame, days: Optional[list] = None) -> DataFrame:
     """``level`` plus its ``day`` partition column, kept to ``days``
     (None: every day)."""
-    out = level.withColumn("day", F.to_date(F.timestamp_seconds(F.col("interval"))))
+    out = level.withColumn("day", day_of(F.col("interval")))
     return out if days is None else out.where(F.col("day").isin(days))
 
 
@@ -153,7 +159,7 @@ def write_points(points: DataFrame, base: str) -> str:
     timestamp."""
     path = os.path.join(base, "points")
     (
-        points.withColumn("day", F.to_date(F.timestamp_seconds(F.col("ts"))))
+        points.withColumn("day", day_of(F.col("ts")))
         .repartition("day")
         .write.mode("append")
         .partitionBy("day")
@@ -201,7 +207,7 @@ def accepted_batch(
     accepted = points.where(in_bounds(config, now)).cache()
     try:
         touched = (
-            accepted.groupBy(F.to_date(F.timestamp_seconds(F.col("ts"))).alias("day"))
+            accepted.groupBy(day_of(F.col("ts")).alias("day"))
             .agg(F.max("ts").alias("max_ts"))
             .collect()
         )
@@ -320,11 +326,9 @@ class MaterializedRollups:
 
         def dense(idx: int, step: int, from_iv: int, until_iv: int):
             # day predicate → partition pruning on the scan
-            day_lo = F.to_date(F.timestamp_seconds(F.lit(from_iv)))
-            day_hi = F.to_date(F.timestamp_seconds(F.lit(until_iv)))
             arch = self.archive(idx).where(
-                (F.col("day") >= day_lo)
-                & (F.col("day") <= day_hi)
+                (F.col("day") >= day_of(F.lit(from_iv)))
+                & (F.col("day") <= day_of(F.lit(until_iv)))
                 & (F.col("interval") >= F.lit(from_iv))
                 & (F.col("interval") < F.lit(until_iv))
             )

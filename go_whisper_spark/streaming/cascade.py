@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from go_whisper_spark.engine import WhisperEngine
 from go_whisper_spark.model import SeriesConfig
-from go_whisper_spark.retention import archive_path, write_levels
+from go_whisper_spark.retention import archive_path, with_day, write_levels
 from go_whisper_spark.streaming.rollup import streaming_rollup
 
 
@@ -69,9 +69,7 @@ def streaming_cascade(
     spark = points.sparkSession
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.withColumn(
-            "day", F.to_date(F.timestamp_seconds(F.col("interval")))
-        ).cache()
+        batch = with_day(batch_df).cache()
         try:
             if batch.isEmpty():
                 return

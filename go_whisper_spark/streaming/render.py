@@ -14,15 +14,24 @@ declarative chained handoff from ``streaming/chained.py`` —
 **Streamable subset** (enforced — anything else raises
 ``RenderParseError``): the grammar ``stateless* windowop?
 stateless* (summarize (stateless* (seed)))?`` — seeds and every
-stateless per-row operator
-(scale, offset, absolute, transformNull, invert, removeAbove/BelowValue,
-grep, exclude, alias, aliasSub) compose freely BELOW and ABOVE at
-most ONE aggregate level — ``summarize(s, h, how)``, ``groupByNode``
-or ``hitcount`` — which maps onto a watermarked
-tumbling window aggregate (stateless ops above it are projections
-over the emitted closed-window rows — append-safe) — Graphite
-consolidation as a streaming window, the same mapping
-``streaming_rollup`` uses for whisper's propagate.
+stateless per-row operator (the keys of ``render._STATELESS_OPS``)
+compose freely BELOW and ABOVE at most ONE aggregate level —
+``summarize(s, h, how)``, ``hitcount``, ``groupByNode`` or
+``groupByTags`` — which maps onto a watermarked tumbling window
+aggregate (stateless ops above it are projections over the emitted
+closed-window rows — append-safe) — Graphite consolidation as a
+streaming window, the same mapping ``streaming_rollup`` uses for
+whisper's propagate.
+
+**One definition per operator.**  This module owns only the
+streamability gate, the watermark/window mapping and the chained
+handoff.  Every value map, label rewrite, tag filter and aggregate it
+evaluates is the batch render's own definition: the stateless ops
+dispatch to ``render._STATELESS_OPS``, ``seriesByTag`` to
+``render._series_by_tag``, and the aggregate level's relabel and
+cents aggregate come from ``render._one_level``, so a streamed target
+computes exactly what ``render()`` computes over the same archive
+rows.
 
 At most ONE order-sensitive window op (movingSum / movingAverage /
 movingMin / movingMax / derivative / nonNegativeDerivative) may sit
@@ -61,13 +70,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_whisper_spark.model import SeriesConfig
+from go_whisper_spark.operators.whisper_queries import _cents
 from go_whisper_spark.render import (
+    _STATELESS_OPS,
     Call,
     Glob,
     Node,
     Num,
     RenderParseError,
     Str,
+    _one_level,
+    _parse_tag_filter,
+    _series_by_tag,
+    _value_col,
     glob_to_regex,
     parse_target,
     validate_target,
@@ -75,14 +90,6 @@ from go_whisper_spark.render import (
 from go_whisper_spark.streaming.rollup import streaming_rollup
 
 _LEVEL_SCHEMA = "metric string, interval long, value double"
-
-# Stateless per-row operators — the streamable value-map/label subset.
-_STATELESS = frozenset({
-    "scale", "offset", "absolute", "transformNull", "invert",
-    "pow", "squareRoot", "removeAboveValue", "removeBelowValue",
-    "grep", "exclude", "alias", "aliasSub", "aliasByNode",
-    "isNonNull", "scaleToSeconds", "substr", "roundTo",
-})
 
 
 def check_streamable(node: Node):
@@ -108,9 +115,7 @@ def check_streamable(node: Node):
         if n.name == "seriesByTag":
             # tagged-universe seed: tag predicates are per-row filters
             # on the parsed path — stateless, stream-trivial (the feed
-            # must carry tagged metrics; round 12).
-            from go_whisper_spark.render import _parse_tag_filter
-
+            # must carry tagged metrics).
             for a in n.args:
                 if isinstance(a, Str):
                     _parse_tag_filter(a.value)
@@ -148,7 +153,7 @@ def check_streamable(node: Node):
             for a in n.args:
                 walk(a, False, False)
             return (None, None)
-        if n.name not in _STATELESS:
+        if n.name not in _STATELESS_OPS:
             raise RenderParseError(
                 f"{n.name} is not streamable — only stateless value maps, "
                 "group() unions of them, one window op above the "
@@ -165,20 +170,14 @@ def _apply_stateless(
     stop_frame: DataFrame = None,
 ) -> DataFrame:
     """Evaluate the stateless chain over a (metric, interval, cents)
-    frame — the same arithmetic as the batch visitor, expression for
-    expression (integer cents; see render.py's exactness contract).
-    When ``stop`` is given, that AST node evaluates to ``stop_frame``
-    (the already-aggregated summarize result) so the OUTER stateless
-    chain composes over it."""
+    frame with the batch render's own operator definitions
+    (``render._STATELESS_OPS``, ``render._series_by_tag``).  When
+    ``stop`` is given, that AST node evaluates to ``stop_frame`` (the
+    already-aggregated level) so the OUTER stateless chain composes
+    over it."""
 
     def seed(pattern: str) -> DataFrame:
         return frame.where(F.col("metric").rlike(glob_to_regex(pattern)))
-
-    def tag_col(key: str):
-        # the batch layer's tag parse, verbatim (render.py tag_col)
-        if key == "name":
-            return F.substring_index("metric", ";", 1)
-        return F.regexp_extract("metric", f";{key}=([^;]+)", 1)
 
     def ev(n: Node) -> DataFrame:
         if n is stop:
@@ -189,246 +188,54 @@ def _apply_stateless(
         if name == "seriesByGlob":
             return seed(n.args[0].value)
         if name == "seriesByTag":
-            from go_whisper_spark.render import _parse_tag_filter
-
-            out = frame
-            for a in n.args:
-                key, op, val = _parse_tag_filter(a.value)
-                c = tag_col(key)
-                if op == "=":
-                    out = out.where(c == val)
-                elif op == "!=":
-                    out = out.where(c != val)
-                elif op == "=~":
-                    out = out.where(c.rlike(val))
-                else:  # '!=~'
-                    out = out.where(~c.rlike(val))
-            return out
+            return _series_by_tag(n, lambda: frame)
         if name == "group":
             out = ev(n.args[0])
             for a in n.args[1:]:
                 out = out.unionByName(ev(a))
             return out
-        s = ev(n.args[0])
-        if name == "scale":
-            return s.withColumn("cents", F.col("cents") * n.args[1].value)
-        if name == "offset":
-            return s.withColumn("cents", F.col("cents") + 100 * n.args[1].value)
-        if name == "absolute":
-            return s.withColumn("cents", F.abs("cents"))
-        if name == "transformNull":
-            return s.withColumn(
-                "cents",
-                F.coalesce(F.col("cents"), F.lit(100 * n.args[1].value)),
-            )
-        if name == "invert":
-            return s.withColumn(
-                "cents",
-                F.when(
-                    F.col("cents") != 0,
-                    F.floor(F.lit(10000) / F.col("cents")),
-                ).cast("long"),
-            )
-        if name == "pow":
-            p = n.args[1].value
-            if not 1 <= p <= 3:
-                raise RenderParseError("pow exponent must be in 1..3")
-            num = F.col("cents")
-            for _ in range(p - 1):
-                num = num * F.col("cents")
-            return s.withColumn(
-                "cents", F.floor(num / F.lit(100 ** (p - 1))).cast("long")
-            )
-        if name == "squareRoot":
-            return s.withColumn(
-                "cents",
-                F.when(
-                    F.col("cents") >= 0,
-                    F.floor(F.lit(10.0) * F.sqrt(F.col("cents"))),
-                ).cast("long"),
-            )
-        if name == "aliasByNode":
-            i = n.args[1].value
-            if i < 0:
-                raise RenderParseError("aliasByNode index must be >= 0")
-            return s.withColumn(
-                "metric",
-                F.coalesce(F.get(F.split("metric", "[.]"), i), F.lit("")),
-            )
-        if name in ("removeAboveValue", "removeBelowValue"):
-            t = 100 * n.args[1].value
-            keep = (F.col("cents") <= t) if name == "removeAboveValue" else (
-                F.col("cents") >= t)
-            return s.withColumn("cents", F.when(keep, F.col("cents")))
-        if name == "grep":
-            return s.where(F.col("metric").rlike(n.args[1].value))
-        if name == "exclude":
-            return s.where(~F.col("metric").rlike(n.args[1].value))
-        if name == "alias":
-            return s.withColumn("metric", F.lit(n.args[1].value))
-        if name == "aliasSub":
-            return s.withColumn(
-                "metric",
-                F.regexp_replace("metric", n.args[1].value, n.args[2].value),
-            )
-        if name == "isNonNull":
-            return s.withColumn(
-                "cents",
-                F.when(F.col("cents").isNotNull(), F.lit(100))
-                .otherwise(F.lit(0)).cast("long"),
-            )
-        if name == "scaleToSeconds":
-            return s.withColumn(
-                "cents",
-                F.floor(
-                    (F.col("cents") * n.args[1].value).cast("double") / 3600
-                ).cast("long"),
-            )
-        if name == "roundTo":
-            kd = n.args[1].value
-            if not 0 <= kd <= 2:
-                raise RenderParseError("roundTo decimals must be in 0..2")
-            d = 10 ** (2 - kd)
-            h = d // 2
-            return s.withColumn(
-                "cents",
-                (
-                    F.floor((F.col("cents") + h).cast("double") / d) * d
-                ).cast("long"),
-            )
-        if name == "substr":
-            i, j2 = n.args[1].value, n.args[2].value
-            if not 0 <= i < j2:
-                raise RenderParseError("substr needs 0 <= start < stop")
-            parts = F.split("metric", "[.]")
-            return s.withColumn(
-                "metric",
-                F.concat_ws(".", F.slice(parts, i + 1, j2 - i)),
-            )
-        raise RenderParseError(f"{name} is not streamable")
+        if name not in _STATELESS_OPS:
+            raise RenderParseError(f"{name} is not streamable")
+        return _STATELESS_OPS[name](n, ev)
 
     return ev(node)
 
 
-def _summarize_agg(how: str):
-    if how == "sum":
-        return F.sum("cents")
-    if how == "max":
-        return F.max("cents")
-    if how == "min":
-        return F.min("cents")
-    if how == "last":
-        return F.max_by("cents", "interval")
-    if how == "avg":
-        return F.floor(
-            F.sum("cents").cast("double") / F.count("cents")
-        ).cast("long")
-    raise RenderParseError(f"summarize: unknown method {how!r}")
-
-
-def _plan_below(base: DataFrame, top: Node, summarize_node) -> DataFrame:
+def _plan_below(base: DataFrame, top: Node, agg_node) -> DataFrame:
     """(metric, interval, cents) streaming plan for the subtree
-    ``top`` — ``stateless* (summarize (stateless* (seed)))?`` — over
-    the level-0 cents frame ``base``; the summarize level becomes the
-    watermarked tumbling window aggregate."""
-    if summarize_node is not None:
-        sn = summarize_node
-        if sn.name == "hitcount":
-            if len(sn.args) != 2 or not isinstance(sn.args[1], Num):
-                raise RenderParseError("hitcount takes (series, hours)")
-        elif sn.name == "groupByTags":
-            pass  # (series, 'method', 'tag') — validated in its branch
-        elif len(sn.args) != 3 or not isinstance(sn.args[1], Num) \
-                or not isinstance(sn.args[2], Str):
-            raise RenderParseError(f"{sn.name} takes (series, num, method)")
-        mapped = _apply_stateless(base, sn.args[0])
-        post_scale = 1
-        if sn.name == "hitcount":
-            # summarize-sum at the coarse grain, × slot width — the
-            # scale rides the post-aggregate projection (append-safe
-            # over emitted closed windows, like any stateless map).
-            h = sn.args[1].value
-            if h < 1:
-                raise RenderParseError("hitcount bucket must be >= 1 hour")
-            win_secs = 3600 * h
-            how = "sum"
-            post_scale = 3600
-        elif sn.name == "summarize":
-            h = sn.args[1].value
-            if h < 1:
-                raise RenderParseError("summarize bucket must be >= 1 hour")
-            win_secs = 3600 * h
-            how = sn.args[2].value
-        elif sn.name == "groupByTags":
-            # per-interval aggregate ACROSS series sharing a tag value
-            # — the groupByNode shape with the tagged relabel
-            # (name;key=value), window = the archive's own 1h step.
-            if len(sn.args) != 3 or not isinstance(sn.args[1], Str) \
-                    or not isinstance(sn.args[2], Str):
-                raise RenderParseError(
-                    "groupByTags takes (series, 'method', 'tag')")
-            how = sn.args[1].value
-            if how == "last":
-                raise RenderParseError("groupByTags has no 'last' method")
-            key = sn.args[2].value
-            tag = (F.substring_index("metric", ";", 1) if key == "name"
-                   else F.regexp_extract("metric", f";{key}=([^;]+)", 1))
-            win_secs = 3600
-            mapped = mapped.withColumn(
-                "metric",
-                F.concat(
-                    F.substring_index("metric", ";", 1),
-                    F.lit(";" + key + "="),
-                    tag,
-                ),
-            )
-        else:  # groupByNode: per-interval aggregate ACROSS relabeled
-            # series — the window is the archive's own 1h step, so
-            # each tumbling window holds exactly one interval's rows.
-            i = sn.args[1].value
-            if i < 0:
-                raise RenderParseError("groupByNode index must be >= 0")
-            how = sn.args[2].value
-            if how == "last":
-                raise RenderParseError("groupByNode has no 'last' method")
-            win_secs = 3600
-            mapped = mapped.withColumn(
-                "metric",
-                F.coalesce(F.get(F.split("metric", "[.]"), i), F.lit("")),
-            )
-        agg = (
-            mapped.withColumn("ts", F.timestamp_seconds(F.col("interval")))
-            .withWatermark("ts", "0 seconds")
-            .groupBy(
-                "metric", F.window("ts", f"{win_secs} seconds").alias("w")
-            )
-            .agg(_summarize_agg(how).alias("cents"))
-            .select(
-                "metric",
-                F.col("w.start").cast("long").alias("interval"),
-                (F.col("cents") * post_scale).alias("cents"),
-            )
+    ``top`` — ``stateless* (aggregate (stateless* (seed)))?`` — over
+    the level-0 cents frame ``base``; the aggregate level
+    (``render._one_level``: the batch relabel and cents aggregate)
+    becomes the watermarked tumbling window aggregate."""
+    if agg_node is None:
+        return _apply_stateless(base, top)
+    lab, agg, hours = _one_level(agg_node)
+    mapped = _apply_stateless(base, agg_node.args[0])
+    if lab is not None:
+        mapped = mapped.withColumn("metric", lab)
+    # summarize/hitcount: h-hour windows; groupByNode/groupByTags: the
+    # archive's own 1h step, so each window holds one interval's rows.
+    win_secs = 3600 * (hours or 1)
+    level = (
+        mapped.withColumn("ts", F.timestamp_seconds(F.col("interval")))
+        .withWatermark("ts", "0 seconds")
+        .groupBy("metric", F.window("ts", f"{win_secs} seconds").alias("w"))
+        .agg(agg.alias("cents"))
+        .select(
+            "metric", F.col("w.start").cast("long").alias("interval"), "cents"
         )
-        # stateless value maps ABOVE the windowed aggregate are a
-        # projection over the emitted closed-window rows — append-safe.
-        return _apply_stateless(base, top, stop=sn, stop_frame=agg)
-    return _apply_stateless(base, top)
+    )
+    # stateless value maps ABOVE the windowed aggregate are a
+    # projection over the emitted closed-window rows — append-safe.
+    return _apply_stateless(base, top, stop=agg_node, stop_frame=level)
 
 
 def _cents_base(archive_stream: DataFrame) -> DataFrame:
-    return archive_stream.select(
-        "metric",
-        "interval",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
+    return archive_stream.select("metric", "interval", _cents().alias("cents"))
 
 
 def _to_value(frame: DataFrame) -> DataFrame:
-    return frame.select(
-        "metric",
-        "interval",
-        (F.col("cents").cast("double") / F.lit(100.0)).alias("value"),
-    )
+    return frame.select("metric", "interval", _value_col())
 
 
 def streaming_render_frame(archive_stream: DataFrame, target: str) -> DataFrame:

@@ -132,8 +132,8 @@ def test_hitcount_streamable(spark):
 
 
 def test_wave56_stateless_ops_evaluate_on_stream(spark):
-    """isNonNull/scaleToSeconds/roundTo/substr are in _STATELESS —
-    they must EVALUATE on a streaming frame, not just pass the gate
+    """isNonNull/scaleToSeconds/roundTo/substr are streamable stateless
+    ops — they must EVALUATE on a streaming frame, not just pass the gate
     (a gate-only entry raises at eval time)."""
     src = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
@@ -256,3 +256,57 @@ def test_tagged_streaming_gate_and_eval(spark):
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "EventTimeWatermark" in plan
     assert out.columns == ["metric", "interval", "value"]
+
+
+# One target per op of the shared stateless table (a new op without a
+# target here fails test_parity_targets_cover_stateless_table).
+_STATELESS_TARGETS = {
+    "scale": "scale('*', 3)",
+    "offset": "offset('*', -1)",
+    "absolute": "absolute(offset('*', -5))",
+    "transformNull": "transformNull(removeBelowValue('*', 4), 2)",
+    "invert": "invert(offset('*', -3))",
+    "pow": "pow('*', 3)",
+    "squareRoot": "squareRoot(offset('*', -4))",
+    "removeAboveValue": "removeAboveValue('*', 5)",
+    "removeBelowValue": "removeBelowValue('*', 5)",
+    "grep": "grep('*', '^c')",
+    "exclude": "exclude('*', '^c')",
+    "alias": "alias(grep('*', '^v'), 'x')",
+    "aliasSub": "aliasSub('*', '^(.)', 'K$1')",
+    "aliasByNode": "aliasByNode(aliasSub('*', '^', 'dc1.x.'), 2)",
+    "isNonNull": "isNonNull(removeAboveValue('*', 5))",
+    "scaleToSeconds": "scaleToSeconds('*', 60)",
+    "substr": "substr(aliasSub('*', '^', 'a.b.'), 1, 3)",
+    "roundTo": "roundTo(scaleToSeconds('*', 7), 1)",
+}
+
+
+def test_parity_targets_cover_stateless_table():
+    from go_whisper_spark.render import _STATELESS_OPS
+
+    assert set(_STATELESS_TARGETS) == set(_STATELESS_OPS)
+
+
+@pytest.mark.parametrize(
+    "target",
+    sorted(_STATELESS_TARGETS.values())
+    + ["aliasByNode(aliasSub('*', '^', 'dc1.x.'), 0, 2)"]
+    + [f"summarize('*', 6, '{how}')"
+       for how in ("sum", "max", "min", "avg", "last")],
+)
+def test_streaming_render_matches_batch(spark, sf_dir, target):
+    """The streaming render over the static 1h LWW archive equals the
+    batch render of the same target row for row."""
+    from go_whisper_spark.operators.whisper_queries import w_lww_1h
+    from go_whisper_spark.render import render
+
+    def rows(df):
+        return sorted(
+            df.select("metric", "interval", "value").collect(),
+            key=lambda r: (r.metric, r.interval, r.value is None, r.value),
+        )
+
+    got = rows(streaming_render_frame(w_lww_1h(spark, sf_dir), target))
+    want = rows(render(spark, sf_dir, target))
+    assert want and got == want
