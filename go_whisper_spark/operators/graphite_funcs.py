@@ -6,6 +6,12 @@ integral, keepLastValue, summarize, derivative — derivative lives in
 ``whisper_queries``).  Re-expressed over the 1h LWW series as window /
 re-bucketing aggregates, each with a DuckDB oracle.
 
+A query whose answer is exactly a render target's value column is
+registered as that target (``_rendered``): ``render.py`` is its only
+Spark implementation, and its hand-written ``G_*_SQL`` oracle checks
+``render`` independently of the render SQL visitor.  The functions
+left here differ from render in rounding, rows, plan shape or grammar.
+
 All are per-metric windows ordered by interval (unique within metric →
 deterministic), shuffle key = metric: at 100 TB each metric's series
 streams through one window partition, which is exactly the reference's
@@ -27,10 +33,27 @@ from go_whisper_spark.operators.whisper_queries import (
     _lww,
     _points,
 )
+from go_whisper_spark.render import (
+    _cents_str,
+    _lww1h,
+    _tagged_points,
+    render,
+    render_oracle_sql,
+)
 
 
-def _lww1h(spark, sf_dir):
-    return _lww(_points(spark, sf_dir), HOUR)
+def _rendered(target: str, col: str = "value", dtype: str | None = None):
+    """Registered query = one render target, its value column renamed
+    to ``col`` (and cast to ``dtype`` when the oracle's type differs)."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        df = render(spark, sf_dir, target)
+        if dtype:
+            df = df.withColumn("value", F.col("value").cast(dtype))
+        return df.withColumnRenamed("value", col)
+
+    query.__doc__ = f"render `{target}`"
+    return query
 
 
 # ---------------------------------------------------------- g_moving_avg
@@ -66,20 +89,6 @@ WINDOW w AS (PARTITION BY metric ORDER BY interval
 
 
 # ------------------------------------------------------------ g_integral
-def g_integral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """integral(series): running sum per metric from the series start."""
-    w = (
-        Window.partitionBy("metric")
-        .orderBy("interval")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return _lww1h(spark, sf_dir).select(
-        "metric",
-        "interval",
-        F.round(F.sum("value").over(w), 4).alias("running_sum"),
-    )
-
-
 G_INTEGRAL_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -918,17 +927,6 @@ SELECT metric, interval, value, level, trend, forecast FROM hw
 
 
 # ---------------------------------------------------------------- g_scale
-def g_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """scale(series, 8): every value times a constant (the classic
-    bytes→bits render transform).  Exact: cents*8 stays integer, so
-    the emitted double is identical cross-engine.  Pure narrow map."""
-    return _lww1h(spark, sf_dir).withColumn("cents", _cents()).select(
-        "metric",
-        "interval",
-        ((F.col("cents") * 8).cast("double") / F.lit(100.0)).alias("scaled"),
-    )
-
-
 G_SCALE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -938,16 +936,6 @@ FROM lww1h
 
 
 # --------------------------------------------------------------- g_offset
-def g_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """offset(series, 100): every value plus a constant.  Exact via
-    integer cents (+10000).  Pure narrow map."""
-    return _lww1h(spark, sf_dir).withColumn("cents", _cents()).select(
-        "metric",
-        "interval",
-        ((F.col("cents") + 10000).cast("double") / F.lit(100.0)).alias("shifted"),
-    )
-
-
 G_OFFSET_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -1080,17 +1068,6 @@ GROUP BY 1, 2
 
 
 # ------------------------------------------------- g_remove_below_value
-def g_remove_below_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """removeBelowValue(series, 30): slots below the threshold become
-    NULL (the slot stays — Graphite nulls, it does not drop).  Exact
-    double comparison (30.0 is exactly representable)."""
-    return _lww1h(spark, sf_dir).select(
-        "metric",
-        "interval",
-        F.when(F.col("value") >= 30.0, F.col("value")).alias("filtered"),
-    )
-
-
 G_REMOVE_BELOW_VALUE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -1100,16 +1077,6 @@ FROM lww1h
 
 
 # ------------------------------------------------- g_remove_above_value
-def g_remove_above_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """removeAboveValue(series, 70): slots above the threshold become
-    NULL (spike clipping)."""
-    return _lww1h(spark, sf_dir).select(
-        "metric",
-        "interval",
-        F.when(F.col("value") <= 70.0, F.col("value")).alias("filtered"),
-    )
-
-
 G_REMOVE_ABOVE_VALUE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -1247,17 +1214,6 @@ FROM per
 
 
 # ------------------------------------------------------------ g_absolute
-def g_absolute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """absolute(offset(series, -50)): |value - 50| — the render
-    transform pair Graphite composes for deviation-from-setpoint
-    charts.  Exact via integer cents (|cents - 5000|)."""
-    return _lww1h(spark, sf_dir).withColumn("cents", _cents()).select(
-        "metric",
-        "interval",
-        (F.abs(F.col("cents") - 5000).cast("double") / F.lit(100.0)).alias("abs_dev"),
-    )
-
-
 G_ABSOLUTE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -1329,21 +1285,6 @@ FROM lww1h
 
 
 # ---------------------------------------------------------- g_derivative
-def g_derivative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """derivative(series): slot-to-slot delta, NULL at the series
-    start — the signed counterpart of ``g_nonneg_derivative``.  Exact
-    via cents."""
-    w = Window.partitionBy("metric").orderBy("interval")
-    lww = _lww1h(spark, sf_dir).withColumn("cents", _cents())
-    return lww.select(
-        "metric",
-        "interval",
-        (
-            (F.col("cents") - F.lag("cents", 1).over(w)).cast("double") / F.lit(100.0)
-        ).alias("delta"),
-    )
-
-
 G_DERIVATIVE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -1442,15 +1383,6 @@ FROM per
 
 
 # ------------------------------------------------------------ g_exclude
-def g_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """exclude(seriesList, "^c"): drop every series whose name matches
-    the regex (metric-name selection happens before any data math, so
-    at scale this prunes the scan by partition key)."""
-    return _lww1h(spark, sf_dir).where(~F.col("metric").rlike("^c")).select(
-        "metric", "interval", "value"
-    )
-
-
 G_EXCLUDE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval, value
@@ -1460,26 +1392,6 @@ WHERE NOT regexp_matches(metric, '^c')
 
 
 # ------------------------------------------------------ g_nth_percentile
-def g_nth_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nPercentile(series, 95): a flat per-series line at the series'
-    95th-percentile value.  Rank-based threshold (value at sorted
-    position ceil(0.95 n)) — pure ordering, float-exact, same
-    convention as ``g_remove_above_pctile``."""
-    lww = _lww1h(spark, sf_dir)
-    w = Window.partitionBy("metric").orderBy("value")
-    ranked = lww.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(Window.partitionBy("metric"))
-    )
-    thresh = (
-        ranked.where(F.col("rn") <= F.ceil(F.col("n") * 0.95).cast("long"))
-        .groupBy("metric")
-        .agg(F.max("value").alias("p95"))
-    )
-    return lww.join(thresh, "metric").select(
-        "metric", "interval", "p95"
-    )
-
-
 G_NTH_PERCENTILE_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE},
 ranked AS (
@@ -1593,16 +1505,6 @@ FROM lwwp
 
 
 # ---------------------------------------------------------------- g_grep
-def g_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """grep(seriesList, "^(c|v)"): keep only series whose name matches
-    the regex — the positive mirror of ``g_exclude``.  Name selection
-    prunes before any data math (at scale: partition pruning on the
-    metric key)."""
-    return _lww1h(spark, sf_dir).where(F.col("metric").rlike("^(c|v)")).select(
-        "metric", "interval", "value"
-    )
-
-
 G_GREP_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval, value
@@ -1866,23 +1768,6 @@ FROM lww1h, bounds
 
 
 # ----------------------------------------------------------- g_changed
-def g_changed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """changed(series): 1 where the value differs from the previous
-    slot, 0 otherwise (first slot: 0, matching Graphite).  Raw double
-    equality on untouched values is exact."""
-    w = Window.partitionBy("metric").orderBy("interval")
-    lww = _lww1h(spark, sf_dir)
-    prev = F.lag("value", 1).over(w)
-    return lww.select(
-        "metric",
-        "interval",
-        F.when(prev.isNull() | (F.col("value") == prev), 0)
-        .otherwise(1)
-        .cast("long")
-        .alias("changed"),
-    )
-
-
 G_CHANGED_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -1894,18 +1779,6 @@ WINDOW w AS (PARTITION BY metric ORDER BY interval)
 
 
 # ------------------------------------------------------------- g_delay
-def g_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """delay(series, 3): shift the series 3 slots forward in time
-    (value at t renders at t+3 steps); the first 3 slots are null.
-    Pure ``lag`` — no arithmetic at all."""
-    w = Window.partitionBy("metric").orderBy("interval")
-    return _lww1h(spark, sf_dir).select(
-        "metric",
-        "interval",
-        F.lag("value", 3).over(w).alias("delayed"),
-    )
-
-
 G_DELAY_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -2298,21 +2171,6 @@ FROM lww1h
 
 
 # --------------------------------------------------------- g_round_to
-def g_round_to(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """roundFunction(series, 1): round to 1 decimal.  float round() is
-    a cross-engine trap (Spark rounds the shortest decimal repr via
-    BigDecimal, DuckDB rounds the binary double — they disagree on
-    x.x5 inputs), so the rounding is integer arithmetic on exact
-    cents: (cents + 5) div 10 is half-away-from-zero on the TRUE
-    decimal value (domain is strictly positive)."""
-    decis = F.floor((_cents() + F.lit(5)) / F.lit(10))
-    return _lww1h(spark, sf_dir).select(
-        "metric",
-        "interval",
-        (decis.cast("double") / F.lit(10.0)).alias("rounded1"),
-    )
-
-
 G_ROUND_TO_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -2489,21 +2347,6 @@ def g_avg_outside_pctile_vt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------ g_cacti_style
-def _cents_str(c):
-    """Exact decimal rendering of an integer-cents column ("12.30",
-    "-0.05") — pure integer arithmetic + string ops, so the legend
-    strings are bit-identical cross-engine (printf `%.2f` of a
-    near-boundary double is NOT — Java and C round the unrepresentable
-    2-decimal doubles differently)."""
-    a = F.abs(c)
-    return F.concat(
-        F.when(c < 0, F.lit("-")).otherwise(F.lit("")),
-        F.floor(a / F.lit(100)).cast("long").cast("string"),
-        F.lit("."),
-        F.lpad((a % 100).cast("string"), 2, "0"),
-    )
-
-
 def g_cacti_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cactiStyle(seriesList): annotate each series' legend with its
     Current / Max / Min, Cacti-dashboard style.  Current = the value
@@ -2627,17 +2470,6 @@ CROSS JOIN (SELECT unnest([0, 1, 2]) AS k)
 
 
 # --------------------------------------------------------- g_moving_sum
-def g_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """movingSum(series, 4): rolling sum of the current + 3 preceding
-    known slots.  Exact via integer cents."""
-    w = Window.partitionBy("metric").orderBy("interval").rowsBetween(-3, 0)
-    return _lww1h(spark, sf_dir).withColumn("cents", _cents()).select(
-        "metric",
-        "interval",
-        (F.sum("cents").over(w).cast("double") / F.lit(100.0)).alias("moving_sum"),
-    )
-
-
 G_MOVING_SUM_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE}
 SELECT metric, interval,
@@ -3675,25 +3507,7 @@ FROM lww1h
 # with different primitives (split_part / regexp_extract): any parse
 # drift diverges the hash.  [ref: graphite tags docs — tagged carbon
 # paths; whisper.go stores one file per path, tags included]
-
-
-def _tagged_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as TAGGED whisper points: path = name;dc=..;host=.."""
-    from go_whisper_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    path = F.concat(
-        F.col("event_type"),
-        F.lit(";dc=dc"), (F.col("user_id") % 3).cast("string"),
-        F.lit(";host=h"), (F.col("user_id") % 10).cast("string"),
-    )
-    return ev.select(
-        path.alias("metric"),
-        F.col("ts_sec").alias("ts"),
-        F.col("value"),
-        F.col("event_id").alias("write_seq"),
-    )
-
+# The Spark-side universe is ``render._tagged_points``.
 
 TAGGED_CTE = """tagged AS (
   SELECT event_type || ';dc=dc' || CAST(user_id % 3 AS VARCHAR)
@@ -4272,25 +4086,6 @@ FROM spine
 
 
 # ------------------------------------------------------- g_counter_wrap
-def g_counter_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nonNegativeDerivative(series, maxValue=600): the counter-wrap
-    form — a negative delta means the counter wrapped at maxValue, so
-    the true increment is maxValue − prev + cur + 1 (Graphite's
-    documented wrap formula, in cents: 60000 − prev_c + cur_c + 1).
-    All-integer arithmetic; the first slot per metric stays NULL."""
-    w = Window.partitionBy("metric").orderBy("interval")
-    lww = _lww1h(spark, sf_dir).withColumn("cents", _cents())
-    prev = F.lag("cents").over(w)
-    delta = F.when(F.col("cents") >= prev, F.col("cents") - prev).otherwise(
-        F.lit(60000) - prev + F.col("cents") + F.lit(1)
-    )
-    return lww.select(
-        "metric",
-        "interval",
-        (delta.cast("double") / 100.0).alias("wrapped_delta"),
-    )
-
-
 G_COUNTER_WRAP_SQL = f"""
 WITH {PTS_CTE}, {LWW_1H_CTE},
 c AS (SELECT metric, interval, {CENTS_SQL} AS cents FROM lww1h)
@@ -4473,14 +4268,17 @@ FROM stepped
 
 # ------------------------------------------------------ render targets
 # The composable render-expression layer (go_whisper_spark/render.py):
-# each registered query is ONE nested Graphite target string, parsed
+# each g_render_* query is ONE nested Graphite target string, parsed
 # and composed into a single declarative plan; the oracle SQL is
 # EMITTED FROM THE SAME AST by the paired SQL visitor, so Spark and
-# DuckDB evaluate the identical composition.
+# DuckDB evaluate the identical composition.  perfbench/targets.py
+# keeps a copy of these strings.
 RENDER_EXPR_PIPELINE = (
     "movingSum(offset(scale(grep(seriesByGlob('*'), '^(c|v)'), 3), -1), 4)"
 )
 RENDER_EXPR_SUM_DERIV = "derivative(sumSeries(scale('*', 2)))"
+# The ^ anchor keeps regexp_replace single-match: Spark replaces all
+# matches and DuckDB the first, which would otherwise diverge.
 RENDER_EXPR_SELECT_ALIAS = (
     "aliasSub(maximumAbove(absolute('*'), 300), '^c', 'C')"
 )
@@ -4497,6 +4295,9 @@ RENDER_EXPR_GROUP = (
     "scale(grep('*', '^(e|p)'), -1), "
     "timeShift(maximumAbove('v*', 300), 1))"
 )
+# nonNegativeDerivative nulls every drop slot (frequent on the raw
+# fluctuating series); keepLastValue fills them and transformNull
+# zeroes each series' unfillable first slot.
 RENDER_EXPR_COUNTERS = (
     "transformNull(keepLastValue("
     "nonNegativeDerivative(highestMax('*', 3))), 0)"
@@ -4512,6 +4313,9 @@ RENDER_EXPR_NODES = (
     "groupByNode(group(aliasSub('c*', '^', 'dc1.'), "
     "aliasSub('[ve]*', '^', 'dc2.')), 0, 'sum')"
 )
+# The depth-6 per-series window chain the benchmark tracks as the
+# parser-composed worst case: every op rides ONE metric-partitioned
+# window ordering.
 RENDER_EXPR_DEEP = (
     "movingSum(changed(keepLastValue(removeBelowPercentile("
     "delay(scale('*', 3), 1), 10))), 4)"
@@ -4532,6 +4336,8 @@ RENDER_EXPR_HITSTACK = (
     "group(aliasSub('c*', '^', 'dc1.'), aliasSub('[ve]*', '^', 'dc2.')), "
     "1), 4), 2)"
 )
+# sumSeries(isNonNull('*')) is the single-series right side the
+# multiplySeries combiner contract requires.
 RENDER_EXPR_VOLATILITY = (
     "multiplySeries(aggregateLine(stdev(scaleToSeconds('*', 60), 6), "
     "'max'), sumSeries(isNonNull('*')))"
@@ -4542,6 +4348,9 @@ RENDER_EXPR_TAGS = (
     "'sum', 'dc'), 2), 4)"
 )
 RENDER_EXPR_CACTI = "cactiStyle(filterSeries('*', 'average', '>=', 45))"
+# divideSeriesLists pairs the i-th series of each side by sorted
+# label rank, the deterministic analog of Graphite's positional
+# pairing.
 RENDER_EXPR_PAIRS = (
     "divideSeriesLists(smartSummarize(grep('*', '^c'), 4, 'sum'), "
     "smartSummarize(exclude('*', '^c'), 4, 'sum'))"
@@ -4554,7 +4363,11 @@ RENDER_EXPR_XFF = (
     "sortBy(legendValue(summarize(setXFilesFactor(seriesByGlob('*'), 75), "
     "4, 'avg'), 'max', 'avg'), 'average', 1)"
 )
+# Desugared at the parser to areaBetween(lower, upper), so there is
+# no visitor case of its own to drift.
 RENDER_EXPR_HWAREA = "holtWintersConfidenceArea(sumSeries('*'))"
+# Left-folds the multiplySeries cent contract in ORIGINAL-label
+# order, so the per-step flooring is identical in both engines.
 RENDER_EXPR_PRODUCT = (
     "movingSum(multiplySeriesWithWildcards(seriesByGlob('[cv]*'), 0), 4)"
 )
@@ -4562,6 +4375,8 @@ RENDER_EXPR_INFSTACK = (
     "sortByTotal(timeStack(drawAsInfinite(seriesByGlob('click')), "
     "'6h', 0, 3))"
 )
+# removeEmptySeries(89) keeps 1 of 5 series at sf0.01 and 2 of 5 at
+# sf0.1.
 RENDER_EXPR_GAPFILL = (
     "aliasByNode(removeEmptySeries(interpolate(removeAboveValue("
     "aliasSub('*', '^', 'dc1.x.'), 40), 3), 89), 0, 2)"
@@ -4578,6 +4393,8 @@ RENDER_EXPR_APPLY = (
     "sortByMaxima(applyByNode(timeStack(seriesByGlob('click'), 1, 0, 3), "
     "0, 'asPercent(%)'))"
 )
+# unique() is proven duplicate-free to the analyzer, so the
+# order-sensitive movingSum above it composes.
 RENDER_EXPR_UNIQUE = (
     "movingSum(unique(seriesByGlob('c*'), seriesByGlob('*')), 4)"
 )
@@ -4590,357 +4407,6 @@ RENDER_EXPR_MULTINODE = (
 )
 
 
-def g_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target: glob seed → regex select → ×3 scale →
-    −1 offset → 4-slot rolling sum, all one plan (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_PIPELINE)
-
-
-def g_render_sum_deriv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target crossing the aggregate boundary:
-    per-series ×2 scale → cross-series sum → derivative of the
-    combined series (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_SUM_DERIV)
-
-
-def g_render_select_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target through a selector: absolute →
-    maximumAbove(300) winner filter (un-hinted join-back) → anchored
-    regex rename (render.py).  The anchor keeps regexp_replace
-    single-match, where Spark (replace-all) and DuckDB
-    (replace-first) would otherwise diverge."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_SELECT_ALIAS)
-
-
-def g_render_cumcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target through the second aggregate kind:
-    regex select → per-interval series-presence count → +2h time
-    shift → running integral → literal rename (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_CUMCOUNT)
-
-
-def g_render_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target through a BINARY combiner: click-family
-    volume as a percent of total volume per interval — two sumSeries
-    reductions joined on interval, cent-quantized exact ratio
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_RATIO)
-
-
-def g_render_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target mixing both floored-average forms: the
-    cross-series mean minus the 6-slot moving average of the summed
-    series, joined per interval (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_SMOOTH)
-
-
-def g_render_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target through the list combinator: three
-    differently-transformed families (summed clicks, negated e/p
-    series, shifted peak-filtered v series) bag-unioned into one
-    render (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_GROUP)
-
-
-def g_render_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target exercising the counter-cleanup idiom:
-    top-3-by-peak selection (fixed-k broadcast join-back) →
-    non-negative derivative (every drop slot goes NULL — genuinely
-    frequent on the raw fluctuating series) → forward fill of those
-    gaps → NULL→0 for each series' unfillable first slot
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_COUNTERS)
-
-
-def g_render_summarize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed render target through the consolidation op: 6h-bucket
-    max and floored-avg summaries, each cross-series summed, then the
-    per-bucket spread between them (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_SUMMARIZE)
-
-
-def g_render_topavg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 render ops end-to-end: 2h-bucket consolidation →
-    per-second rate → top-3 series by mean (fixed-k broadcast winner
-    set, IEEE-identical rank key) → re-zeroed against each series'
-    own minimum (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_TOPAVG)
-
-
-def g_render_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wildcard-reducer family: two label families prefixed into
-    dotted dc1./dc2. namespaces (replace-ALL aliasSub, bag union),
-    then groupByNode(0, 'sum') aggregates per datacenter per interval
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_NODES)
-
-
-def g_render_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Depth-6 per-series window chain — the parser-composed worst
-    case the bench tracks: scale → delay → percentile-floor removal
-    (rank-threshold join-back) → forward fill → null-safe change
-    detection → 4-slot rolling sum, all riding ONE metric-partitioned
-    window ordering (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_DEEP)
-
-
-def g_render_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 wave-3 reducers composed: per-slot across-series
-    range divided by the across-series rank-based median
-    (cent-quantized exact ratio), smoothed with a 4-slot rolling sum
-    over the single combined series (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_SPREAD)
-
-
-def g_render_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt-Winters IN the composable language: the aggregate
-    forecast residual — cross-series sum of the actuals minus the
-    cross-series sum of each series' one-step-ahead Holt forecast
-    (the aberration signal, composed from primitives instead of the
-    fixed aberration query; render.py holtWintersForecast)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_HW)
-
-
-def g_render_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt-Winters confidence-envelope WIDTH, composed: aggregate
-    upper band minus aggregate lower band (= 6·Σ smoothed deviation —
-    the fleet-wide uncertainty signal), both folds through the one
-    metric-keyed Holt kernel (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_BANDS)
-
-
-def g_render_hitstack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-5 bucket path composed: two label families prefixed into
-    dc1./dc2. namespaces, the original name node DELETED by the
-    wildcard reducer (per-datacenter sum), 4h hitcount buckets
-    (Σ rate·slot-width), then the top-2 datacenters by most-recent
-    bucket (struct-wrapped arg_max winner set) (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_HITSTACK)
-
-
-def g_render_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-5 volatility product: per-minute rates → 6-slot moving
-    population stddev (exact-long radicand) → flattened to each
-    series' max-volatility line → multiplied by the per-slot count of
-    live series (sumSeries over isNonNull — the single-series right
-    side the combiner contract requires) (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_VOLATILITY)
-
-
-def g_render_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tagged series IN the composable language: seed the tagged
-    universe by name regex + host exclusion, aggregate per datacenter
-    tag (labels name;dc=value), keep the top-2 series by mean, smooth
-    with a 4-slot rolling sum — seriesByTag/groupByTags composed with
-    the generic selector/window surface (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_TAGS)
-
-
-def g_render_cacti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-8 dashboard path: the generic six-op selector
-    (filterSeries 'average' '>=' — exact sum-vs-t·n compare) feeding
-    cactiStyle's legend relabel (Current/Max/Min assembled from
-    integer cents, the cross-engine-safe 2-decimal rendering)
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_CACTI)
-
-
-def g_render_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-8 list pairing: two disjoint families consolidated on the
-    frame-aligned smartSummarize grid (min-interval 1-row broadcast),
-    then divideSeriesLists pairs the i-th series of each side by
-    sorted label rank (the deterministic analog of Graphite's
-    positional pairing) and divides pairwise in exact cents
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_PAIRS)
-
-
-def g_render_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-8 generic spellings end-to-end: single-arg asPercent
-    (per-interval across-series total window) → highest(…, 'average')
-    desugared to the fixed-k mean selector → movingWindow(…, 'median')
-    desugared to the sorted-window median — the modern Graphite
-    method-string surface over the canonical operators (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_GENERIC)
-
-
-def g_render_xff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-13 dashboard surface end-to-end: whisper's xFilesFactor
-    gate as a render annotation (setXFilesFactor → the summarize
-    directly above drops buckets under 75% slot coverage — the exact
-    integer propagate() gate), the 4h consolidated averages
-    legend-annotated with exact-2-decimal max/avg stats
-    (legendValue), and the legend ordered by per-series mean DESC via
-    the generic root-only sortBy spelling (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_XFF)
-
-
-def g_render_hwarea(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-14 forecast-surface completion: Graphite's
-    holtWintersConfidenceArea as a composable op — desugared at the
-    parser to areaBetween(lower, upper) over the fleet-total series,
-    so the band WIDTH rides the existing one-kernel Holt fold and
-    the |a−b| exact-cent band op; no new visitor case exists to
-    drift (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_HWAREA)
-
-
-def g_render_product(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-15 wave: the variable-arity product reducer —
-    multiplySeriesWithWildcards deletes the leading dot node and
-    left-folds the multiplySeries cent contract over each group in
-    ORIGINAL-label order (per-step flooring identical cross-engine;
-    the generic aggregateWithWildcards(s, 'multiply', i) desugars
-    here), then a 4-slot rolling sum rides the product series
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_PRODUCT)
-
-
-def g_render_infstack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-15 wave: drawAsInfinite (the display directive made
-    data-shaped — 1 where known AND non-zero, NULL propagates) under
-    the GENERALIZED timeStack ('6h' unit string — sub-day stacking,
-    previously whole days only), legend-ordered by the root-only
-    sortByTotal rank (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_INFSTACK)
-
-
-def g_render_vline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-15 wave continuation: verticalLine — Graphite's time
-    marker made data-shaped (one value-1 row at the slot 12 hours
-    past the frame's own start; the drawAsInfinite discipline) —
-    grouped beside a cross-series running total, the
-    deploy-marker-over-cumulative-traffic dashboard shape.  With
-    this op every Graphite render function is either composable or
-    principled-excluded (transcendental value maps; the events API /
-    aliasQuery re-query loop — docs/RENDER.md) (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_VLINE)
-
-
-def g_render_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-14 optional-argument parity wave end-to-end: series
-    prefixed into a 3-node namespace, spikes nulled, gaps of at most
-    3 slots linearly interpolated (interpolate's new bounded-fill
-    limit — longer outages stay NULL), series under 89% slot
-    coverage dropped (removeEmptySeries' new xFilesFactor percent —
-    the exact integer cross-multiplication gate; 1 of 5 series
-    survives at sf0.01, 2 of 5 at sf0.1), and the survivors renamed
-    by the new multi-index aliasByNode(0, 2) (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_GAPFILL)
-
-
-def g_render_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 list combiners end-to-end: two glob seeds pairwise
-    position-matched (sorted-label ranks — the divideSeriesLists
-    pairing) and diffed in exact cents, then a 4-slot rolling sum
-    over each combined pair (render.py aggregateSeriesLists)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_LISTS)
-
-
-def g_render_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 grouped evaluation + ordering surface: day-shifted
-    copies of one series (timeStack) rendered as each copy's percent
-    of the across-shifts per-slot total (applyByNode 'asPercent(%)',
-    ONE (node, interval) window), with the legend order emitted as
-    the series_rank column by the root-only sortByMaxima
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_APPLY)
-
-
-def g_render_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 first-occurrence dedup: unique() keeps each metric's
-    rows from its earliest list (one union + per-metric min(src)
-    window, no joins), proven duplicate-free to the analyzer so the
-    order-sensitive movingSum above it composes (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_UNIQUE)
-
-
-def g_render_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 parity wave 2: the composable areaBetween — per-slot
-    band width |a−b| in exact cents between two reduced series,
-    smoothed by a 4-slot rolling sum over the single band series
-    (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_BAND)
-
-
-def g_render_multinode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 parity wave 2: groupByNodes collapsing two relabeled
-    branches onto dot nodes (0, 1) with floored-cent averages, legend
-    order surfaced by the root-only sortByMinima's series_rank
-    column (render.py)."""
-    from go_whisper_spark.render import render
-
-    return render(spark, sf_dir, RENDER_EXPR_MULTINODE)
-
-
-def _render_oracle(target: str) -> str:
-    from go_whisper_spark.render import render_oracle_sql
-
-    return render_oracle_sql(target)
-
-
 QUERIES = {
     "g_remove_between_pctile": g_remove_between_pctile,
     "g_random_walk": g_random_walk,
@@ -4949,7 +4415,7 @@ QUERIES = {
     "g_sum_series": g_sum_series,
     "g_timeshift_1d": g_timeshift_1d,
     "g_as_percent": g_as_percent,
-    "g_integral": g_integral,
+    "g_integral": _rendered("integral('*')", "running_sum"),
     "g_keep_last": g_keep_last,
     "g_keep_last_limit": g_keep_last_limit,
     "g_summarize_4h": g_summarize_4h,
@@ -4964,62 +4430,62 @@ QUERIES = {
     "g_remove_below_pctile": g_remove_below_pctile,
     "g_moving_avg_time": g_moving_avg_time,
     "g_holt_winters": g_holt_winters,
-    "g_scale": g_scale,
-    "g_offset": g_offset,
+    "g_scale": _rendered("scale('*', 8)", "scaled"),
+    "g_offset": _rendered("offset('*', 100)", "shifted"),
     "g_alias_by_node": g_alias_by_node,
     "g_hitcount": g_hitcount,
     "g_consolidate_by": g_consolidate_by,
-    "g_remove_below_value": g_remove_below_value,
-    "g_remove_above_value": g_remove_above_value,
+    "g_remove_below_value": _rendered("removeBelowValue('*', 30)", "filtered"),
+    "g_remove_above_value": _rendered("removeAboveValue('*', 70)", "filtered"),
     "g_average_above": g_average_above,
     "g_current_above": g_current_above,
     "g_integral_by_interval": g_integral_by_interval,
     "g_sort_by_maxima": g_sort_by_maxima,
-    "g_absolute": g_absolute,
+    "g_absolute": _rendered("absolute(offset('*', -50))", "abs_dev"),
     "g_invert": g_invert,
     "g_square_root": g_square_root,
     "g_logarithm": g_logarithm,
-    "g_derivative": g_derivative,
+    "g_derivative": _rendered("derivative('*')", "delta"),
     "g_per_second": g_per_second,
     "g_series_combine": g_series_combine,
     "g_sort_by_total": g_sort_by_total,
-    "g_exclude": g_exclude,
-    "g_nth_percentile": g_nth_percentile,
+    "g_exclude": _rendered("exclude('*', '^c')"),
+    "g_nth_percentile": _rendered("nPercentile('*', 95)", "p95"),
     "g_lowest_average": g_lowest_average,
     "g_alias_sub": g_alias_sub,
-    "g_grep": g_grep,
-    "g_render_pipeline": g_render_pipeline,
-    "g_render_sum_deriv": g_render_sum_deriv,
-    "g_render_select_alias": g_render_select_alias,
-    "g_render_cumcount": g_render_cumcount,
-    "g_render_ratio": g_render_ratio,
-    "g_render_smooth": g_render_smooth,
-    "g_render_group": g_render_group,
-    "g_render_counters": g_render_counters,
-    "g_render_summarize": g_render_summarize,
-    "g_render_topavg": g_render_topavg,
-    "g_render_nodes": g_render_nodes,
-    "g_render_deep": g_render_deep,
-    "g_render_spread": g_render_spread,
-    "g_render_hw": g_render_hw,
-    "g_render_bands": g_render_bands,
-    "g_render_hitstack": g_render_hitstack,
-    "g_render_volatility": g_render_volatility,
-    "g_render_tags": g_render_tags,
-    "g_render_cacti": g_render_cacti,
-    "g_render_pairs": g_render_pairs,
-    "g_render_generic": g_render_generic,
-    "g_render_xff": g_render_xff,
-    "g_render_hwarea": g_render_hwarea,
-    "g_render_product": g_render_product,
-    "g_render_infstack": g_render_infstack,
-    "g_render_gapfill": g_render_gapfill,
-    "g_render_vline": g_render_vline,
-    "g_render_lists": g_render_lists,
-    "g_render_apply": g_render_apply,
-    "g_render_unique": g_render_unique,
-    "g_render_band": g_render_band,
-    "g_render_multinode": g_render_multinode,
+    "g_grep": _rendered("grep('*', '^(c|v)')"),
+    "g_render_pipeline": _rendered(RENDER_EXPR_PIPELINE),
+    "g_render_sum_deriv": _rendered(RENDER_EXPR_SUM_DERIV),
+    "g_render_select_alias": _rendered(RENDER_EXPR_SELECT_ALIAS),
+    "g_render_cumcount": _rendered(RENDER_EXPR_CUMCOUNT),
+    "g_render_ratio": _rendered(RENDER_EXPR_RATIO),
+    "g_render_smooth": _rendered(RENDER_EXPR_SMOOTH),
+    "g_render_group": _rendered(RENDER_EXPR_GROUP),
+    "g_render_counters": _rendered(RENDER_EXPR_COUNTERS),
+    "g_render_summarize": _rendered(RENDER_EXPR_SUMMARIZE),
+    "g_render_topavg": _rendered(RENDER_EXPR_TOPAVG),
+    "g_render_nodes": _rendered(RENDER_EXPR_NODES),
+    "g_render_deep": _rendered(RENDER_EXPR_DEEP),
+    "g_render_spread": _rendered(RENDER_EXPR_SPREAD),
+    "g_render_hw": _rendered(RENDER_EXPR_HW),
+    "g_render_bands": _rendered(RENDER_EXPR_BANDS),
+    "g_render_hitstack": _rendered(RENDER_EXPR_HITSTACK),
+    "g_render_volatility": _rendered(RENDER_EXPR_VOLATILITY),
+    "g_render_tags": _rendered(RENDER_EXPR_TAGS),
+    "g_render_cacti": _rendered(RENDER_EXPR_CACTI),
+    "g_render_pairs": _rendered(RENDER_EXPR_PAIRS),
+    "g_render_generic": _rendered(RENDER_EXPR_GENERIC),
+    "g_render_xff": _rendered(RENDER_EXPR_XFF),
+    "g_render_hwarea": _rendered(RENDER_EXPR_HWAREA),
+    "g_render_product": _rendered(RENDER_EXPR_PRODUCT),
+    "g_render_infstack": _rendered(RENDER_EXPR_INFSTACK),
+    "g_render_gapfill": _rendered(RENDER_EXPR_GAPFILL),
+    "g_render_vline": _rendered(RENDER_EXPR_VLINE),
+    "g_render_lists": _rendered(RENDER_EXPR_LISTS),
+    "g_render_apply": _rendered(RENDER_EXPR_APPLY),
+    "g_render_unique": _rendered(RENDER_EXPR_UNIQUE),
+    "g_render_band": _rendered(RENDER_EXPR_BAND),
+    "g_render_multinode": _rendered(RENDER_EXPR_MULTINODE),
     "g_maximum_above": g_maximum_above,
     "g_maximum_below": g_maximum_below,
     "g_minimum_below": g_minimum_below,
@@ -5027,8 +4493,8 @@ QUERIES = {
     "g_highest_current": g_highest_current,
     "g_offset_to_zero": g_offset_to_zero,
     "g_time_slice": g_time_slice,
-    "g_changed": g_changed,
-    "g_delay": g_delay,
+    "g_changed": _rendered("changed('*')", "changed", "long"),
+    "g_delay": _rendered("delay('*', 3)", "delayed"),
     "g_divide_series": g_divide_series,
     "g_percentile_of_series": g_percentile_of_series,
     "g_moving_extremes": g_moving_extremes,
@@ -5039,14 +4505,14 @@ QUERIES = {
     "g_weighted_average": g_weighted_average,
     "g_pow": g_pow,
     "g_exp": g_exp,
-    "g_round_to": g_round_to,
+    "g_round_to": _rendered("roundTo('*', 1)", "rounded1"),
     "g_limit_sorted": g_limit_sorted,
     "g_avg_outside_pctile": g_avg_outside_pctile,
     "g_avg_outside_pctile_vt": g_avg_outside_pctile_vt,
     "g_cacti_style": g_cacti_style,
     "g_minmax_norm": g_minmax_norm,
     "g_timestack": g_timestack,
-    "g_moving_sum": g_moving_sum,
+    "g_moving_sum": _rendered("movingSum('*', 4)", "moving_sum"),
     "g_transform_null": g_transform_null,
     "g_alias_by_metric": g_alias_by_metric,
     "g_use_series_above": g_use_series_above,
@@ -5083,7 +4549,9 @@ QUERIES = {
     "g_group_by_nodes": g_group_by_nodes,
     "g_highest_max": g_highest_max,
     "g_sin_function": g_sin_function,
-    "g_counter_wrap": g_counter_wrap,
+    "g_counter_wrap": _rendered(
+        "nonNegativeDerivative('*', 600)", "wrapped_delta"
+    ),
     "g_as_percent_series": g_as_percent_series,
 }
 
@@ -5155,38 +4623,38 @@ ORACLES = {
     "g_lowest_average": G_LOWEST_AVERAGE_SQL,
     "g_alias_sub": G_ALIAS_SUB_SQL,
     "g_grep": G_GREP_SQL,
-    "g_render_pipeline": _render_oracle(RENDER_EXPR_PIPELINE),
-    "g_render_sum_deriv": _render_oracle(RENDER_EXPR_SUM_DERIV),
-    "g_render_select_alias": _render_oracle(RENDER_EXPR_SELECT_ALIAS),
-    "g_render_cumcount": _render_oracle(RENDER_EXPR_CUMCOUNT),
-    "g_render_ratio": _render_oracle(RENDER_EXPR_RATIO),
-    "g_render_smooth": _render_oracle(RENDER_EXPR_SMOOTH),
-    "g_render_group": _render_oracle(RENDER_EXPR_GROUP),
-    "g_render_counters": _render_oracle(RENDER_EXPR_COUNTERS),
-    "g_render_summarize": _render_oracle(RENDER_EXPR_SUMMARIZE),
-    "g_render_topavg": _render_oracle(RENDER_EXPR_TOPAVG),
-    "g_render_nodes": _render_oracle(RENDER_EXPR_NODES),
-    "g_render_deep": _render_oracle(RENDER_EXPR_DEEP),
-    "g_render_spread": _render_oracle(RENDER_EXPR_SPREAD),
-    "g_render_hw": _render_oracle(RENDER_EXPR_HW),
-    "g_render_bands": _render_oracle(RENDER_EXPR_BANDS),
-    "g_render_hitstack": _render_oracle(RENDER_EXPR_HITSTACK),
-    "g_render_volatility": _render_oracle(RENDER_EXPR_VOLATILITY),
-    "g_render_tags": _render_oracle(RENDER_EXPR_TAGS),
-    "g_render_cacti": _render_oracle(RENDER_EXPR_CACTI),
-    "g_render_pairs": _render_oracle(RENDER_EXPR_PAIRS),
-    "g_render_generic": _render_oracle(RENDER_EXPR_GENERIC),
-    "g_render_xff": _render_oracle(RENDER_EXPR_XFF),
-    "g_render_hwarea": _render_oracle(RENDER_EXPR_HWAREA),
-    "g_render_product": _render_oracle(RENDER_EXPR_PRODUCT),
-    "g_render_infstack": _render_oracle(RENDER_EXPR_INFSTACK),
-    "g_render_gapfill": _render_oracle(RENDER_EXPR_GAPFILL),
-    "g_render_vline": _render_oracle(RENDER_EXPR_VLINE),
-    "g_render_lists": _render_oracle(RENDER_EXPR_LISTS),
-    "g_render_apply": _render_oracle(RENDER_EXPR_APPLY),
-    "g_render_unique": _render_oracle(RENDER_EXPR_UNIQUE),
-    "g_render_band": _render_oracle(RENDER_EXPR_BAND),
-    "g_render_multinode": _render_oracle(RENDER_EXPR_MULTINODE),
+    "g_render_pipeline": render_oracle_sql(RENDER_EXPR_PIPELINE),
+    "g_render_sum_deriv": render_oracle_sql(RENDER_EXPR_SUM_DERIV),
+    "g_render_select_alias": render_oracle_sql(RENDER_EXPR_SELECT_ALIAS),
+    "g_render_cumcount": render_oracle_sql(RENDER_EXPR_CUMCOUNT),
+    "g_render_ratio": render_oracle_sql(RENDER_EXPR_RATIO),
+    "g_render_smooth": render_oracle_sql(RENDER_EXPR_SMOOTH),
+    "g_render_group": render_oracle_sql(RENDER_EXPR_GROUP),
+    "g_render_counters": render_oracle_sql(RENDER_EXPR_COUNTERS),
+    "g_render_summarize": render_oracle_sql(RENDER_EXPR_SUMMARIZE),
+    "g_render_topavg": render_oracle_sql(RENDER_EXPR_TOPAVG),
+    "g_render_nodes": render_oracle_sql(RENDER_EXPR_NODES),
+    "g_render_deep": render_oracle_sql(RENDER_EXPR_DEEP),
+    "g_render_spread": render_oracle_sql(RENDER_EXPR_SPREAD),
+    "g_render_hw": render_oracle_sql(RENDER_EXPR_HW),
+    "g_render_bands": render_oracle_sql(RENDER_EXPR_BANDS),
+    "g_render_hitstack": render_oracle_sql(RENDER_EXPR_HITSTACK),
+    "g_render_volatility": render_oracle_sql(RENDER_EXPR_VOLATILITY),
+    "g_render_tags": render_oracle_sql(RENDER_EXPR_TAGS),
+    "g_render_cacti": render_oracle_sql(RENDER_EXPR_CACTI),
+    "g_render_pairs": render_oracle_sql(RENDER_EXPR_PAIRS),
+    "g_render_generic": render_oracle_sql(RENDER_EXPR_GENERIC),
+    "g_render_xff": render_oracle_sql(RENDER_EXPR_XFF),
+    "g_render_hwarea": render_oracle_sql(RENDER_EXPR_HWAREA),
+    "g_render_product": render_oracle_sql(RENDER_EXPR_PRODUCT),
+    "g_render_infstack": render_oracle_sql(RENDER_EXPR_INFSTACK),
+    "g_render_gapfill": render_oracle_sql(RENDER_EXPR_GAPFILL),
+    "g_render_vline": render_oracle_sql(RENDER_EXPR_VLINE),
+    "g_render_lists": render_oracle_sql(RENDER_EXPR_LISTS),
+    "g_render_apply": render_oracle_sql(RENDER_EXPR_APPLY),
+    "g_render_unique": render_oracle_sql(RENDER_EXPR_UNIQUE),
+    "g_render_band": render_oracle_sql(RENDER_EXPR_BAND),
+    "g_render_multinode": render_oracle_sql(RENDER_EXPR_MULTINODE),
     "g_maximum_above": G_MAXIMUM_ABOVE_SQL,
     "g_maximum_below": G_MAXIMUM_BELOW_SQL,
     "g_minimum_below": G_MINIMUM_BELOW_SQL,

@@ -848,35 +848,10 @@ FROM led LEFT JOIN perdoc ON led.doc_id = perdoc.doc_id
 _AHASH_SWEEP = ((8, 8), (4, 16), (2, 32))   # (bands, bits per band)
 
 
-def m_ahash_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The aHash BANDING KNOB SWEEP — `d_lsh_tuning`'s measured-trade
-    discipline on the image modality: `m_ahash_neardup`'s docstring
-    concedes its 4×16 banding is "the standard recall/cost trade,
-    not the pigeonhole guarantee"; this rung MEASURES that trade.
-    Three bandings of the SAME 64-bit hash (`_ahash_bits`, shared
-    verbatim) — (8×8) [the default since this sweep ran], (4×16)
-    [the round-16 default], (2×32) — each priced by its candidate
-    count against the exact hamming ≤ 10 ground truth (the fenced
-    all-pairs baseline, enumerated once).  More/narrower bands admit
-    more candidates and miss fewer true pairs: the collision curve a
-    production image-dedup pass tunes from, as a 3-row
-    oracle-checked ledger instead of a docstring caveat.
-
-    THE MEASURED VERDICT retired the round-16 default: at sf0.01
-    five true pairs exist and 4×16 finds NONE (8×8 finds 4 of 5); at
-    sf0.1, 8×8 = 358k candidates @ 95.6% recall, 4×16 = 7.2k @
-    17.3%, 2×32 = 5 @ 0.5%.  Pigeonhole guarantees a shared band
-    only for hamming < bands (≤ 7 diffs over 8 bands; ≤ 3 over 4) —
-    at the ≤ 10 verify threshold NO banding here is lossless, and
-    4×16 sat far down the recall cliff.  `m_ahash_neardup` now ships
-    8×8 and pays the candidate volume — the sweep is the artifact
-    that forced (and keeps justifying) that call.
-
-    Scale shape: hashing is the shared codegen map; each config is
-    one (band, chunk)-keyed equi-join (work ∝ Σ bucket²); the truth
-    pass is the quadratic baseline this sweep exists to justify
-    avoiding; counts are control-plane scalars (the d_lsh_tuning
-    reporting shape)."""
+def _ahash_sweep(spark: SparkSession, sf_dir: str, configs) -> DataFrame:
+    """One ledger row per (bands, width, radius) config: the candidate
+    pairs of that banding, probing band neighbours within ``radius``
+    bits (0 or 1), priced against the exact hamming <= 10 truth."""
     led = _ahash_bits(spark, sf_dir).localCheckpoint()
     a = led.select(F.col("doc_id").alias("ida"), F.col("b").alias("ba"))
     bb = led.select(F.col("doc_id").alias("idb"), F.col("b").alias("bb"))
@@ -892,87 +867,7 @@ def m_ahash_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_true = truth.count()
     rows = []
-    for bands, width in _AHASH_SWEEP:
-        chunks = led.select(
-            "doc_id",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(j).alias("band"),
-                    F.expr(
-                        f"aggregate(transform(sequence(1, {width}), "
-                        f"k -> element_at(b, k + {width * j}) * "
-                        f"shiftleft(CAST(1 AS BIGINT), k - 1)), "
-                        f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-                    ).alias("chunk"))
-                for j in range(bands)
-            ])).alias("bc"),
-        ).select("doc_id", "bc.band", "bc.chunk")
-        cand = (
-            chunks.alias("x").join(chunks.alias("y"), ["band", "chunk"])
-            .where(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(F.col("x.doc_id").alias("ida"),
-                    F.col("y.doc_id").alias("idb"))
-            .distinct()
-            .localCheckpoint()
-        )
-        n_cand = cand.count()
-        n_hit = cand.join(truth, ["ida", "idb"], "left_semi").count()
-        rows.append((bands, width, n_cand, n_true,
-                     (n_hit * 1_000_000 // n_true) if n_true else 1_000_000))
-    return spark.createDataFrame(
-        rows, "bands long, width long, n_cand long, n_true long, "
-              "recall_ppm long")
-
-
-# (bands, bits per band, probe radius): radius-0 rows replicate the
-# m_ahash_tuning sweep (a cross-rung consistency check the oracle
-# re-derives); radius-1 probes every 1-bit band neighbor.
-_AHASH_MP_SWEEP = ((8, 8, 0), (8, 8, 1), (4, 16, 0), (4, 16, 1))
-
-
-def m_ahash_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTI-PROBE banding for the image aHash — the OTHER recall
-    knob `m_ahash_tuning` left unmeasured (VERDICT r17 item 4's
-    'same for multi-probe aHash if cheap' — it is): instead of more
-    tables or narrower bands, probe each band's 1-BIT NEIGHBOR
-    buckets too (chunk XOR 2^k for every bit k), so a pair is a
-    candidate when some band's chunks differ by <= radius bits.
-    Radius 1 admits pairs the pigeonhole misses at the cost of
-    (width+1)x probe rows into the SAME equi-join — the classic
-    multi-probe LSH trade (Lv et al.), priced here on both shipped
-    bandings against the exact hamming <= 10 truth.
-
-    MEASURED (sf0.01 / sf0.1): 4x16 radius-1 lifts recall 0% -> 40%
-    / 17.3% -> 76.8% at (width+1)x probe rows (n_cand 63 -> 575 /
-    7.2k -> 67.4k) — a genuinely competitive frontier point at
-    sf0.1: three quarters of the truth at a FIFTH of 8x8-exact's
-    358k candidates; 8x8 radius-1 reaches 100% recall at BOTH SFs
-    (n_cand 11.2k / 1.15M, ~3.2x the exact-probe volume) — the
-    measured route to full recall at the <= 10 gate without going
-    quadratic.  Radius-0 rows replicate `m_ahash_tuning`'s — the
-    cross-rung consistency pin.
-
-    Scale shape: probe expansion is a codegen explode of width+1
-    rows per (doc, band) — work stays ∝ Σ bucket² on the probed
-    relation; the truth pass is the fenced quadratic baseline this
-    family always prices against; counts are control-plane scalars.
-    """
-    led = _ahash_bits(spark, sf_dir).localCheckpoint()
-    a = led.select(F.col("doc_id").alias("ida"), F.col("b").alias("ba"))
-    bb = led.select(F.col("doc_id").alias("idb"), F.col("b").alias("bb"))
-    truth = (
-        a.join(bb, F.col("ida") < F.col("idb"))
-        .select(
-            "ida", "idb",
-            F.expr("aggregate(zip_with(ba, bb, (x, y) -> abs(x - y)), "
-                   "0, (acc, x) -> acc + x)").alias("h"))
-        .where(F.col("h") <= _AHASH_MAX_HAM)
-        .select("ida", "idb")
-        .localCheckpoint()
-    )
-    n_true = truth.count()
-    rows = []
-    for bands, width, radius in _AHASH_MP_SWEEP:
+    for bands, width, radius in configs:
         chunks = led.select(
             "doc_id",
             F.explode(F.array(*[
@@ -1012,6 +907,75 @@ def m_ahash_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "bands long, width long, radius long, n_cand long, "
               "n_true long, recall_ppm long")
+
+
+def m_ahash_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The aHash BANDING KNOB SWEEP — `d_lsh_tuning`'s measured-trade
+    discipline on the image modality: `m_ahash_neardup`'s docstring
+    concedes its 4×16 banding is "the standard recall/cost trade,
+    not the pigeonhole guarantee"; this rung MEASURES that trade.
+    Three bandings of the SAME 64-bit hash (`_ahash_bits`, shared
+    verbatim) — (8×8) [the default since this sweep ran], (4×16)
+    [the round-16 default], (2×32) — each priced by its candidate
+    count against the exact hamming ≤ 10 ground truth (the fenced
+    all-pairs baseline, enumerated once).  More/narrower bands admit
+    more candidates and miss fewer true pairs: the collision curve a
+    production image-dedup pass tunes from, as a 3-row
+    oracle-checked ledger instead of a docstring caveat.
+
+    THE MEASURED VERDICT retired the round-16 default: at sf0.01
+    five true pairs exist and 4×16 finds NONE (8×8 finds 4 of 5); at
+    sf0.1, 8×8 = 358k candidates @ 95.6% recall, 4×16 = 7.2k @
+    17.3%, 2×32 = 5 @ 0.5%.  Pigeonhole guarantees a shared band
+    only for hamming < bands (≤ 7 diffs over 8 bands; ≤ 3 over 4) —
+    at the ≤ 10 verify threshold NO banding here is lossless, and
+    4×16 sat far down the recall cliff.  `m_ahash_neardup` now ships
+    8×8 and pays the candidate volume — the sweep is the artifact
+    that forced (and keeps justifying) that call.
+
+    Scale shape: hashing is the shared codegen map; each config is
+    one (band, chunk)-keyed equi-join (work ∝ Σ bucket²); the truth
+    pass is the quadratic baseline this sweep exists to justify
+    avoiding; counts are control-plane scalars (the d_lsh_tuning
+    reporting shape)."""
+    configs = [(bands, width, 0) for bands, width in _AHASH_SWEEP]
+    return _ahash_sweep(spark, sf_dir, configs).drop("radius")
+
+
+# (bands, bits per band, probe radius): radius-0 rows replicate the
+# m_ahash_tuning sweep (a cross-rung consistency check the oracle
+# re-derives); radius-1 probes every 1-bit band neighbor.
+_AHASH_MP_SWEEP = ((8, 8, 0), (8, 8, 1), (4, 16, 0), (4, 16, 1))
+
+
+def m_ahash_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MULTI-PROBE banding for the image aHash — the OTHER recall
+    knob `m_ahash_tuning` left unmeasured (VERDICT r17 item 4's
+    'same for multi-probe aHash if cheap' — it is): instead of more
+    tables or narrower bands, probe each band's 1-BIT NEIGHBOR
+    buckets too (chunk XOR 2^k for every bit k), so a pair is a
+    candidate when some band's chunks differ by <= radius bits.
+    Radius 1 admits pairs the pigeonhole misses at the cost of
+    (width+1)x probe rows into the SAME equi-join — the classic
+    multi-probe LSH trade (Lv et al.), priced here on both shipped
+    bandings against the exact hamming <= 10 truth.
+
+    MEASURED (sf0.01 / sf0.1): 4x16 radius-1 lifts recall 0% -> 40%
+    / 17.3% -> 76.8% at (width+1)x probe rows (n_cand 63 -> 575 /
+    7.2k -> 67.4k) — a genuinely competitive frontier point at
+    sf0.1: three quarters of the truth at a FIFTH of 8x8-exact's
+    358k candidates; 8x8 radius-1 reaches 100% recall at BOTH SFs
+    (n_cand 11.2k / 1.15M, ~3.2x the exact-probe volume) — the
+    measured route to full recall at the <= 10 gate without going
+    quadratic.  Radius-0 rows replicate `m_ahash_tuning`'s — the
+    cross-rung consistency pin.
+
+    Scale shape: probe expansion is a codegen explode of width+1
+    rows per (doc, band) — work stays ∝ Σ bucket² on the probed
+    relation; the truth pass is the fenced quadratic baseline this
+    family always prices against; counts are control-plane scalars.
+    """
+    return _ahash_sweep(spark, sf_dir, _AHASH_MP_SWEEP)
 
 
 def _m_ahash_multiprobe_sql() -> str:

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_whisper_spark.model import SeriesConfig
+from go_whisper_spark.render import _tagged_points
 from go_whisper_spark.sources.tables import events_points, load_table
 from go_whisper_spark.streaming.rollup import streaming_rollup
 from go_whisper_spark.streaming.sessions import streaming_sessions
@@ -3324,8 +3325,6 @@ def st_render_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling window holding exactly one interval's rows across the
     relabeled series.  The ×2 scale rides the emitted closed windows.
     Same replay and watermark algebra as ``st_render_nodes``."""
-    from go_whisper_spark.operators.graphite_funcs import _tagged_points
-
     return _render_replay(
         spark, _tagged_points(spark, sf_dir), ST_RENDER_TAGS_TARGET)
 
@@ -3390,8 +3389,6 @@ def st_render_tagwin(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plain summarize below) exercises.  Oracle = the watermark
     algebra with the tagged relabel, then the batch ROWS window over
     the final closed set (the in-order argument as usual)."""
-    from go_whisper_spark.operators.graphite_funcs import _tagged_points
-
     return _render_replay(
         spark, _tagged_points(spark, sf_dir), ST_RENDER_TAGWIN_TARGET)
 

@@ -23,9 +23,9 @@ math in BOTH engines and the driver's typed hash cannot drift.
 Numeric operator arguments are therefore integers (Graphite's float
 args quantize to cents here; documented, not hidden).
 
-Operator registry (130 ops — the composable core; the ~111 fixed-form
-analogs in ``operators/graphite_funcs.py`` remain the coverage
-surface):
+Operator registry (130 ops — the composable core; the fixed-form
+analogs in ``operators/graphite_funcs.py`` whose answer is a render
+target are registered as that target, the rest stay hand-built):
 
   seeds       seriesByGlob / bare glob (* ? — translated to an
               anchored regex identically in both engines)
@@ -241,7 +241,17 @@ from typing import List, Union
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from go_whisper_spark.operators.whisper_queries import (
+    CENTS_SQL,
+    HOUR,
+    LWW_1H_CTE,
+    PTS_CTE,
+    _cents,
+    _lww,
+    _points,
+)
 from go_whisper_spark.session import session_memo
+from go_whisper_spark.sources.tables import load_table
 
 
 # ------------------------------------------------------------------ AST
@@ -1312,9 +1322,44 @@ def _value_col():
     return (F.col("cents").cast("double") / F.lit(100.0)).alias("value")
 
 
+def _lww1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 1h last-writer-wins series every untagged seed reads."""
+    return _lww(_points(spark, sf_dir), HOUR)
+
+
+def _tagged_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as TAGGED whisper points: path = name;dc=..;host=.."""
+    ev = load_table(spark, sf_dir, "events")
+    path = F.concat(
+        F.col("event_type"),
+        F.lit(";dc=dc"), (F.col("user_id") % 3).cast("string"),
+        F.lit(";host=h"), (F.col("user_id") % 10).cast("string"),
+    )
+    return ev.select(
+        path.alias("metric"),
+        F.col("ts_sec").alias("ts"),
+        F.col("value"),
+        F.col("event_id").alias("write_seq"),
+    )
+
+
+def _cents_str(c):
+    """Exact decimal rendering of an integer-cents column ("12.30",
+    "-0.05") — pure integer arithmetic + string ops, so the legend
+    strings are bit-identical cross-engine (printf `%.2f` of a
+    near-boundary double is NOT — Java and C round the unrepresentable
+    2-decimal doubles differently)."""
+    a = F.abs(c)
+    return F.concat(
+        F.when(c < 0, F.lit("-")).otherwise(F.lit("")),
+        F.floor(a / F.lit(100)).cast("long").cast("string"),
+        F.lit("."),
+        F.lpad((a % 100).cast("string"), 2, "0"),
+    )
+
+
 def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
     """AST → composed DataFrame of (metric, interval, cents)."""
-    from go_whisper_spark.operators.graphite_funcs import _cents, _lww1h
 
     def seed(pattern: str) -> DataFrame:
         return (
@@ -1324,13 +1369,8 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
         )
 
     def tagged_seed() -> DataFrame:
-        from go_whisper_spark.operators.graphite_funcs import (
-            _tagged_points,
-        )
-        from go_whisper_spark.operators.whisper_queries import _lww
-
         return (
-            _lww(_tagged_points(spark, sf_dir), 3600)
+            _lww(_tagged_points(spark, sf_dir), HOUR)
             .select("metric", "interval", _cents().alias("cents"))
         )
 
@@ -1953,16 +1993,15 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 "cents", F.lag("cents", k).over(w)
             )
         if name == "changed":
-            # 1.0 when the slot differs from its predecessor under
-            # null-safe compare (IS NOT DISTINCT FROM in both
-            # engines), else 0 — first slot compares vs NULL.
+            # Graphite's changed(): 1.0 where a known slot differs from
+            # a known predecessor, else 0 — so 0 at each series' first
+            # slot, at a NULL slot and at the slot just after one.
             _need(n, 1, (object,))
             return ev(n.args[0]).withColumn(
                 "cents",
-                F.when(
-                    F.col("cents").eqNullSafe(F.lag("cents").over(w)),
-                    F.lit(0),
-                ).otherwise(F.lit(100)).cast("long"),
+                F.when(F.col("cents") != F.lag("cents").over(w), 100)
+                .otherwise(0)
+                .cast("long"),
             )
         if name == "limit":
             # first k series in metric order — Graphite's limit() with
@@ -2824,8 +2863,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             # analyze()); an all-NULL stat renders 'nan'.  Un-hinted
             # O(n_metrics) join-back.
             _need(n, 1, (object,))
-            from go_whisper_spark.operators.graphite_funcs import _cents_str
-
             s = ev(n.args[0])
             per = s.groupBy("metric").agg(
                 F.max_by("cents", "interval").alias("cur"),
@@ -2999,8 +3036,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
                 raise RenderParseError(
                     "legendValue takes (series, 'key', ...)"
                 )
-            from go_whisper_spark.operators.graphite_funcs import _cents_str
-
             keys = [a.value for a in n.args[1:]]
             for k in keys:
                 if k not in ("avg", "total", "min", "max", "last"):
@@ -3067,12 +3102,6 @@ def render(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:
 def build_sql(node: Node) -> str:
     """AST → DuckDB subquery producing (metric, interval, cents) —
     arithmetic identical to ``build_frame`` step for step."""
-    from go_whisper_spark.operators.whisper_queries import (
-        CENTS_SQL,
-        LWW_1H_CTE,
-        PTS_CTE,
-    )
-
     # Recursive-CTE emissions (Holt-Winters, EMA) must use UNIQUE
     # names per emission: a nested composition (hw over hw, hw over
     # ema, …) otherwise has the inner subquery's hwseq/hwrec SHADOW
@@ -3601,9 +3630,9 @@ def build_sql(node: Node) -> str:
         if name == "changed":
             return (
                 "(SELECT metric, interval, "
-                "CASE WHEN cents IS NOT DISTINCT FROM lag(cents) OVER "
+                "CASE WHEN cents != lag(cents) OVER "
                 "(PARTITION BY metric ORDER BY interval) "
-                "THEN 0 ELSE 100 END AS cents "
+                "THEN 100 ELSE 0 END AS cents "
                 f"FROM {ev(n.args[0])} s)"
             )
         if name == "invert":

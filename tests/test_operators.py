@@ -156,6 +156,9 @@ SUBSET = [
     "w_lakehouse_timetravel",
     "m_cdc_dedup",
     "t_ppl_terciles",
+    "g_changed",
+    "g_counter_wrap",
+    "g_render_deep",
 ]
 
 
@@ -182,7 +185,8 @@ def _key(row):
 def test_holt_winters_recurrence(spark, sf_dir):
     """Pin the smoothing recurrence: recompute one metric's series in
     pure Python (same float op order) and compare bit-for-bit."""
-    from go_whisper_spark.operators.graphite_funcs import g_holt_winters, _lww1h
+    from go_whisper_spark.operators.graphite_funcs import g_holt_winters
+    from go_whisper_spark.render import _lww1h
 
     rows = g_holt_winters(spark, sf_dir).where("metric = 'click'").collect()
     got = {r.interval: (r.level, r.trend, r.forecast) for r in rows}

@@ -1,7 +1,8 @@
 """Render-target expression layer (go_whisper_spark/render.py):
 parser unit tests plus composition equivalence against hand-built
-frames.  The three registered g_render_* queries are oracle-gated by
-the driver contract; these tests pin the parser and the
+frames.  The registered g_render_* queries, and the g_* queries that
+are registered as one render target (``graphite_funcs._rendered``), are
+oracle-gated by the driver contract; these tests pin the parser and the
 Spark-side composition semantics independently."""
 
 import pytest
@@ -73,7 +74,8 @@ def test_glob_to_regex():
 
 
 def test_scale_offset_composition_matches_manual(spark, sf_dir):
-    from go_whisper_spark.operators.graphite_funcs import _cents, _lww1h
+    from go_whisper_spark.operators.whisper_queries import _cents
+    from go_whisper_spark.render import _lww1h
 
     got = {
         (r.metric, r.interval): r.value
@@ -579,3 +581,33 @@ def test_wave8_analyzer_gates():
     validate_target(parse_target(
         "filterSeries(group('*', '*'), 'max', '>', 0)"))
     validate_target(parse_target("smartSummarize(group('*', '*'), 4, 'sum')"))
+
+
+def test_changed_follows_graphite_at_gaps(spark, monkeypatch):
+    """Graphite's changed() is 0 unless a known slot differs from a
+    known predecessor: 0 at the series' first slot, at a NULL slot and
+    just after it — in the Spark visitor and the oracle alike."""
+    import duckdb
+    from go_whisper_spark import render as render_mod
+
+    rows = [("m", 3600 * i, v)
+            for i, v in enumerate([5.0, 5.0, 7.0, None, 7.0, 8.0])]
+    want = [0, 0, 100, 0, 0, 100]
+    frame = spark.createDataFrame(
+        rows, "metric string, interval bigint, value double")
+    monkeypatch.setattr(render_mod, "_lww1h", lambda spark, sf_dir: frame)
+    node = parse_target("changed('*')")
+    got = render_mod.build_frame(spark, "unused", node).orderBy("interval")
+    assert [r.cents for r in got.collect()] == want
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lww1h (metric VARCHAR, interval BIGINT, "
+                "value DOUBLE)")
+    con.executemany("INSERT INTO lww1h VALUES (?, ?, ?)", rows)
+    # the emitted oracle minus its events-derived CTEs reads the table
+    ctes = f"WITH {render_mod.PTS_CTE}, {render_mod.LWW_1H_CTE}\n"
+    sql = render_mod.build_sql(node)
+    assert sql.startswith(ctes)
+    got_sql = con.execute(
+        f"SELECT value FROM ({sql[len(ctes):]}) ORDER BY interval").fetchall()
+    assert [round(v * 100) for (v,) in got_sql] == want
