@@ -3316,19 +3316,26 @@ def t_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _curation_gate(d: DataFrame) -> DataFrame:
-    """The dedup-then-LM-gate spine shared VERBATIM by
-    `t_curation_e2e` (raw text) and `t_curation_pii` (scrubbed
-    text): from a per-doc frame (doc_id, lang, tokens, nb, dup, ...)
-    train the stupid-backoff bigram LM on the survivors' 90% split,
-    score the held-out survivors, ntile the per-doc perplexities per
-    lang, and return the input frame with `scored`/`tail` flag
-    columns appended — the callers differ only in what `tokens`
-    tokenizes and which extra ledger columns they fold."""
-    surv = d.where(F.col("dup").isNull())
+def _bigram_scored(d: DataFrame) -> DataFrame:
+    """The stupid-backoff bigram LM every perplexity query scores with:
+    from a per-doc frame (doc_id, lang, tokens), train bigram/unigram
+    counts on the 90% md5 split (``d_split_hash``'s buckets) and score
+    each held-out bigram
+
+        P(w2|w1) = C2(w1,w2)/C1(w1)          if the bigram was seen
+                 = 0.4 · C1(w2)/N            else if w2 was seen
+                 = 0.4 / N                   else (OOV)
+
+    as its micro-nat surprisal, floored ONCE per probability.  Returns
+    (doc_id, lang, is_seen, is_backoff, s_u6) per held-out bigram;
+    held-out docs with fewer than 2 tokens have no bigrams.
+
+    Model tables are partial aggregates over the train stream,
+    broadcast-probed by the score side (a shuffled equi-join keyed by
+    the bigram once a real model outgrows broadcast)."""
     bucket = _split_bucket_col()
-    train = surv.where(bucket < _SPLIT_TRAIN)
-    held = surv.where(bucket >= _SPLIT_TRAIN)
+    train = d.where(bucket < _SPLIT_TRAIN)
+    held = d.where(bucket >= _SPLIT_TRAIN)
 
     bigrams = F.expr(
         "transform(sequence(0, size(tokens) - 2), "
@@ -3339,12 +3346,11 @@ def _curation_gate(d: DataFrame) -> DataFrame:
         .select(F.explode(bigrams).alias("b"))
         .select("b.w1", "b.w2")
     )
-    # c2 has ONE consumer (its broadcast below) and reads off the
-    # caller's checkpointed per-doc frame, so the broadcast build
-    # runs the lineage exactly once either way — a checkpoint here
-    # was one more sequential job (guide §1.2: delete whole jobs).
-    # c1 keeps its checkpoint: THREE consumers (two broadcasts +
-    # totals).
+    # c2 has ONE consumer (its broadcast below), so the broadcast
+    # build runs its lineage exactly once either way — a checkpoint
+    # here would be one more sequential job (guide §1.2: delete whole
+    # jobs).  c1 keeps its checkpoint: THREE consumers (two
+    # broadcasts + totals) would each re-run the train tokenize pass.
     c2 = t_bi.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
     c1 = (
         train.select(F.explode("tokens").alias("w"))
@@ -3380,12 +3386,37 @@ def _curation_gate(d: DataFrame) -> DataFrame:
         .when(backoff, u6(F.lit(0.4) * F.col("c1w2") / F.col("N")))
         .otherwise(u6(F.lit(0.4) / F.col("N")))
     )
-    per_doc = (
-        j.select("doc_id", "lang", surprisal.alias("s_u6"))
-        .groupBy("doc_id", "lang")
+    return j.select(
+        "doc_id",
+        "lang",
+        seen.cast("long").alias("is_seen"),
+        backoff.cast("long").alias("is_backoff"),
+        surprisal.alias("s_u6"),
+    )
+
+
+def _ppl_per_doc(scored: DataFrame) -> DataFrame:
+    """Per held-out doc: bigram count and the perplexity proxy
+    ``ppl_u6`` — an exact integer ``div`` of the summed micro-nats, so
+    no float quotient near a floor boundary can diverge between
+    engines."""
+    return (
+        scored.groupBy("doc_id", "lang")
         .agg(F.count("*").alias("n_bigrams"), F.sum("s_u6").alias("sum_u6"))
         .withColumn("ppl_u6", F.expr("sum_u6 div n_bigrams"))
     )
+
+
+def _curation_gate(d: DataFrame) -> DataFrame:
+    """The dedup-then-LM-gate spine of `t_curation_e2e` (raw text) and
+    `t_curation_pii` (scrubbed text): from a per-doc frame (doc_id,
+    lang, tokens, nb, dup, ...) score the survivors with the
+    `_bigram_scored` LM, ntile the per-doc perplexities per lang, and
+    return the input frame with `scored`/`tail` flag columns appended
+    — the callers differ only in what `tokens` tokenizes and which
+    extra ledger columns they fold.  The caller's checkpointed `d` is
+    what keeps the model's lineage from re-running the dedup join."""
+    per_doc = _ppl_per_doc(_bigram_scored(d.where(F.col("dup").isNull())))
     w = Window.partitionBy("lang").orderBy("ppl_u6", "doc_id")
     tail = per_doc.select(
         "doc_id", F.ntile(3).over(w).alias("tercile")
@@ -5369,6 +5400,22 @@ def t_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same transform at k=3 granularity, which is what the synthetic
     corpus' span lengths exercise.
     """
+    def shingle_tokens(dup: DataFrame) -> DataFrame:
+        return dup.select(
+            "doc_id",
+            F.explode(F.sequence(F.col("pos"), F.col("pos") + 2)).alias("tpos"),
+        ).distinct()
+
+    return _span_dedup(spark, sf_dir, shingle_tokens)
+
+
+def _span_dedup(spark: SparkSession, sf_dir: str, coverage) -> DataFrame:
+    """The span-removal pipeline of ``t_span_dedup`` and
+    ``_t_span_dedup_min_len``, which differ only in ``coverage``: a
+    function from the duplicate 3-gram occurrences (doc_id, pos, ...)
+    to the distinct (doc_id, tpos) token positions to excise.  Output
+    per document: total tokens, removed tokens, and the cleaned text
+    (surviving tokens re-joined in order)."""
     # Repartition the RAW text rows, tokenize AFTER the exchange (r19
     # optimization, guide §2.5 — the t_bpe_train2 lesson): with the
     # repartition placed after ``withColumn(tokens)``, each of the
@@ -5377,26 +5424,21 @@ def t_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 × ~300 ms single-task stages).  ``base`` reads the same
     # spread frame so its size() pass parallelizes too.  r20:
     # layout-gated — no Exchange when the scan is already wide.
-    dr = spread_scan(
+    d = spread_scan(
         _docs(spark, sf_dir).select("doc_id", "text"),
         spark, sf_dir, "documents",
     ).withColumn("tokens", _tokens_col())
-    d = dr
-    toks = dr.select(
+    toks = d.select(
         "doc_id", F.posexplode("tokens").alias("tpos0", "tok")
     ).select("doc_id", (F.col("tpos0") + 1).alias("tpos"), "tok")
-    pos = dr.select(
+    pos = d.select(
         "doc_id", F.posexplode(F.expr(_SHINGLES_EXPR)).alias("p0", "sh")
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), "sh")
     first = pos.groupBy("sh").agg(F.min(F.struct("doc_id", "pos")).alias("f"))
     dup = pos.join(first, "sh").where(
         (F.col("doc_id") != F.col("f.doc_id")) | (F.col("pos") != F.col("f.pos"))
     )
-    covered = dup.select(
-        "doc_id",
-        F.explode(F.sequence(F.col("pos"), F.col("pos") + 2)).alias("tpos"),
-    ).distinct()
-    kept = toks.join(covered, ["doc_id", "tpos"], "left_anti")
+    kept = toks.join(coverage(dup), ["doc_id", "tpos"], "left_anti")
     kept_agg = kept.groupBy("doc_id").agg(
         F.count("*").alias("n_kept"),
         F.concat_ws(
@@ -5416,7 +5458,6 @@ def t_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_removed"),
         F.coalesce("clean_text", F.lit("")).alias("clean_text"),
     )
-
 
 T_SPAN_DEDUP_SQL = f"""
 WITH tok AS (
@@ -5485,61 +5526,27 @@ def _t_span_dedup_min_len(
     merges positions into runs.  Runs are disjoint by construction,
     so the coverage explode needs no de-dup, one shuffle fewer than
     the fixed-k form."""
-    # repartition-before-tokenize, as in t_span_dedup (guide §2.5;
-    # r20: layout-gated)
-    d = spread_scan(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        spark, sf_dir, "documents",
-    ).withColumn("tokens", _tokens_col())
-    toks = d.select(
-        "doc_id", F.posexplode("tokens").alias("tpos0", "tok")
-    ).select("doc_id", (F.col("tpos0") + 1).alias("tpos"), "tok")
-    pos = d.select(
-        "doc_id", F.posexplode(F.expr(_SHINGLES_EXPR)).alias("p0", "sh")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "sh")
-    first = pos.groupBy("sh").agg(F.min(F.struct("doc_id", "pos")).alias("f"))
-    dup = pos.join(first, "sh").where(
-        (F.col("doc_id") != F.col("f.doc_id")) | (F.col("pos") != F.col("f.pos"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    runs = (
-        dup.select("doc_id", "pos")
-        .withColumn(
-            "new_run",
-            F.when(F.col("pos") - F.lag("pos").over(w) <= 3, F.lit(0))
-            .otherwise(F.lit(1)),
+    def maximal_runs(dup: DataFrame) -> DataFrame:
+        w = Window.partitionBy("doc_id").orderBy("pos")
+        runs = (
+            dup.select("doc_id", "pos")
+            .withColumn(
+                "new_run",
+                F.when(F.col("pos") - F.lag("pos").over(w) <= 3, F.lit(0))
+                .otherwise(F.lit(1)),
+            )
+            .withColumn("run_id", F.sum("new_run").over(w))
         )
-        .withColumn("run_id", F.sum("new_run").over(w))
-    )
-    spans = (
-        runs.groupBy("doc_id", "run_id")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + 2).alias("e"))
-        .where(F.col("e") - F.col("s") + 1 >= min_len)
-    )
-    covered = spans.select(
-        "doc_id", F.explode(F.sequence("s", "e")).alias("tpos")
-    )
-    kept = toks.join(covered, ["doc_id", "tpos"], "left_anti")
-    kept_agg = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
-                lambda s: s.tok,
-            ),
-        ).alias("clean_text"),
-    )
-    base = d.select("doc_id", F.size("tokens").cast("long").alias("n_tok"))
-    return base.join(kept_agg, "doc_id", "left").select(
-        "doc_id",
-        "n_tok",
-        (F.col("n_tok") - F.coalesce("n_kept", F.lit(0)))
-        .cast("long")
-        .alias("n_removed"),
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-    )
+        spans = (
+            runs.groupBy("doc_id", "run_id")
+            .agg(F.min("pos").alias("s"), (F.max("pos") + 2).alias("e"))
+            .where(F.col("e") - F.col("s") + 1 >= min_len)
+        )
+        return spans.select(
+            "doc_id", F.explode(F.sequence("s", "e")).alias("tpos")
+        )
 
+    return _span_dedup(spark, sf_dir, maximal_runs)
 
 def t_span_dedup_l5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-span removal at min_len=5 — see _t_span_dedup_min_len."""
@@ -5796,53 +5803,9 @@ def s_pq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks for both assignment passes, 32-key ledger) — the delta
     encode touches ONLY delta bytes plus the 32-row broadcast books.
     """
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    subs = F.array(*[F.slice("v", b * PQ_D + 1, PQ_D) for b in range(PQ_M)])
-    blocks = e.select("vec_id", F.posexplode(subs).alias("block", "sv"))
-    base_blocks = blocks.where(F.col("vec_id") % 10 <= 7)
-    seeds = base_blocks.where(F.col("vec_id") < PQ_K).select(
-        "block", F.col("vec_id").cast("long").alias("cid"), F.col("sv").alias("cv")
-    )
-
-    def assign(frame, book):
-        d = _l2_16("sv", "cv").alias("dist")
-        return (
-            frame.join(F.broadcast(book), "block")
-            .select("vec_id", "block", "sv", "cid", d)
-            .groupBy("vec_id", "block")
-            .agg(
-                F.first("sv").alias("sv"),
-                F.min(F.struct(F.col("dist"), F.col("cid"))).alias("best"),
-            )
-            .select(
-                "vec_id", "block", "sv",
-                F.col("best.cid").alias("cell"),
-                F.col("best.dist").alias("dist"),
-            )
-        )
-
-    a0 = assign(base_blocks, seeds)
-    comp = (
-        a0.select(
-            "block", "cell",
-            F.posexplode(F.transform("sv", lambda x: F.floor(x * IVF_Q))),
-        )
-        .groupBy("block", "cell", "pos")
-        .agg(F.floor(F.sum("col").cast("double") / F.count("col")).alias("c"))
-    )
-    books = (
-        comp.groupBy("block", "cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.c.cast("double") / F.lit(float(IVF_Q)),
-            ).alias("cv")
-        )
-        .select("block", F.col("cell").cast("long").alias("cid"), "cv")
-    )
-    enc = assign(blocks, books)
+    # the Lloyd seeds 0..7 are base rows, so training on the base
+    # split is _pq_frames with this predicate
+    _, _, enc = _pq_frames(spark, sf_dir, train_where=F.col("vec_id") % 10 <= 7)
     is_delta = F.col("vec_id") % 10 > 7
     return (
         enc.groupBy("block", F.col("cell").alias("code"))
@@ -7126,18 +7089,12 @@ ORDER BY lang
 # --------------------------------------------------- t_bigram_logprob
 def t_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out bigram-LM scoring with stupid backoff — the KenLM-shaped
-    step after ``t_unigram_logprob``: train bigram/unigram counts on
-    the 90% md5 split (``d_split_hash``'s buckets), score the held-out
-    10%'s bigrams with
-
-        P(w2|w1) = C2(w1,w2)/C1(w1)          if the bigram was seen
-                 = 0.4 · C1(w2)/N            else if w2 was seen
-                 = 0.4 / N                   else (OOV)
-
-    and ledger per language: docs scored, bigram totals per backoff
-    class (integers — they pin the model lookups exactly), and the
-    summed surprisal.  Held-out docs with fewer than 2 tokens have no
-    bigrams and are absent, matching the oracle's positional join.
+    step after ``t_unigram_logprob``: score the held-out 10%'s bigrams
+    under the train-split ``_bigram_scored`` model and ledger per
+    language: docs scored, bigram totals per backoff class (integers —
+    they pin the model lookups exactly), and the summed surprisal.
+    Held-out docs with fewer than 2 tokens have no bigrams and are
+    absent, matching the oracle's positional join.
 
     Cross-engine exactness: each surprisal is floored to integer
     micro-nats ONCE per distinct probability — and every probability
@@ -7147,77 +7104,16 @@ def t_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerates every distinct probability in every fixture and
     verifies 50-digit-decimal boundary clearance.
 
-    Scale shape: model tables are partial aggregates over the train
-    stream; the score side LEFT-joins them (broadcast while the model
-    fits — a pruned n-gram model is GBs at 100 TB, so the join
-    gracefully degrades to a shuffled equi-join keyed by the bigram,
-    the exact shape KenLM sharding uses); everything downstream is
-    map-side-combining integer aggregation.
+    Scale shape: the model's partial aggregates and broadcast probes
+    (degrading to a shuffled equi-join keyed by the bigram once a
+    pruned n-gram model outgrows broadcast — the exact shape KenLM
+    sharding uses); everything downstream is map-side-combining
+    integer aggregation.
     """
     d = _docs(spark, sf_dir).withColumn("tokens", _tokens_col())
-    bucket = _split_bucket_col()
-    train = d.where(bucket < _SPLIT_TRAIN)
-    held = d.where(bucket >= _SPLIT_TRAIN)
-
-    bigrams = F.expr(
-        "transform(sequence(0, size(tokens) - 2), "
-        "i -> struct(tokens[i] AS w1, tokens[i + 1] AS w2))"
-    )
-
-    t_bi = (
-        train.where(F.size("tokens") >= 2)
-        .select(F.explode(bigrams).alias("b"))
-        .select("b.w1", "b.w2")
-    )
-    # Materialize the model tables once: c1 feeds THREE consumers (two
-    # join copies + the total) and each broadcast would otherwise
-    # re-run the train tokenize pass — this is the "persist the n-gram
-    # model" step a production pipeline does explicitly.
-    c2 = t_bi.groupBy("w1", "w2").agg(F.count("*").alias("c2")).localCheckpoint()
-    c1 = (
-        train.select(F.explode("tokens").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c1"))
-        .localCheckpoint()
-    )
-    totals = c1.agg(F.sum("c1").alias("N"))
-
-    sb = (
-        held.where(F.size("tokens") >= 2)
-        .select("doc_id", "lang", F.explode(bigrams).alias("b"))
-        .select("doc_id", "lang", "b.w1", "b.w2")
-    )
-    j = (
-        sb.join(F.broadcast(c2), ["w1", "w2"], "left")
-        .join(
-            F.broadcast(c1.select(F.col("w").alias("w1"), F.col("c1").alias("c1w1"))),
-            "w1",
-            "left",
-        )
-        .join(
-            F.broadcast(c1.select(F.col("w").alias("w2"), F.col("c1").alias("c1w2"))),
-            "w2",
-            "left",
-        )
-        .crossJoin(F.broadcast(totals))
-    )
-    u6 = lambda p: F.floor(-F.log(p) * F.lit(1_000_000.0)).cast("long")
-    seen = F.col("c2").isNotNull()
-    backoff = F.col("c2").isNull() & F.col("c1w2").isNotNull()
-    surprisal = (
-        F.when(seen, u6(F.col("c2").cast("double") / F.col("c1w1")))
-        .when(backoff, u6(F.lit(0.4) * F.col("c1w2") / F.col("N")))
-        .otherwise(u6(F.lit(0.4) / F.col("N")))
-    )
-    scored = j.select(
-        "doc_id",
-        "lang",
-        seen.cast("long").alias("is_seen"),
-        backoff.cast("long").alias("is_backoff"),
-        surprisal.alias("s_u6"),
-    )
     return (
-        scored.groupBy("lang")
+        _bigram_scored(d)
+        .groupBy("lang")
         .agg(
             F.count_distinct("doc_id").alias("n_docs"),
             F.count("*").alias("n_bigrams"),
@@ -7250,66 +7146,7 @@ def t_ppl_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     averageOutsidePercentile).
     """
     d = _docs(spark, sf_dir).withColumn("tokens", _tokens_col())
-    bucket = _split_bucket_col()
-    train = d.where(bucket < _SPLIT_TRAIN)
-    held = d.where(bucket >= _SPLIT_TRAIN)
-
-    bigrams = F.expr(
-        "transform(sequence(0, size(tokens) - 2), "
-        "i -> struct(tokens[i] AS w1, tokens[i + 1] AS w2))"
-    )
-    t_bi = (
-        train.where(F.size("tokens") >= 2)
-        .select(F.explode(bigrams).alias("b"))
-        .select("b.w1", "b.w2")
-    )
-    c2 = t_bi.groupBy("w1", "w2").agg(F.count("*").alias("c2")).localCheckpoint()
-    c1 = (
-        train.select(F.explode("tokens").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c1"))
-        .localCheckpoint()
-    )
-    totals = c1.agg(F.sum("c1").alias("N"))
-
-    sb = (
-        held.where(F.size("tokens") >= 2)
-        .select("doc_id", "lang", F.explode(bigrams).alias("b"))
-        .select("doc_id", "lang", "b.w1", "b.w2")
-    )
-    j = (
-        sb.join(F.broadcast(c2), ["w1", "w2"], "left")
-        .join(
-            F.broadcast(c1.select(F.col("w").alias("w1"), F.col("c1").alias("c1w1"))),
-            "w1",
-            "left",
-        )
-        .join(
-            F.broadcast(c1.select(F.col("w").alias("w2"), F.col("c1").alias("c1w2"))),
-            "w2",
-            "left",
-        )
-        .crossJoin(F.broadcast(totals))
-    )
-    u6 = lambda p: F.floor(-F.log(p) * F.lit(1_000_000.0)).cast("long")
-    seen = F.col("c2").isNotNull()
-    backoff = F.col("c2").isNull() & F.col("c1w2").isNotNull()
-    surprisal = (
-        F.when(seen, u6(F.col("c2").cast("double") / F.col("c1w1")))
-        .when(backoff, u6(F.lit(0.4) * F.col("c1w2") / F.col("N")))
-        .otherwise(u6(F.lit(0.4) / F.col("N")))
-    )
-    per_doc = (
-        j.select("doc_id", "lang", surprisal.alias("s_u6"))
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.sum("s_u6").alias("sum_u6"),
-        )
-        # exact integer division — no float quotient near a floor
-        # boundary can diverge between engines
-        .withColumn("ppl_u6", F.expr("sum_u6 div n_bigrams"))
-    )
+    per_doc = _ppl_per_doc(_bigram_scored(d))
     w = Window.partitionBy("lang").orderBy("ppl_u6", "doc_id")
     return per_doc.select(
         "doc_id",

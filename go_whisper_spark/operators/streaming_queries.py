@@ -54,15 +54,19 @@ production deployment path (that is ``streaming/cascade.py``).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_whisper_spark.model import SeriesConfig
+from go_whisper_spark.operators.whisper_queries import (
+    _apply_changes,
+    _key_disjoint_changes,
+    _silver_docs_base,
+    _stage_silver,
+    _tmpdir,
+)
 from go_whisper_spark.render import _tagged_points
 from go_whisper_spark.sources.tables import events_points, load_table
 from go_whisper_spark.streaming.rollup import streaming_rollup
@@ -71,15 +75,6 @@ from go_whisper_spark.streaming.sessions import streaming_sessions
 LATENESS = 172800  # = maxRetention of the 1h:2d archive (the analog pin)
 CHUNK_SECONDS = 864000  # 10-day thirds of the 30-day events span
 N_PASSES = 3
-
-
-def _tmpdir() -> str:
-    """Private per-call scratch dir, removed at interpreter exit (the
-    returned snapshot DataFrame lazily re-reads it, so cleanup must not
-    happen earlier)."""
-    d = tempfile.mkdtemp(prefix="gws_stream_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
 
 
 def _arrive(t0: int):
@@ -145,7 +140,7 @@ def _replay(
     append-to-parquet foreachBatch — the lakehouse CDC sinks and the
     sketch-store sinks had each hand-rolled this whole loop just to
     swap the sink."""
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, out, ckpt = (os.path.join(root, n) for n in ("src", "out", "ckpt"))
     feed = marked.drop("arrive")
 
@@ -326,7 +321,7 @@ def st_cascade_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_whisper_spark.retention import archive_path
     from go_whisper_spark.streaming.cascade import streaming_cascade
 
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, base, ckpt = (os.path.join(root, n) for n in ("src", "arch", "ckpt"))
     feed = marked.drop("arrive")
     for k in range(N_PASSES):
@@ -577,7 +572,7 @@ def st_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = int(pts.agg(F.max("ts")).first()[0])
     t0 = int(pts.agg(F.min("ts")).first()[0])
     cfg = SeriesConfig.from_defs("1h:2d", "average", 0.0)
-    base = _tmpdir()
+    base = _tmpdir("gws_stream_")
     marked = pts.withColumn("arrive", _arrive(t0))
 
     def sink(batch: DataFrame, _bid: int) -> None:
@@ -630,26 +625,10 @@ def st_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per micro-batch the work is O(touched partitions)
     (the merge_table contract); one streaming writer here — N racing
     writers are the ConflictError matrix test_lakehouse pins."""
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        merge_table,
-        read_table,
-    )
+    from go_whisper_spark.lakehouse import merge_table, read_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("long").alias("score"),
-        F.lit("base").alias("src"),
-        (F.col("doc_id") % 4).alias("b"),
-    )
-    table = os.path.join(_tmpdir(), "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    base = _silver_docs_base(spark, sf_dir).withColumn("src", F.lit("base"))
+    table = _stage_silver(spark, base, "gws_stream_")
 
     upd = base.where(F.col("doc_id") % 7 == 0).select(
         "doc_id", "lang",
@@ -732,53 +711,15 @@ def st_lakehouse_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of table size, which is exactly why real CDC sinks
     prefer MoR; the read amortizes via compact_mor (pinned in
     test_lakehouse)."""
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        delete_rows_mor,
-        read_table_mor,
-        upsert_rows_mor,
-    )
+    from go_whisper_spark.lakehouse import read_table_mor
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("long").alias("score"),
-        F.lit("base").alias("src"),
-        (F.col("doc_id") % 4).alias("b"),
-    )
-    table = os.path.join(_tmpdir(), "silver_docs_mor")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    dels = base.where(F.col("doc_id") % 5 == 0).select(
-        "doc_id", "lang", "score", "src", "b",
-        F.lit("d").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    ups = base.where(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
-    ).select(
-        "doc_id", "lang",
-        (F.col("score") + 1000).alias("score"),
-        F.lit("mor").alias("src"),
-        "b",
-        F.lit("u").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    marked = dels.unionByName(ups)
-
-    def sink(batch: DataFrame, _bid: int) -> None:
-        d = batch.where(F.col("op") == "d").select("doc_id")
-        u = batch.where(F.col("op") == "u").drop("op")
-        if not d.isEmpty():
-            delete_rows_mor(spark, table, d)
-        if not u.isEmpty():
-            upsert_rows_mor(spark, table, u, key_cols=["doc_id"])
-
-    _replay(spark, marked, lambda stream: stream, sink=sink)
+    base = _silver_docs_base(spark, sf_dir)
+    table = _stage_silver(
+        spark, base.withColumn("src", F.lit("base")), "gws_stream_")
+    # every upserted row is relabelled; a delete reads only its key
+    marked = _key_disjoint_changes(base).withColumn("src", F.lit("mor"))
+    _replay(spark, marked, lambda stream: stream,
+            sink=lambda batch, _bid: _apply_changes(spark, table, batch))
     return read_table_mor(spark, table, key_cols=["doc_id"]).select(
         "doc_id", "lang", "score", "src", "b"
     )
@@ -815,7 +756,7 @@ def st_topk_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
     marked = ev.withColumn("arrive", F.col("event_id") % N_PASSES)
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     sum_store, t_store = (
         os.path.join(root, "summaries"),
         os.path.join(root, "thresholds"),
@@ -871,45 +812,12 @@ def st_lakehouse_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     read is the audited `w_lakehouse_cdf_mor` plan (changed keys
     from metadata, broadcast semi-join endpoint diff).  [pins
     lakehouse.py: read_changes_mor over streamed commits]"""
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        delete_rows_mor,
-        read_changes_mor,
-        upsert_rows_mor,
-    )
+    from go_whisper_spark.lakehouse import read_changes_mor
 
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(_tmpdir(), "silver_docs_cdf")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    dels = base.where(F.col("doc_id") % 5 == 0).select(
-        "doc_id", "lang", "score", "b",
-        F.lit("d").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    ups = base.where(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
-    ).select(
-        "doc_id", "lang",
-        (F.col("score") + 1000).alias("score"),
-        "b",
-        F.lit("u").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    marked = dels.unionByName(ups)
-
-    def sink(batch: DataFrame, _bid: int) -> None:
-        d = batch.where(F.col("op") == "d").select("doc_id")
-        u = batch.where(F.col("op") == "u").drop("op")
-        if not d.isEmpty():
-            delete_rows_mor(spark, table, d)
-        if not u.isEmpty():
-            upsert_rows_mor(spark, table, u, key_cols=["doc_id"])
-
-    _replay(spark, marked, lambda s: s, sink=sink)
+    table = _stage_silver(spark, base, "gws_stream_")
+    _replay(spark, _key_disjoint_changes(base), lambda s: s,
+            sink=lambda batch, _bid: _apply_changes(spark, table, batch))
     return read_changes_mor(spark, table, key_cols=["doc_id"],
                             from_version=1)
 
@@ -939,51 +847,13 @@ def st_lakehouse_cdf_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     addressing scan; the feed read is the audited
     `w_lakehouse_cdf_pos` plan.  [pins lakehouse.py:
     read_changes_mor pdv branch over streamed commits]"""
-    from go_whisper_spark.lakehouse import (
-        commit_partitions_pos,
-        delete_rows_pos,
-        read_changes_mor,
-        read_table_pos,
-        upsert_rows_mor,
-    )
+    from go_whisper_spark.lakehouse import read_changes_mor
 
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(_tmpdir(), "silver_docs_cdfp")
-    commit_partitions_pos(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    dels = base.where(F.col("doc_id") % 5 == 0).select(
-        "doc_id", "lang", "score", "b",
-        F.lit("d").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    ups = base.where(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
-    ).select(
-        "doc_id", "lang",
-        (F.col("score") + 1000).alias("score"),
-        "b",
-        F.lit("u").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    marked = dels.unionByName(ups)
-
-    def sink(batch: DataFrame, _bid: int) -> None:
-        d = batch.where(F.col("op") == "d").select("doc_id")
-        u = batch.where(F.col("op") == "u").drop("op")
-        if not d.isEmpty():
-            addr = (
-                read_table_pos(spark, table)
-                .join(F.broadcast(d), "doc_id", "left_semi")
-                .select("_dir", "_pos")
-            )
-            delete_rows_pos(spark, table, addr)
-        if not u.isEmpty():
-            upsert_rows_mor(spark, table, u, key_cols=["doc_id"])
-
-    _replay(spark, marked, lambda s: s, sink=sink)
+    # the _pos stamp makes _apply_changes delete positionally
+    table = _stage_silver(spark, base, "gws_stream_", positional=True)
+    _replay(spark, _key_disjoint_changes(base), lambda s: s,
+            sink=lambda batch, _bid: _apply_changes(spark, table, batch))
     return read_changes_mor(spark, table, key_cols=["doc_id"],
                             from_version=1)
 
@@ -1056,7 +926,7 @@ def st_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") % 3).alias("arrive"),
     )
     feed = li.drop("arrive")
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, ckpt, store = (
         os.path.join(root, n) for n in ("src", "ckpt", "edges")
     )
@@ -1262,7 +1132,7 @@ def st_triangles_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("p"),
         (F.col("l_orderkey") % 3).alias("arrive"),
     )
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     store, ledger = (os.path.join(root, n) for n in ("edges", "ledger"))
 
     def sink(batch: DataFrame, _bid: int) -> None:
@@ -1325,7 +1195,7 @@ def st_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(N_PASSES - 1),
     ).cast("long")
     marked = ev.withColumn("arrive", chunk).drop("ts")
-    store = os.path.join(_tmpdir(), "sketch")
+    store = os.path.join(_tmpdir("gws_stream_"), "sketch")
 
     def sink(batch: DataFrame, _bid: int) -> None:
         if batch.isEmpty():
@@ -1370,83 +1240,48 @@ def st_lakehouse_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate merged into the O(groups) view (localCheckpoint →
     overwrite, the artifact a live MV run persists).  [pins
     lakehouse.py: read_changes_mor as a PER-BATCH streaming feed]"""
-    from go_whisper_spark.lakehouse import (
-        CommitLog,
-        commit_partitions,
-        delete_rows_mor,
-        read_changes_mor,
-        read_table,
-        upsert_rows_mor,
+    from go_whisper_spark.lakehouse import read_changes_mor
+    from go_whisper_spark.operators.whisper_queries import (
+        _mv_count_sum_refresh,
+        _mv_count_sum_view,
     )
 
+    def refresh(view: DataFrame, table: str, prev: int, head: int):
+        return _mv_count_sum_refresh(view, read_changes_mor(
+            spark, table, key_cols=["doc_id"],
+            from_version=prev, to_version=head))
+
+    return _streamed_view(spark, sf_dir, _mv_count_sum_view, refresh)
+
+
+def _streamed_view(spark: SparkSession, sf_dir: str, view, refresh
+                   ) -> DataFrame:
+    """The streamed view-maintenance loop of `st_lakehouse_mv` and
+    `st_mv_minmax`: stage the silver table, store ``view`` of its v1
+    snapshot, then replay the key-disjoint change stream — each
+    micro-batch lands through ``_apply_changes`` and, when it
+    committed, overwrites the store with ``refresh(stored view, table,
+    prev_version, head_version)``.  Returns the final stored view."""
+    from go_whisper_spark.lakehouse import CommitLog, read_table
+
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(_tmpdir(), "silver_docs_mv")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    mv_store = os.path.join(_tmpdir(), "mv")
-    (
-        read_table(spark, table, version=1)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"),
-             F.sum("score").alias("sum_score"))
+    table = _stage_silver(spark, base, "gws_stream_")
+    mv_store = os.path.join(_tmpdir("gws_stream_"), "mv")
+    view(read_table(spark, table, version=1)) \
         .write.mode("overwrite").parquet(mv_store)
-    )
-    dels = base.where(F.col("doc_id") % 5 == 0).select(
-        "doc_id", "lang", "score", "b",
-        F.lit("d").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    ups = base.where(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
-    ).select(
-        "doc_id", "lang",
-        (F.col("score") + 1000).alias("score"),
-        "b",
-        F.lit("u").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    marked = dels.unionByName(ups)
 
     def sink(batch: DataFrame, _bid: int) -> None:
         log = CommitLog(table)
         prev = log.state()["version"]
-        d = batch.where(F.col("op") == "d").select("doc_id")
-        u = batch.where(F.col("op") == "u").drop("op")
-        if not d.isEmpty():
-            delete_rows_mor(spark, table, d)
-        if not u.isEmpty():
-            upsert_rows_mor(spark, table, u, key_cols=["doc_id"])
+        _apply_changes(spark, table, batch)
         head = log.state()["version"]
         if head == prev:
             return                      # empty batch: nothing landed
-        feed = read_changes_mor(spark, table, key_cols=["doc_id"],
-                                from_version=prev, to_version=head)
-        sign = F.when(F.col("_change_type") == "insert", F.lit(1)) \
-                .otherwise(F.lit(-1))
-        delta = (
-            feed.groupBy("lang")
-            .agg(F.sum(sign).alias("d_n"),
-                 F.sum(sign * F.col("score")).alias("d_score"))
-        )
-        mv = (
-            spark.read.parquet(mv_store)
-            .join(delta, "lang", "full_outer")
-            .select(
-                "lang",
-                (F.coalesce("n_docs", F.lit(0))
-                 + F.coalesce("d_n", F.lit(0))).alias("n_docs"),
-                (F.coalesce("sum_score", F.lit(0))
-                 + F.coalesce("d_score", F.lit(0))).alias("sum_score"),
-            )
-            .where(F.col("n_docs") > 0)
+        mv = refresh(spark.read.parquet(mv_store), table, prev, head) \
             .localCheckpoint()          # materialized before overwrite
-        )
         mv.write.mode("overwrite").parquet(mv_store)
 
-    _replay(spark, marked, lambda s: s, sink=sink)
+    _replay(spark, _key_disjoint_changes(base), lambda s: s, sink=sink)
     return spark.read.parquet(mv_store)
 
 
@@ -1494,7 +1329,7 @@ def st_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _cos_frames(spark, sf_dir).select(
         "vec_id", "v", "norm", (F.col("vec_id") % 3).alias("arrive")
     )
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     vstore, estore, lstore = (
         os.path.join(root, n) for n in ("vecs", "edges", "labels")
     )
@@ -1595,73 +1430,24 @@ def st_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     endangered groups at the batch's head; the view store is
     O(groups), rewritten from a localCheckpoint.  [pins lakehouse.py:
     read_changes_mor feeding the Gupta-Mumick boundary per batch]"""
-    from go_whisper_spark.lakehouse import (
-        CommitLog,
-        commit_partitions,
-        delete_rows_mor,
-        read_changes_mor,
-        read_table,
-        read_table_mor,
-        upsert_rows_mor,
-    )
+    from go_whisper_spark.lakehouse import read_changes_mor, read_table_mor
     from go_whisper_spark.operators.whisper_queries import (
         _mv_minmax_refresh,
         _mv_minmax_view,
     )
 
-    base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(_tmpdir(), "silver_docs_mvx")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    mv_store = os.path.join(_tmpdir(), "mvx")
-    (
-        _mv_minmax_view(read_table(spark, table, version=1))
-        .write.mode("overwrite").parquet(mv_store)
-    )
-    dels = base.where(F.col("doc_id") % 5 == 0).select(
-        "doc_id", "lang", "score", "b",
-        F.lit("d").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    ups = base.where(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
-    ).select(
-        "doc_id", "lang",
-        (F.col("score") + 1000).alias("score"),
-        "b",
-        F.lit("u").alias("op"),
-        (F.col("doc_id") % 3).alias("arrive"),
-    )
-    marked = dels.unionByName(ups)
-
-    def sink(batch: DataFrame, _bid: int) -> None:
-        log = CommitLog(table)
-        prev = log.state()["version"]
-        d = batch.where(F.col("op") == "d").select("doc_id")
-        u = batch.where(F.col("op") == "u").drop("op")
-        if not d.isEmpty():
-            delete_rows_mor(spark, table, d)
-        if not u.isEmpty():
-            upsert_rows_mor(spark, table, u, key_cols=["doc_id"])
-        head = log.state()["version"]
-        if head == prev:
-            return                      # empty batch: nothing landed
+    def refresh(view: DataFrame, table: str, prev: int, head: int):
         feed = read_changes_mor(spark, table, key_cols=["doc_id"],
                                 from_version=prev, to_version=head
                                 ).localCheckpoint()
-        mv = _mv_minmax_refresh(
-            spark.read.parquet(mv_store), feed,
+        return _mv_minmax_refresh(
+            view, feed,
             read_table_mor(spark, table, key_cols=["doc_id"],
                            version=head),
             with_flag=False,            # slicing-dependent: not emitted
-        ).localCheckpoint()             # materialized before overwrite
-        mv.write.mode("overwrite").parquet(mv_store)
+        )
 
-    _replay(spark, marked, lambda s: s, sink=sink)
-    return spark.read.parquet(mv_store)
+    return _streamed_view(spark, sf_dir, _mv_minmax_view, refresh)
 
 
 def _mv_minmax_oracle_sql():
@@ -1881,7 +1667,7 @@ def st_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_orderkey") % 3).alias("arrive"),
         )
     )
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     store, degdir, dirtdir, core = (
         os.path.join(root, n) for n in ("edges", "deg", "dirt", "core"))
     state = {"batches": 0, "peeled_at": 0}
@@ -1987,7 +1773,7 @@ def st_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_orderkey") % 3).alias("arrive"),
         )
     )
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     store, supdir = (os.path.join(root, n) for n in ("edges", "sup"))
 
     def sink(batch: DataFrame, _bid: int) -> None:
@@ -2074,7 +1860,7 @@ def st_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.conv(
         F.substring(F.md5(F.col("mem").cast("string")), 1, 10), 16, 10
     ).cast("long")
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     store = os.path.join(root, "kmv_store")
 
     def sink(batch: DataFrame, _bid: int) -> None:
@@ -2157,7 +1943,7 @@ def st_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(N_PASSES - 1),
     ).cast("long")
     marked = ev.withColumn("arrive", chunk).drop("ts")
-    store = os.path.join(_tmpdir(), "sketch")
+    store = os.path.join(_tmpdir("gws_stream_"), "sketch")
 
     def sink(batch: DataFrame, _bid: int) -> None:
         if batch.isEmpty():
@@ -2200,7 +1986,7 @@ def st_cascade_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from go_whisper_spark.streaming.chained import chained_cascade_pass
 
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, base = os.path.join(root, "src"), os.path.join(root, "arch")
     feed = marked.drop("arrive")
     for k in range(N_PASSES):
@@ -2606,7 +2392,7 @@ def _render_replay(spark: SparkSession, pts: DataFrame,
 
     from go_whisper_spark.streaming.render import streaming_render_pass
 
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, base = os.path.join(root, "src"), os.path.join(root, "render")
     feed = marked.drop("arrive")
     for k in range(N_PASSES):
@@ -2986,7 +2772,7 @@ def _funnel_replay(spark: SparkSession, sf_dir: str,
         streaming_funnel,
     )
 
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src = os.path.join(root, "src")
     lvl0 = os.path.join(root, "level0")
     out = os.path.join(root, "funnel")
@@ -3159,7 +2945,7 @@ def st_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     marked = ev.withColumn("arrive", chunk).drop("ts")
     feed = marked.drop("arrive")
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, ckpt, store = (
         os.path.join(root, "src"),
         os.path.join(root, "ckpt"),
@@ -3527,7 +3313,7 @@ def st_kmv_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(N_PASSES - 1),
     ).cast("long")
     marked = ev.withColumn("arrive", chunk).drop("ts")
-    store = os.path.join(_tmpdir(), "sketch")
+    store = os.path.join(_tmpdir("gws_stream_"), "sketch")
     h40 = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 10), 16, 10
     ).cast("long")
@@ -3602,7 +3388,7 @@ def st_bloom_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     marked = docs.withColumn("arrive", F.col("doc_id") % N_PASSES)
-    store = os.path.join(_tmpdir(), "sketch")
+    store = os.path.join(_tmpdir("gws_stream_"), "sketch")
     js = spark.range(1, _BLOOM_K + 1).select(F.col("id").alias("j"))
 
     def sink(batch: DataFrame, _bid: int) -> None:
@@ -3712,7 +3498,7 @@ def st_quantile_hdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(N_PASSES - 1),
     ).cast("long")
     marked = ev.withColumn("arrive", chunk).drop("ts")
-    store = os.path.join(_tmpdir(), "sketch")
+    store = os.path.join(_tmpdir("gws_stream_"), "sketch")
 
     def sink(batch: DataFrame, _bid: int) -> None:
         if batch.isEmpty():
@@ -3782,7 +3568,7 @@ def st_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tsec", "ts"
     )
     feed = marked.drop("arrive")
-    root = _tmpdir()
+    root = _tmpdir("gws_stream_")
     src, store = os.path.join(root, "src"), os.path.join(root, "edges")
 
     for k in range(N_PASSES):
@@ -3934,7 +3720,6 @@ from go_whisper_spark.operators.whisper_queries import (  # noqa: E402
     _topk_mg_sql,
     _w_zorder_skipping_sql,
     W_LAKEHOUSE_MV_SQL as _W_LAKEHOUSE_MV_ORACLE,
-    _silver_docs_base,
     W_TRIANGLES_SQL as _W_TRIANGLES_ORACLE,
     _kmv_sql,
     W_DISTINCT_HLL_SQL as _W_DISTINCT_HLL_ORACLE,

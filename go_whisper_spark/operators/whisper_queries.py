@@ -26,7 +26,10 @@ sums round at 4 dp; averages use exact integer cent arithmetic (see
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -4372,21 +4375,6 @@ FROM pts p LEFT JOIN near n
 
 
 # ------------------------------------------------------- w_wsp_roundtrip
-def _wsp_fixture_dir() -> str:
-    """A fresh private fixture dir per call (never shared, so a bench
-    and a pytest session on the same sf can't race each other's
-    rebuilds), removed at interpreter exit — the lazy binaryFile scan
-    of the returned DataFrame may run long after this function returns,
-    so cleanup must not happen any earlier."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="gws_wsp_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
 def w_wsp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end ``.wsp`` contract: the 1h LWW slot state (bounds-
     checked against ``now`` as whisper's Update does) is packed into
@@ -4416,7 +4404,7 @@ def w_wsp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = int(pts.agg(F.max("ts")).first()[0])
     lww = _lww(pts, HOUR).where(F.col("interval") > now - cfg.max_retention)
 
-    fixture = _wsp_fixture_dir()
+    fixture = _tmpdir("gws_wsp_")
     by_metric: dict = {}
     for row in lww.collect():
         by_metric.setdefault(row["metric"], []).append((row["interval"], row["value"]))
@@ -4500,7 +4488,7 @@ def w_wsp_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _avg6(F.col("sc"), F.col("known")).alias("value"))
     )
 
-    fixture = _wsp_fixture_dir()
+    fixture = _tmpdir("gws_wsp_")
     fine: dict = {}
     for row in a0.collect():
         fine.setdefault(row["metric"], []).append((row["interval"], row["value"]))
@@ -4587,7 +4575,7 @@ def _wsp_export_sink(spark: SparkSession, sf_dir: str):
             _avg6(F.col("sc"), F.col("known")).alias("value"),
         )
     )
-    fixture = _wsp_fixture_dir()
+    fixture = _tmpdir("gws_wsp_")
     return export_wsp(a0.unionByName(a1), fixture, cfg, now), fixture
 
 
@@ -4652,7 +4640,7 @@ def w_carbon_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("not-a-line",), ("metric.only 12.5",), ("m one 1700000000",)],
         "value string",
     )
-    fixture = os.path.join(_wsp_fixture_dir(), "carbon")
+    fixture = os.path.join(_tmpdir("gws_wsp_"), "carbon")
     lines.unionByName(garbage).write.mode("overwrite").text(fixture)
 
     parsed = read_carbon(spark, fixture)
@@ -4668,12 +4656,12 @@ def w_carbon_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _silver_docs_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The silver documents BASE FRAME every lakehouse verb stages:
-    (doc_id, lang, score = n_chars, b = doc_id % 4).  Single-sourced
-    (REVIEW r16 — was spelled verbatim at 12+ call sites, each of
-    which had to stay in lockstep with its SQL oracle's `base` CTE);
-    the matching oracle spelling is the `base AS (SELECT doc_id %% 4
-    AS b, doc_id, lang, CAST(n_chars AS BIGINT) AS score FROM
-    documents)` CTE."""
+    (doc_id, lang, score = n_chars, b = doc_id % 4) — the verbs with a
+    `src` label add it as their own column.  Single-sourced, like the
+    staging, change-set and apply helpers below, so every call site
+    stays in lockstep with its SQL oracle's `base` CTE: `base AS
+    (SELECT doc_id %% 4 AS b, doc_id, lang, CAST(n_chars AS BIGINT)
+    AS score FROM documents)`."""
     from go_whisper_spark.sources.tables import load_table
 
     return load_table(spark, sf_dir, "documents").select(
@@ -4681,6 +4669,110 @@ def _silver_docs_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("n_chars").cast("long").alias("score"),
         (F.col("doc_id") % 4).alias("b"),
+    )
+
+
+def _tmpdir(prefix: str) -> str:
+    """A fresh private scratch dir per call (never shared, so a bench
+    and a pytest session on the same sf can't race each other's
+    rebuilds), removed at interpreter exit — the returned DataFrames
+    re-read it lazily, long after the operator returns, so cleanup
+    must not happen any earlier."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def _stage_silver(spark: SparkSession, base: DataFrame, prefix: str,
+                  positional: bool = False) -> str:
+    """Commit ``base`` (a ``_silver_docs_base`` frame) as v1 of a fresh
+    silver table, one directory per ``b`` bucket, and return the table
+    path; ``positional`` stamps ``_pos`` for positional deletes
+    (``commit_partitions_pos``)."""
+    from go_whisper_spark.lakehouse import (
+        commit_partitions,
+        commit_partitions_pos,
+    )
+
+    table = os.path.join(_tmpdir(prefix), "silver_docs")
+    commit = commit_partitions_pos if positional else commit_partitions
+    commit(
+        spark, table,
+        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
+        base_version=0,
+    )
+    return table
+
+
+def _key_disjoint_changes(base: DataFrame) -> DataFrame:
+    """The streamed CDC change set over a silver ``base``: DELETE every
+    doc_id % 5 == 0 (``op`` 'd'), UPSERT every doc_id % 7 == 0 not
+    also deleted at score + 1000 (``op`` 'u'), arriving in pass
+    ``doc_id % 3``.  Each key is touched once, so the final table is a
+    pure function of the change SET — micro-batch boundaries cannot
+    matter."""
+    dels = base.where(F.col("doc_id") % 5 == 0).withColumn("op", F.lit("d"))
+    ups = base.where(
+        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
+    ).withColumn("score", F.col("score") + 1000).withColumn("op", F.lit("u"))
+    return dels.unionByName(ups).withColumn("arrive", F.col("doc_id") % 3)
+
+
+def _delete_keys(spark: SparkSession, table: str, keys: DataFrame) -> None:
+    """MoR DELETE of the ``doc_id`` ``keys`` as one metadata-only
+    commit in the table's own dialect: a positional deletion vector on
+    a ``_pos``-stamped table (``_stage_silver(positional=True)``),
+    addressed through ``read_table_pos`` and a broadcast key
+    semi-join; an equality deletion vector otherwise."""
+    from go_whisper_spark.lakehouse import (
+        POS_COL,
+        CommitLog,
+        delete_rows_mor,
+        delete_rows_pos,
+        read_table_pos,
+    )
+
+    if POS_COL in dict(CommitLog(table).state()["schema"]):
+        delete_rows_pos(spark, table, (
+            read_table_pos(spark, table)
+            .join(F.broadcast(keys), "doc_id", "left_semi")
+            .select("_dir", POS_COL)
+        ))
+    else:
+        delete_rows_mor(spark, table, keys)
+
+
+def _apply_changes(spark: SparkSession, table: str, batch: DataFrame) -> None:
+    """Land one batch of ``_key_disjoint_changes`` as metadata-only
+    MoR commits: the 'd' keys through ``_delete_keys``, the 'u' rows
+    as an upsert."""
+    from go_whisper_spark.lakehouse import upsert_rows_mor
+
+    d = batch.where(F.col("op") == "d").select("doc_id")
+    u = batch.where(F.col("op") == "u").drop("op")
+    if not d.isEmpty():
+        _delete_keys(spark, table, d)
+    if not u.isEmpty():
+        upsert_rows_mor(spark, table, u, key_cols=["doc_id"])
+
+
+def _upsert_then_delete(spark: SparkSession, table: str,
+                        base: DataFrame) -> None:
+    """The batch change set on a staged silver table: v2 = MoR upsert
+    re-scoring every doc_id % 7 == 0 (+1000), v3 = ``_delete_keys`` of
+    every doc_id % 5 == 0 — so the %35 overlap nets
+    upsert-then-delete to the pre-image delete."""
+    from go_whisper_spark.lakehouse import upsert_rows_mor
+
+    upsert_rows_mor(
+        spark, table,
+        base.where(F.col("doc_id") % 7 == 0).select(
+            "doc_id", "lang", (F.col("score") + 1000).alias("score"), "b",
+        ),
+        key_cols=["doc_id"],
+    )
+    _delete_keys(
+        spark, table, base.where(F.col("doc_id") % 5 == 0).select("doc_id")
     )
 
 
@@ -4943,15 +5035,13 @@ def w_retention_reap(spark: SparkSession, sf_dir: str) -> DataFrame:
     LWW (arg_max by write_seq) — bit-exact, no aggregation method in
     play at archive 0.
     """
-    import tempfile
-
     from go_whisper_spark.engine import WhisperEngine
     from go_whisper_spark.model import SeriesConfig
     from go_whisper_spark.retention import archive_path, reap, write_archives
 
     pts = _points(spark, sf_dir)
     now = int(pts.agg(F.max("ts")).first()[0])
-    base = tempfile.mkdtemp(prefix="gws_reap_")
+    base = _tmpdir("gws_reap_")
     eng = WhisperEngine(spark, SeriesConfig.from_defs("1h:90d", "average", 0.0))
     eng.update_many(pts, now)
     write_archives(eng, base, now)
@@ -4987,8 +5077,6 @@ def w_store_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     consolidation, whose float average is accumulation-order-dependent
     and deliberately not oracle-hashable.
     """
-    import tempfile
-
     from go_whisper_spark.engine import WhisperEngine
     from go_whisper_spark.model import SeriesConfig
     from go_whisper_spark.retention import MaterializedRollups, write_archives
@@ -4996,7 +5084,7 @@ def w_store_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     now = int(pts.agg(F.max("ts")).first()[0])
     cfg = SeriesConfig.from_defs("1h:10d,6h:90d", "max", 0.0)
-    base = tempfile.mkdtemp(prefix="gws_store_")
+    base = _tmpdir("gws_store_")
     eng = WhisperEngine(spark, cfg)
     eng.update_many(pts, now)
     write_archives(eng, base, now)
@@ -5052,8 +5140,6 @@ def w_lakehouse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     travel) are pinned in tests/test_lakehouse.py; this query pins
     the data math end-to-end through the commit log.
     """
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         incremental_rollup_tx,
         read_table,
@@ -5066,7 +5152,7 @@ def w_lakehouse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0, now = int(bounds["a"]), int(bounds["b"])
     mid = t0 + (now - t0) // 2
     cfg = SeriesConfig.from_defs("1h:90d,6h:180d", "max", 0.5)
-    base = tempfile.mkdtemp(prefix="gws_lake_")
+    base = _tmpdir("gws_lake_")
     for batch in (pts.where(F.col("ts") <= mid), pts.where(F.col("ts") > mid)):
         incremental_rollup_tx(spark, base, cfg, batch, now)
     return read_table(spark, table_path(base, 1)).select(
@@ -5092,8 +5178,6 @@ def w_lakehouse_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed); at 100 TB this is the OPTIMIZE pass that bounds a
     streaming table's manifest growth, and its cost is one rewrite of
     the small-file tail, never of the compacted history."""
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         CommitLog,
         _append_bronze,
@@ -5103,7 +5187,7 @@ def w_lakehouse_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pts = _points(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="gws_lakec_")
+    base = _tmpdir("gws_lakec_")
     for i in range(3):
         _append_bronze(pts.where(F.col("write_seq") % 3 == i), base)
 
@@ -5171,8 +5255,6 @@ def w_lakehouse_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events.  Scale: two manifest resolutions + two pruned scans —
     time travel costs a log replay, never a data rewrite.
     """
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         incremental_rollup_tx,
         read_table,
@@ -5185,7 +5267,7 @@ def w_lakehouse_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0, now = int(bounds["a"]), int(bounds["b"])
     mid = t0 + (now - t0) // 2
     cfg = SeriesConfig.from_defs("1h:90d", "max", 0.0)
-    base = tempfile.mkdtemp(prefix="gws_lake_")
+    base = _tmpdir("gws_lake_")
     v1 = incremental_rollup_tx(
         spark, base, cfg, pts.where(F.col("ts") <= mid), now
     )[0]
@@ -5240,30 +5322,10 @@ def w_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join's right side is the batch's keys (AQE broadcasts), the
     touched-partition list is the one control-plane collect, and the
     swap is a single atomic commit (v1 create → v2 merge)."""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import merge_table, read_table
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        merge_table,
-        read_table,
-    )
-    from go_whisper_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("long").alias("score"),
-        F.lit("base").alias("src"),
-        (F.col("doc_id") % 4).alias("b"),
-    )
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakem_"), "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    base = _silver_docs_base(spark, sf_dir).withColumn("src", F.lit("base"))
+    table = _stage_silver(spark, base, "gws_lakem_")
     updates = base.where(F.col("doc_id") % 7 == 0).select(
         "doc_id", "lang",
         (F.col("score") + 1000).alias("score"),
@@ -5308,31 +5370,14 @@ def w_lakehouse_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite); the scan stays file-pruned with the deletion vector as
     a broadcast key set; pathological tombstone volume is compacted
     away by compact_mor (pytest pins compacted == MoR view)."""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
-        commit_partitions,
         delete_rows_mor,
         read_table_mor,
         upsert_rows_mor,
     )
-    from go_whisper_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("long").alias("score"),
-        F.lit("base").alias("src"),
-        (F.col("doc_id") % 4).alias("b"),
-    )
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakemor_"), "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    base = _silver_docs_base(spark, sf_dir).withColumn("src", F.lit("base"))
+    table = _stage_silver(spark, base, "gws_lakemor_")
     delete_rows_mor(
         spark, table, base.where(F.col("doc_id") % 5 == 0).select("doc_id")
     )
@@ -5393,9 +5438,6 @@ def w_lakehouse_mor_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     (monotonically_increasing_id) and PERSISTED — never re-derived.
     [pins lakehouse.py: commit_partitions_pos / read_table_pos /
     delete_rows_pos / read_table_mor's pdv branch]"""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         POS_COL,
         commit_partitions_pos,
@@ -5414,7 +5456,7 @@ def w_lakehouse_mor_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 3).alias("b"),
     )
     base = one.unionByName(one)  # two content-identical copies per doc
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakepos_"), "silver_docs")
+    table = os.path.join(_tmpdir("gws_lakepos_"), "silver_docs")
     commit_partitions_pos(
         spark, table,
         {f"b={k}": base.where(F.col("b") == k) for k in range(3)},
@@ -5458,22 +5500,10 @@ def w_lakehouse_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per source directory, not a data pass.
     [pins lakehouse.py: CommitLog schema registry /
     _widened_schema / read_table_mor allowMissingColumns]"""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import read_table_mor, upsert_rows_mor
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        read_table_mor,
-        upsert_rows_mor,
-    )
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakeevo_"),
-                         "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    table = _stage_silver(spark, base, "gws_lakeevo_")
     upsert_rows_mor(
         spark, table,
         base.where(F.col("doc_id") % 7 == 0).select(
@@ -5513,22 +5543,10 @@ def w_lakehouse_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite — keep-side anti-join against the broadcast key set,
     union with the batch's rows, ONE commit with the MoR conflict
     guard.  [pins lakehouse.py: merge_table allow_moves]"""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import merge_table, read_table
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        merge_table,
-        read_table,
-    )
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakemove_"),
-                         "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    table = _stage_silver(spark, base, "gws_lakemove_")
     moved = base.where(F.col("doc_id") % 7 == 0).select(
         "doc_id", "lang",
         (F.col("score") + 1000).alias("score"),
@@ -5723,22 +5741,10 @@ def w_lakehouse_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table not the change set (the O(changes) MoR-metadata fast
     path is the documented ROADMAP step, Delta's enable-CDF trade).
     [pins lakehouse.py: read_changes]"""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import merge_table, read_changes
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        merge_table,
-        read_changes,
-    )
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakecdf_"),
-                         "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    table = _stage_silver(spark, base, "gws_lakecdf_")
     up2 = base.where(F.col("doc_id") % 7 == 0).select(
         "doc_id", "lang", (F.col("score") + 1000).alias("score"), "b",
     ).unionByName(
@@ -5805,33 +5811,11 @@ def w_lakehouse_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans carry a broadcast key semi-join (bloom/zone-map prunable);
     the bag diff runs over O(changed rows).  [pins lakehouse.py:
     read_changes_mor]"""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import read_changes_mor
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        delete_rows_mor,
-        read_changes_mor,
-        upsert_rows_mor,
-    )
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakecdfm_"),
-                         "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    upsert_rows_mor(
-        spark, table,
-        base.where(F.col("doc_id") % 7 == 0).select(
-            "doc_id", "lang", (F.col("score") + 1000).alias("score"), "b",
-        ),
-        key_cols=["doc_id"],
-    )
-    delete_rows_mor(
-        spark, table, base.where(F.col("doc_id") % 5 == 0).select("doc_id")
-    )
+    table = _stage_silver(spark, base, "gws_lakecdfm_")
+    _upsert_then_delete(spark, table, base)
     return read_changes_mor(spark, table, key_cols=["doc_id"],
                             from_version=1, to_version=3)
 
@@ -5883,44 +5867,30 @@ def w_lakehouse_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed aggregate + a broadcast merge into the O(groups) view —
     refresh cost tracks the CHANGE RATE, not the table.  [pins
     lakehouse.py: read_changes_mor as a view-maintenance feed]"""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import read_changes_mor, read_table
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        delete_rows_mor,
-        read_changes_mor,
-        read_table,
-        upsert_rows_mor,
-    )
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakemv_"),
-                         "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    table = _stage_silver(spark, base, "gws_lakemv_")
     # the ONE full aggregate this view ever pays (v1 materialization)
-    mv = (
-        read_table(spark, table, version=1)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"),
-             F.sum("score").alias("sum_score"))
+    mv = _mv_count_sum_view(read_table(spark, table, version=1)) \
         .localCheckpoint()
-    )
-    upsert_rows_mor(
-        spark, table,
-        base.where(F.col("doc_id") % 7 == 0).select(
-            "doc_id", "lang", (F.col("score") + 1000).alias("score"), "b",
-        ),
-        key_cols=["doc_id"],
-    )
-    delete_rows_mor(
-        spark, table, base.where(F.col("doc_id") % 5 == 0).select("doc_id")
-    )
-    feed = read_changes_mor(spark, table, key_cols=["doc_id"],
-                            from_version=1, to_version=3)
+    _upsert_then_delete(spark, table, base)
+    return _mv_count_sum_refresh(
+        mv, read_changes_mor(spark, table, key_cols=["doc_id"],
+                             from_version=1, to_version=3))
+
+
+def _mv_count_sum_view(snapshot: DataFrame) -> DataFrame:
+    """(lang, n_docs, sum_score) from a snapshot — the
+    self-maintainable view of `w_lakehouse_mv` and `st_lakehouse_mv`."""
+    return snapshot.groupBy("lang").agg(
+        F.count("*").alias("n_docs"), F.sum("score").alias("sum_score"))
+
+
+def _mv_count_sum_refresh(view: DataFrame, feed: DataFrame) -> DataFrame:
+    """Fold a change feed into `_mv_count_sum_view` as SIGNED deltas
+    (insert +1/+score, delete −1/−score); groups folding to zero count
+    drop."""
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)) \
             .otherwise(F.lit(-1))
     delta = (
@@ -5932,7 +5902,7 @@ def w_lakehouse_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it plans as a key-shuffled merge of two GROUP-cardinality
     # relations — O(langs), the permitted SMJ the plan spec documents
     return (
-        mv.join(delta, "lang", "full_outer")
+        view.join(delta, "lang", "full_outer")
         .select(
             "lang",
             (F.coalesce("n_docs", F.lit(0))
@@ -6236,39 +6206,19 @@ def _mv_minmax_run(spark: SparkSession, sf_dir: str,
     `w_mv_minmax_ties` (score div 64): stage the silver table, build
     the v1 tie-aware view, land the %7 MoR upserts (+1000) and %5
     deletes, refresh from the v1->v3 feed."""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
-        commit_partitions,
-        delete_rows_mor,
         read_changes_mor,
         read_table,
         read_table_mor,
-        upsert_rows_mor,
     )
+
     base = _silver_docs_base(spark, sf_dir)
     if coarse:
         base = base.withColumn("score", F.expr("score div 64"))
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakemvx_"),
-                         "silver_docs")
-    commit_partitions(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    table = _stage_silver(spark, base, "gws_lakemvx_")
     mv = _mv_minmax_view(read_table(spark, table, version=1)) \
         .localCheckpoint()
-    upsert_rows_mor(
-        spark, table,
-        base.where(F.col("doc_id") % 7 == 0).select(
-            "doc_id", "lang", (F.col("score") + 1000).alias("score"), "b",
-        ),
-        key_cols=["doc_id"],
-    )
-    delete_rows_mor(
-        spark, table, base.where(F.col("doc_id") % 5 == 0).select("doc_id")
-    )
+    _upsert_then_delete(spark, table, base)
     feed = read_changes_mor(spark, table, key_cols=["doc_id"],
                             from_version=1, to_version=3).localCheckpoint()
     return _mv_minmax_refresh(
@@ -6379,37 +6329,11 @@ def w_lakehouse_cdf_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(changed rows).  [pins lakehouse.py: read_changes_mor pdv
     branch / commit_partitions_pos / delete_rows_pos /
     read_table_pos]"""
-    import os
-    import tempfile
+    from go_whisper_spark.lakehouse import read_changes_mor
 
-    from go_whisper_spark.lakehouse import (
-        commit_partitions_pos,
-        delete_rows_pos,
-        read_changes_mor,
-        read_table_pos,
-        upsert_rows_mor,
-    )
     base = _silver_docs_base(spark, sf_dir)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakecdfp_"),
-                         "silver_docs")
-    commit_partitions_pos(
-        spark, table,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
-    upsert_rows_mor(
-        spark, table,
-        base.where(F.col("doc_id") % 7 == 0).select(
-            "doc_id", "lang", (F.col("score") + 1000).alias("score"), "b",
-        ),
-        key_cols=["doc_id"],
-    )
-    addr = (
-        read_table_pos(spark, table)
-        .where(F.col("doc_id") % 5 == 0)
-        .select("_dir", "_pos")
-    )
-    delete_rows_pos(spark, table, addr)
+    table = _stage_silver(spark, base, "gws_lakecdfp_", positional=True)
+    _upsert_then_delete(spark, table, base)
     return read_changes_mor(spark, table, key_cols=["doc_id"],
                             from_version=1, to_version=3)
 
@@ -6446,9 +6370,6 @@ def w_lakehouse_bloomskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata probe replaces a full-table scan per point lookup —
     precisely Delta's bloom-index pitch.  [pins lakehouse.py:
     _bloom_stats / read_table_lookup / CommitLog bloom payload]"""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         CommitLog,
         _bloom_positions_py,
@@ -6459,7 +6380,7 @@ def w_lakehouse_bloomskip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     langs = [r[0] for r in docs.select("lang").distinct().collect()]
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakebloom_"),
+    table = os.path.join(_tmpdir("gws_lakebloom_"),
                          "silver_docs")
     commit_partitions(
         spark, table,
@@ -6570,9 +6491,6 @@ def w_lakehouse_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint is the whole table (removes every old key) — the
     public Delta contract.  [pins lakehouse.py: optimize_table /
     read_table_range / _range_pruned / commit stats payload]"""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         CommitLog,
         _range_pruned,
@@ -6596,7 +6514,7 @@ def w_lakehouse_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(user_id * {_Z_G}) div (mu + 1)").alias("qx"),
         F.expr(f"((hr - h0) * {_Z_G}) div (mh - h0 + 1)").alias("qt"),
     ).localCheckpoint()
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakeopt_"),
+    table = os.path.join(_tmpdir("gws_lakeopt_"),
                          "silver_events")
     # ADVICE r15: commit ONLY the non-empty ingest shards.  An empty
     # shard would be registered with [None, None] stats, which
@@ -6725,6 +6643,38 @@ LEFT JOIN truth ON b.box = truth.box
 """
 
 
+def _stage_two_specs(spark: SparkSession, d: DataFrame, prefix: str):
+    """Stage a documents frame ``d`` under an EVOLVED partition spec:
+    v1 range-buckets the old half (``rb = doc_id * 4 div split`` for
+    doc_id < split = max // 2), v2 lang-partitions the new half, both
+    commits carrying (doc_id, lang) zone maps.  Only non-empty keys
+    are committed (the w_lakehouse_optimize empty-shard rule).
+    Returns (table, split, max doc_id)."""
+    from go_whisper_spark.lakehouse import commit_partitions
+
+    mx = int(d.agg(F.max("doc_id")).first()[0])
+    split = mx // 2
+    g1 = d.where(F.col("doc_id") < split).withColumn(
+        "rb", F.expr(f"(doc_id * 4) div {split}"))
+    g2 = d.where(F.col("doc_id") >= split)
+    table = os.path.join(_tmpdir(prefix), "silver_docs")
+    rbs = sorted(r.rb for r in g1.select("rb").distinct().collect())
+    commit_partitions(
+        spark, table,
+        {f"rb={k}": g1.where(F.col("rb") == k).drop("rb") for k in rbs},
+        base_version=0,
+        minmax_cols=["doc_id", "lang"],
+    )
+    langs = sorted(r.lang for r in g2.select("lang").distinct().collect())
+    commit_partitions(
+        spark, table,
+        {f"lang={lg}": g2.where(F.col("lang") == lg) for lg in langs},
+        base_version=1,
+        minmax_cols=["doc_id", "lang"],
+    )
+    return table, split, mx
+
+
 def w_lakehouse_partevolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARTITION-SPEC EVOLUTION under the driver's oracle — Iceberg's
     headline metadata feature: generation 1 of the silver documents
@@ -6756,40 +6706,15 @@ def w_lakehouse_partevolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth pass is one stats-pruned scan per box.  [pins lakehouse.py:
     commit_partitions heterogeneous-spec coexistence /
     read_table_range / _range_pruned]"""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         CommitLog,
         _range_pruned,
-        commit_partitions,
         read_table_range,
     )
     from go_whisper_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    mx = int(d.agg(F.max("doc_id")).first()[0])
-    split = mx // 2
-    g1 = d.where(F.col("doc_id") < split).withColumn(
-        "rb", F.expr(f"(doc_id * 4) div {split}"))
-    g2 = d.where(F.col("doc_id") >= split)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakepe_"),
-                         "silver_docs")
-    # non-empty keys only (the w_lakehouse_optimize empty-shard rule)
-    rbs = sorted(r.rb for r in g1.select("rb").distinct().collect())
-    commit_partitions(
-        spark, table,
-        {f"rb={k}": g1.where(F.col("rb") == k).drop("rb") for k in rbs},
-        base_version=0,
-        minmax_cols=["doc_id", "lang"],
-    )
-    langs = sorted(r.lang for r in g2.select("lang").distinct().collect())
-    commit_partitions(
-        spark, table,
-        {f"lang={lg}": g2.where(F.col("lang") == lg) for lg in langs},
-        base_version=1,
-        minmax_cols=["doc_id", "lang"],
-    )
+    table, split, mx = _stage_two_specs(spark, d, "gws_lakepe_")
     boxes = [
         ("old_slice", 0, split // 4, None, None),
         ("lang_en", None, None, "en", "en"),
@@ -6900,12 +6825,8 @@ def w_lakehouse_partevolve_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (updates ∪ untouched ∪ inserts), per-lang.
     [pins lakehouse.py: merge_table scheme guard / upsert_rows_mor /
     read_table_mor across heterogeneous specs]"""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         CommitLog,
-        commit_partitions,
         merge_table,
         read_table_mor,
         upsert_rows_mor,
@@ -6914,27 +6835,7 @@ def w_lakehouse_partevolve_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
-    mx = int(d.agg(F.max("doc_id")).first()[0])
-    split = mx // 2
-    g1 = d.where(F.col("doc_id") < split).withColumn(
-        "rb", F.expr(f"(doc_id * 4) div {split}"))
-    g2 = d.where(F.col("doc_id") >= split)
-    table = os.path.join(tempfile.mkdtemp(prefix="gws_lakepem_"),
-                         "silver_docs")
-    rbs = sorted(r.rb for r in g1.select("rb").distinct().collect())
-    commit_partitions(
-        spark, table,
-        {f"rb={k}": g1.where(F.col("rb") == k).drop("rb") for k in rbs},
-        base_version=0,
-        minmax_cols=["doc_id", "lang"],
-    )
-    langs = sorted(r.lang for r in g2.select("lang").distinct().collect())
-    commit_partitions(
-        spark, table,
-        {f"lang={lg}": g2.where(F.col("lang") == lg) for lg in langs},
-        base_version=1,
-        minmax_cols=["doc_id", "lang"],
-    )
+    table, _, mx = _stage_two_specs(spark, d, "gws_lakepem_")
     pre = dict(CommitLog(table).state()["partitions"])
 
     chars_t = dict(d.dtypes)["n_chars"]
@@ -7024,25 +6925,16 @@ def w_lakehouse_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     fork for an experiment costs a manifest write, and divergence
     pays only for partitions actually rewritten.  [pins lakehouse.py:
     clone_table / merge_table divergence]"""
-    import os
-    import tempfile
-
     from go_whisper_spark.lakehouse import (
         CommitLog,
         clone_table,
-        commit_partitions,
         merge_table,
         read_table,
     )
+
     base = _silver_docs_base(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="gws_lakeclone_")
-    src = os.path.join(root, "silver_docs")
-    dst = os.path.join(root, "silver_docs_fork")
-    commit_partitions(
-        spark, src,
-        {f"b={k}": base.where(F.col("b") == k) for k in range(4)},
-        base_version=0,
-    )
+    src = _stage_silver(spark, base, "gws_lakeclone_")
+    dst = os.path.join(os.path.dirname(src), "silver_docs_fork")
     clone_table(src, dst)
     v1_dirs = set(CommitLog(src).state(at_version=1)["partitions"].values())
     merge_table(

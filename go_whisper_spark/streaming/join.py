@@ -36,6 +36,61 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _interval_join(
+    stream: DataFrame,
+    key: str,
+    left_pred: Column,
+    right_pred: Column,
+    range_seconds: int,
+    lateness_seconds: int,
+    how: str = "inner",
+    n_salt: int = 0,
+) -> DataFrame:
+    """The one interval-join body behind the three public variants:
+    watermark the stream, split it into the left and right sides, join
+    on ``key`` (plus the salt when ``n_salt`` > 0) within
+    ``[l_ts, l_ts + range]``, and project ``(key, l_seq, r_seq, l_ts,
+    lag_s)`` — with the nullable right-side columns cast to DOUBLE for
+    ``how="left_outer"``."""
+    s = stream.withWatermark("ts", f"{lateness_seconds} seconds")
+    left = s.filter(left_pred).select(
+        key,
+        F.col("ts").alias("l_ts"),
+        F.col("write_seq").alias("l_seq"),
+    )
+    right = s.filter(right_pred).select(
+        F.col(key).alias(f"r_{key}"),
+        F.col("ts").alias("r_ts"),
+        F.col("write_seq").alias("r_seq"),
+    )
+    on = F.col(key) == F.col(f"r_{key}")
+    if n_salt:
+        salt_all = F.array(*[F.lit(i) for i in range(n_salt)])
+        left = left.withColumn("salt", F.explode(salt_all))
+        right = right.withColumn(
+            "r_salt", (F.col("r_seq") % n_salt).cast("int"))
+        on = on & (F.col("salt") == F.col("r_salt"))
+    on = (
+        on
+        & (F.col("r_ts") >= F.col("l_ts"))
+        & (
+            F.col("r_ts")
+            <= F.col("l_ts") + F.expr(f"INTERVAL {range_seconds} SECONDS")
+        )
+    )
+    r_seq = F.col("r_seq")
+    lag = F.col("r_ts").cast("long") - F.col("l_ts").cast("long")
+    if how == "left_outer":
+        r_seq, lag = r_seq.cast("double"), lag.cast("double")
+    return left.join(right, on, how).select(
+        key,
+        "l_seq",
+        r_seq.alias("r_seq"),
+        F.col("l_ts").cast("long").alias("l_ts"),
+        lag.alias("lag_s"),
+    )
+
+
 def streaming_interval_join(
     stream: DataFrame,
     key: str,
@@ -52,33 +107,8 @@ def streaming_interval_join(
     id), and the ``key`` column.  Returns one row per matched pair:
     ``(key, l_seq, r_seq, l_ts, lag_s)``.
     """
-    s = stream.withWatermark("ts", f"{lateness_seconds} seconds")
-    left = s.filter(left_pred).select(
-        key,
-        F.col("ts").alias("l_ts"),
-        F.col("write_seq").alias("l_seq"),
-    )
-    right = s.filter(right_pred).select(
-        F.col(key).alias(f"r_{key}"),
-        F.col("ts").alias("r_ts"),
-        F.col("write_seq").alias("r_seq"),
-    )
-    return left.join(
-        right,
-        (F.col(key) == F.col(f"r_{key}"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (
-            F.col("r_ts")
-            <= F.col("l_ts") + F.expr(f"INTERVAL {range_seconds} SECONDS")
-        ),
-        "inner",
-    ).select(
-        key,
-        "l_seq",
-        "r_seq",
-        F.col("l_ts").cast("long").alias("l_ts"),
-        (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("lag_s"),
-    )
+    return _interval_join(stream, key, left_pred, right_pred,
+                          range_seconds, lateness_seconds)
 
 
 def streaming_interval_join_salted(
@@ -107,40 +137,8 @@ def streaming_interval_join_salted(
     salting only re-keys the state distribution, never the event-time
     logic.
     """
-    s = stream.withWatermark("ts", f"{lateness_seconds} seconds")
-    salt_all = F.array(*[F.lit(i) for i in range(n_salt)])
-    left = (
-        s.filter(left_pred)
-        .select(
-            key,
-            F.col("ts").alias("l_ts"),
-            F.col("write_seq").alias("l_seq"),
-        )
-        .withColumn("salt", F.explode(salt_all))
-    )
-    right = s.filter(right_pred).select(
-        F.col(key).alias(f"r_{key}"),
-        F.col("ts").alias("r_ts"),
-        F.col("write_seq").alias("r_seq"),
-        (F.col("write_seq") % n_salt).cast("int").alias("r_salt"),
-    )
-    return left.join(
-        right,
-        (F.col(key) == F.col(f"r_{key}"))
-        & (F.col("salt") == F.col("r_salt"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (
-            F.col("r_ts")
-            <= F.col("l_ts") + F.expr(f"INTERVAL {range_seconds} SECONDS")
-        ),
-        "inner",
-    ).select(
-        key,
-        "l_seq",
-        "r_seq",
-        F.col("l_ts").cast("long").alias("l_ts"),
-        (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("lag_s"),
-    )
+    return _interval_join(stream, key, left_pred, right_pred,
+                          range_seconds, lateness_seconds, n_salt=n_salt)
 
 
 def streaming_interval_join_outer(
@@ -170,32 +168,5 @@ def streaming_interval_join_outer(
     BIGINT to float64 — casting BOTH engines keeps the typed hash
     stable (check_contract.py's documented nullable-int rule).
     """
-    s = stream.withWatermark("ts", f"{lateness_seconds} seconds")
-    left = s.filter(left_pred).select(
-        key,
-        F.col("ts").alias("l_ts"),
-        F.col("write_seq").alias("l_seq"),
-    )
-    right = s.filter(right_pred).select(
-        F.col(key).alias(f"r_{key}"),
-        F.col("ts").alias("r_ts"),
-        F.col("write_seq").alias("r_seq"),
-    )
-    return left.join(
-        right,
-        (F.col(key) == F.col(f"r_{key}"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (
-            F.col("r_ts")
-            <= F.col("l_ts") + F.expr(f"INTERVAL {range_seconds} SECONDS")
-        ),
-        "left_outer",
-    ).select(
-        key,
-        "l_seq",
-        F.col("r_seq").cast("double").alias("r_seq"),
-        F.col("l_ts").cast("long").alias("l_ts"),
-        (F.col("r_ts").cast("long") - F.col("l_ts").cast("long"))
-        .cast("double")
-        .alias("lag_s"),
-    )
+    return _interval_join(stream, key, left_pred, right_pred,
+                          range_seconds, lateness_seconds, how="left_outer")

@@ -159,6 +159,12 @@ SUBSET = [
     "g_changed",
     "g_counter_wrap",
     "g_render_deep",
+    "s_pq_upsert",
+    "t_span_dedup_l5",
+    "w_lakehouse_mor",
+    "st_lakehouse_cdf",
+    "st_lakehouse_cdf_pos",
+    "st_join_1h_outer",
 ]
 
 

@@ -38,7 +38,8 @@ def main():
         lines += [f"## {title}", "", "| query | oracle | semantics |", "|---|---|---|"]
         for n in names:
             doc = (qs[n].__doc__ or "").strip().splitlines()
-            first = doc[0].strip() if doc else ""
+            # a bare `|` would end the table cell early
+            first = doc[0].strip().replace("|", r"\|") if doc else ""
             oracle = "✓" if n in oracles else "rows-only"
             lines.append(f"| `{n}` | {oracle} | {first} |")
         lines.append("")
