@@ -95,7 +95,8 @@ def routed_fetch(
 
     A range that holds no whole slot (inside one step, or wholly in the
     future) has zero slots: an empty frame with those bounds, built
-    without ``F.sequence`` (which rejects a descending range).
+    on an empty :func:`metric_spine` without ``F.sequence`` (which
+    rejects a descending range).
     Otherwise ``dense(archive_idx, step, from_iv, until_iv)`` builds
     the dense (metric, interval, value) frame.
     """
@@ -109,10 +110,23 @@ def routed_fetch(
     step = config.retentions[archive_idx].seconds_per_point
     from_iv, until_iv = fetch_bounds(from_time, until_time, step)
     if until_iv <= from_iv:
-        frame = spark.createDataFrame([], "metric string, interval long, value double")
+        frame = metric_spine(spark, []).select(
+            "metric",
+            F.lit(None).cast("long").alias("interval"),
+            F.lit(None).cast("double").alias("value"),
+        )
     else:
         frame = dense(archive_idx, step, from_iv, until_iv)
     return FetchResult(from_iv, until_iv, step, frame)
+
+
+def metric_spine(spark: SparkSession, metrics: List[str]) -> DataFrame:
+    """The ``metric string`` dimension of a fetch spine, one row per
+    name in ``metrics``: a literal array exploded in one partition, so
+    the JVM builds it and no Python worker runs."""
+    return spark.range(0, 1, 1, 1).select(
+        F.explode(F.array(*map(F.lit, metrics)).cast("array<string>")).alias("metric")
+    )
 
 
 def slot_spine(metric_dim: DataFrame, from_iv: int, until_iv: int, step: int) -> DataFrame:
@@ -292,9 +306,7 @@ class WhisperEngine:
             )
             if metrics is not None:
                 archive = archive.where(F.col("metric").isin(metrics))
-                metric_dim = self.spark.createDataFrame(
-                    [(m,) for m in metrics], "metric string"
-                )
+                metric_dim = metric_spine(self.spark, metrics)
             else:
                 # All known metrics, NOT just those in the fetched range: a
                 # whisper file with no data in range still yields a dense

@@ -1181,7 +1181,6 @@ def st_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipping per-shard sketches to a merger runs at any volume.
     Stateless sink: no watermark, no state store."""
     from go_whisper_spark.operators.whisper_queries import (
-        W_DISTINCT_HLL_SQL,  # noqa: F401 — the oracle, reused verbatim
         _hll_ledger,
         _hll_registers,
     )
@@ -1929,7 +1928,6 @@ def st_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size groupBy-sum.  The per-shard-sketch-to-merger
     topology every streaming frequency pipeline runs."""
     from go_whisper_spark.operators.whisper_queries import (
-        W_HEAVY_HITTERS_CMS_SQL,  # noqa: F401 — the oracle, verbatim
         _cms_ledger,
         _cms_sketch,
     )

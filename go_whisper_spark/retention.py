@@ -32,10 +32,17 @@ from go_whisper_spark.engine import (
     FetchResult,
     WhisperEngine,
     in_bounds,
+    metric_spine,
     routed_fetch,
     slot_spine,
 )
 from go_whisper_spark.model import SeriesConfig
+
+
+# Every archive table's schema as written by write_levels (the day
+# partition column last); reads declare it instead of inferring it
+# from parquet footers.
+ARCHIVE_SCHEMA = "metric string, interval long, value double, day date"
 
 
 def archive_path(base: str, archive_index: int) -> str:
@@ -309,7 +316,9 @@ class MaterializedRollups:
         self.config = config
 
     def archive(self, archive_index: int) -> DataFrame:
-        return self.spark.read.parquet(archive_path(self.base, archive_index))
+        return self.spark.read.schema(ARCHIVE_SCHEMA).parquet(
+            archive_path(self.base, archive_index)
+        )
 
     def fetch(
         self,
@@ -320,9 +329,13 @@ class MaterializedRollups:
     ) -> FetchResult:
         """Routed, dense fetch from the written store: the range is
         planned by :func:`~go_whisper_spark.engine.routed_fetch`, as in
-        ``WhisperEngine.fetch``.  With ``metrics=None`` the spine covers
-        the metrics that have a point in the fetched range (the store
-        keeps no metric catalog), not every metric ever written."""
+        ``WhisperEngine.fetch``.  With a metric list the spine's metric
+        dimension is :func:`~go_whisper_spark.engine.metric_spine`, a
+        literal-array explode in one partition with no Python worker
+        (the list already sits in the plan as the ``isin`` filter).
+        With ``metrics=None`` the spine covers the metrics that have a
+        point in the fetched range (the store keeps no metric catalog),
+        not every metric ever written."""
 
         def dense(idx: int, step: int, from_iv: int, until_iv: int):
             # day predicate → partition pruning on the scan
@@ -334,9 +347,7 @@ class MaterializedRollups:
             )
             if metrics is not None:
                 arch = arch.where(F.col("metric").isin(metrics))
-                metric_dim = self.spark.createDataFrame(
-                    [(m,) for m in metrics], "metric string"
-                )
+                metric_dim = metric_spine(self.spark, metrics)
             else:
                 metric_dim = arch.select("metric").distinct()
             return slot_spine(metric_dim, from_iv, until_iv, step).join(

@@ -223,13 +223,17 @@ def test_incremental_rollup_empty_batch_writes_nothing(spark, tmp_path, released
 @pytest.fixture(scope="module")
 def fetch_pair(spark, tmp_path_factory):
     """The same points behind the batch engine and a written store,
-    plus the Python reference model."""
+    plus the Python reference model.  The engine reads its points back
+    from parquet, so no frame built on them has a Python RDD in its
+    lineage."""
     from tests.whisper_model import PyWhisper
 
     cfg = SeriesConfig.from_defs("60s:1h,600s:1d", "average", 0.0)
     rows = [("m", NOW - 97 * k, float(k % 5), k) for k in range(1, 800)]
+    points = str(tmp_path_factory.mktemp("fetch_pair_points"))
+    spark.createDataFrame(rows, PTS_SCHEMA).write.parquet(points, mode="overwrite")
     eng = WhisperEngine(spark, cfg)
-    eng.update_many(spark.createDataFrame(rows, PTS_SCHEMA), NOW)
+    eng.update_many(spark.read.parquet(points), NOW)
     base = str(tmp_path_factory.mktemp("fetch_pair"))
     write_archives(eng, base, NOW)
     model = PyWhisper(cfg)
@@ -257,3 +261,42 @@ def test_fetch_degenerate_ranges_match_model(fetch_pair, path, from_age, until_a
     got = res.points("m")
     assert [iv for iv, _ in got] == list(range(from_iv, until_iv, step))
     assert [v for _, v in got] == values
+
+
+@pytest.mark.parametrize("path", ["engine", "store"])
+@pytest.mark.parametrize(
+    "metrics,from_age,until_age",
+    [
+        (["m", "absent"], 3600, 0),  # a metric list: the literal spine
+        (None, 3600, 0),             # every metric: a distinct over data
+        (["m"], 50, 45),             # inside one step: the zero-slot frame
+    ],
+    ids=["metric_list", "all_metrics", "zero_slots"],
+)
+def test_fetch_lineage_runs_no_python(fetch_pair, path, metrics, from_age, until_age):
+    """Every fetch frame is built in the JVM: no Python RDD anywhere in
+    the lineage of its executed plan, so an action starts no Python
+    worker."""
+    fetchers, _ = fetch_pair
+    frame = fetchers[path].fetch(NOW - from_age, NOW - until_age, NOW, metrics).frame
+    lineage = frame._jdf.queryExecution().executedPlan().execute().toDebugString()
+    assert "PythonRDD" not in lineage
+
+
+def test_declared_archive_schema_matches_written(spark, store, tmp_path):
+    """Fetches read archives with the declared ``ARCHIVE_SCHEMA``
+    instead of inferring it, so every level that ``write_archives`` and
+    ``incremental_rollup`` write must carry exactly that schema: drift
+    in a writer fails here instead of being misread."""
+    from pyspark.sql.types import StructType
+
+    from go_whisper_spark.retention import ARCHIVE_SCHEMA, incremental_rollup
+
+    declared = StructType.fromDDL(ARCHIVE_SCHEMA)
+    full, cfg = store
+    inc = str(tmp_path / "inc")
+    batch = [("m", NOW - h * 3600, float(h), h) for h in range(30)]
+    incremental_rollup(spark, inc, cfg, spark.createDataFrame(batch, PTS_SCHEMA), NOW)
+    for base in (full, inc):
+        for i in range(len(cfg.retentions)):
+            assert spark.read.parquet(archive_path(base, i)).schema == declared, (base, i)

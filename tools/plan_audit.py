@@ -1543,8 +1543,8 @@ def _build_st_render(spark):
 
 def _build_st_render_hitcount(spark):
     # hitcount as the watermarked aggregate level: same
-    # watermark+window shape, the ×3600 slot-width scale riding the
-    # post-aggregate projection.
+    # watermark+window shape, the ×3600 slot-width scale computed
+    # inside the window Aggregate (``sum(cents) * 3600``).
     from pyspark.sql import functions as F
 
     from go_whisper_spark.streaming.render import streaming_render_frame
