@@ -1805,15 +1805,13 @@ def _append_bronze(points: DataFrame, base: str) -> int:
     layering and is also what makes ``compact_bronze`` possible: small
     ingest files can be swapped for one consolidated directory in a
     single atomic remove+add commit."""
-    from pyspark.sql import functions as F
-
-    from go_whisper_spark.retention import day_of
+    from go_whisper_spark.retention import as_bronze
 
     table = bronze_table(base)
     log = CommitLog(table)
     d = stage_dir(table)
     (
-        points.withColumn("day", day_of(F.col("ts")))
+        as_bronze(points)
         .repartition("day")
         .write.mode("errorifexists")
         .partitionBy("day")
@@ -1831,9 +1829,17 @@ def read_bronze(spark: SparkSession, base: str) -> DataFrame:
     dirs = sorted(set(st["partitions"].values()))
     if not dirs:
         raise FileNotFoundError(f"bronze table of {base} has no committed data")
-    out = spark.read.parquet(dirs[0])
+    return _union_bronze(spark, dirs)
+
+
+def _union_bronze(spark: SparkSession, dirs: List[str]) -> DataFrame:
+    """The bronze directories ``dirs``, each read singly with the
+    declared ``retention.POINTS_SCHEMA``, unioned by name."""
+    from go_whisper_spark.retention import POINTS_SCHEMA
+
+    out = spark.read.schema(POINTS_SCHEMA).parquet(dirs[0])
     for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d))
+        out = out.unionByName(spark.read.schema(POINTS_SCHEMA).parquet(d))
     return out
 
 
@@ -1855,10 +1861,7 @@ def compact_bronze(spark: SparkSession, base: str) -> Optional[int]:
     st = log.state()
     if len(st["partitions"]) <= 1:
         return None
-    dirs = sorted(set(st["partitions"].values()))
-    df = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        df = df.unionByName(spark.read.parquet(d))
+    df = _union_bronze(spark, sorted(set(st["partitions"].values())))
     out = stage_dir(table)
     df.repartition("day").write.partitionBy("day").parquet(out)
     return log.commit(

@@ -5037,7 +5037,12 @@ def w_retention_reap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from go_whisper_spark.engine import WhisperEngine
     from go_whisper_spark.model import SeriesConfig
-    from go_whisper_spark.retention import archive_path, reap, write_archives
+    from go_whisper_spark.retention import (
+        ARCHIVE_SCHEMA,
+        archive_path,
+        reap,
+        write_archives,
+    )
 
     pts = _points(spark, sf_dir)
     now = int(pts.agg(F.max("ts")).first()[0])
@@ -5046,7 +5051,7 @@ def w_retention_reap(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng.update_many(pts, now)
     write_archives(eng, base, now)
     reap(base, SeriesConfig.from_defs("1h:10d", "average", 0.0), now)
-    return spark.read.parquet(archive_path(base, 0)).select(
+    return spark.read.schema(ARCHIVE_SCHEMA).parquet(archive_path(base, 0)).select(
         "metric", "interval", "value"
     )
 

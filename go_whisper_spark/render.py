@@ -1358,20 +1358,40 @@ def _cents_str(c):
     )
 
 
+# Per-process memo of BUILT render DataFrames, in two entry kinds:
+# ``(corpus, target)`` → the rendered target (``render``), and
+# ``("seed", corpus, tagged)`` → the 1h LWW cents frame every untagged
+# or tagged seed filters (``_seed_frame``; a 3-tuple, so it cannot
+# collide with a target entry).  Building is the cost being saved: a
+# composed target's construction (parse, a few hundred py4j
+# column/window calls, Catalyst's eager analysis of the depth-6
+# chains) measured 0.6-3.5 s on the deep targets, and a seed's base
+# rebuilt the LWW plan and read the table's footer each time.  Both kinds assume a corpus path is
+# not rewritten within a session: the built plan is then a pure
+# function of (session, corpus, target).  DataFrames are immutable
+# plans, not results: every action on a memoized frame still scans
+# the parquet inputs and computes from scratch.
+_RENDER_FRAME_CACHE: dict = {}
+
+
+def _seed_frame(spark: SparkSession, sf_dir: str, tagged: bool) -> DataFrame:
+    """The (metric, interval, cents) 1h LWW frame of ``sf_dir``'s
+    untagged or tagged universe, built once per (session, corpus)."""
+
+    def build() -> DataFrame:
+        lww = _lww(_tagged_points(spark, sf_dir), HOUR) if tagged else _lww1h(spark, sf_dir)
+        return lww.select("metric", "interval", _cents().alias("cents"))
+
+    return session_memo(_RENDER_FRAME_CACHE, spark, ("seed", sf_dir, tagged), build)
+
+
 def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
-    """AST → composed DataFrame of (metric, interval, cents)."""
+    """AST → composed DataFrame of (metric, interval, cents).  A glob
+    seed is the corpus's memoized seed frame plus its ``rlike`` filter."""
 
     def seed(pattern: str) -> DataFrame:
-        return (
-            _lww1h(spark, sf_dir)
-            .where(F.col("metric").rlike(glob_to_regex(pattern)))
-            .select("metric", "interval", _cents().alias("cents"))
-        )
-
-    def tagged_seed() -> DataFrame:
-        return (
-            _lww(_tagged_points(spark, sf_dir), HOUR)
-            .select("metric", "interval", _cents().alias("cents"))
+        return _seed_frame(spark, sf_dir, False).where(
+            F.col("metric").rlike(glob_to_regex(pattern))
         )
 
     w = Window.partitionBy("metric").orderBy("interval")
@@ -1388,7 +1408,7 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
             _need(n, 1, (Str,))
             return seed(n.args[0].value)
         if name == "seriesByTag":
-            return _series_by_tag(n, tagged_seed)
+            return _series_by_tag(n, lambda: _seed_frame(spark, sf_dir, True))
         op = _STATELESS_OPS.get(name)
         if op is not None:
             return op(n, ev)
@@ -3065,21 +3085,6 @@ def build_frame(spark: SparkSession, sf_dir: str, node: Node) -> DataFrame:
         raise RenderParseError(f"unknown render function {name!r}")
 
     return ev(node)
-
-
-# Per-process memo of BUILT render DataFrames, keyed by (session,
-# corpus, target) — r20 optimization (VERDICT r19 item 4, guide §3.3
-# "planning time itself can become the bottleneck"): a composed render
-# target's DataFrame construction — parse + a few hundred py4j
-# column/window calls + Catalyst's eager ANALYSIS of the depth-6
-# chains — measured 0.6-3.5 s PER INVOCATION on the deep targets
-# (g_render_hw build 3.5 s vs 3.2 s execution), and the built plan is
-# a pure function of (session, corpus, target).  DataFrames are
-# immutable plans, NOT results: every action on the memoized frame
-# still scans the parquet inputs and computes from scratch (nothing
-# here is persisted/cached data — the llm_ops._UNROLLED_CACHE
-# precedent one level up).
-_RENDER_FRAME_CACHE: dict = {}
 
 
 def render(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:

@@ -27,6 +27,7 @@ from typing import Callable, Iterator, List, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from go_whisper_spark.engine import (
     FetchResult,
@@ -43,6 +44,9 @@ from go_whisper_spark.model import SeriesConfig
 # partition column last); reads declare it instead of inferring it
 # from parquet footers.
 ARCHIVE_SCHEMA = "metric string, interval long, value double, day date"
+# The bronze points table's schema, as write_points and
+# lakehouse._append_bronze write it (cast on write); its reads declare it.
+POINTS_SCHEMA = "metric string, ts long, value double, write_seq long, day date"
 
 
 def archive_path(base: str, archive_index: int) -> str:
@@ -166,13 +170,24 @@ def write_points(points: DataFrame, base: str) -> str:
     timestamp."""
     path = os.path.join(base, "points")
     (
-        points.withColumn("day", day_of(F.col("ts")))
+        as_bronze(points)
         .repartition("day")
         .write.mode("append")
         .partitionBy("day")
         .parquet(path)
     )
     return path
+
+
+def as_bronze(points: DataFrame) -> DataFrame:
+    """``points`` cast to exactly :data:`POINTS_SCHEMA`, its ``day``
+    partition column derived from the raw timestamp."""
+    return points.withColumn("day", day_of(F.col("ts"))).select(
+        *[
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in StructType.fromDDL(POINTS_SCHEMA).fields
+        ]
+    )
 
 
 class Batch(NamedTuple):
@@ -262,7 +277,9 @@ def incremental_rollup(
         points_path = write_points(batch.points, base)
         eng = WhisperEngine(spark, config)
         eng.set_points(
-            spark.read.parquet(points_path).where(F.col("day").isin(batch.days))
+            spark.read.schema(POINTS_SCHEMA)
+            .parquet(points_path)
+            .where(F.col("day").isin(batch.days))
         )
         write_levels(eng, eng.level0(now), base, now=now, days=batch.days)
     day_strs = [str(d) for d in batch.days]

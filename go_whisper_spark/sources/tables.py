@@ -12,16 +12,24 @@ re-derives it.
 
 Scale note: these are plain ``spark.read.parquet`` scans — predicate
 pushdown and column pruning apply unchanged at 100 TB; nothing here
-collects or infers schemas row-wise.
+collects rows.  Schemas are inferred once per file layout: the first
+read of a table infers its schema from the parquet footers (one Spark
+job), and every later read of the same layout (the path, size and
+mtime of every file) under the same ``nanosAsLong`` setting declares
+that schema instead, so it starts no job.  A rewritten or added file
+is a new layout and is inferred again.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Dict
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
+
+from go_whisper_spark.session import MEMO_MAX_ENTRIES
 
 TABLE_NAMES = (
     "region",
@@ -39,23 +47,76 @@ TABLE_NAMES = (
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
+# path -> (layout key, the schema Spark inferred for that layout).  The
+# key holds every file's (path, size, mtime) and the nanosAsLong conf,
+# so an entry is used only for the layout it was inferred from; this
+# is input metadata, never query results.
+_SCHEMA_CACHE: Dict[str, Tuple[tuple, StructType]] = {}
+
+
+def _local_files(path: str) -> Optional[List[str]]:
+    """Every file of the local table ``path`` (a file or a directory
+    tree), sorted; None when ``path`` is neither."""
+    if os.path.isfile(path):
+        return [path]
+    if os.path.isdir(path):
+        return sorted(
+            os.path.join(root, f)
+            for root, _dirs, fnames in os.walk(path)
+            for f in fnames
+        )
+    return None
+
+
+def _layout(path: str) -> Optional[tuple]:
+    """(file, size, mtime_ns) of every file of the local table
+    ``path``; None when it is not local."""
+    files = _local_files(path)
+    if files is None:
+        return None
+    try:
+        return tuple(
+            (f, st.st_size, st.st_mtime_ns) for f in files for st in (os.stat(f),)
+        )
+    except OSError:  # a file vanished mid-listing: infer this time
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> Tuple[DataFrame, StructType]:
+    """``path`` read as parquet, and its schema, inferred only on the
+    first read of its current layout (see the module docstring)."""
+    layout = _layout(path)
+    if layout is None:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    key = (layout, spark.conf.get(NANOS_CONF, "false"))
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if len(_SCHEMA_CACHE) >= MEMO_MAX_ENTRIES:
+        _SCHEMA_CACHE.clear()
+    _SCHEMA_CACHE[path] = (key, schema)
+    return df, schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing the events timestamp."""
-    if name == "events":
-        spark.conf.set(NANOS_CONF, "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = (
-                df.withColumnRenamed("ts", "ts_ns")
-                .withColumn("ts_sec", F.expr("ts_ns div 1000000000").cast("long"))
-                .withColumn("ts", F.timestamp_micros(F.expr("ts_ns div 1000")))
-            )
-        else:  # pre-normalized copies
-            df = df.withColumn(
-                "ts_sec", F.unix_timestamp("ts").cast("long")
-            ).withColumn("ts_ns", (F.col("ts_sec") * F.lit(1_000_000_000)).cast("long"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name != "events":
+        return _read_parquet(spark, f"{sf_dir}/{name}.parquet")[0]
+    spark.conf.set(NANOS_CONF, "true")
+    df, schema = _read_parquet(spark, f"{sf_dir}/events.parquet")
+    if "ts" in schema.names and isinstance(schema["ts"].dataType, LongType):
+        return (
+            df.withColumnRenamed("ts", "ts_ns")
+            .withColumn("ts_sec", F.expr("ts_ns div 1000000000").cast("long"))
+            .withColumn("ts", F.timestamp_micros(F.expr("ts_ns div 1000")))
+        )
+    # pre-normalized copies
+    return df.withColumn(
+        "ts_sec", F.unix_timestamp("ts").cast("long")
+    ).withColumn("ts_ns", (F.col("ts_sec") * F.lit(1_000_000_000)).cast("long"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
@@ -89,19 +150,12 @@ def scan_splits(sf_dir: str, name: str) -> int:
     if hit is not None:
         return hit
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, _dirs, fnames in os.walk(path)
-            for f in fnames
-            if f.endswith(".parquet")
-        ]
-    elif os.path.isfile(path):
-        files = [path]
-    else:
+    files = _local_files(path)
+    if files is None:
         # non-local or unknown layout: assume the scan is already wide
         _SPLITS_CACHE[key] = 1 << 30
         return _SPLITS_CACHE[key]
+    files = [f for f in files if f.endswith(".parquet")]
     try:
         import pyarrow.parquet as pq
 

@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 from go_whisper_spark.engine import WhisperEngine
 from go_whisper_spark.model import SeriesConfig
-from go_whisper_spark.retention import archive_path, with_day, write_levels
+from go_whisper_spark.retention import (
+    ARCHIVE_SCHEMA,
+    archive_path,
+    with_day,
+    write_levels,
+)
 from go_whisper_spark.streaming.rollup import streaming_rollup
 
 
@@ -42,7 +47,8 @@ def _consolidate_touched(
     if len(cfg.retentions) < 2:
         return
     level0 = (
-        spark.read.parquet(archive_path(base, 0))
+        spark.read.schema(ARCHIVE_SCHEMA)
+        .parquet(archive_path(base, 0))
         .where(F.col("day").isin(touched_days))
         .select("metric", "interval", "value")
     )

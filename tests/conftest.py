@@ -44,3 +44,29 @@ def released(spark):
         assert now_rdds <= rdds, f"left persisted: {sorted(now_rdds - rdds)}"
 
     return check
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``with jobs_started() as jobs: ...`` leaves in ``jobs`` the ids
+    of the Spark jobs the block started, read from the status store
+    under a job group of the block's own (after the listener bus has
+    delivered every event)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count():
+        group = f"jobs-started-{uuid.uuid4().hex}"
+        jobs = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return count

@@ -611,3 +611,29 @@ def test_changed_follows_graphite_at_gaps(spark, monkeypatch):
     got_sql = con.execute(
         f"SELECT value FROM ({sql[len(ctes):]}) ORDER BY interval").fetchall()
     assert [round(v * 100) for (v,) in got_sql] == want
+
+
+def test_adhoc_build_after_a_render_starts_no_job(spark, sf_dir, jobs_started):
+    """After one render in a session, building a never-seen target
+    starts no Spark job: its seeds filter the corpus's memoized seed
+    frame and the table schemas come from the schema memo.  Its rows
+    still equal the oracle's."""
+    import duckdb
+    from collections import Counter
+
+    from go_whisper_spark.render import render_oracle_sql
+
+    render(spark, sf_dir, "sumSeries('c*')")
+    render(spark, sf_dir, "seriesByTag('dc=dc0')")
+    target = "asPercent(offset(scale('v*', 37), -11), sumSeries(seriesByTag('dc=dc2')))"
+    with jobs_started() as jobs:
+        df = render(spark, sf_dir, target)
+    assert jobs == []
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/events.parquet')"
+    )
+    got = Counter((r.metric, r.interval, r.value) for r in df.collect())
+    want = Counter(con.execute(render_oracle_sql(target)).fetchall())
+    assert got and got == want

@@ -287,10 +287,14 @@ def test_declared_archive_schema_matches_written(spark, store, tmp_path):
     """Fetches read archives with the declared ``ARCHIVE_SCHEMA``
     instead of inferring it, so every level that ``write_archives`` and
     ``incremental_rollup`` write must carry exactly that schema: drift
-    in a writer fails here instead of being misread."""
+    in a writer fails here instead of being misread.  Likewise the
+    bronze points that ``incremental_rollup`` and
+    ``lakehouse.incremental_rollup_tx`` append must carry exactly
+    ``POINTS_SCHEMA``, which their bronze re-reads declare."""
     from pyspark.sql.types import StructType
 
-    from go_whisper_spark.retention import ARCHIVE_SCHEMA, incremental_rollup
+    from go_whisper_spark.lakehouse import CommitLog, bronze_table, incremental_rollup_tx
+    from go_whisper_spark.retention import ARCHIVE_SCHEMA, POINTS_SCHEMA, incremental_rollup
 
     declared = StructType.fromDDL(ARCHIVE_SCHEMA)
     full, cfg = store
@@ -300,3 +304,15 @@ def test_declared_archive_schema_matches_written(spark, store, tmp_path):
     for base in (full, inc):
         for i in range(len(cfg.retentions)):
             assert spark.read.parquet(archive_path(base, i)).schema == declared, (base, i)
+
+    points = StructType.fromDDL(POINTS_SCHEMA)
+    assert spark.read.parquet(os.path.join(inc, "points")).schema == points
+    tx = str(tmp_path / "tx")
+    # an int write_seq: the append casts to the declared schema
+    narrow = spark.createDataFrame(
+        batch, "metric string, ts long, value double, write_seq int")
+    incremental_rollup_tx(spark, tx, cfg, narrow, NOW)
+    dirs = set(CommitLog(bronze_table(tx)).state()["partitions"].values())
+    assert dirs
+    for d in dirs:
+        assert spark.read.parquet(d).schema == points, d
