@@ -58,6 +58,8 @@ from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from go_whisper_spark.session import materialize
+
 COMMIT_DIR = "_commits"
 STAGE_DIR = "_staged"
 
@@ -1168,7 +1170,7 @@ def read_changes_mor(
             .withColumn("_change_type", F.lit("insert"))
             .where(F.lit(False))
         )
-    ck = ck.distinct().localCheckpoint()
+    ck = materialize(ck.distinct(), "read_changes_mor:changed keys")
     # The changed-key set is FORCE-broadcast into both endpoint scans
     # — correct for the CDF contract (O(changes) by definition), but
     # a pathological range whose change set approaches table size

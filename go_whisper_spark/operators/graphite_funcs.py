@@ -40,6 +40,7 @@ from go_whisper_spark.render import (
     render,
     render_oracle_sql,
 )
+from go_whisper_spark.session import materialize
 
 
 def _rendered(target: str, col: str = "value", dtype: str | None = None):
@@ -2233,9 +2234,9 @@ def g_avg_outside_pctile(spark: SparkSession, sf_dir: str) -> DataFrame:
     both TakeOrdereds read the materialized aggregate instead of
     re-running it."""
     lww = _lww1h(spark, sf_dir).withColumn("cents", _cents())
-    per = lww.groupBy("metric").agg(
+    per = materialize(lww.groupBy("metric").agg(
         _avg6(F.sum("cents"), F.count("*")).alias("avg_value")
-    ).localCheckpoint()
+    ), "g_avg_outside_pctile:per metric")
     n = per.count()
     cut = -(-n // 4)  # ceil(n * 0.25) without float
     low = per.orderBy(F.asc("avg_value"), F.asc("metric")).limit(cut)
@@ -2294,11 +2295,11 @@ def g_avg_outside_pctile_vt(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the rank form, bit for bit.
     """
     lww = _lww1h(spark, sf_dir).withColumn("cents", _cents())
-    per = (
+    per = materialize(
         lww.groupBy("metric")
         .agg(_avg6(F.sum("cents"), F.count("*")).alias("avg_value"))
-        .withColumn("u6", F.round(F.col("avg_value") * 1_000_000).cast("long"))
-        .localCheckpoint()
+        .withColumn("u6", F.round(F.col("avg_value") * 1_000_000).cast("long")),
+        "g_avg_outside_pctile_vt:per metric",
     )
     st = per.agg(
         F.count("*").alias("n"), F.min("u6").alias("lo"), F.max("u6").alias("hi")

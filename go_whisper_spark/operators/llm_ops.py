@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from go_whisper_spark.session import session_memo
+from go_whisper_spark.session import materialize, session_memo
 from go_whisper_spark.sources.tables import load_table, spread_scan
 
 # ---------------------------------------------------------------- hashing
@@ -217,25 +217,26 @@ def doc_features_frame(d: DataFrame) -> DataFrame:
     return d.mapInPandas(feats, schema)
 
 
-def _doc_features(spark: SparkSession, sf_dir: str, materialize: bool = False) -> DataFrame:
+def _doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One narrow pass over documents → per-doc dedup features:
     distinct 3-gram shingles, shingle-set size, MinHash signature
     (k=16), LSH band signatures, and the 60-bit SimHash.  No shuffle.
-
-    ``materialize=True`` computes the pass once and truncates lineage
-    (localCheckpoint): queries that consume the features in several
-    subtrees (banding + verification + sizes) would otherwise re-run
-    the Python pass per subtree.  This is the signature-index table a
-    production pipeline persists; the layout-gated spread widens the
-    few-split local scan and is ABSENT from the plan when the source
-    already arrives in >= cores splits (r20: the r19 bare repartition
-    kept its Exchange at any scale).
     """
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    if materialize:
-        d = spread_scan(d, spark, sf_dir, "documents")
-    out = doc_features_frame(d)
-    return out.localCheckpoint() if materialize else out
+    return doc_features_frame(_docs(spark, sf_dir).select("doc_id", "text"))
+
+
+def _doc_features_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_doc_features`` computed once, lineage truncated: queries that
+    consume the features in several subtrees (banding + verification +
+    sizes) would otherwise re-run the Python pass per subtree.  This
+    is the signature-index table a production pipeline persists; the
+    layout-gated spread widens the few-split local scan and is ABSENT
+    from the plan when the source already arrives in >= cores splits
+    (a bare repartition kept its Exchange at any scale).
+    """
+    d = spread_scan(_docs(spark, sf_dir).select("doc_id", "text"),
+                    spark, sf_dir, "documents")
+    return materialize(doc_features_frame(d), "doc_features:index")
 
 
 # ---------------------------------------------------------- d_exact_dedup
@@ -283,7 +284,7 @@ def d_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle (vs the prior DISTINCT + groupBy-sizes shape — two
     # exchanges removed); n_sh rides the exploded rows, so the
     # per-pair sizes come out of the same groupBy that counts overlap.
-    feats = _doc_features(spark, sf_dir, materialize=True).where(F.col("n_sh") > 0)
+    feats = _doc_features_index(spark, sf_dir).where(F.col("n_sh") > 0)
     sh = feats.select("doc_id", "n_sh", F.explode("shingles").alias("sh"))
     a, b = sh.alias("a"), sh.alias("b")
     shared = (
@@ -372,7 +373,7 @@ def d_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_prefix df² over LOW-df tokens only — the overhead is O(n·log)
     per doc, the saving is quadratic in the hot keys."""
     tau_num, tau_den = 1, 2  # τ = 0.5 as an exact rational
-    feats = _doc_features(spark, sf_dir, materialize=True).where(
+    feats = _doc_features_index(spark, sf_dir).where(
         F.col("n_sh") > 0
     )
     sh = feats.select("doc_id", "n_sh", F.explode("shingles").alias("sh"))
@@ -513,7 +514,7 @@ def d_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the narrow features pass — zero shuffles before the candidate
     # join.  The prior expression form paid a DISTINCT exchange plus a
     # groupBy(doc_id) signature aggregate before banding.
-    feats = _doc_features(spark, sf_dir, materialize=True).where(F.col("n_sh") > 0)
+    feats = _doc_features_index(spark, sf_dir).where(F.col("n_sh") > 0)
     # n_sh rides the banded rows (one extra int through the band
     # shuffle), so candidate pairs come out of the bucket join already
     # carrying both set sizes — no sizes joins afterwards.  distinct
@@ -632,11 +633,11 @@ def d_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counts land in a driver-built 4-row ledger (the
     w_lakehouse_partevolve shape).  [Leskovec/Rajaraman/Ullman MMDS
     ch.3 banding theory — public]"""
-    feats = _doc_features(spark, sf_dir, materialize=True).where(
+    feats = _doc_features_index(spark, sf_dir).where(
         F.col("n_sh") > 0)
     sh = feats.select("doc_id", "n_sh", F.explode("shingles").alias("sh"))
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    truth = (
+    truth = materialize(
         sa.join(sb, (F.col("sa.sh") == F.col("sb.sh"))
                 & (F.col("sa.doc_id") < F.col("sb.doc_id")))
         .groupBy(
@@ -651,11 +652,11 @@ def d_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("shared").cast("double")
                 / (F.col("na") + F.col("nb") - F.col("shared")), 6)
             >= _LSH_TUNE_THRESH)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .select("doc_a", "doc_b"),
+        "d_lsh_tuning:truth pairs",
     )
     n_true = truth.count()
-    sig = feats.select("doc_id", "minhash").localCheckpoint()
+    sig = materialize(feats.select("doc_id", "minhash"), "d_lsh_tuning:signatures")
     rows = []
     for b, r in _LSH_TUNE_CONFIGS:
         bands = F.array(*[
@@ -672,7 +673,7 @@ def d_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.explode(bands).alias("bc")
         ).select("doc_id", "bc.band", "bc.sig")
         aa, bb2 = banded.alias("a"), banded.alias("b")
-        cand = (
+        cand = materialize(
             aa.join(
                 bb2,
                 (F.col("a.band") == F.col("b.band"))
@@ -681,8 +682,8 @@ def d_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            f"d_lsh_tuning:{b}x{r} candidates",
         )
         n_cand = cand.count()
         n_found = truth.join(cand, ["doc_a", "doc_b"], "left_semi").count()
@@ -757,9 +758,7 @@ FROM ledger
 
 
 # -------------------------------------------------------------- d_simhash
-def d_simhash(
-    spark: SparkSession, sf_dir: str, materialize: bool = False
-) -> DataFrame:
+def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash (60-bit) per document over token hashes: per bit j, sum
     ±1 across tokens (weighted by occurrence), bit set iff sum > 0.
 
@@ -771,17 +770,18 @@ def d_simhash(
     plus a 60-agg codegen compile — and explode-per-bit / array-fold
     variants, which measured slower still.)
 
-    ``materialize=True`` (for consumers that reference the signatures
-    in MORE THAN ONE subtree, i.e. the pair self-joins): spread the
-    single-file scan across workers and truncate lineage so the Python
-    pass runs once instead of once per subtree — measured 2x on
-    ``d_simhash_banded`` at sf0.1.
+    Consumers that reference the signatures in MORE THAN ONE subtree
+    (the pair self-joins) read them from ``_doc_features_index``
+    instead: the single-file scan spread across workers and lineage
+    truncated, so the Python pass runs once instead of once per
+    subtree — measured 2x on ``d_simhash_banded`` at sf0.1.
     """
-    return (
-        _doc_features(spark, sf_dir, materialize=materialize)
-        .where(F.col("simhash").isNotNull())
-        .select("doc_id", "simhash")
-    )
+    return _simhash_sig(_doc_features(spark, sf_dir))
+
+
+def _simhash_sig(feats: DataFrame) -> DataFrame:
+    """(doc_id, simhash) of the documents that have a signature."""
+    return feats.where(F.col("simhash").isNotNull()).select("doc_id", "simhash")
 
 
 D_SIMHASH_SQL = f"""
@@ -811,7 +811,7 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash chunks (same banding idea as LSH); the threshold query
     pins the hamming semantics.
     """
-    sig = d_simhash(spark, sf_dir, materialize=True)
+    sig = _simhash_sig(_doc_features_index(spark, sf_dir))
     # The `<` pair join is a broadcast nested-loop: parallelism comes
     # from the streamed side's partitioning, so spread it when the
     # source scan is few-split (a single-file parquet scan otherwise
@@ -853,12 +853,12 @@ def d_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured at sf0.1 (the two fixes compound): 4.5s with the
     join+distinct form and a per-subtree single-task signature pass →
     ~1.1s with first-agreeing-chunk dedup + a materialized 32-way
-    signature pass (``d_simhash(..., materialize=True)``) — now
+    signature pass (``_doc_features_index``) — now
     FASTER than the all-pairs nested loop (~1.5s) even on this
     duplicate-dense corpus (~0.7% of ALL pairs within hamming 8),
     while keeping the O(Σ bucket²) scale shape.
     """
-    sig = d_simhash(spark, sf_dir, materialize=True)
+    sig = _simhash_sig(_doc_features_index(spark, sf_dir))
     chunk_specs = [(i, 7 * i, 127) for i in range(8)] + [(8, 56, 15)]
     bands = F.array(
         *[
@@ -1205,7 +1205,7 @@ def s_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a |Q|-partitioned top-3 window — negligible at any corpus
     size.
     """
-    feats = _doc_features(spark, sf_dir, materialize=True).where(
+    feats = _doc_features_index(spark, sf_dir).where(
         F.col("n_sh") > 0
     )
     sh = feats.select("doc_id", "n_sh", F.explode("shingles").alias("sh"))
@@ -2231,11 +2231,10 @@ def s_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     same asymptotics as the LSH path with better balance on clustered
     data.
     """
-    cells, _ = _ivf_cells(spark, sf_dir)
     # cells feeds BOTH join sides (queries and corpus); materialize the
     # assignment once so the Arrow assignment kernel (see _ivf_assign)
     # runs a single pass instead of once per join side.
-    cells = cells.localCheckpoint()
+    cells = materialize(_ivf_cells(spark, sf_dir)[0], "s_cosine_ivf:cells")
 
     q = cells.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
@@ -2648,23 +2647,25 @@ def d_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     rev = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    edges = fwd.union(rev).distinct().localCheckpoint()
-    labels = (
+    edges = materialize(fwd.union(rev).distinct(), "d_neardup_clusters:edges")
+    labels = materialize(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
+        .withColumn("label", F.col("doc_id")),
+        "d_neardup_clusters:labels",
     )
+    rounds = 0
     while True:
+        rounds += 1
         nbr = edges.join(
             labels, edges["src"] == labels["doc_id"]
         ).select(F.col("dst").alias("doc_id"), "label")
-        new_labels = (
+        new_labels = materialize(
             labels.select("doc_id", "label")
             .union(nbr)
             .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
+            .agg(F.min("label").alias("label")),
+            f"d_neardup_clusters:round {rounds}",
         )
         changed = (
             new_labels.alias("n")
@@ -2730,7 +2731,7 @@ def _star_contract(edges: DataFrame) -> tuple[DataFrame, int]:
       center u, all smaller neighbors (and u itself) re-point at
       m = min(Γ⁻(u) ∪ {u}).
 
-    The edge set is distinct-ed and ``localCheckpoint``-ed per round
+    The edge set is distinct-ed and materialized per round
     (the Pregel-loop lineage discipline); convergence is detected by
     an order-insensitive (count, xxhash-sum) fingerprint — one driver
     scalar per round, never edge data.  At the fixed point the edge
@@ -2779,13 +2780,14 @@ def _star_contract(edges: DataFrame) -> tuple[DataFrame, int]:
         ).first()
         return (row["n"], row["h"])
 
-    cur = edges.select(
+    cur = materialize(edges.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct().localCheckpoint()
+    ).distinct(), "star_contract:edges")
     prev_fp, rounds = None, 0
     while True:
         rounds += 1
-        cur = small_star(large_star(cur)).localCheckpoint()
+        cur = materialize(small_star(large_star(cur)),
+                          f"star_contract:round {rounds}")
         fp = fingerprint(cur)
         if fp == prev_fp:
             break
@@ -2907,7 +2909,7 @@ def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles, never |docs|²); pairs kept where either direction ≥ 0.8.
     Ratios are round(6) of an exact-integer quotient, like Jaccard.
     """
-    feats = _doc_features(spark, sf_dir, materialize=True).where(F.col("n_sh") > 0)
+    feats = _doc_features_index(spark, sf_dir).where(F.col("n_sh") > 0)
     sh = feats.select("doc_id", "n_sh", F.explode("shingles").alias("sh"))
     a, b = sh.alias("a"), sh.alias("b")
     shared = (
@@ -3156,11 +3158,11 @@ def d_cdc_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate), and the before-plan shows the whole O(L)-md5
     # boundary scan + distinct re-executed for each — the
     # t_curation_e2e drop-set lesson one level down.
-    chunks = (
+    chunks = materialize(
         media.withColumn("ends", F.expr(_CDC_ENDS))
         .select("doc_id", F.explode(F.expr(_CDC_HASHES)).alias("h"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "d_cdc_neardup:chunk postings",
     )
     sizes = chunks.groupBy("doc_id").agg(F.count("*").alias("n_ch"))
     shared = capped_posting_pairs(chunks, "h", "doc_id", 50)
@@ -3249,57 +3251,65 @@ def t_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes, the per-doc integer-div mean, ONE per-lang ntile over the
     per-doc ledger, and a 5-key final aggregate; nothing new
     shuffles."""
-    # r20 (guide §2.6 "overlap independent jobs", VERDICT r19 item 5):
-    # the chain is job-count-bound and its first two heavy
-    # materializations are INDEPENDENT — the CDC chunk substrate
-    # (inside d_cdc_neardup) reads payload bytes, the tokenize pass
-    # reads text — so they run from two driver threads and back-fill
-    # each other's stragglers.  The tokenize moved into its own
-    # checkpoint (`dtok`) to make that possible; `d` then joins the
-    # cached dtok with the drop set (cheap — no tokenize in its
-    # lineage anymore).
+    # project early: the gate + ledger read only
+    # (doc_id, lang, tokens, nb) — `text` was the bulk of the old
+    # checkpoint's cached bytes and nothing downstream reads it
+    d = _curation_per_doc(spark, sf_dir, "t_curation_e2e", lambda docs: docs.select(
+        "doc_id", "lang", _tokens_col().alias("tokens"),
+        F.length("text").alias("nb")))
+    return _curation_ledger(_curation_gate(d))
+
+
+def _curation_per_doc(spark: SparkSession, sf_dir: str, query: str,
+                      project) -> DataFrame:
+    """The dedup-flagged per-doc frame of `t_curation_e2e` and
+    `t_curation_pii`: ``project`` (the per-doc pass over the spread
+    documents scan, carrying at least doc_id, lang, tokens, nb) left
+    joined with `d_cdc_neardup`'s drop set as ``dup``, materialized.
+
+    The chain is job-count-bound and its first two heavy
+    materializations are INDEPENDENT — the CDC chunk substrate (inside
+    d_cdc_neardup) reads payload bytes, the per-doc pass reads text —
+    so they run from two driver threads and back-fill each other's
+    stragglers.  Each thread target is its own
+    ``inheritable_thread_target`` (one copy of the caller's local
+    properties per thread, so one thread's label never leaks into the
+    other's jobs): under pinned-thread mode both threads' jobs keep the
+    caller's job group.
+
+    The drop set has no checkpoint of its own: its one consumer is the
+    join below, so its lineage runs once inside that materialization
+    (one sequential job fewer).  The joined frame IS materialized: the
+    gate spine consumes it from FOUR separately-planned
+    branches (train bigrams, train unigrams, held bigrams, the final
+    flag join); without it each branch re-runs the drop-set join (the
+    capped posting join is in its lineage)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def _cdc_side():
-        spark.sparkContext.setJobDescription("t_curation_e2e: cdc drop set")
-        return d_cdc_neardup(spark, sf_dir)
+    from pyspark import inheritable_thread_target
 
-    def _tok_side():
-        spark.sparkContext.setJobDescription("t_curation_e2e: tokenize")
-        return (
-            spread_scan(_docs(spark, sf_dir), spark, sf_dir, "documents")
-            # project early (guide §2.3): the gate + ledger read only
-            # (doc_id, lang, tokens, nb) — `text` was the bulk of the
-            # old checkpoint's cached bytes and nothing downstream
-            # reads it
-            .select("doc_id", "lang", _tokens_col().alias("tokens"),
-                    F.length("text").alias("nb"))
-            .localCheckpoint()
-        )
+    def per_doc_pass():
+        docs = spread_scan(_docs(spark, sf_dir), spark, sf_dir, "documents")
+        return materialize(project(docs), f"{query}:tokenize")
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_pairs = pool.submit(_cdc_side)
-        dtok = pool.submit(_tok_side).result()
+        def overlap(fn):
+            return pool.submit(inheritable_thread_target(spark)(fn))
+
+        fut_pairs = overlap(lambda: d_cdc_neardup(spark, sf_dir))
+        per_doc = overlap(per_doc_pass).result()
         pairs = fut_pairs.result()
-    spark.sparkContext.setJobDescription(None)
-    # The drop set's OWN checkpoint (r18: three consumers re-ran the
-    # CDC join) became redundant when the r19 session checkpointed
-    # the joined per-doc frame `d` below — `dropped` now has exactly
-    # ONE consumer (that join), so its lineage runs once inside d's
-    # materialization either way; the extra checkpoint was one more
-    # sequential job + driver gap (guide §1.2: delete whole jobs).
     dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    # materialize the dedup-flagged per-doc frame ONCE (r19): the
-    # gate spine consumes it from FOUR separately-planned branches
-    # (train bigrams, train unigrams, held bigrams, the final flag
-    # join); without this checkpoint each branch re-runs the
-    # drop-set join (the capped posting join is in its lineage).
-    d = (
-        dtok
-        .join(dropped.withColumn("dup", F.lit(1)), "doc_id", "left")
-        .localCheckpoint()
+    return materialize(
+        per_doc.join(dropped.withColumn("dup", F.lit(1)), "doc_id", "left"),
+        f"{query}:dedup flags",
     )
-    flagged = _curation_gate(d)
+
+
+def _curation_ledger(flagged: DataFrame, *extra) -> DataFrame:
+    """The per-lang curation ledger of a `_curation_gate` output: docs,
+    after-dedup docs, scored docs, tail drops, kept docs and kept
+    bytes, then the ``extra`` aggregate columns."""
     kept = (F.col("dup").isNull() & F.col("tail").isNull()).cast("long")
     return (
         flagged.groupBy("lang")
@@ -3312,6 +3322,7 @@ def t_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(kept == 1, F.col("nb")).otherwise(0)).alias(
                 "bytes_kept"
             ),
+            *extra,
         )
     )
 
@@ -3352,11 +3363,11 @@ def _bigram_scored(d: DataFrame) -> DataFrame:
     # jobs).  c1 keeps its checkpoint: THREE consumers (two
     # broadcasts + totals) would each re-run the train tokenize pass.
     c2 = t_bi.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
-    c1 = (
+    c1 = materialize(
         train.select(F.explode("tokens").alias("w"))
         .groupBy("w")
-        .agg(F.count("*").alias("c1"))
-        .localCheckpoint()
+        .agg(F.count("*").alias("c1")),
+        "bigram_scored:unigram counts",
     )
     totals = c1.agg(F.sum("c1").alias("N"))
     sb = (
@@ -3461,73 +3472,27 @@ def t_curation_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the e2e plan + one narrow regex map before
     tokenize; nothing new shuffles."""
-    # r20: scrub+tokenize and the CDC drop-set build are independent
-    # — overlap them from driver threads (guide §2.6, the
-    # t_curation_e2e structure; the regex scrub + audit counts make
-    # the per-doc map here even heavier, so the overlap pays more)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _cdc_side():
-        spark.sparkContext.setJobDescription("t_curation_pii: cdc drop set")
-        return d_cdc_neardup(spark, sf_dir)
-
-    def _scrub_side():
-        spark.sparkContext.setJobDescription("t_curation_pii: scrub+tokenize")
-        return (
-            spread_scan(_docs(spark, sf_dir), spark, sf_dir, "documents")
-            .select("doc_id", "lang", _pii_aug_col().alias("aug"))
-            .withColumn("scr", _pii_red_col(F.col("aug")))
-            .select(
-                "doc_id", "lang",
-                F.regexp_extract_all(F.lower("scr"), F.lit(TOKEN_RE), F.lit(0))
-                .alias("tokens"),
-                F.length("scr").alias("nb"),
-                F.regexp_count("aug", F.lit(_PII_EMAIL)).alias("em"),
-                F.regexp_count("aug", F.lit(_PII_IPV4)).alias("ip"),
-                F.regexp_count("aug", F.lit(_PII_PHONE)).alias("ph"),
-                (F.length("aug") - F.length("scr")).alias("delta"),
-            )
-            .localCheckpoint()
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_pairs = pool.submit(_cdc_side)
-        dscr = pool.submit(_scrub_side).result()
-        pairs = fut_pairs.result()
-    spark.sparkContext.setJobDescription(None)
-    # single consumer (the join into the checkpointed d) — no own
-    # checkpoint needed; see the t_curation_e2e note
-    dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    d = (
-        dscr
-        .join(dropped.withColumn("dup", F.lit(1)), "doc_id", "left")
-        # materialized once for the gate's four branches — the
-        # t_curation_e2e rationale
-        .localCheckpoint()
-    )
-    flagged = _curation_gate(d)
-    kept = (F.col("dup").isNull() & F.col("tail").isNull()).cast("long")
+    # the regex scrub + audit counts make the per-doc pass here even
+    # heavier than t_curation_e2e's, so the overlap pays more
+    d = _curation_per_doc(spark, sf_dir, "t_curation_pii", lambda docs: (
+        docs.select("doc_id", "lang", _pii_aug_col().alias("aug"))
+        .withColumn("scr", _pii_red_col(F.col("aug")))
+        .select(
+            "doc_id", "lang",
+            F.regexp_extract_all(F.lower("scr"), F.lit(TOKEN_RE), F.lit(0))
+            .alias("tokens"),
+            F.length("scr").alias("nb"),
+            F.regexp_count("aug", F.lit(_PII_EMAIL)).alias("em"),
+            F.regexp_count("aug", F.lit(_PII_IPV4)).alias("ip"),
+            F.regexp_count("aug", F.lit(_PII_PHONE)).alias("ph"),
+            (F.length("aug") - F.length("scr")).alias("delta"),
+        )))
     live = F.col("dup").isNull()
-    return (
-        flagged.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(live.cast("long")).alias("n_after_dedup"),
-            F.sum(F.coalesce(F.col("scored"), F.lit(0))).alias("n_scored"),
-            F.sum(F.coalesce(F.col("tail"), F.lit(0))).alias("n_tail_dropped"),
-            F.sum(kept).alias("n_kept"),
-            F.sum(F.when(kept == 1, F.col("nb")).otherwise(0)).alias(
-                "bytes_kept"
-            ),
-            F.sum(F.when(live, F.col("em")).otherwise(0))
-            .cast("long").alias("pii_emails"),
-            F.sum(F.when(live, F.col("ip")).otherwise(0))
-            .cast("long").alias("pii_ipv4s"),
-            F.sum(F.when(live, F.col("ph")).otherwise(0))
-            .cast("long").alias("pii_phones"),
-            F.sum(F.when(live, F.col("delta")).otherwise(0))
-            .cast("long").alias("pii_chars_removed"),
-        )
+    return _curation_ledger(
+        _curation_gate(d),
+        *[F.sum(F.when(live, F.col(c)).otherwise(0)).cast("long").alias(name)
+          for c, name in (("em", "pii_emails"), ("ip", "pii_ipv4s"),
+                          ("ph", "pii_phones"), ("delta", "pii_chars_removed"))],
     )
 
 
@@ -4195,12 +4160,12 @@ def _kmeans_train(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     prices n_moved; ONE control-plane scalar per round; per-round
     localCheckpoint of the O(n) assignment keeps lineage flat (the
     centroid recursion enters each round linearly, so stats grow
-    arithmetically — no _flat_localCheckpoint needed, unlike the
+    arithmetically — no ``reset_stats`` needed, unlike the
     truss peel's multiplicative recursion).  The seeding window is a
     global prefix sum — k−1 sorted passes, the exact-draw cost; at
     production scale the draw is replaced per-partition (sample,
     then draw among partials), the documented km++ scale-out."""
-    q = _km_quant(spark, sf_dir).localCheckpoint()
+    q = materialize(_km_quant(spark, sf_dir), "kmeans_train:quantized vectors")
 
     def dist_to(cv_col):
         return F.aggregate(
@@ -4224,22 +4189,22 @@ def _kmeans_train(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     for r in range(1, k):
         tot = cur.agg(F.sum("md").alias("tot"))
         thr = tot.select((F.lit(_kmt_hash(r)) % F.col("tot")).alias("thr"))
-        pick = (
+        pick = materialize(
             cur.withColumn("cum", F.sum("md").over(w_cum))
             .crossJoin(F.broadcast(thr))
             .where(F.col("cum") > F.col("thr"))
             .agg(F.min(F.struct("vec_id", "qv")).alias("w"))
-            .select(F.lit(r).alias("cid"), F.col("w.qv").alias("cv"))
-        ).localCheckpoint()
+            .select(F.lit(r).alias("cid"), F.col("w.qv").alias("cv")),
+            f"kmeans_train:seed {r}")
         seeds = seeds.unionByName(pick)
         if r < k - 1:
-            cur = cur.crossJoin(F.broadcast(pick.select("cv"))).select(
+            cur = materialize(cur.crossJoin(F.broadcast(pick.select("cv"))).select(
                 "vec_id", "qv",
                 F.least(F.col("md"), dist_to(F.col("cv"))).alias("md"),
-            ).localCheckpoint()
+            ), f"kmeans_train:seed distances {r}")
 
     # ---- Lloyd to the n_moved = 0 fixpoint
-    cents = seeds.localCheckpoint()
+    cents = seeds
     prev = None
     ledger = []
     iters = 0
@@ -4247,7 +4212,7 @@ def _kmeans_train(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         iters += 1
         if iters > _KMT_MAX_ITERS:
             raise RuntimeError("Lloyd did not reach a fixpoint")
-        a = _km_assign(q, cents).localCheckpoint()
+        a = materialize(_km_assign(q, cents), f"kmeans_train:assignment {iters}")
         inertia = a.agg(F.sum("d").alias("i"))
         if prev is None:
             moved = inertia.select(F.lit(0).cast("long").alias("n_moved"))
@@ -4258,14 +4223,14 @@ def _kmeans_train(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
                 .agg(F.sum((F.col("pc") != F.col("cid")).cast("long"))
                      .alias("n_moved"))
             )
-        row = (
+        row = materialize(
             inertia.crossJoin(F.broadcast(moved))
             .select(
                 F.lit(iters).cast("long").alias("round"),
                 F.col("i").cast("long").alias("inertia"),
                 "n_moved",
-            )
-            .localCheckpoint()
+            ),
+            f"kmeans_train:ledger row {iters}",
         )
         ledger.append(row)
         # ONE control-plane scalar per round — the stop test
@@ -4273,7 +4238,7 @@ def _kmeans_train(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         if prev is not None and n_moved == 0:
             break
         prev = a
-        cents = _km_update(a).localCheckpoint()
+        cents = materialize(_km_update(a), f"kmeans_train:centroids {iters}")
     if iters > _KMT_ORACLE_R:
         raise RuntimeError(
             f"Lloyd fixpoint at round {iters} > the oracle unroll "
@@ -4431,7 +4396,7 @@ def s_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     `s_kmeans_train` seeding plan with argmax in place of the
     inverse-CDF draw; k rounds total, no window, no join wider than
     a 1-row broadcast."""
-    q = _km_quant(spark, sf_dir).localCheckpoint()
+    q = materialize(_km_quant(spark, sf_dir), "s_coreset:quantized vectors")
 
     def dist_to(cv_col):
         return F.aggregate(
@@ -4440,19 +4405,19 @@ def s_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    s0 = q.orderBy("vec_id").limit(1).select(
+    s0 = materialize(q.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("vid"), F.col("qv").alias("cv")
-    ).localCheckpoint()
-    cur = q.crossJoin(F.broadcast(s0.select("cv"))).select(
+    ), "s_coreset:first center")
+    cur = materialize(q.crossJoin(F.broadcast(s0.select("cv"))).select(
         "vec_id", "qv", dist_to(F.col("cv")).alias("md")
-    ).localCheckpoint()
+    ), "s_coreset:distances 0")
     ledger = [s0.select(
         F.lit(0).cast("long").alias("k_idx"),
         F.col("vid").alias("vec_id"),
         F.lit(0).cast("long").alias("r2"),
     )]
     for r in range(1, _CORESET_K):
-        pick = cur.agg(
+        pick = materialize(cur.agg(
             F.max(F.struct(
                 F.col("md"),
                 (-F.col("vec_id")).alias("nid"),
@@ -4463,16 +4428,16 @@ def s_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.vid").alias("vid"),
             F.col("w.cv").alias("cv"),
             F.col("w.md").alias("r2"),
-        ).localCheckpoint()
+        ), f"s_coreset:center {r}")
         ledger.append(pick.select(
             F.lit(r).cast("long").alias("k_idx"),
             F.col("vid").alias("vec_id"),
             "r2",
         ))
-        cur = cur.crossJoin(F.broadcast(pick.select("cv"))).select(
+        cur = materialize(cur.crossJoin(F.broadcast(pick.select("cv"))).select(
             "vec_id", "qv",
             F.least(F.col("md"), dist_to(F.col("cv"))).alias("md"),
-        ).localCheckpoint()
+        ), f"s_coreset:distances {r}")
     cover = cur.agg(F.max("md").alias("final_r2"))
     out = ledger[0]
     for l_ in ledger[1:]:
@@ -6339,14 +6304,14 @@ _PQ_INDEX_CACHE: dict = {}
 def pq_ivf_index_cached(spark: SparkSession, sf_dir: str):
     """``pq_ivf_index`` built at most once per (session, corpus):
     returns ``(index, cent_rows)`` with the single-relation index
-    localCheckpointed (truncated lineage — readers pay a columnar
+    materialized (truncated lineage — readers pay a columnar
     scan of (vec_id, cell, rv, rnorm), never the build DAG) and the
     8-row centroid table collected to driver rows for closure-shipping
     into the routing kernel."""
 
     def build():
         index, cents = pq_ivf_index(spark, sf_dir)
-        return (index.localCheckpoint(), cents.collect())
+        return (materialize(index, "pq_ivf_index:index"), cents.collect())
 
     return session_memo(_PQ_INDEX_CACHE, spark, sf_dir, build)
 
@@ -6682,8 +6647,7 @@ def s_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells feeds the pair kernel AND the keeper verdict join —
     # materialize the cluster assignment once (the artifact a SemDeDup
     # run persists) instead of re-deriving the Lloyd lineage twice.
-    cells, _ = _ivf_cells(spark, sf_dir)
-    cells = cells.localCheckpoint()
+    cells = materialize(_ivf_cells(spark, sf_dir)[0], "s_semantic_dedup:cells")
 
     # Intra-cell pair scoring runs as ONE Arrow kernel per cell (the
     # module's standard pattern for |pairs| × 64-dot workloads): the
@@ -6912,9 +6876,10 @@ def d_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the oriented edge relation once: `known` and `intra`
     # both consume it, and without the checkpoint each would re-run
     # the full LSH pipeline (measured ~2x the query).
-    sym = pairs.union(
+    sym = materialize(pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).localCheckpoint()
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        "d_incremental:edges")
     inc_dst = F.col("dst") % 4 == 3
     known = (
         sym.where(inc_dst & (F.col("src") % 4 != 3))
@@ -7604,7 +7569,7 @@ def t_bpe_train2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize/explode/split post-exchange puts the heavy map on all
     # cores.  r20: layout-gated — the Exchange is absent when the
     # scan already arrives in >= cores splits.
-    toks = (
+    toks = materialize(
         spread_scan(_docs(spark, sf_dir).select("text"),
                     spark, sf_dir, "documents")
         .select(F.explode(_tokens_col()).alias("t"))
@@ -7612,11 +7577,11 @@ def t_bpe_train2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "transform(sequence(1, length(t)), i -> substr(t, i, 1))"
             ).alias("syms")
-        )
-        .localCheckpoint()
+        ),
+        "t_bpe_train2:symbols",
     )
-    for _ in range(2):
-        toks = bpe_merge_round(toks).localCheckpoint()
+    for rnd in (1, 2):
+        toks = materialize(bpe_merge_round(toks), f"t_bpe_train2:merge {rnd}")
     return (
         toks.where(F.size("syms") >= 2)
         .select(
@@ -7641,7 +7606,7 @@ def t_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     count.  This table, broadcast, is what a tokenizer-apply stage
     replays to encode new text; ``t_bpe_train2`` prices the corpus
     side of the same loop."""
-    toks = (
+    toks = materialize(
         # same fan-out + repartition-before-tokenize rules as
         # t_bpe_train2 (the raw text rows cross the exchange;
         # layout-gated)
@@ -7652,8 +7617,8 @@ def t_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "transform(sequence(1, length(t)), i -> substr(t, i, 1))"
             ).alias("syms")
-        )
-        .localCheckpoint()
+        ),
+        "t_bpe_train_vocab:symbols",
     )
     out = None
     for rnd in range(1, 4):
@@ -7662,7 +7627,7 @@ def t_bpe_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the LAST round's merged corpus has no consumer (only its
             # best-pair row ships) — checkpointing it was a wasted
             # materialization job (r19 optimization)
-            toks = toks.localCheckpoint()
+            toks = materialize(toks, f"t_bpe_train_vocab:merge {rnd}")
         row = best.select(
             F.lit(rnd).alias("merge_round"),
             F.concat_ws("+", "l", "r").alias("pair"),
@@ -7686,7 +7651,7 @@ def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ``doc_id`` riding the narrow stages untouched; the final
     ledger is one doc-keyed partial aggregate."""
     d = _docs(spark, sf_dir).withColumn("tokens", _tokens_col())
-    toks = (
+    toks = materialize(
         # same fan-out + repartition-before-tokenize rules as
         # t_bpe_train2 (the raw text rows cross the exchange;
         # layout-gated)
@@ -7698,8 +7663,8 @@ def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "transform(sequence(1, length(t)), i -> substr(t, i, 1))"
             ).alias("syms"),
-        )
-        .localCheckpoint()
+        ),
+        "t_bpe_encode:symbols",
     )
     # Round 1 keeps its checkpoint (TWO consumers: round 2's pair
     # count + its merge).  Round 2's merged corpus has exactly ONE
@@ -7709,7 +7674,7 @@ def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # audit from the r19 curation/train_vocab lesson; t_bpe_train2
     # differs: its final consumer is a filter + pair-explode that
     # re-evaluates the merge string, measured SLOWER unmaterialized).
-    toks = bpe_merge_round(toks).localCheckpoint()
+    toks = materialize(bpe_merge_round(toks), "t_bpe_encode:merge 1")
     toks = bpe_merge_round(toks)
     per = toks.groupBy("doc_id").agg(
         F.sum(F.size("syms")).cast("long").alias("n_sym_merged")
@@ -8141,21 +8106,19 @@ def _labelprop_fixpoint(nodes: DataFrame, pairs: DataFrame):
     (LSH-bucketed edges) so both rungs run the SAME schedule and the
     comparison between them isolates the EDGE RELATION as the only
     variable."""
-    from go_whisper_spark.operators.whisper_queries import (
-        _flat_localCheckpoint,
-    )
-
-    edges = (
+    edges = materialize(
         pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
         .unionAll(
             pairs.select(F.col("idb").alias("src"),
-                         F.col("ida").alias("dst")))
-    ).localCheckpoint()
-    lab = _flat_localCheckpoint(nodes.withColumn("comm", F.col("node")))
+                         F.col("ida").alias("dst"))),
+        "labelprop:edges")
+    lab = materialize(nodes.withColumn("comm", F.col("node")),
+                      "labelprop:seed labels", reset_stats=True)
     iters = 0
     while True:
-        new = _flat_localCheckpoint(_labelprop_round(edges, lab))
         iters += 1
+        new = materialize(_labelprop_round(edges, lab),
+                          f"labelprop:round {iters}", reset_stats=True)
         # ONE control-plane scalar per round — labels only decrease,
         # so max(prev - new) == 0 IS the fixpoint test
         delta = (
@@ -8203,7 +8166,7 @@ def s_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     control-plane scalar per round (max label drop — the convergence
     test); the label frame enters its round plan MULTIPLICATIVELY
     (the neighbor join AND the LEAST merge), so rounds re-anchor via
-    `_flat_localCheckpoint` — the truss/k-core stats-reset
+    `materialize(..., reset_stats=True)` — the truss/k-core stats-reset
     discipline.  The pair build is the all-pairs exact baseline
     (correct at test scale); at 100 TB you swap in the LSH-bucketed
     pair relation (`d_embed_neardup_lsh`) — the propagation loop is
@@ -9209,19 +9172,20 @@ def s_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 137) — the cross-rung pin.
 
     Scale shape: ONE Arrow assignment pass at T=4 shared by all six
-    configs (`_mt_bucket_assign`, localCheckpointed); per config the
+    configs (`_mt_bucket_assign`, materialized); per config the
     probe explode is codegen (no Python), the candidate join is
     (t, bucket)-keyed, verification joins the broadcast O(vectors)
     ledger with the codegen dot product; counts are control-plane
     scalars.  The truth pass is the fenced quadratic
     `s_cosine_nearpairs` this family always prices against.  [pins
     Lv et al. multi-probe LSH on the hyperplane table stream]"""
-    base = (_mt_bucket_assign(spark, sf_dir, 4)
-            .select("vec_id", "t", "bucket").localCheckpoint())
-    e = (_cos_frames(spark, sf_dir)
-         .select("vec_id", "v", "norm").localCheckpoint())
-    exact = (s_cosine_nearpairs(spark, sf_dir)
-             .select("ida", "idb").localCheckpoint())
+    base = materialize(_mt_bucket_assign(spark, sf_dir, 4)
+                       .select("vec_id", "t", "bucket"),
+                       "s_lsh_multiprobe:buckets")
+    e = materialize(_cos_frames(spark, sf_dir).select("vec_id", "v", "norm"),
+                    "s_lsh_multiprobe:vectors")
+    exact = materialize(s_cosine_nearpairs(spark, sf_dir).select("ida", "idb"),
+                        "s_lsh_multiprobe:truth pairs")
     n_true = exact.count()
     rows = []
     for n_tables, radius in _MP_LSH_SWEEP:
@@ -9235,13 +9199,13 @@ def s_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "array(bucket, bucket ^ 1, bucket ^ 2, "
                     "bucket ^ 4, bucket ^ 8)")).alias("bucket"),
             )
-        cand = (
+        cand = materialize(
             probes.alias("a").join(sub.alias("b"), ["t", "bucket"])
             .where(F.col("a.vec_id") < F.col("b.vec_id"))
             .select(F.col("a.vec_id").alias("ida"),
                     F.col("b.vec_id").alias("idb"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            f"s_lsh_multiprobe:T{n_tables} r{radius} candidates",
         )
         n_cand = cand.count()
         ver = (

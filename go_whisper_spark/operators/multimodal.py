@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from go_whisper_spark.session import materialize
+
 USE_REAL_CODECS = False  # flip when PIL/ffmpeg-style libs exist
 FEATURE_DIM = 16
 
@@ -410,7 +412,7 @@ def m_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = documents_as_media(spark, sf_dir)
     # three consumers (threshold, run detection, totals) — checkpoint
     # so the Arrow energy stage runs once (the _tri_edges discipline)
-    wins = pcm_energy(media).localCheckpoint()
+    wins = materialize(pcm_energy(media), "m_vad_segments:energy windows")
     thr = wins.agg(
         F.expr("sum(energy) div count(*)").alias("t")
     )
@@ -709,7 +711,7 @@ def m_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banded-LSH discipline on a second modality]"""
     from go_whisper_spark.sources.tables import load_table
 
-    led = _ahash_bits(spark, sf_dir).select(
+    led = materialize(_ahash_bits(spark, sf_dir).select(
         "doc_id",
         "b",
         F.expr("aggregate(b, 0, (acc, x) -> acc + x)")
@@ -723,7 +725,7 @@ def m_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"h{j}")
             for j in range(_AHASH_BANDS)
         ],
-    ).localCheckpoint()
+    ), "m_ahash_neardup:hash ledger")
     banded = led.select(
         "doc_id",
         F.explode(F.array(*[
@@ -852,23 +854,24 @@ def _ahash_sweep(spark: SparkSession, sf_dir: str, configs) -> DataFrame:
     """One ledger row per (bands, width, radius) config: the candidate
     pairs of that banding, probing band neighbours within ``radius``
     bits (0 or 1), priced against the exact hamming <= 10 truth."""
-    led = _ahash_bits(spark, sf_dir).localCheckpoint()
+    led = materialize(_ahash_bits(spark, sf_dir), "ahash_sweep:hash ledger")
     a = led.select(F.col("doc_id").alias("ida"), F.col("b").alias("ba"))
     bb = led.select(F.col("doc_id").alias("idb"), F.col("b").alias("bb"))
-    truth = (
+    truth = materialize(
         a.join(bb, F.col("ida") < F.col("idb"))
         .select(
             "ida", "idb",
             F.expr("aggregate(zip_with(ba, bb, (x, y) -> abs(x - y)), "
                    "0, (acc, x) -> acc + x)").alias("h"))
         .where(F.col("h") <= _AHASH_MAX_HAM)
-        .select("ida", "idb")
-        .localCheckpoint()
+        .select("ida", "idb"),
+        "ahash_sweep:truth pairs",
     )
     n_true = truth.count()
     rows = []
     for bands, width, radius in configs:
-        chunks = led.select(
+        label = f"ahash_sweep:{bands}x{width} r{radius}"
+        chunks = materialize(led.select(
             "doc_id",
             F.explode(F.array(*[
                 F.struct(
@@ -881,7 +884,7 @@ def _ahash_sweep(spark: SparkSession, sf_dir: str, configs) -> DataFrame:
                     ).alias("chunk"))
                 for j in range(bands)
             ])).alias("bc"),
-        ).select("doc_id", "bc.band", "bc.chunk").localCheckpoint()
+        ).select("doc_id", "bc.band", "bc.chunk"), f"{label} chunks")
         if radius == 0:
             probes = chunks
         else:
@@ -892,13 +895,13 @@ def _ahash_sweep(spark: SparkSession, sf_dir: str, configs) -> DataFrame:
                 "doc_id", "band",
                 F.explode(F.expr(f"array(chunk, {neigh})")).alias("chunk"),
             )
-        cand = (
+        cand = materialize(
             probes.alias("x").join(chunks.alias("y"), ["band", "chunk"])
             .where(F.col("x.doc_id") < F.col("y.doc_id"))
             .select(F.col("x.doc_id").alias("ida"),
                     F.col("y.doc_id").alias("idb"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            f"{label} candidates",
         )
         n_cand = cand.count()
         n_hit = cand.join(truth, ["ida", "idb"], "left_semi").count()
@@ -1308,11 +1311,11 @@ def _scene_dedup_parts(spark: SparkSession,
     )
     # first frame of each shot: f=0 (h NULL) or a boundary jump —
     # same partitioning/order as the lag window, so no extra shuffle
-    rep = (
+    rep = materialize(
         ham.where(F.col("h").isNull() | (F.col("h") > _SHOT_THRESH))
         .select("media_id", (F.row_number().over(w) - 1).alias("shot"),
-                "b")
-        .localCheckpoint()
+                "b"),
+        "scene_dedup_parts:shot reps",
     )
     nshots = rep.groupBy("media_id").agg(
         F.count("*").cast("long").alias("n_shots"))
@@ -1406,9 +1409,9 @@ def m_scene_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_whisper_spark.operators.llm_ops import _star_contract
 
     ledger, nshots = _scene_dedup_parts(spark, sf_dir)
+    # _star_contract's first step materializes its edge set
     dup = (ledger.where(F.col("scene_dup") == 1)
-           .select(F.col("ida").alias("u"), F.col("idb").alias("v"))
-           .localCheckpoint())
+           .select(F.col("ida").alias("u"), F.col("idb").alias("v")))
     labels, _ = _star_contract(dup)
     out = (
         nshots.join(labels.withColumnRenamed("doc_id", "media_id"),

@@ -68,6 +68,7 @@ from go_whisper_spark.operators.whisper_queries import (
     _tmpdir,
 )
 from go_whisper_spark.render import _tagged_points
+from go_whisper_spark.session import materialize
 from go_whisper_spark.sources.tables import events_points, load_table
 from go_whisper_spark.streaming.rollup import streaming_rollup
 from go_whisper_spark.streaming.sessions import streaming_sessions
@@ -409,9 +410,8 @@ def st_lsh_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    idx = corpus_band_index(
-        docs.where(F.col("doc_id") % 4 != 3)
-    ).localCheckpoint()
+    idx = materialize(corpus_band_index(docs.where(F.col("doc_id") % 4 != 3)),
+                      "st_lsh_prefilter:band index")
     incoming = docs.where(F.col("doc_id") % 4 == 3).select("doc_id", "text")
     marked = incoming.withColumn("arrive", (F.col("doc_id") % 3).cast("int"))
     out = _replay(spark, marked, lambda s: streaming_lsh_prefilter(s, idx))
@@ -502,7 +502,7 @@ def st_pq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_whisper_spark.streaming.adc import adc_candidates
 
     index, cents = pq_ivf_index(spark, sf_dir)
-    index = index.localCheckpoint()
+    index = materialize(index, "st_pq_score:index")
     cent_rows = cents.collect()  # 8 rows — control-plane
     q = _emb(spark, sf_dir).where(F.col("vec_id") < 50).select(
         "vec_id", "embedding"
@@ -916,6 +916,7 @@ def st_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair expansion + one anti-join against the store keyed (u, v);
     the ledger read is the audited w_triangles plan unchanged."""
     from go_whisper_spark.operators.whisper_queries import (
+        _tri_degrees,
         _tri_node_ledger,
         _tri_orient,
     )
@@ -966,8 +967,9 @@ def st_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if not q.awaitTermination(300):
             raise RuntimeError("streaming pass timed out")
-    edges = spark.read.parquet(store).localCheckpoint()
-    deg, ori = _tri_orient(edges)
+    edges = materialize(spark.read.parquet(store), "st_triangles:edges")
+    deg = materialize(_tri_degrees(edges), "st_triangles:degrees")
+    ori = materialize(_tri_orient(edges, deg), "st_triangles:oriented")
     return _tri_node_ledger(deg, ori)
 
 
@@ -1151,7 +1153,8 @@ def st_triangles_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the PRE-batch store even after the append at the end
             old = spark.read.parquet(store)
             delta = delta.join(old, ["u", "v"], "left_anti")
-        delta = delta.localCheckpoint()  # several consumers below
+        # several consumers below
+        delta = materialize(delta, "st_triangles_ledger:new edges")
         inc = _tri_ledger_increment(old, delta)
         inc.write.mode("append").parquet(ledger)
         delta.write.mode("append").parquet(store)
@@ -1276,8 +1279,9 @@ def _streamed_view(spark: SparkSession, sf_dir: str, view, refresh
         head = log.state()["version"]
         if head == prev:
             return                      # empty batch: nothing landed
-        mv = refresh(spark.read.parquet(mv_store), table, prev, head) \
-            .localCheckpoint()          # materialized before overwrite
+        # materialized before overwriting the store it reads
+        mv = materialize(refresh(spark.read.parquet(mv_store), table, prev, head),
+                         "streamed_view:refreshed view")
         mv.write.mode("overwrite").parquet(mv_store)
 
     _replay(spark, _key_disjoint_changes(base), lambda s: s, sink=sink)
@@ -1321,9 +1325,6 @@ def st_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dot_expr,
         _labelprop_round,
     )
-    from go_whisper_spark.operators.whisper_queries import (
-        _flat_localCheckpoint,
-    )
 
     feed = _cos_frames(spark, sf_dir).select(
         "vec_id", "v", "norm", (F.col("vec_id") % 3).alias("arrive")
@@ -1340,7 +1341,8 @@ def st_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.isdir(vstore):
             newv = newv.join(spark.read.parquet(vstore).select("vec_id"),
                              "vec_id", "left_anti")
-        newv = newv.localCheckpoint()   # several consumers below
+        # several consumers below
+        newv = materialize(newv, "st_labelprop:new vectors")
         if newv.isEmpty():
             return                      # replayed batch: a no-op
         corpus = newv
@@ -1367,15 +1369,16 @@ def st_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "comm", F.col("node"))
         if os.path.isdir(lstore):
             lab = spark.read.parquet(lstore).unionByName(lab)
-        lab = _flat_localCheckpoint(lab)
+        lab = materialize(lab, "st_labelprop:seed labels", reset_stats=True)
         ed = spark.read.parquet(estore)
         edges = ed.select(F.col("u").alias("src"), F.col("v").alias("dst")) \
             .unionAll(ed.select(F.col("v").alias("src"),
                                 F.col("u").alias("dst")))
         rounds = 0
         while True:
-            new = _flat_localCheckpoint(_labelprop_round(edges, lab))
             rounds += 1
+            new = materialize(_labelprop_round(edges, lab),
+                              f"st_labelprop:round {rounds}", reset_stats=True)
             delta = (
                 new.join(lab.withColumnRenamed("comm", "prev"), "node")
                 .agg(F.max(F.col("prev") - F.col("comm")))
@@ -1386,7 +1389,7 @@ def st_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             if rounds >= 64:
                 raise RuntimeError("warm-start propagation diverged")
-        # lab is localCheckpoint-ed (materialized), so overwriting
+        # lab is materialized, so overwriting
         # the store it was seeded from is safe
         lab.write.mode("overwrite").parquet(lstore)
 
@@ -1436,9 +1439,9 @@ def st_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def refresh(view: DataFrame, table: str, prev: int, head: int):
-        feed = read_changes_mor(spark, table, key_cols=["doc_id"],
-                                from_version=prev, to_version=head
-                                ).localCheckpoint()
+        feed = materialize(read_changes_mor(spark, table, key_cols=["doc_id"],
+                                            from_version=prev, to_version=head),
+                           "st_mv_minmax:feed")
         return _mv_minmax_refresh(
             view, feed,
             read_table_mor(spark, table, key_cols=["doc_id"],
@@ -1552,10 +1555,6 @@ def _kcore_warm_peel(edges: DataFrame, lb, dirty, deg_full=None):
     whole graph), skipping the O(edges) recount the cold peel pays;
     at kmin > 0 survivor degrees are induced-subgraph degrees, so
     one recount over the (smaller) induced edges runs instead."""
-    from go_whisper_spark.operators.whisper_queries import (
-        _flat_localCheckpoint,
-    )
-
     nodes = edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
     if lb is None:
         ann0 = nodes.withColumn("lb", F.lit(0).cast("long"))
@@ -1566,7 +1565,7 @@ def _kcore_warm_peel(edges: DataFrame, lb, dirty, deg_full=None):
             "node", F.coalesce("lb", F.lit(0).cast("long")).alias("lb"))
         kmin = int(ann0.join(dirty, "node", "left_semi")
                    .agg(F.min("lb")).first()[0])
-    ann0 = _flat_localCheckpoint(ann0)
+    ann0 = materialize(ann0, "kcore_warm_peel:lower bounds", reset_stats=True)
     carried = ann0.where(F.col("lb") < kmin).select(
         "node", F.col("lb").alias("coreness"))
     surv = ann0.where(F.col("lb") >= kmin).select("node")
@@ -1574,10 +1573,11 @@ def _kcore_warm_peel(edges: DataFrame, lb, dirty, deg_full=None):
         edges_s = edges
         seed = deg_full
     else:
-        edges_s = _flat_localCheckpoint(
+        edges_s = materialize(
             edges.join(surv.select(F.col("node").alias("u")), "u",
                        "left_semi")
-            .join(surv.select(F.col("node").alias("v")), "v", "left_semi"))
+            .join(surv.select(F.col("node").alias("v")), "v", "left_semi"),
+            "kcore_warm_peel:induced edges", reset_stats=True)
         seed = None
     nodes_c = surv
     n_nodes = nodes_c.count()
@@ -1600,10 +1600,11 @@ def _kcore_warm_peel(edges: DataFrame, lb, dirty, deg_full=None):
                     .groupBy("node")
                     .agg(F.count("*").alias("deg"))
                 )
-            ann = _flat_localCheckpoint(
+            ann = materialize(
                 nodes_c.join(deg, "node", "left").select(
                     "node",
-                    F.coalesce("deg", F.lit(0).cast("long")).alias("deg")))
+                    F.coalesce("deg", F.lit(0).cast("long")).alias("deg")),
+                f"kcore_warm_peel:degrees round {iters}", reset_stats=True)
         # ONE control-plane scalar per round — the peel/stop test
         n_bad = ann.where(F.col("deg") < k).count()
         if n_bad == 0:
@@ -1616,11 +1617,12 @@ def _kcore_warm_peel(edges: DataFrame, lb, dirty, deg_full=None):
         dropped.append(
             bad.select("node", F.lit(k - 1).cast("long").alias("coreness")))
         nodes_c = ann.where(F.col("deg") >= k).select("node")
-        edges_s = _flat_localCheckpoint(
+        edges_s = materialize(
             edges_s.join(bad.select(F.col("node").alias("u")), "u",
                          "left_anti")
             .join(bad.select(F.col("node").alias("v")), "v", "left_anti")
-            .select("u", "v"))
+            .select("u", "v"),
+            f"kcore_warm_peel:survivors round {iters}", reset_stats=True)
         n_nodes -= n_bad
         recount = True
     out = carried
@@ -1681,16 +1683,15 @@ def st_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if dirt.isEmpty():
             return                       # nothing stale: a no-op
-        edges = spark.read.parquet(store).localCheckpoint()
+        edges = materialize(spark.read.parquet(store), "st_kcore:edges")
         deg_full = (
             spark.read.parquet(degdir)
             .groupBy("node").agg(F.sum("d_deg").alias("deg"))
         )
         lb = spark.read.parquet(core) if os.path.isdir(core) else None
-        led, _ = _kcore_warm_peel(edges, lb, dirt.localCheckpoint(),
-                                  deg_full)
+        led, _ = _kcore_warm_peel(edges, lb, dirt, deg_full)
         # materialized before overwriting the store it was seeded from
-        led.localCheckpoint().write.mode("overwrite").parquet(core)
+        materialize(led, "st_kcore:coreness").write.mode("overwrite").parquet(core)
         state["peeled_at"] = state["batches"]
 
     def sink(batch: DataFrame, _bid: int) -> None:
@@ -1706,7 +1707,8 @@ def st_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.isdir(store):
             delta = delta.join(spark.read.parquet(store), ["u", "v"],
                                "left_anti")
-        delta = delta.localCheckpoint()  # several consumers below
+        # several consumers below
+        delta = materialize(delta, "st_kcore:new edges")
         if delta.isEmpty():
             return                       # replayed batch: a no-op
         state["batches"] += 1
@@ -1759,6 +1761,7 @@ def st_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     [pins whisper_queries.py: w_truss_decomp / _tri_triangles]"""
     from go_whisper_spark.operators.whisper_queries import (
         _TRUSS_MOD,
+        _tri_degrees,
         _tri_orient,
         _truss_peel,
     )
@@ -1789,7 +1792,8 @@ def st_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.isdir(store):
             old = spark.read.parquet(store)
             delta = delta.join(old, ["u", "v"], "left_anti")
-        delta = delta.localCheckpoint()  # several consumers below
+        # several consumers below
+        delta = materialize(delta, "st_truss:new edges")
         if delta.isEmpty():
             return                       # replayed batch: a no-op
         _tri_support_increment(old, delta).write.mode("append") \
@@ -1801,12 +1805,13 @@ def st_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(store):         # edge-free stream: empty ledger
         return spark.createDataFrame(
             [], "trussness long, n_edges long, iters long")
-    edges = spark.read.parquet(store).localCheckpoint()
+    edges = materialize(spark.read.parquet(store), "st_truss:edges")
     sup0 = (
         spark.read.parquet(supdir)
         .groupBy("cu", "cv").agg(F.sum("d_sup").alias("s"))
     ) if os.path.isdir(supdir) else None
-    _, oriented = _tri_orient(edges)
+    oriented = materialize(_tri_orient(edges, _tri_degrees(edges)),
+                           "st_truss:oriented")
     # round 1 reads the maintained ledger instead of the full-graph
     # triangle join the cold peel pays there
     return _truss_peel(spark, oriented, sup0)
@@ -1878,11 +1883,11 @@ def st_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merged = spark.read.parquet(store).distinct()
     w = Window.partitionBy("metric").orderBy("h")
-    kept = (
+    kept = materialize(
         merged.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= _THETA_K)
-        .select("metric", "h")
-        .localCheckpoint()
+        .select("metric", "h"),
+        "st_kmv_jaccard:kept hashes",
     )
     theta = kept.groupBy("metric").agg(
         F.when(F.count("*") >= _THETA_K, F.max("h"))

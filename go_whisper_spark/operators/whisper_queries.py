@@ -34,7 +34,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from go_whisper_spark.session import session_memo
+from go_whisper_spark.session import materialize, session_memo
 from go_whisper_spark.sources.tables import events_points, spread_scan
 
 HOUR, DAY = 3600, 86400
@@ -1290,15 +1290,14 @@ LEFT JOIN ind ON node = ind.dst
 
 # ---------------------------------------------------------- w_triangles
 def _tri_edges(spark: SparkSession, sf_dir: str,
-               materialize: bool = True,
                order_mod: int | None = None) -> DataFrame:
     """Distinct undirected co-purchase edges (u < v by id) between
-    parts sharing an order; localCheckpoint-ed (unless
-    ``materialize=False``) because every triangle-family consumer
-    reads it several times.  ``order_mod`` keeps only orders with
-    o % mod == 0 — a deterministic order sample (whole orders arrive
-    or don't, so clique structure is preserved) used by the truss
-    DECOMPOSITION to bound its data-dependent peel schedule."""
+    parts sharing an order; callers materialize it, since every
+    triangle-family consumer reads it several times.  ``order_mod``
+    keeps only orders with o % mod == 0 — a deterministic order sample
+    (whole orders arrive or don't, so clique structure is preserved)
+    used by the truss DECOMPOSITION to bound its data-dependent peel
+    schedule."""
     from go_whisper_spark.sources.tables import load_table
 
     items = (
@@ -1314,7 +1313,7 @@ def _tri_edges(spark: SparkSession, sf_dir: str,
         .select(F.col("p").alias("u"), F.col("q").alias("v"))
         .distinct()
     )
-    return edges.localCheckpoint() if materialize else edges
+    return edges
 
 
 def _graph_adj(edges: DataFrame) -> DataFrame:
@@ -1340,17 +1339,19 @@ def _cn_pairs(adj: DataFrame) -> DataFrame:
     )
 
 
-def _tri_orient(edges: DataFrame, materialize: bool = True):
-    """Edge list → (deg, oriented): per-node degrees and each edge
-    oriented from the endpoint EARLIER in the (degree, id) total
-    order (two broadcast joins of the O(nodes) degree relation)."""
-    deg = (
+def _tri_degrees(edges: DataFrame) -> DataFrame:
+    """Edge list → per-node degrees (node, deg)."""
+    return (
         edges.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    if materialize:
-        deg = deg.localCheckpoint()
+
+
+def _tri_orient(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """Each edge of ``edges`` oriented from the endpoint EARLIER in the
+    (degree, id) total order of ``deg`` (``_tri_degrees(edges)``; two
+    broadcast joins of the O(nodes) degree relation)."""
     e = (
         edges.join(
             F.broadcast(deg.select(F.col("node").alias("u"),
@@ -1362,16 +1363,13 @@ def _tri_orient(edges: DataFrame, materialize: bool = True):
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = e.select(
+    return e.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         # the dst endpoint's degree rides along so the wedge filter
         # can apply the SAME (deg, id) total order locally
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dd"),
     )
-    if materialize:
-        oriented = oriented.localCheckpoint()
-    return deg, oriented
 
 
 def _tri_sample_filter(edges: DataFrame, mod: int) -> DataFrame:
@@ -1383,15 +1381,17 @@ def _tri_sample_filter(edges: DataFrame, mod: int) -> DataFrame:
     return edges.where(h % mod == 0)
 
 
-def _tri_oriented(spark: SparkSession, sf_dir: str, materialize: bool = True):
+def _tri_oriented(spark: SparkSession, sf_dir: str):
     """(edges, deg, oriented) of the part co-purchase graph — the
-    composition of ``_tri_edges`` and ``_tri_orient``.
-    ``materialize=False`` skips the localCheckpoints so plan_audit
-    can assert the build's physical shape (equi-self-join on the
-    order key — never a cartesian — plus two broadcast joins of the
-    O(nodes) degree relation)."""
-    edges = _tri_edges(spark, sf_dir, materialize)
-    deg, oriented = _tri_orient(edges, materialize)
+    composition of ``_tri_edges``, ``_tri_degrees`` and ``_tri_orient``,
+    each materialized (every consumer reads all three several times).
+    plan_audit composes the bare functions to assert the build's
+    physical shape (equi-self-join on the order key — never a
+    cartesian — plus two broadcast joins of the O(nodes) degree
+    relation)."""
+    edges = materialize(_tri_edges(spark, sf_dir), "tri_oriented:edges")
+    deg = materialize(_tri_degrees(edges), "tri_oriented:degrees")
+    oriented = materialize(_tri_orient(edges, deg), "tri_oriented:oriented")
     return edges, deg, oriented
 
 
@@ -1594,8 +1594,10 @@ def w_triangle_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orientation recomputed on the sample — they are the sampled
     # graph's own), not a second lineitem scan.
     edges, _, ori = _tri_oriented(spark, sf_dir)
-    s_edges = _tri_sample_filter(edges, _TRI_P).localCheckpoint()
-    _, s_ori = _tri_orient(s_edges)
+    s_edges = materialize(_tri_sample_filter(edges, _TRI_P),
+                          "w_triangle_sample:sampled edges")
+    s_ori = materialize(_tri_orient(s_edges, _tri_degrees(s_edges)),
+                        "w_triangle_sample:sampled oriented")
     n_edges = edges.agg(F.count("*").alias("n_edges"))
     n_s = s_edges.agg(F.count("*").alias("n_edges_sampled"))
     t_exact = _tri_triangles(ori).agg(F.count("*").alias("tri_exact"))
@@ -1755,15 +1757,11 @@ def w_link_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation when only candidates (not exact counts) are needed.
     Here the full graph runs exact; the fence is documented, not
     silently applied."""
-    edges = _tri_edges(spark, sf_dir)
+    edges = materialize(_tri_edges(spark, sf_dir), "w_link_cn:edges")
     adj = _graph_adj(edges)
     cn = _cn_pairs(adj)
     cand = cn.join(edges, ["u", "v"], "left_anti")
-    deg = (
-        edges.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _tri_degrees(edges)
     scored = (
         cand.join(F.broadcast(deg.select(F.col("node").alias("u"),
                                          F.col("deg").alias("du"))), "u")
@@ -1854,13 +1852,13 @@ def w_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion, plain localCheckpoint suffices (contrast the truss
     peel's multiplicative shape); ONE control-plane scalar per
     round.  No collect of node data anywhere."""
-    edges = _tri_edges(spark, sf_dir)
-    adj = _graph_adj(edges).localCheckpoint()
+    adj = materialize(_graph_adj(_tri_edges(spark, sf_dir)),
+                      "w_bfs_layers:adjacency")
     nodes = adj.select(F.col("z").alias("node")).distinct()
     frontier = nodes.where(F.col("node") % _BFS_SEED_MOD == 0)
-    visited = frontier.withColumn("d", F.lit(0).cast("long"))
-    visited = visited.localCheckpoint()
-    frontier = frontier.localCheckpoint()
+    visited = materialize(frontier.withColumn("d", F.lit(0).cast("long")),
+                          "w_bfs_layers:visited")
+    frontier = materialize(frontier, "w_bfs_layers:frontier")
     layers = [visited]
     iters = 0
     r = 0
@@ -1869,20 +1867,20 @@ def w_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         if iters > _BFS_MAX_ROUNDS:
             raise RuntimeError("BFS did not reach a fixpoint")
         r += 1
-        nxt = (
+        nxt = materialize(
             frontier.select(F.col("node").alias("z"))
             .join(adj, "z")
             .select(F.col("x").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .withColumn("d", F.lit(r).cast("long"))
-        ).localCheckpoint()
+            .withColumn("d", F.lit(r).cast("long")),
+            f"w_bfs_layers:layer {r}")
         # ONE control-plane scalar per round — the stop test
         n = nxt.count()
         if n == 0:
             break
         layers.append(nxt)
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited = materialize(visited.unionByName(nxt), "w_bfs_layers:visited")
         frontier = nxt.select("node")
     if iters > _BFS_ORACLE_R:
         raise RuntimeError(
@@ -1976,7 +1974,7 @@ def w_link_cn_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ~1/3-of-centers adjacency (the quadratic term drops by the
     sampling rate); the exact side is the audit baseline; one left
     join aligns the two ledgers."""
-    edges = _tri_edges(spark, sf_dir)
+    edges = materialize(_tri_edges(spark, sf_dir), "w_link_cn_sample:edges")
     adj = _graph_adj(edges)
     exact = _cn_pairs(adj).join(edges, ["u", "v"], "left_anti")
     top = (
@@ -2043,40 +2041,6 @@ FROM top t LEFT JOIN sampled s ON t.u = s.u AND t.v = s.v
 
 
 # --------------------------------------------------- w_truss_decomp
-def _flat_localCheckpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint that also RESETS plan statistics — required by
-    any iteration whose recursive frame enters its own round plan
-    MULTIPLICATIVELY.
-
-    ``localCheckpoint`` truncates lineage but PRESERVES the origin
-    plan's sizeInBytes estimate.  A round plan that joins the
-    recursive frame with an aggregate derived from that same frame
-    (the truss peel: wedge self-join × closing probe × support
-    join-back) therefore multiplies the estimate into the next round:
-    bits(size) × ~4 per round — a DOUBLE-exponential BigInteger whose
-    Toom-Cook multiplications inside Catalyst's
-    SizeInBytesOnlyStatsPlanVisitor burn unbounded driver CPU by
-    round ~13 (measured: jstack pins the py4j thread in
-    BigInteger.multiplyToomCook3; a 100-row 8-round repro grows 29 →
-    6729 bits).  PageRank's loop survives without this because its
-    frame enters each round LINEARLY (bits grow arithmetically).
-
-    The fix re-wraps the checkpointed RDD[InternalRow] as a fresh
-    LogicalRDD carrying no origin stats (sizeInBytes falls back to
-    the conservative default).  Join planning inside the loop then
-    relies on explicit broadcast hints plus AQE's RUNTIME sizes —
-    exactly the posture you want on a cluster anyway.  Falls back to
-    the plain localCheckpoint if the private constructor ever moves."""
-    ck = df.localCheckpoint()
-    try:
-        spark = df.sparkSession
-        jdf = spark._jsparkSession.internalCreateDataFrame(
-            ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False)
-        return DataFrame(jdf, spark)
-    except Exception:  # pragma: no cover - exercised only on API drift
-        return ck
-
-
 _TRUSS_MOD = 8         # deterministic order sample: o % 8 == 0
 _TRUSS_MAX_ROUNDS = 64  # driver-loop safety cap
 _TRUSS_ORACLE_R = 44   # oracle unroll depth — strictly past the
@@ -2126,8 +2090,10 @@ def w_truss_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy selections over already-checkpointed rounds, unioned once at
     the end into a map-combined O(k_max) histogram.  No collect of
     edge data anywhere."""
-    edges = _tri_edges(spark, sf_dir, order_mod=_TRUSS_MOD)
-    _, oriented = _tri_orient(edges)
+    edges = materialize(_tri_edges(spark, sf_dir, order_mod=_TRUSS_MOD),
+                        "w_truss_decomp:edges")
+    oriented = materialize(_tri_orient(edges, _tri_degrees(edges)),
+                           "w_truss_decomp:oriented")
     return _truss_peel(spark, oriented)
 
 
@@ -2164,14 +2130,15 @@ def _truss_peel(spark: SparkSession, oriented: DataFrame,
                     )).alias("e")
                 ).select("e.cu", "e.cv")
                 sup = pairs.groupBy("cu", "cv").agg(F.count("*").alias("s"))
-            ann = _flat_localCheckpoint(
+            ann = materialize(
                 surv.withColumn("cu", F.least("src", "dst"))
                 .withColumn("cv", F.greatest("src", "dst"))
                 .join(sup, ["cu", "cv"], "left")
                 .select(
                     "src", "dst", "dd",
                     F.coalesce("s", F.lit(0).cast("long")).alias("sup"),
-                )
+                ),
+                f"truss_peel:support round {iters}", reset_stats=True,
             )
             sup = None
         # ONE control-plane scalar per round — the peel/stop test
@@ -2317,8 +2284,8 @@ def w_kcore_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per round ONE map-combined degree aggregate over the
     surviving edges (shrinking monotonically) + one left join back to
     the O(nodes) node relation + two anti-joins shedding the peeled
-    nodes' edges, one stats-flat localCheckpoint (`_flat_
-    localCheckpoint` — the survivor frame enters its own round plan
+    nodes' edges, one stats-flat checkpoint (`materialize(...,
+    reset_stats=True)` — the survivor frame enters its own round plan
     through deg AND both anti-joins, the multiplicative shape the
     truss loop pinned), ONE driver scalar (the peel count);
     consecutive k-bumps skip the recount entirely (degrees are
@@ -2328,9 +2295,11 @@ def w_kcore_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured flattened fixpoints (re-measured for ADVICE r15 —
     matches the _KCORE_ORACLE_R margin comment): 37/60/80 rounds at
     sf0.001/0.01/0.1, against the 88-round oracle unroll."""
-    edges = _tri_edges(spark, sf_dir, order_mod=_TRUSS_MOD)
-    nodes = _flat_localCheckpoint(
-        edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    edges = materialize(_tri_edges(spark, sf_dir, order_mod=_TRUSS_MOD),
+                        "w_kcore_decomp:edges")
+    nodes = materialize(
+        edges.select(F.explode(F.array("u", "v")).alias("node")).distinct(),
+        "w_kcore_decomp:nodes", reset_stats=True,
     )
     n_nodes = nodes.count()
     k = 2
@@ -2348,12 +2317,13 @@ def w_kcore_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("node")
                 .agg(F.count("*").alias("deg"))
             )
-            ann = _flat_localCheckpoint(
+            ann = materialize(
                 nodes.join(deg, "node", "left")
                 .select(
                     "node",
                     F.coalesce("deg", F.lit(0).cast("long")).alias("deg"),
-                )
+                ),
+                f"w_kcore_decomp:degrees round {iters}", reset_stats=True,
             )
         # ONE control-plane scalar per round — the peel/stop test
         n_bad = ann.where(F.col("deg") < k).count()
@@ -2368,11 +2338,12 @@ def w_kcore_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
             bad.select(F.lit(k - 1).cast("long").alias("coreness"))
         )
         nodes = ann.where(F.col("deg") >= k).select("node")
-        edges = _flat_localCheckpoint(
+        edges = materialize(
             edges.join(bad.select(F.col("node").alias("u")), "u",
                        "left_anti")
             .join(bad.select(F.col("node").alias("v")), "v", "left_anti")
-            .select("u", "v")
+            .select("u", "v"),
+            f"w_kcore_decomp:survivors round {iters}", reset_stats=True,
         )
         n_nodes -= n_bad
         recount = True
@@ -2549,19 +2520,20 @@ def w_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count in SQL
     (min k with max|Δ_k| = 0), so the loop-until-converged semantics
     are oracle-checked, not just the final vector."""
-    edges = _event_edges(spark, sf_dir).localCheckpoint()
-    out = edges.groupBy("src").agg(F.sum("n").alias("out_n")).localCheckpoint()
+    edges = materialize(_event_edges(spark, sf_dir), "w_pagerank_fixpoint:edges")
+    out = materialize(edges.groupBy("src").agg(F.sum("n").alias("out_n")),
+                      "w_pagerank_fixpoint:out degrees")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     nn = nodes.agg(F.count("*").alias("nN"))
-    base = nodes.crossJoin(F.broadcast(nn)).select(
+    base = materialize(nodes.crossJoin(F.broadcast(nn)).select(
         "node",
         F.expr(f"{_PR_SCALE} div nN").alias("pr"),
         F.expr(f"(15 * {_PR_SCALE}) div (100 * nN)").alias("tele"),
-    ).localCheckpoint()
+    ), "w_pagerank_fixpoint:base")
     we = edges.join(out, "src")
 
     pr = base.select("node", "pr")
@@ -2574,11 +2546,11 @@ def w_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"({_PR_D} * pr * n) div (100 * out_n)").alias("c"),
         )
         agg = F.broadcast(contrib.groupBy("dst").agg(F.sum("c").alias("s")))
-        new = base.join(agg, base["node"] == agg["dst"], "left").select(
+        iters += 1
+        new = materialize(base.join(agg, base["node"] == agg["dst"], "left").select(
             base["node"],
             (F.col("tele") + F.coalesce(F.col("s"), F.lit(0))).alias("pr"),
-        ).localCheckpoint()
-        iters += 1
+        ), f"w_pagerank_fixpoint:rank {iters}")
         # ONE control-plane scalar per iteration — the convergence test
         delta = (
             new.join(pr.withColumnRenamed("pr", "prev_pr"), "node")
@@ -5877,8 +5849,8 @@ def w_lakehouse_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _silver_docs_base(spark, sf_dir)
     table = _stage_silver(spark, base, "gws_lakemv_")
     # the ONE full aggregate this view ever pays (v1 materialization)
-    mv = _mv_count_sum_view(read_table(spark, table, version=1)) \
-        .localCheckpoint()
+    mv = materialize(_mv_count_sum_view(read_table(spark, table, version=1)),
+                     "w_lakehouse_mv:v1 view")
     _upsert_then_delete(spark, table, base)
     return _mv_count_sum_refresh(
         mv, read_changes_mor(spark, table, key_cols=["doc_id"],
@@ -6026,7 +5998,7 @@ def _mv_minmax_refresh(view: DataFrame, feed: DataFrame,
                       .cast("long")).alias("d_at_max"),
                 F.sum((F.col("score") == F.col("min_score"))
                       .cast("long")).alias("d_at_min")))
-    merged = (
+    merged = materialize(
         view.join(d_n, "lang", "full_outer")
         .join(i_ext, "lang", "left")
         .join(i_at, "lang", "left")
@@ -6056,8 +6028,8 @@ def _mv_minmax_refresh(view: DataFrame, feed: DataFrame,
                  >= F.col("n_at_min")).cast("long"),
                 F.lit(0)).alias("recomputed_min"),
         )
-        .where(F.col("n_docs") > 0)     # VANISHED groups drop
-        .localCheckpoint()
+        .where(F.col("n_docs") > 0),    # VANISHED groups drop
+        "mv_minmax_refresh:merged view",
     )
     risky_flag = (F.col("recomputed_max") + F.col("recomputed_min")) > 0
     risky = merged.where(risky_flag).select("lang")
@@ -6221,11 +6193,12 @@ def _mv_minmax_run(spark: SparkSession, sf_dir: str,
     if coarse:
         base = base.withColumn("score", F.expr("score div 64"))
     table = _stage_silver(spark, base, "gws_lakemvx_")
-    mv = _mv_minmax_view(read_table(spark, table, version=1)) \
-        .localCheckpoint()
+    mv = materialize(_mv_minmax_view(read_table(spark, table, version=1)),
+                     "mv_minmax:v1 view")
     _upsert_then_delete(spark, table, base)
-    feed = read_changes_mor(spark, table, key_cols=["doc_id"],
-                            from_version=1, to_version=3).localCheckpoint()
+    feed = materialize(read_changes_mor(spark, table, key_cols=["doc_id"],
+                                        from_version=1, to_version=3),
+                       "mv_minmax:feed")
     return _mv_minmax_refresh(
         mv, feed, read_table_mor(spark, table, key_cols=["doc_id"]))
 
@@ -6514,11 +6487,11 @@ def w_lakehouse_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("hr").alias("h0"),
         F.max("hr").alias("mh"),
     )
-    q = ev.crossJoin(F.broadcast(b)).select(
+    q = materialize(ev.crossJoin(F.broadcast(b)).select(
         "event_id",
         F.expr(f"(user_id * {_Z_G}) div (mu + 1)").alias("qx"),
         F.expr(f"((hr - h0) * {_Z_G}) div (mh - h0 + 1)").alias("qt"),
-    ).localCheckpoint()
+    ), "w_lakehouse_optimize:quantized events")
     table = os.path.join(_tmpdir("gws_lakeopt_"),
                          "silver_events")
     # ADVICE r15: commit ONLY the non-empty ingest shards.  An empty

@@ -5,7 +5,8 @@ matter identically on a 1000-executor cluster: AQE on (skew joins,
 runtime coalescing), shuffle partitions sized to cores, UTC session
 timezone (whisper is calendar-free integer-seconds math), Arrow enabled
 for the Pandas-UDF slow path.  ``session_memo`` is the one per-session
-memo of built plans and collected artifacts.
+memo of built plans and collected artifacts; ``materialize`` is the one
+eager checkpoint, which labels the job it starts.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 MEMO_MAX_ENTRIES = 256  # per memo; a bulk caller (the render fuzz test) hits it
 
@@ -74,3 +75,50 @@ def session_memo(memo: dict, spark: SparkSession, key, build: Callable[[], objec
             memo.clear()
         memo[(app_id, key)] = hit
     return hit
+
+
+def materialize(df: DataFrame, label: str, reset_stats: bool = False) -> DataFrame:
+    """``df.localCheckpoint()``: the frame computed now, its lineage cut.
+
+    The eager job (and any AQE stage job it starts) runs under the job
+    description ``label``, conventionally ``"<query>:<step>"``; the
+    caller's description is restored afterwards, and its job group is
+    never touched.
+
+    ``reset_stats=True`` also RESETS plan statistics — required by any
+    iteration whose recursive frame enters its own round plan
+    MULTIPLICATIVELY.  ``localCheckpoint`` truncates lineage but
+    PRESERVES the origin plan's sizeInBytes estimate.  A round plan
+    that joins the recursive frame with an aggregate derived from that
+    same frame (the truss peel: wedge self-join × closing probe ×
+    support join-back) therefore multiplies the estimate into the next
+    round: bits(size) × ~4 per round — a DOUBLE-exponential BigInteger
+    whose Toom-Cook multiplications inside Catalyst's
+    SizeInBytesOnlyStatsPlanVisitor burn unbounded driver CPU by round
+    ~13 (measured: jstack pins the py4j thread in
+    BigInteger.multiplyToomCook3; a 100-row 8-round repro grows 29 →
+    6729 bits).  PageRank's loop survives without this because its
+    frame enters each round LINEARLY (bits grow arithmetically).
+
+    The fix re-wraps the checkpointed RDD[InternalRow] as a fresh
+    LogicalRDD carrying no origin stats (sizeInBytes falls back to the
+    conservative default).  Join planning inside the loop then relies
+    on explicit broadcast hints plus AQE's RUNTIME sizes — exactly the
+    posture you want on a cluster anyway.  Falls back to the plain
+    localCheckpoint if the private constructor ever moves."""
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        ck = df.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    if not reset_stats:
+        return ck
+    try:
+        jdf = spark._jsparkSession.internalCreateDataFrame(
+            ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False)
+        return DataFrame(jdf, spark)
+    except Exception:  # pragma: no cover - exercised only on API drift
+        return ck

@@ -15,9 +15,12 @@ pushdown and column pruning apply unchanged at 100 TB; nothing here
 collects rows.  Schemas are inferred once per file layout: the first
 read of a table infers its schema from the parquet footers (one Spark
 job), and every later read of the same layout (the path, size and
-mtime of every file) under the same ``nanosAsLong`` setting declares
-that schema instead, so it starts no job.  A rewritten or added file
-is a new layout and is inferred again.
+mtime of every file) declares that schema instead, so it starts no
+job.  A rewritten or added file is a new layout and is inferred again.
+The memo does not key on ``nanosAsLong``: only a TIMESTAMP(NANOS)
+column's inferred type depends on it, and such a column fails to infer
+under ``false``, so every cached schema was inferred under ``true`` or
+does not depend on the setting.
 """
 
 from __future__ import annotations
@@ -47,10 +50,10 @@ TABLE_NAMES = (
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-# path -> (layout key, the schema Spark inferred for that layout).  The
-# key holds every file's (path, size, mtime) and the nanosAsLong conf,
-# so an entry is used only for the layout it was inferred from; this
-# is input metadata, never query results.
+# path -> (layout, the schema Spark inferred for that layout).  The
+# layout holds every file's (path, size, mtime), so an entry is used
+# only for the layout it was inferred from; this is input metadata,
+# never query results.
 _SCHEMA_CACHE: Dict[str, Tuple[tuple, StructType]] = {}
 
 
@@ -89,15 +92,14 @@ def _read_parquet(spark: SparkSession, path: str) -> Tuple[DataFrame, StructType
     if layout is None:
         df = spark.read.parquet(path)
         return df, df.schema
-    key = (layout, spark.conf.get(NANOS_CONF, "false"))
     hit = _SCHEMA_CACHE.get(path)
-    if hit is not None and hit[0] == key:
+    if hit is not None and hit[0] == layout:
         return spark.read.schema(hit[1]).parquet(path), hit[1]
     df = spark.read.parquet(path)
     schema = df.schema
     if len(_SCHEMA_CACHE) >= MEMO_MAX_ENTRIES:
         _SCHEMA_CACHE.clear()
-    _SCHEMA_CACHE[path] = (key, schema)
+    _SCHEMA_CACHE[path] = (layout, schema)
     return df, schema
 
 

@@ -1201,8 +1201,8 @@ def test_kmeans_train_convergence_ledger(spark, sf_dir):
 
 
 def test_flat_localCheckpoint_resets_plan_stats(spark):
-    """VERDICT r15 item 5: the stats-free rewrap inside
-    `_flat_localCheckpoint` must actually ENGAGE — if Spark-version
+    """The stats-free rewrap of
+    `materialize(..., reset_stats=True)` must actually ENGAGE — if Spark-version
     drift moves the private `internalCreateDataFrame` constructor,
     the silent fallback branch would reintroduce the
     double-exponential BigInteger stats blowup in every
@@ -1212,9 +1212,7 @@ def test_flat_localCheckpoint_resets_plan_stats(spark):
     demonstrably preserves the origin's small estimate — both sides
     asserted so the test also fails if Spark ever changes the
     preservation behavior that motivates the helper."""
-    from go_whisper_spark.operators.whisper_queries import (
-        _flat_localCheckpoint,
-    )
+    from go_whisper_spark.session import materialize
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v")
 
@@ -1228,11 +1226,11 @@ def test_flat_localCheckpoint_resets_plan_stats(spark):
         spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
     ))
     plain = size_of(df.localCheckpoint())
-    flat_df = _flat_localCheckpoint(df)
+    flat_df = materialize(df, "test:flat", reset_stats=True)
     flat = size_of(flat_df)
     assert plain < default, (
         "plain localCheckpoint no longer preserves origin stats — "
-        "re-evaluate whether _flat_localCheckpoint is still needed")
+        "re-evaluate whether reset_stats is still needed")
     assert flat == default, (
         f"stats rewrap did not engage (sizeInBytes={flat}, expected "
         f"default {default}): the private-constructor fallback was "
@@ -1259,6 +1257,7 @@ def test_tri_ledger_increment_laws(spark):
         _tri_ledger_increment,
     )
     from go_whisper_spark.operators.whisper_queries import (
+        _tri_degrees,
         _tri_node_ledger,
         _tri_orient,
     )
@@ -1289,7 +1288,8 @@ def test_tri_ledger_increment_laws(spark):
         )
 
     edges = frame(all_edges)
-    deg, ori = _tri_orient(edges)
+    deg = _tri_degrees(edges)
+    ori = _tri_orient(edges, deg)
     want = sorted((r.node, r.deg, r.tri_n, r.cc_ppm)
                   for r in _tri_node_ledger(deg, ori).collect())
 

@@ -7,7 +7,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from go_whisper_spark.sources.tables import load_table
+from go_whisper_spark.sources.tables import NANOS_CONF, load_table
 
 
 def test_second_load_of_unchanged_file_starts_no_job(spark, tmp_path, jobs_started):
@@ -62,3 +62,24 @@ def test_nanos_events_branch_is_picked_from_the_memoized_schema(spark, tmp_path,
     rows = sorted(df.select("ts_ns", "ts_sec").collect())
     assert [(r.ts_ns, r.ts_sec) for r in rows] == [(t, t // 10**9) for t in ts_ns]
     assert dict(df.dtypes)["ts"] == "timestamp"
+
+
+def test_memo_hit_survives_the_events_conf(spark, tmp_path, jobs_started):
+    """Loading events sets ``nanosAsLong`` for the session; a table
+    inferred before that is still a memo hit after it."""
+    pq.write_table(pa.table({"l_orderkey": [1, 2]}), str(tmp_path / "lineitem.parquet"))
+    pq.write_table(pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([1_700_000_000_000_000_000], pa.timestamp("ns")),
+    }), str(tmp_path / "events.parquet"))
+    prev = spark.conf.get(NANOS_CONF, "false")
+    spark.conf.set(NANOS_CONF, "false")  # as in a fresh session
+    counts = []
+    try:
+        for name in ("lineitem", "events", "lineitem"):
+            with jobs_started() as jobs:
+                load_table(spark, str(tmp_path), name)
+            counts.append(len(jobs))
+    finally:
+        spark.conf.set(NANOS_CONF, prev)
+    assert counts == [1, 1, 0]

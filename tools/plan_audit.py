@@ -1668,10 +1668,14 @@ def _build_triangle_oriented(spark):
     # the degree relation must come back as two hinted BROADCAST
     # joins, and the lineitem scan must be pruned to the two key
     # columns.
-    from go_whisper_spark.operators.whisper_queries import _tri_oriented
+    from go_whisper_spark.operators.whisper_queries import (
+        _tri_degrees,
+        _tri_edges,
+        _tri_orient,
+    )
 
-    _, _, oriented = _tri_oriented(spark, SF_DIR, materialize=False)
-    return oriented
+    edges = _tri_edges(spark, SF_DIR)
+    return _tri_orient(edges, _tri_degrees(edges))
 
 
 def _build_tri_ledger_increment(spark):
@@ -1688,7 +1692,7 @@ def _build_tri_ledger_increment(spark):
     )
     from go_whisper_spark.operators.whisper_queries import _tri_edges
 
-    edges = _tri_edges(spark, SF_DIR, materialize=False)
+    edges = _tri_edges(spark, SF_DIR)
     h = F.conv(
         F.substring(F.md5(F.concat_ws(":", "u", "v")), 1, 8), 16, 10
     ).cast("long")
@@ -1710,7 +1714,7 @@ def _build_tri_support_increment(spark):
     )
     from go_whisper_spark.operators.whisper_queries import _tri_edges
 
-    edges = _tri_edges(spark, SF_DIR, materialize=False)
+    edges = _tri_edges(spark, SF_DIR)
     h = F.conv(
         F.substring(F.md5(F.concat_ws(":", "u", "v")), 1, 8), 16, 10
     ).cast("long")
@@ -1727,7 +1731,7 @@ def _build_labelprop_round(spark):
     # broadcast hint — at test scale AQE must still CHOOSE broadcast
     # from runtime stats (require_executed, the d_incremental
     # pattern), the per-dst min must be map-combined (partial_min),
-    # and no cartesian/window anywhere.  The builder localCheckpoints
+    # and no cartesian/window anywhere.  This function materializes
     # its inputs exactly as the driver loop does, so AQE sees the
     # same post-materialization stats the shipped loop sees.
     from pyspark.sql import functions as F
@@ -1737,21 +1741,19 @@ def _build_labelprop_round(spark):
         _labelprop_round,
         s_cosine_nearpairs,
     )
-
-    from go_whisper_spark.operators.whisper_queries import (
-        _flat_localCheckpoint,
-    )
+    from go_whisper_spark.session import materialize
 
     pairs = s_cosine_nearpairs(spark, SF_DIR).select("ida", "idb")
-    edges = pairs.select(
+    edges = materialize(pairs.select(
         F.col("ida").alias("src"), F.col("idb").alias("dst")
     ).unionAll(pairs.select(
         F.col("idb").alias("src"), F.col("ida").alias("dst"))
-    ).localCheckpoint()
-    lab = _flat_localCheckpoint(
+    ), "plan_audit:labelprop edges")
+    lab = materialize(
         _cos_frames(spark, SF_DIR)
         .select(F.col("vec_id").alias("node"))
-        .withColumn("comm", F.col("node")))
+        .withColumn("comm", F.col("node")),
+        "plan_audit:labelprop labels", reset_stats=True)
     return _labelprop_round(edges, lab)
 
 
@@ -1766,14 +1768,14 @@ def _build_truss_peel_round(spark):
 
     from go_whisper_spark.operators.whisper_queries import (
         _TRUSS_MOD,
+        _tri_degrees,
         _tri_edges,
         _tri_orient,
         _tri_triangles,
     )
 
-    edges = _tri_edges(spark, SF_DIR, materialize=False,
-                       order_mod=_TRUSS_MOD)
-    _, oriented = _tri_orient(edges, materialize=False)
+    edges = _tri_edges(spark, SF_DIR, order_mod=_TRUSS_MOD)
+    oriented = _tri_orient(edges, _tri_degrees(edges))
     tri = _tri_triangles(oriented, n_edges=1)
     pairs = tri.select(
         F.explode(F.array(
@@ -1811,8 +1813,7 @@ def _build_kcore_peel_round(spark):
         _tri_edges,
     )
 
-    edges = _tri_edges(spark, SF_DIR, materialize=False,
-                       order_mod=_TRUSS_MOD)
+    edges = _tri_edges(spark, SF_DIR, order_mod=_TRUSS_MOD)
     nodes = edges.select(
         F.explode(F.array("u", "v")).alias("node")).distinct()
     deg = (
@@ -1845,8 +1846,7 @@ def _build_kcore_warm_seed(spark):
         _tri_edges,
     )
 
-    edges = _tri_edges(spark, SF_DIR, materialize=False,
-                       order_mod=_TRUSS_MOD)
+    edges = _tri_edges(spark, SF_DIR, order_mod=_TRUSS_MOD)
     nodes = edges.select(
         F.explode(F.array("u", "v")).alias("node")).distinct()
     # synthetic prior-peel ledger: shape-identical to the shipped one

@@ -30,31 +30,21 @@ def main() -> int:
     args = ap.parse_args()
 
     evdir = tempfile.mkdtemp(prefix="gws_evlog_")
+    # get_spark's session plus the event log: the launcher reads these
+    # confs when the JVM starts, i.e. inside get_spark
+    eventlog = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": evdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {k}={v}" for k, v in eventlog.items()]
+        + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
 
-    from pyspark.sql import SparkSession
+    from go_whisper_spark.session import get_spark
 
-    # mirror go_whisper_spark.session.get_spark, plus the event log
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count()
-    shuffle_parts = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0) or 8
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("gws_profile_events")
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("gws_profile_events")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
